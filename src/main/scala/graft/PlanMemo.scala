@@ -216,16 +216,50 @@ object PlanMemo {
     val path = stagedArtifact(dir, name).getOrElse {
       val p = tempArtifactPath(dir, name)
       publishRoot.synchronized {
-        if (!java.nio.file.Files.exists(p)) {
-          val w = build.write.mode("overwrite")
+        if (!published(p)) writeAtomically(p) { tmp =>
+          val w = build.write
           (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*)
-           else w).parquet(p.toString)
+           else w).parquet(tmp)
         }
       }
       p
     }
     spark.read.parquet(path.toString)
   }
+
+  /** A temp-path artifact counts as published only once its writer
+    * committed (`_SUCCESS`): a directory a failed builder left behind
+    * must be rebuilt, not read (it would fail every later read in the
+    * JVM with UNABLE_TO_INFER_SCHEMA).
+    */
+  private def published(p: java.nio.file.Path): Boolean =
+    java.nio.file.Files.exists(p.resolve("_SUCCESS"))
+
+  /** Write an artifact to a sibling temp directory and rename it over
+    * `p` once the write committed — readers see the old artifact or
+    * the complete new one, never a partial write; a builder that
+    * throws leaves `p` untouched and its temp directory removed.
+    * Callers hold the `publishRoot` lock.
+    */
+  private def writeAtomically(p: java.nio.file.Path)(write: String => Unit)
+      : Unit = {
+    val tmp = p.resolveSibling(
+      s"${p.getFileName}.tmp-${java.util.UUID.randomUUID}")
+    try {
+      write(tmp.toString)
+      deleteTree(p)
+      java.nio.file.Files.move(tmp, p,
+        java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+    } finally deleteTree(tmp)
+  }
+
+  private def deleteTree(p: java.nio.file.Path): Unit =
+    if (java.nio.file.Files.exists(p)) {
+      val walk = java.nio.file.Files.walk(p)
+      try walk.sorted(java.util.Comparator.reverseOrder())
+        .forEach(java.nio.file.Files.delete(_))
+      finally walk.close()
+    }
 
   /** A hand-staged artifact mount for (dir, name) under
     * `SPARK_GRAFT_ARTIFACTS`, when one exists and its `GRAFT_DIR.txt`
@@ -273,8 +307,7 @@ object PlanMemo {
   private[graft] def republishParquet(spark: SparkSession, dir: String,
       name: String)(build: => DataFrame): Unit =
     publishRoot.synchronized {
-      build.write.mode("overwrite")
-        .parquet(tempArtifactPath(dir, name).toString)
+      writeAtomically(tempArtifactPath(dir, name))(build.write.parquet(_))
     }
 
   private def hookEviction(spark: SparkSession): Unit =

@@ -72,7 +72,8 @@ object Probe {
         val prod = Text.bpeProdTrain(spark, dir)
         val trainSec = (System.nanoTime() - t0) / 1e9
         val t1 = System.nanoTime()
-        run(Text.bpeEncodeDictUnder(spark, dir, prod, "ntok_prod"))
+        run(Text.bpeEncodeDictUnder(prod.merges, Text.bpeVocab(spark, dir),
+          "ntok_prod"))
         val encSec = (System.nanoTime() - t1) / 1e9
         println(f"PROBE bpeprod merges=${prod.merges.length} " +
           f"target=${Text.bpeProdVocabTarget - 256} " +
@@ -161,7 +162,6 @@ object Probe {
           .agg(count(lit(1)).as("trips"))) }
         time("q09_full") { run(Kpis.heatmapDowHour(spark, dir)) }
         time("q09_again") { run(Kpis.heatmapDowHour(spark, dir)) }
-        OptimizerBarrier.register(spark)
         val fenced = graft.Features.enrich(norm, graft.Features.kColFenced)
         time("enrich_fenced") { run(fenced) }
         time("fenced_q09_agg") { run(fenced
@@ -302,7 +302,7 @@ object Probe {
           .join(incScreened.select(col("doc_id").as("d2"))
             .hint("shuffle_hash"), Seq("d2"), "left_semi")
         time("ccIncrement") { run(Dedup.connectedComponents(incPairs)) }
-        val dict = Text.bpeEncodeDict(
+        val dict = Text.bpeEncodeDictUnder(
           Text.bpeMerges(spark, dir), Text.bpeVocab(spark, dir))
         val incDocs = docs.join(incScreened.hint("shuffle_hash"),
           Seq("doc_id"), "left_semi")
@@ -403,29 +403,6 @@ object Probe {
         time("e08_full_cleared2") {
           run(Pipeline.incrementAppendChain(spark, dir))
         }
-      case "d16ab" =>
-        // round-18 verdict "next" 8: what the para_hash_index artifact
-        // buys at GenData scale — d16 per-rep (clearCache) via the
-        // published artifact vs the inline tokenize+chunk+md5 pass.
-        // Measured at gensf1: artifact 0.74–1.06 s vs inline
-        // 0.56–0.57 s — the artifact LOST and inline is now the
-        // default (see Dedup.paraHashes).
-        spark.conf.set("spark.graft.paraIndexPublish", "true")
-        try {
-          run(Dedup.sourceOverlap(spark, dir)) // publish + warm memo
-          spark.catalog.clearCache()
-          time("d16_artifact_rep1") { run(Dedup.sourceOverlap(spark, dir)) }
-          spark.catalog.clearCache()
-          time("d16_artifact_rep2") { run(Dedup.sourceOverlap(spark, dir)) }
-        } finally {
-          spark.conf.set("spark.graft.paraIndexPublish", "false")
-          PlanMemo.drop(spark, s"dedup.paraHashes:$dir")
-        }
-        run(Dedup.sourceOverlap(spark, dir)) // build the inline memo
-        spark.catalog.clearCache()
-        time("d16_inline_rep1") { run(Dedup.sourceOverlap(spark, dir)) }
-        spark.catalog.clearCache()
-        time("d16_inline_rep2") { run(Dedup.sourceOverlap(spark, dir)) }
       case "e03stages" =>
         import org.apache.spark.sql.functions._
         // stage ladder for the incremental append: localize warm cost
@@ -484,7 +461,7 @@ object Probe {
           .join(incQ.select(col("doc_id").as("d1")), Seq("d1"), "left_semi")
           .join(incQ.select(col("doc_id").as("d2")), Seq("d2"), "left_semi")
         time("ccIncrement") { run(Dedup.connectedComponents(incPairs)) }
-        val dict = Text.bpeEncodeDict(
+        val dict = Text.bpeEncodeDictUnder(
           Text.bpeMerges(spark, dir), Text.bpeVocab(spark, dir))
         time("dict_rebuild") { run(dict) }
         time("e03_full_cleared") {
@@ -520,7 +497,6 @@ object Probe {
       case "shingle" =>
         import org.apache.spark.sql.functions._
         // isolate the shingle kernel from scan / sort / persist cost
-        ShingleFps.register(spark)
         val docs = Tables.documents(spark, dir)
         time("scan_only") { run(docs.select(col("doc_id"),
           length(col("text")).as("n"))) }
@@ -686,7 +662,7 @@ object Probe {
           // — and the CORPUS-weighted token total (Σ freq·n), the
           // fertility a pruned vocabulary actually costs at serve time
           t0 = System.nanoTime()
-          val enc = Text.bpeIdsDictUnder(spark, dir, res)
+          val enc = Text.bpeIdsDictUnder(res.merges, vocab)
             .join(vocab.select("word", "freq"), "word")
             .selectExpr("sum(n)", "sum(CAST(rt_ok AS INT))",
               "sum(freq * n)")

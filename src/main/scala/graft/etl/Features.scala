@@ -38,8 +38,7 @@ object Features {
     * predicates on k-derived columns are NOT alias-inlined and pushed
     * below a rebalance Exchange (which would re-run the JSON parse
     * once per predicate per row at raw-scan parallelism). Requires
-    * `optimizer_barrier` to be registered (GraftExtensions or
-    * OptimizerBarrier.register).
+    * `optimizer_barrier` to be registered (GraftExtensions).
     */
   val kColFenced: Column =
     expr("optimizer_barrier(get_json_object(props, '$.k'))").cast("int")

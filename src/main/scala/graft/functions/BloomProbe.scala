@@ -2,7 +2,7 @@ package graft
 
 import java.io.ByteArrayInputStream
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
@@ -108,16 +108,8 @@ object BloomProbe {
   val builder: Seq[Expression] => Expression =
     es => BloomMightContain(es.head, es(1))
 
-  /** Idempotent runtime registration (sessions built without the
-    * `graft.GraftExtensions` config).
-    */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry
-      .registerFunction(fnId, info, builder)
-
   /** Column-API entry point: `df.filter(BloomProbe.probe(col("fp"), bf))`. */
-  def probe(spark: SparkSession, c: Column, filter: BloomFilter): Column = {
-    register(spark)
+  def probe(c: Column, filter: BloomFilter): Column = {
     val bos = new java.io.ByteArrayOutputStream()
     filter.writeTo(bos)
     call_function("bloom_might_contain", c, lit(bos.toByteArray))

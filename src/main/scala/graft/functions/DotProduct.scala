@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
@@ -91,42 +90,40 @@ object DotProduct {
   val info = new ExpressionInfo(classOf[DotProduct].getName, "dot_product")
   val builder: Seq[Expression] => Expression =
     es => DotProduct(es.head, es(1))
-
-  /** Runtime registration for an already-built session (idempotent) —
-    * the escape hatch when the session wasn't created with
-    * `spark.sql.extensions=graft.GraftExtensions`.
-    */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry
-      .registerFunction(fnId, info, builder)
 }
 
 /** SparkSessionExtensions entry point: register the engine's custom
-  * expressions at session build time
-  * (`.config("spark.sql.extensions", "graft.GraftExtensions")`).
+  * expressions and planner strategies at session build time
+  * (`.config("spark.sql.extensions", "graft.GraftExtensions")` —
+  * [[Tables.configure]] sets it, and every entry point builds its
+  * session through that; child sessions from `newSession()` inherit
+  * the extensions).
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {
-    e.injectFunction((DotProduct.fnId, DotProduct.info, DotProduct.builder))
-    e.injectFunction((TopKScoreId.fnId, TopKScoreId.info, TopKScoreId.builder))
-    e.injectFunction((OptimizerBarrier.fnId, OptimizerBarrier.info,
-      OptimizerBarrier.builder))
-    e.injectFunction((NfcNormalize.fnId, NfcNormalize.info,
-      NfcNormalize.builder))
-    e.injectFunction((MinHashSigs.fnId, MinHashSigs.info,
-      MinHashSigs.builder))
-    e.injectFunction((SortedInterSize.fnId, SortedInterSize.info,
-      SortedInterSize.builder))
-    e.injectFunction((ShingleFps.fnId, ShingleFps.info, ShingleFps.builder))
-    e.injectFunction((SpanFps.fnId, SpanFps.info, SpanFps.builder))
-    e.injectFunction((TokCount.fnId, TokCount.info, TokCount.builder))
-    e.injectFunction((PqEncode.fnId, PqEncode.info, PqEncode.builder))
-    e.injectFunction((BloomProbe.fnId, BloomProbe.info, BloomProbe.builder))
-    e.injectFunction((graft.plans.AsOfLE.fnId, graft.plans.AsOfLE.info,
-      graft.plans.AsOfLE.builder))
+    GraftExtensions.functions.foreach(e.injectFunction)
     e.injectPlannerStrategy(_ => graft.plans.AsOfJoinStrategy)
-    e.injectFunction((graft.plans.IntervalContains.fnId,
-      graft.plans.IntervalContains.info, graft.plans.IntervalContains.builder))
     e.injectPlannerStrategy(_ => graft.plans.RangeJoinStrategy)
   }
+}
+
+object GraftExtensions {
+  /** The ONE registration list of the engine's custom functions. */
+  val functions: Seq[(FunctionIdentifier, ExpressionInfo,
+      Seq[Expression] => Expression)] = Seq(
+    (DotProduct.fnId, DotProduct.info, DotProduct.builder),
+    (TopKScoreId.fnId, TopKScoreId.info, TopKScoreId.builder),
+    (OptimizerBarrier.fnId, OptimizerBarrier.info, OptimizerBarrier.builder),
+    (NfcNormalize.fnId, NfcNormalize.info, NfcNormalize.builder),
+    (MinHashSigs.fnId, MinHashSigs.info, MinHashSigs.builder),
+    (SortedInterSize.fnId, SortedInterSize.info, SortedInterSize.builder),
+    (ShingleFps.fnId, ShingleFps.info, ShingleFps.builder),
+    (SpanFps.fnId, SpanFps.info, SpanFps.builder),
+    (TokCount.fnId, TokCount.info, TokCount.builder),
+    (PqEncode.fnId, PqEncode.info, PqEncode.builder),
+    (BloomProbe.fnId, BloomProbe.info, BloomProbe.builder),
+    (graft.plans.AsOfLE.fnId, graft.plans.AsOfLE.info,
+      graft.plans.AsOfLE.builder),
+    (graft.plans.IntervalContains.fnId, graft.plans.IntervalContains.info,
+      graft.plans.IntervalContains.builder))
 }

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression}
@@ -119,8 +118,4 @@ object MinHashSigs {
     */
   val builder: Seq[Expression] => Expression =
     es => MinHashSigs(es.head, Dedup.hashAs, Dedup.hashBs, Dedup.P)
-
-  /** Runtime registration for an already-built session (idempotent). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.registerFunction(fnId, info, builder)
 }

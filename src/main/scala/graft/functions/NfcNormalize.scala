@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression}
@@ -63,8 +62,4 @@ object NfcNormalize {
   val fnId: FunctionIdentifier = FunctionIdentifier("nfc_normalize")
   val info = new ExpressionInfo(classOf[NfcNormalize].getName, "nfc_normalize")
   val builder: Seq[Expression] => Expression = es => NfcNormalize(es.head)
-
-  /** Runtime registration for an already-built session (idempotent). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.registerFunction(fnId, info, builder)
 }

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -49,9 +48,4 @@ object OptimizerBarrier {
   val fnId: FunctionIdentifier = FunctionIdentifier("optimizer_barrier")
   val info = new ExpressionInfo(classOf[OptimizerBarrier].getName, "optimizer_barrier")
   val builder: Seq[Expression] => Expression = es => OptimizerBarrier(es.head)
-
-  /** Runtime registration for an already-built session (idempotent). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry
-      .registerFunction(fnId, info, builder)
 }

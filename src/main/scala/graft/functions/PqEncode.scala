@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
@@ -112,7 +111,4 @@ object PqEncode {
   val info = new ExpressionInfo(classOf[PqEncode].getName, "pq_encode")
   val builder: Seq[Expression] => Expression =
     es => PqEncode(es.head, es(1))
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.registerFunction(fnId, info, builder)
 }

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression}
@@ -132,8 +131,4 @@ object ShingleFps {
   val fnId: FunctionIdentifier = FunctionIdentifier("shingle_fps")
   val info = new ExpressionInfo(classOf[ShingleFps].getName, "shingle_fps")
   val builder: Seq[Expression] => Expression = es => ShingleFps(es.head)
-
-  /** Runtime registration for an already-built session (idempotent). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.registerFunction(fnId, info, builder)
 }

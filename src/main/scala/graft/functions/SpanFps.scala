@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal, UnaryExpression}
@@ -85,9 +84,6 @@ object TokCount {
   val fnId: FunctionIdentifier = FunctionIdentifier("tok_count")
   val info = new ExpressionInfo(classOf[TokCount].getName, "tok_count")
   val builder: Seq[Expression] => Expression = es => TokCount(es.head)
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.registerFunction(fnId, info, builder)
 }
 
 object SpanFps {
@@ -163,8 +159,4 @@ object SpanFps {
     }
     SpanFps(es.head, k)
   }
-
-  /** Runtime registration for an already-built session (idempotent). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.registerFunction(fnId, info, builder)
 }

@@ -2,7 +2,6 @@ package graft
 
 import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, DataOutputStream}
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
@@ -147,9 +146,4 @@ object TopKScoreId {
   val info = new ExpressionInfo(classOf[TopKScoreId].getName, "topk_score_id")
   val builder: Seq[Expression] => Expression =
     es => TopKScoreId(es.head, es(1), es(2))
-
-  /** Runtime registration for an already-built session (idempotent). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry
-      .registerFunction(fnId, info, builder)
 }

@@ -1,7 +1,6 @@
 package graft.plans
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.SparkStrategy
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.FunctionIdentifier
@@ -101,15 +100,6 @@ object AsOfJoinStrategy extends SparkStrategy {
         case _ => Nil
       }
     case _ => Nil
-  }
-
-  /** Idempotent runtime installation for an already-built session. */
-  def install(spark: SparkSession): Unit = {
-    if (!spark.experimental.extraStrategies.contains(AsOfJoinStrategy))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ AsOfJoinStrategy
-    spark.sessionState.functionRegistry
-      .registerFunction(AsOfLE.fnId, AsOfLE.info, AsOfLE.builder)
   }
 }
 

@@ -1,7 +1,6 @@
 package graft.plans
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.SparkStrategy
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.FunctionIdentifier
@@ -106,15 +105,6 @@ object RangeJoinStrategy extends SparkStrategy {
         case _ => Nil
       }
     case _ => Nil
-  }
-
-  /** Idempotent runtime installation for an already-built session. */
-  def install(spark: SparkSession): Unit = {
-    if (!spark.experimental.extraStrategies.contains(RangeJoinStrategy))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ RangeJoinStrategy
-    spark.sessionState.functionRegistry.registerFunction(
-      IntervalContains.fnId, IntervalContains.info, IntervalContains.builder)
   }
 }
 

@@ -108,7 +108,6 @@ object Clustering {
   private[graft] def centroidsOn(
       spark: SparkSession, key: String, qe: DataFrame,
       k: Int = kClusters): Array[Array[Long]] = {
-    PqEncode.register(spark) // defensive: session may lack extensions
     PlanMemo.cachedValue(spark, s"clustering.cents:$key:k$k") {
       var c: Array[Array[Long]] = qe.orderBy("vec_id").limit(k)
         .select("q").collect()
@@ -169,7 +168,6 @@ object Clustering {
   val centralQuota = 10
 
   def centralSample(spark: SparkSession, dir: String): DataFrame = {
-    TopKScoreId.register(spark)
     assigned(spark, dir)
       .withColumn("score", -col("dist2").cast("double"))
       .groupBy("cluster")

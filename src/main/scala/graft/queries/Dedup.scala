@@ -94,7 +94,6 @@ object Dedup {
     // hex-md5 spelling above, fused into one codegen kernel per row.
     // ShingleFpsSpec pins bit-equality against shingleFpsExpr, which
     // remains the documented recipe and the oracle's SQL shape.
-    ShingleFps.register(spark)
     Tables.documents(spark, dir)
       .select(col("doc_id"), expr("shingle_fps(text)").as("fps"))
   }
@@ -224,8 +223,6 @@ object Dedup {
         buildLshBands(spark, dir)))
 
   private def buildLshBands(spark: SparkSession, dir: String): DataFrame = {
-    MinHashSigs.register(spark)
-    OptimizerBarrier.register(spark)
     // ONE map-side pass: all 16 minima from a native codegen
     // expression inside the scan's whole-stage-codegen projection
     // (functions/MinHashSigs.scala). The previous spelling exploded
@@ -367,7 +364,6 @@ object Dedup {
     */
   private[graft] def neardupVerifiedPlan(spark: SparkSession, dir: String,
       cands: DataFrame, broadcastCands: Boolean): DataFrame = {
-    OptimizerBarrier.register(spark)
     val docs = Tables.documents(spark, dir)
     // asciiProj: the edit metric runs on the ASCII projection so the
     // codepoint-vs-byte levenshtein unit mismatch can't bite (see
@@ -836,7 +832,6 @@ object Dedup {
     * [[jaccardDelegateDocs]].
     */
   private def buildPrefixPairs(spark: SparkSession, dir: String): DataFrame = {
-    SortedInterSize.register(spark)
     // verify sets = the CAPPED space (value-sorted by projection over
     // the one memoized ents frame) — sizing, candidates and verify
     // all see the same universe d03 and the oracle do
@@ -1020,9 +1015,6 @@ object Dedup {
     */
   private[graft] def spanWins(spark: SparkSession, dir: String): DataFrame = {
     val k = spanTokens
-    SpanFps.register(spark)
-    TokCount.register(spark)
-    OptimizerBarrier.register(spark)
     PlanMemo.cached(spark, s"dedup.spanWins:$dir")(
       Tables.documents(spark, dir)
         .withColumn("fps", expr(s"optimizer_barrier(span_fps(text, $k))"))
@@ -1455,7 +1447,6 @@ object Dedup {
     }
 
   def semanticDedup(spark: SparkSession, dir: String): DataFrame = {
-    DotProduct.register(spark)
     val aug = semAug(spark, dir)
     val qe = aug.select(col("vec_id"), expr(
       s"transform(emb, x -> CAST(FLOOR(x * ${Clustering.quantScale}) AS BIGINT))").as("q"))
@@ -1583,12 +1574,6 @@ object Dedup {
     // aggregation; a shingle-less doc yields NULL sigs → four
     // null-key band rows, exactly like the old per-sig HOF spelling
     // (array_min over an empty transform was NULL per signature).
-    // Registered on BOTH sessions: the stream chain analyzes on the
-    // drain session, the batch index frames on the parent.
-    ShingleFps.register(spark)
-    MinHashSigs.register(spark)
-    ShingleFps.register(ds)
-    MinHashSigs.register(ds)
     val keyExprs = (0 until 4).map { j =>
       val Seq(s0, s1, s2, s3) = (0 until 4).map(k => s"sigs[${4 * j + k}]")
       s"((($s0 * 31 + $s1) * 31 + $s2) * 31 + $s3)"
@@ -1668,7 +1653,6 @@ object Dedup {
   val strataQuota = 50
 
   def stratifiedSample(spark: SparkSession, dir: String): DataFrame = {
-    TopKScoreId.register(spark)
     Tables.documents(spark, dir)
       .select(col("lang"), col("doc_id"), expr(
         "CAST(conv(substring(md5(concat('mix:', CAST(doc_id AS STRING))), 1, 12), 16, 10) AS BIGINT)")
@@ -1780,7 +1764,6 @@ object Dedup {
   val mixBudget = 200
 
   def temperatureMix(spark: SparkSession, dir: String): DataFrame = {
-    TopKScoreId.register(spark)
     val h = Tables.documents(spark, dir)
       .select(col("lang"), col("doc_id"), expr(
         "CAST(conv(substring(md5(concat('temp:', CAST(doc_id AS STRING))), 1, 12), 16, 10) AS BIGINT)")
@@ -2109,7 +2092,7 @@ object Dedup {
     }
     val exact = docs.filter(isNew)
       .select(col("doc_id"), fp.as("fp"))
-      .filter(BloomProbe.probe(spark, col("fp"), filter)) // map-side prune
+      .filter(BloomProbe.probe(col("fp"), filter)) // map-side prune
       // shuffle_hash: base hash set is O(corpus) — see d13
       .join(baseHashes.hint("shuffle_hash"), Seq("fp"), "left_semi")
       .select(col("doc_id")).withColumn("exact_dup", lit(1))
@@ -2158,38 +2141,15 @@ object Dedup {
   /** (doc_id, source, pi, px): md5 of each paraSize-token chunk.
     * Memoized — d15 dedups it, d16 cross-joins it by source.
     */
-  // Disk-published on top of the in-memory memo (round-18, the
-  // lsh_bands_index discipline one level down): the paragraph-hash
-  // table is the index artifact a paragraph-dedup layer keeps
-  // materialized (d15's reassembly, d16's overlap, d18's rank all
-  // consume it), and the per-rep clearCache used to force each of
-  // them back through the tokenize+chunk+md5 corpus pass. Builder
-  // output is hash-gated through d15/d16; reading the written bytes
-  // cannot change any answer.
-  // INLINE by default (round 19, reverting the round-18 artifact):
-  // the para_hash_index disk artifact was kept in r18 on a
-  // plausible-at-scale posture after measuring NEUTRAL at sf0.1; the
-  // round-19 gensf1 A/B (Probe d16ab, 10× the bench corpus) measured
-  // it a LOSS — d16 per-rep 0.74–1.06 s reading the artifact vs
-  // 0.56–0.57 s recomputing inline: the chunk+md5 pass is cheap,
-  // scan-parallel and page-cached, while the index read adds I/O
-  // without removing any exchange. Guide §1.1 — the empirical loop
-  // beats the posture argument; SCALE.md banks the row.
-  // spark.graft.paraIndexPublish=true re-enables the artifact (the
-  // A/B lever). Memo keys diverge per regime so a forced run never
-  // serves the other path's cached plan (the PlanMemo.drop
-  // discipline).
+  // INLINE, not a published artifact (round 19): a disk-published
+  // para_hash_index measured NEUTRAL at sf0.1 and a LOSS at gensf1 —
+  // d16 per-rep 0.74–1.06 s reading the artifact vs 0.56–0.57 s
+  // recomputing inline: the chunk+md5 pass is cheap, scan-parallel
+  // and page-cached, while the index read adds I/O without removing
+  // any exchange (SCALE.md banks the row).
   private[graft] def paraHashes(spark: SparkSession, dir: String): DataFrame =
-    if (spark.conf.get("spark.graft.paraIndexPublish", "false").toBoolean)
-      PlanMemo.cached(spark, s"dedup.paraHashes:$dir")(
-        PlanMemo.publishedParquet(spark, dir, "para_hash_index")(
-          buildParaHashes(spark, dir)))
-    else
-      PlanMemo.cached(spark, s"dedup.paraHashes:$dir:inline")(
-        buildParaHashes(spark, dir))
-
-  private def buildParaHashes(spark: SparkSession, dir: String): DataFrame =
-      (Tables.documents(spark, dir)
+    PlanMemo.cached(spark, s"dedup.paraHashes:$dir")(
+      Tables.documents(spark, dir)
         .withColumn("toks",
           expr("filter(split(text, ' '), t -> t != '')"))
         .select(col("doc_id"), col("source"), explode_outer(expr(

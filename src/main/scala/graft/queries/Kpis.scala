@@ -38,7 +38,6 @@ object Kpis {
     // expression — ~8 get_json_object parses per row for q11) and
     // pushes them below the rebalance Exchange, back onto the
     // serialized coarse scan the rebalance exists to escape.
-    OptimizerBarrier.register(spark) // idempotent; non-configured sessions
     Features.enrich(Tables.balanced(Tables.events(spark, dir)),
       Features.kColFenced)
   }
@@ -394,8 +393,15 @@ object Kpis {
        |GROUP BY event_type
        |ORDER BY trips DESC, payment""".stripMargin
 
-  def sqlSurface(spark: SparkSession, dir: String): DataFrame =
-    SqlSurface.run(spark, Tables.events(spark, dir), "taxi", q19Sql)
+  /** q19 registers its raw-events `taxi` view in a CHILD session
+    * (same SparkContext, own temp-view namespace): in the caller's
+    * session it would replace an [[AppSession]]'s enriched `taxi`
+    * view and break every later SQL request on it.
+    */
+  def sqlSurface(spark: SparkSession, dir: String): DataFrame = {
+    val child = spark.newSession()
+    SqlSurface.run(child, Tables.events(child, dir), "taxi", q19Sql)
+  }
 
   // ---------------------------------------------------------------
   // ---------------------------------------------------------------

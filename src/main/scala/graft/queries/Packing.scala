@@ -440,7 +440,7 @@ object Packing {
   // ---------------------------------------------------------------
   /** p07 — PACK THE REAL TOKENIZER OUTPUT (round-15 verdict "next"
     * 2): concat-and-chunk placement over each document's ACTUAL
-    * byte-level BPE token-id sequence ([[Text.bpeTokenIdSeqs]] — the
+    * byte-level BPE token-id sequence ([[Text.bpeTokenIdSeqsOn]] — the
     * frame t24 digests), closing the pipeline loop: t21 trains the
     * tokenizer, t24 materializes id sequences, p07 lays them into
     * fixed-capacity training chunks. p01/p04 pack whitespace-token
@@ -454,7 +454,7 @@ object Packing {
     * Conservation is spec-pinned: Σ n_tok here = Σ t24 n_tokens.
     */
   def packBpeIds(spark: SparkSession, dir: String): DataFrame = {
-    val seqs = Text.bpeTokenIdSeqs(spark, dir)
+    val seqs = Text.bpeTokenIdSeqsOn(spark, dir, Tables.documents(spark, dir))
       .select(col("doc_id"), size(col("ids")).as("nt"))
     placed(Tables.documents(spark, dir)
       .select(col("lang"), col("doc_id"))

@@ -760,7 +760,7 @@ object Pipeline {
       spark: SparkSession, dir: String): DataFrame =
     PlanMemo.cached(spark, s"pipeline.baseTotals:$dir")(
       PlanMemo.publishedParquet(spark, dir, "pipeline_base_totals") {
-        val dict = Text.bpeEncodeDict(
+        val dict = Text.bpeEncodeDictUnder(
           Text.bpeMerges(spark, dir), Text.bpeVocab(spark, dir))
         Tables.documents(spark, dir)
           .join(baseKeptDocs(spark, dir).hint("shuffle_hash"),
@@ -849,7 +849,7 @@ object Pipeline {
       .join(incLosers.hint("shuffle_hash"), Seq("doc_id"), "left_anti")
     // append placement: the increment's prefix sum continues each
     // lang's stream from the shipped per-lang token totals
-    val dict = Text.bpeEncodeDict(
+    val dict = Text.bpeEncodeDictUnder(
       Text.bpeMerges(spark, dir), Text.bpeVocab(spark, dir))
     val incDocs = docs.join(admitted.hint("shuffle_hash"),
       Seq("doc_id"), "left_semi")

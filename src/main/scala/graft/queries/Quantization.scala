@@ -119,7 +119,6 @@ object Quantization {
     * error per vector.
     */
   def pqCodes(spark: SparkSession, dir: String): DataFrame = {
-    PqEncode.register(spark)
     val cand = candidates(spark, dir)
     val books = codebooks(spark, dir)
     withCodes(cand, books)
@@ -132,8 +131,6 @@ object Quantization {
     * via m code-table lookups summed; exact integer distances.
     */
   def pqSearch(spark: SparkSession, dir: String): DataFrame = {
-    PqEncode.register(spark)
-    TopKScoreId.register(spark)
     val cand = candidates(spark, dir)
     val books = codebooks(spark, dir)
     val codes = withCodes(cand, books)
@@ -287,7 +284,6 @@ object Quantization {
     * per-record projection.
     */
   def streamingPqCodes(spark: SparkSession, dir: String): DataFrame = {
-    PqEncode.register(spark)
     val cand = candidates(spark, dir)
     val books = codebooks(spark, dir)
     val path = s"$dir/embeddings.parquet"
@@ -296,10 +292,7 @@ object Quantization {
     val schema = spark.read.parquet(path).schema
     // balancedStream: pq_encode over every subvector is the CPU-heavy
     // stage — single-row-group staging would run it on one core.
-    // pq_encode registers on the drain session too — the stream chain
-    // is analyzed there (function registries are per-session).
     val ds = StreamingQueries.drainSession(spark)
-    PqEncode.register(ds)
     val stream = StreamingQueries.balancedStream(
       ds.readStream.schema(schema).parquet(streamDir.toString)
         .filter(col("vec_id") >= Similarity.nQueries))
@@ -331,8 +324,6 @@ object Quantization {
   val ivfTopK = 5
 
   def ivfPqSearch(spark: SparkSession, dir: String): DataFrame = {
-    PqEncode.register(spark)
-    TopKScoreId.register(spark)
     val cand = candidates(spark, dir)
     val books = codebooks(spark, dir)
     val codes = withCodes(cand, books)

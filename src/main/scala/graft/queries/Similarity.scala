@@ -150,8 +150,6 @@ object Similarity {
   private[graft] def withNorm(spark: SparkSession, dir: String,
                        bucket: Boolean = false,
                        scaledBucket: Boolean = false): DataFrame = {
-    DotProduct.register(spark) // idempotent; covers non-configured sessions
-    TopKScoreId.register(spark)
     val base = Tables.embeddings(spark, dir)
       .withColumn("nrm", expr(sparkNorm))
     if (scaledBucket) {
@@ -229,7 +227,6 @@ object Similarity {
     * full-precision s01 is pinned in SimilaritySpec.
     */
   def quantizedTopK(spark: SparkSession, dir: String): DataFrame = {
-    DotProduct.register(spark); TopKScoreId.register(spark)
     val emb = Tables.embeddings(spark, dir)
       .withColumn("qscale", expr(
         "greatest(array_max(transform(embedding, y -> abs(CAST(y AS DOUBLE)))), 1e-30d)"))

@@ -43,9 +43,9 @@ object StreamingQueries {
     * drain. Cross-session stream-static joins (a child-session stream
     * against a parent-built static frame) are supported: both
     * sessions share one context, and already-analyzed parent subtrees
-    * stay resolved inside the child's plan. Custom codegen functions
-    * used IN THE STREAM CHAIN must be registered on this session
-    * (function registries are per-session) — call sites do.
+    * stay resolved inside the child's plan. The child inherits the
+    * parent's session extensions, so the engine's custom functions
+    * resolve in stream chains too.
     */
   private[graft] def drainSession(spark: SparkSession): SparkSession = {
     val s = PlanMemo.cachedValue(spark, "stream.drainSession")(
@@ -532,12 +532,6 @@ object StreamingQueries {
     */
   def streamingSemanticGate(spark: SparkSession, dir: String): DataFrame = {
     val ds = drainSession(spark)
-    // the stream chain is analyzed on the drain session, so its
-    // custom codegen kernels register there; the parent keeps its own
-    // registrations for the batch-side frames
-    DotProduct.register(spark)
-    DotProduct.register(ds)
-    PqEncode.register(ds)
     val emb = Tables.embeddings(spark, dir)
     val split = PlanMemo.cachedValue(spark, s"w14.split:$dir")(emb.count() / 2)
     val toDouble = "transform(embedding, x -> CAST(x AS DOUBLE))"
@@ -731,10 +725,10 @@ object StreamingQueries {
     * (t21's merge table) — the token-budget monitor every pipeline
     * runs while crawl batches arrive. The frozen model is applied
     * exactly as production does it: as a FUNCTION, map-side —
-    * [[Text.bpeNtokExpr]] spells the whole merge chain as one codegen
-    * string expression per word occurrence (char-split via
-    * regexp_replace + 8 replaces; no dictionary join, no interpreted
-    * HOF), so the only stateful op is the `groupBy(source)` whose
+    * [[Text.bpeNtokUdf]] runs the engine's one encoder (the rank
+    * cursor) per word occurrence over its byte split (no dictionary
+    * join: a streamed word need not be in the corpus vocabulary), so
+    * the only stateful op is the `groupBy(source)` whose
     * state is O(sources) — bounded regardless of corpus size, unlike
     * a per-doc aggregation. Contrast with batch t22, where joining
     * the vocabulary-sized dictionary beats re-deriving per
@@ -743,7 +737,7 @@ object StreamingQueries {
     * posture that survives an unbounded stream.
     *
     * Every streamed word was seen in training (same corpus), so the
-    * oracle's dictionary join drops nothing and the map-side chain
+    * oracle's dictionary join drops nothing and the map-side encode
     * equals the dictionary's ntok (TextBpeSpec pins the equality over
     * the whole vocabulary). Arrival semantics: a source whose
     * documents carry zero words emits NO row (nothing arrived to
@@ -754,20 +748,20 @@ object StreamingQueries {
     * — ingest consumes the shipped model, it never trains.
     */
   def streamingTokenAccounting(spark: SparkSession, dir: String): DataFrame = {
-    val merges = Text.bpeMerges(spark, dir)
+    val ntok = Text.bpeNtokUdf(Text.bpeMerges(spark, dir))
     val path = s"$dir/documents.parquet"
     val streamDir = TempArtifacts.scratchDir("graft_stream_tok")
     TempArtifacts.stageTable(streamDir, path)
     val schema = spark.read.parquet(path).schema
-    // balancedStream: the per-occurrence regexp + replace chain is
-    // the CPU stage
+    // balancedStream: the per-occurrence byte split + encode is the
+    // CPU stage
     val occ = balancedStream(
         drainSession(spark)
           .readStream.schema(schema).parquet(streamDir.toString))
       .select(col("source"),
         explode_outer(Text.bpeWords(col("text"))).as("w"))
       .filter(col("w").isNotNull)
-      .select(col("source"), expr(Text.bpeNtokExpr(merges, "w")).as("ntok"))
+      .select(col("source"), ntok(Text.byteSym(col("w"))).as("ntok"))
     val agg = occ.groupBy("source")
       .agg(count(lit(1)).as("n_words"), sum("ntok").as("n_tokens"))
     drainToMemory(spark, agg, "complete", "w15", streamDir)

@@ -171,7 +171,6 @@ object Temporal {
     * TemporalJoinsSpec.
     */
   def asofJoinNative(spark: SparkSession, dir: String): DataFrame = {
-    graft.plans.AsOfJoinStrategy.install(spark) // idempotent
     val ev = Tables.events(spark, dir)
     val clicks = ev.filter(col("event_type") === "click")
       .select("event_id", "user_id", "ts")
@@ -250,7 +249,6 @@ object Temporal {
     * pinned in TemporalJoinsSpec.
     */
   def rangeJoinNative(spark: SparkSession, dir: String): DataFrame = {
-    graft.plans.RangeJoinStrategy.install(spark) // idempotent
     val ev = Tables.events(spark, dir)
     val clicks = ev.filter(col("event_type") === "click")
       .select(col("user_id"), col("ts").as("cts"))

@@ -1,7 +1,12 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import scala.reflect.runtime.universe.TypeTag
+
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.expressions.UserDefinedFunction
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{
+  BooleanType, DataType, IntegerType, LongType, StringType}
 
 /** Text-analysis operators over the `documents` table — the
   * training-data-pipeline surface mandated by the build brief (SURVEY.md
@@ -10,9 +15,10 @@ import org.apache.spark.sql.functions._
   * heuristic.
   *
   * Everything is built from codegen'd higher-order functions
-  * (`split`/`filter`/`transform`/`aggregate`/`explode`) — no UDFs — so
-  * the plans stay whole-stage-codegen'd and scale linearly: per-document
-  * work is map-side, and the only shuffles are the final group-bys on
+  * (`split`/`filter`/`transform`/`aggregate`/`explode`) — no UDFs but
+  * the BPE encoder ([[bpeEncodeSymsRank]]) — so the plans stay
+  * whole-stage-codegen'd and scale linearly: per-document work is
+  * map-side, and the only shuffles are the final group-bys on
   * low-cardinality keys (lang, word). At 100 TB the explode in word_freq
   * produces a heavy intermediate; partial aggregation (map-side combine)
   * keeps the shuffle proportional to distinct-word count per partition,
@@ -306,7 +312,6 @@ object Text {
     // filter above the projection that computes fps, and also stops
     // CollapseProject from inlining fps into the rolling-window
     // expression that references it rollWindow times.
-    OptimizerBarrier.register(spark)
     Tables.documents(spark, dir)
       .withColumn("toks", tokens(lower(col("text"))))
       .withColumn("fps", expr(
@@ -1203,7 +1208,6 @@ object Text {
   val cdcMod = 8
 
   def cdcChunks(spark: SparkSession, dir: String): DataFrame = {
-    OptimizerBarrier.register(spark)
     Tables.documents(spark, dir)
       .withColumn("toks", tokens(lower(col("text"))))
       .withColumn("fps", expr(
@@ -1411,20 +1415,20 @@ object Text {
     * Sennrich BPE's input shape — and the whole reason the operator
     * scales: the ONLY corpus-sized pass is this one explode →
     * groupBy(word) count (partial aggregation makes the shuffle
-    * O(distinct words), not O(tokens)); every merge round afterwards
-    * runs on this dictionary, whose cardinality is the corpus
-    * VOCABULARY (~1e8 rows at 100 TB, not 1e12 tokens). Memoized
-    * eager: all [[bpeRounds]] pair-count jobs re-scan it. Byte-level
-    * (round-14): symbols are UTF-8 bytes, so punctuation, digits,
-    * mixed case, and multi-byte scripts all train exactly — no
-    * alphabet restriction.
+    * O(distinct words), not O(tokens)); the trainer and every encode
+    * dictionary run on this dictionary, whose cardinality is the
+    * corpus VOCABULARY (~1e8 rows at 100 TB, not 1e12 tokens).
+    * Memoized eager: the train collect and each encode re-scan it.
+    * Byte-level (round-14): symbols are UTF-8 bytes, so punctuation,
+    * digits, mixed case, and multi-byte scripts all train exactly —
+    * no alphabet restriction.
     */
   private[graft] def bpeVocab(spark: SparkSession, dir: String): DataFrame =
     PlanMemo.cachedEager(spark, s"text.bpeVocab:$dir")(
       // PUBLISHED artifact (round 19): the word-frequency dictionary
       // is the canonical first artifact of every real BPE training
       // pipeline — the word-count table the trainer consumes and the
-      // encode/accounting tiers join against. It is corpus-derived,
+      // encode dictionaries map over. It is corpus-derived,
       // vocabulary-sized, and consumed by a dozen operators (t21-t33
       // dictionaries, the e-family token accounting, w15, p07), each
       // of which previously re-ran the corpus tokenize+explode+groupBy
@@ -1442,144 +1446,39 @@ object Text {
           // counting reads only (freq, sym)
           .select("word", "freq", "sym")))
 
-  /** The eager Lloyd-style training loop (see Clustering.centroidsOn
-    * for the pattern): each round is one pair-count aggregation over
-    * the dictionary — explode adjacent symbol pairs weighted by word
-    * freq, groupBy(pair) sum, TakeOrdered(1) by (cnt DESC, pair ASC)
-    * — followed by a driver-side record of the winning merge. The
-    * collect is ONE row per round (O(k) driver metadata, like the
-    * k-means centroids), and the merge is re-applied lazily as a
-    * growing `replace` chain over the memoized base dictionary, so
-    * no per-round re-materialization is needed (k×replace per row ≈
-    * trivial next to the pair explode).
+  /** The corpus's trained [[bpeRounds]]-merge tokenizer (t21's table)
+    * as a PUBLISHED artifact — train once, persist the merge table,
+    * and have every consumer (batch encode, streaming accounting,
+    * later sessions) load the FROZEN table instead of re-training.
+    * The train is [[bpeTrainAt]] over the unpruned (minFreq 1)
+    * dictionary; [[bpePublishedTrain]] keys the artifact by the corpus
+    * content fingerprint (a mutated corpus re-trains, an unchanged one
+    * re-reads) and refuses a drifted table.
     *
-    * Merge application contract (pinned by TextBpeSpec and mirrored
-    * verbatim by the DuckDB oracle): a merge (l, r) rewrites the
-    * symbol string via `trim(replace(' '||sym||' ', ' l r ', ' lr '))`
-    * — leftmost-first, non-overlapping, separator-consuming. On a run
-    * like "a a a a" this merges ONE pair per round ("aa a a"), where
-    * canonical BPE would take two; both engines implement `replace`
-    * identically, so the gate is exact, and the deviation only
-    * matters for same-symbol runs (rare outside degenerate corpora).
+    * Merge contract (pinned by TextBpeSpec and mirrored verbatim by
+    * the unrolled DuckDB oracle): pair counts weighted by word freq
+    * over adjacent symbols, winner by (cnt DESC, "l r" ASC), and a
+    * merge (l, r) rewrites the symbol string like
+    * `trim(replace(' '||sym||' ', ' l r ', ' lr '))` — leftmost-first,
+    * non-overlapping, separator-consuming. On a run like "a a a a"
+    * this merges ONE pair per round ("aa a a"), where canonical BPE
+    * would take two; the deviation only matters for same-symbol runs.
+    * Winning counts are non-increasing across rounds: a pair CREATED
+    * by a merge (x, lr) occurs only where (x, l) occurred.
     *
-    * Invariant (TextBpeSpec): winning counts are non-increasing
-    * across rounds — any pair CREATED by a merge (x, lr) occurs only
-    * where (x, l) occurred, so its count is bounded by a candidate
-    * the previous round already considered.
-    *
-    * Degenerate corpora (no adjacent pair anywhere before `rounds`
-    * merges complete — e.g. single-letter words only): the engine
-    * fails LOUDLY here (the require below), surfacing as a Verify
-    * `err`, while the unrolled oracle would degrade to fewer rows /
-    * NULL-sym CTEs. The failure modes differ but neither can pass a
-    * gate silently; unreachable on any realistic text corpus.
+    * Degenerate corpora (fewer than [[bpeRounds]] mergeable pairs,
+    * e.g. single-letter words only) fail LOUDLY before anything is
+    * published: a short table must never reach the oracle-gated t21,
+    * whose unrolled twin would degrade to NULL-sym CTEs instead.
     */
-  /** The ONE spelling of merge application — (l, r) rewritten over a
-    * symbol-string expression as a leftmost-first, non-overlapping,
-    * separator-consuming replace. Train (bpeMergesOn), batch encode
-    * (bpeEncodeDict) and stream encode (bpeNtokExpr) all go through
-    * here, so their spellings cannot drift (the divergence class
-    * TextBpeSpec's equality tests gate).
-    */
-  private def mergeReplaceExpr(e: String, l: String, r: String): String =
-    s"trim(replace(concat(' ', $e, ' '), ' $l $r ', ' $l$r '))"
-
-  private[graft] def bpeMergesOn(
-      spark: SparkSession, key: String, vocab: => DataFrame,
-      rounds: Int = bpeRounds)
-      : Seq[(Int, String, String, Long)] =
-    PlanMemo.cachedValue(spark, s"text.bpeMerges:$key:$rounds") {
-      // vocab is by-name: a memo HIT never touches the dictionary, so
-      // w15 (which only needs the merge list) doesn't rebuild the
-      // eager vocab frame after a cache eviction
-      val dict = vocab
-      val merges = scala.collection.mutable.ListBuffer
-        .empty[(Int, String, String, Long)]
-      var symExpr = "sym"
-      for (round <- 1 to rounds) {
-        val best = dict
-          .select(col("freq"), split(expr(symExpr), " ").as("ss"))
-          .filter(size(col("ss")) >= 2)
-          .select(col("freq"), explode(expr(
-            "transform(sequence(1, size(ss) - 1), " +
-              "i -> concat(element_at(ss, i), ' ', element_at(ss, i + 1)))"))
-            .as("pair"))
-          .groupBy("pair").agg(sum("freq").as("cnt"))
-          .orderBy(desc("cnt"), col("pair"))
-          .limit(1).collect()
-        require(best.nonEmpty,
-          s"bpe training ran out of mergeable pairs at round $round")
-        val pair = best(0).getString(0)
-        val cnt = best(0).getLong(1)
-        val Array(l, r) = pair.split(" ", 2)
-        merges += ((round, l, r, cnt))
-        symExpr = mergeReplaceExpr(symExpr, l, r)
-      }
-      merges.toList
-    }
-
-  /** The corpus's trained tokenizer as a PUBLISHED disk artifact —
-    * the shape every real pipeline ships: train once, persist the
-    * merge table, and have every consumer (batch encode, streaming
-    * accounting, future sessions) load the FROZEN artifact instead of
-    * re-training. Goes through [[PlanMemo.publishedParquet]], so the
-    * artifact is keyed by the corpus content fingerprint (a mutated
-    * corpus re-trains; an unchanged one re-reads) and a prior Verify
-    * run's `bpe_merges` output is consumed as-is under
-    * `SPARK_GRAFT_ARTIFACTS`. The driver-side value memo on top makes
-    * repeat in-session loads free.
-    */
-  /** Decode + VALIDATE a published `bpe_merges` artifact. `None` when
-    * the table does not carry the v2 config payload or any row's
-    * (version, word pattern, vocab target, alphabet) differs from this
-    * build's compile-time tokenizer configuration — the caller must
-    * then RE-TRAIN rather than encode under a drifted tokenizer
-    * (round-15 verdict "next" 6: a config drift was previously
-    * undetectable because the artifact carried only the merge rows).
-    */
-  private[graft] def bpeArtifactDecode(
-      df: DataFrame): Option[Seq[(Int, String, String, Long)]] = {
-    val need = Set("round", "lhs", "rhs", "cnt",
-      "fmt_version", "word_pattern", "vocab_target", "alphabet")
-    if (!need.subsetOf(df.columns.toSet)) return None
-    val rows = df.orderBy("round").collect()
-    val configOk = rows.nonEmpty && rows.forall { r =>
-      r.getAs[Int]("fmt_version") == bpeFormatVersion &&
-        r.getAs[String]("word_pattern") == bpeWordPattern &&
-        r.getAs[Int]("vocab_target") == bpeVocabTarget &&
-        r.getAs[String]("alphabet") == bpeAlphabet
-    }
-    if (!configOk) None
-    else Some(rows.map(r => (r.getAs[Int]("round"), r.getAs[String]("lhs"),
-      r.getAs[String]("rhs"), r.getAs[Long]("cnt"))).toSeq)
-  }
-
   private[graft] def bpeMerges(
       spark: SparkSession, dir: String): Seq[(Int, String, String, Long)] =
-    // the memo key carries the corpus CONTENT fingerprint, not just
-    // the dir: an in-session corpus mutation must fall through to
-    // publishedParquet (whose own fingerprint keying re-trains) —
-    // a dir-only key would serve the stale merge table from memory
-    // and make the artifact invalidation unreachable
-    PlanMemo.cachedValue(spark,
-      s"text.bpeMergeArtifact:$dir:${PlanMemo.corpusFingerprint(dir)}") {
-      val df = PlanMemo.publishedParquet(spark, dir, "bpe_merges") {
-        val m = bpeMergesOn(spark, s"text:$dir", bpeVocab(spark, dir))
-        import spark.implicits._
-        m.toDF("round", "lhs", "rhs", "cnt")
-          .withColumn("fmt_version", lit(bpeFormatVersion))
-          .withColumn("word_pattern", lit(bpeWordPattern))
-          .withColumn("vocab_target", lit(bpeVocabTarget))
-          .withColumn("alphabet", lit(bpeAlphabet))
-      }
-      bpeArtifactDecode(df).getOrElse {
-        // stale or config-mismatched artifact (e.g. a pre-v2 table
-        // under SPARK_GRAFT_ARTIFACTS): refuse it and train fresh in
-        // this session — mis-encoding under a drifted tokenizer is
-        // the one failure a frozen-artifact pipeline must never have
-        bpeMergesOn(spark, s"text:$dir:retrain", bpeVocab(spark, dir))
-      }
-    }
+    bpePublishedTrain(spark, dir, "bpe_merges", bpeVocabTarget, 1L) {
+      val res = bpeTrainAt(spark, dir, bpeRounds, 0, minFreq = 1L)
+      require(!res.exhausted, "bpe training ran out of mergeable pairs " +
+        s"at round ${res.merges.length + 1}")
+      res
+    }.merges
 
   /** t21 — BPE tokenizer training: learn merge rules from the corpus
     * until the vocabulary reaches [[bpeVocabTarget]] (the operation
@@ -1649,7 +1548,7 @@ object Text {
   }
 
   // ---------------------------------------------------------------
-  /** Result of the driver-side trainer: the merge table, whether the
+  /** Result of the BPE trainer: the merge table, whether the
     * dictionary ran out of adjacent pairs before `rounds`, and the
     * corpus token totals (Σ freq·|symbols|) initially, after
     * `checkpointRound` merges, and at the end — the compression
@@ -1662,44 +1561,11 @@ object Text {
       tokensAtCheckpoint: Long,
       tokensFinal: Long)
 
-  /** Production-scale BPE training (round-15 verdict "next" 1): the
-    * classic in-memory trainer over the COLLECTED word-frequency
-    * dictionary — the architecture every shipped tokenizer trainer
-    * uses (Sennrich's subword-nmt and HuggingFace `tokenizers` both
-    * count words distributed/streamed, then run the merge loop on the
-    * in-memory dictionary). The Spark side contributes the one
-    * corpus-sized pass ([[bpeVocab]]'s explode→groupBy, shuffle
-    * O(distinct words)); this loop is O(dictionary), incremental, and
-    * runs thousands of merges per second — vs the oracle-gated
-    * [[bpeMergesOn]]'s one driver-paced Spark job PER ROUND, which is
-    * correct but caps at [[bpeRounds]] by pacing and by the statically
-    * unrolled DuckDB twin.
-    *
-    * EXACTLY the same contract as [[bpeMergesOn]] / TextBpeSpec's
-    * `refBpe` (fuzz-pinned): pair counts weighted by word freq over
-    * adjacent symbols (same-symbol runs count every overlapping
-    * position), winner by (cnt DESC, "l r" ASC), and the merge applied
-    * as the separator-consuming leftmost non-overlapping replace —
-    * after a merge fires at position i, a new match may not begin at
-    * i+2 (its leading separator was consumed by the replacement), the
-    * exact `replace(' l r ', ' lr ')` semantics of the engine/oracle
-    * spelling ([[mergeReplaceExpr]]).
-    *
-    * Incremental bookkeeping: a (cnt, pair) ordered set gives O(log P)
-    * winner selection; each merge rescans ONLY the words containing
-    * the winning pair (tracked per pair), so a round's cost is
-    * proportional to the affected dictionary slice, not the
-    * dictionary — sub-linear in rounds overall, the verdict's "done"
-    * bar. At 100 TB the collected dictionary is bounded by df-pruning
-    * (`spark.graft.bpeMinFreq` in [[bpeTrainLarge]]) — the standard
-    * min-frequency cut every production trainer applies.
-    */
   /** Separator-consuming leftmost non-overlapping merge application —
-    * the ONE in-memory spelling of [[mergeReplaceExpr]]'s
-    * `replace(' l r ', ' lr ')` contract, shared by the trainer's
-    * rescans and the large-vocabulary encoder ([[bpeEncodeSymsLarge]]).
-    * Returns the SAME array instance when no merge fires (callers use
-    * the reference check to skip bookkeeping).
+    * the ONE in-memory spelling of the `replace(' l r ', ' lr ')`
+    * merge contract ([[bpeMerges]]), shared by the trainer's rescans
+    * and the encoders. Returns the SAME array instance when no merge
+    * fires (callers use the reference check to skip bookkeeping).
     */
   private[graft] def bpeApplyMerge(
       w: Array[String], l: String, r: String): Array[String] = {
@@ -1758,6 +1624,29 @@ object Text {
     }
   }
 
+  /** The in-memory BPE merge loop over a COLLECTED word-frequency
+    * dictionary — the architecture every shipped tokenizer trainer
+    * uses (Sennrich's subword-nmt and HuggingFace `tokenizers` both
+    * count words distributed/streamed, then run the merge loop on the
+    * in-memory dictionary). The Spark side contributes the one
+    * corpus-sized pass ([[bpeVocab]]'s explode→groupBy, shuffle
+    * O(distinct words)); this loop is O(dictionary), incremental, and
+    * runs thousands of merges per second.
+    *
+    * Implements EXACTLY the [[bpeMerges]] contract / TextBpeSpec's
+    * `refBpe` (fuzz-pinned): after a merge fires at position i, a new
+    * match may not begin at i+2 (its leading separator was consumed by
+    * the replacement) — [[bpeApplyMerge]].
+    *
+    * Incremental bookkeeping: a (cnt, pair) ordered set gives O(log P)
+    * winner selection; each merge rescans ONLY the words containing
+    * the winning pair (tracked per pair), so a round's cost is
+    * proportional to the affected dictionary slice, not the
+    * dictionary — sub-linear in rounds overall. At 100 TB the
+    * collected dictionary is bounded by df-pruning
+    * (`spark.graft.bpeMinFreq`) — the standard min-frequency cut every
+    * production trainer applies.
+    */
   private[graft] def bpeTrainDriver(
       vocab: Seq[(Long, String)], rounds: Int,
       checkpointRound: Int = 0): BpeDriverTrain = {
@@ -1794,8 +1683,6 @@ object Text {
       while (j < words.length) { t += freqs(j) * words(j).length; j += 1 }
       t
     }
-    def applyMerge(w: Array[String], l: String, r: String): Array[String] =
-      bpeApplyMerge(w, l, r)
     val tokensInitial = total
     var tokensCk = if (checkpointRound == 0) tokensInitial else -1L
     val out = mutable.ListBuffer.empty[(Int, String, String, Long)]
@@ -1821,7 +1708,7 @@ object Text {
         while (k < affected.length) {
           val wi = affected(k)
           val w = words(wi)
-          val nw = applyMerge(w, l, r)
+          val nw = bpeApplyMerge(w, l, r)
           if (!(nw eq w)) {
             scanWord(wi, -1L)
             words(wi) = nw
@@ -1847,15 +1734,15 @@ object Text {
   val bpeLargeVocabTarget: Int = 1256
 
   /** t25 — PRODUCTION-SCALE BPE TRAINING: train the tokenizer to a
-    * ≥1k-merge vocabulary ([[bpeLargeVocabTarget]]) with the
-    * dictionary-collect architecture ([[bpeTrainDriver]]) and gate
-    * the result's structure as bands:
+    * ≥1k-merge vocabulary ([[bpeLargeVocabTarget]]) with the one
+    * trainer ([[bpeTrainAt]]) and gate the result's structure as
+    * bands:
     *   - vocab_reached: the merge table hit the target (or the
     *     dictionary was fully merged — impossible on realistic text);
     *   - prefix_agrees: the first [[bpeRounds]] merges EQUAL the
-    *     oracle-hash-gated t21 artifact — the two trainers implement
-    *     one contract, so the driver loop inherits t21's cross-engine
-    *     gate on its prefix;
+    *     oracle-hash-gated t21 artifact — training is prefix-stable,
+    *     so the 1k table inherits t21's cross-engine gate on its
+    *     prefix;
     *   - counts_nonincreasing: winning counts never rise (the BPE
     *     invariant TextBpeSpec proves);
     *   - wellformed: every merged symbol is a hex byte concatenation;
@@ -1865,26 +1752,22 @@ object Text {
     * `spark.graft.bpeMinFreq` (default 1 = exact) df-prunes the
     * collected dictionary — at 100 TB the vocabulary tail is pruned
     * before collect exactly as production trainers do; the bands gate
-    * runs unpruned.
-    */
-  /** The memoized production-vocabulary training result — t25's bands
-    * and t27's encode both consume it, one train per (session, corpus,
-    * minFreq).
+    * runs unpruned. The memoized result is shared by t25's bands and
+    * t27/t29's encodes: one train per (session, corpus, minFreq).
     */
   private[graft] def bpeLargeTrain(
       spark: SparkSession, dir: String): BpeDriverTrain =
-    bpeTrainAt(spark, dir, bpeLargeVocabTarget - 256, bpeRounds)
+    bpeTrainAt(spark, dir, bpeLargeVocabTarget - 256, bpeRounds,
+      bpeMinFreq(spark))
 
-  /** One in-memory train at an arbitrary merge-rounds target,
-    * memoized per (corpus, minFreq, rounds, checkpoint). The
-    * dictionary collect reuses [[bpeVocab]]'s memoized corpus pass;
-    * determinism does NOT depend on collect order (the pair queue
-    * aggregates counts and tie-breaks on the pair string), which is
-    * what makes the prefix bands exact: training to N merges and
-    * training to M > N merges agree on the first N rules.
+  /** The df-pruning cut for the 1k and 32k trains
+    * (`spark.graft.bpeMinFreq`, default 1 = exact).
     */
-  /** Driver dictionary budget (rows) for the in-memory trainer. The
-    * default keeps the largest MEASURED-viable vocabulary-stress point
+  private[graft] def bpeMinFreq(spark: SparkSession): Long =
+    spark.conf.get("spark.graft.bpeMinFreq", "1").toLong
+
+  /** Driver dictionary budget (rows) for [[bpeTrainAt]]. The default
+    * keeps the largest MEASURED-viable vocabulary-stress point
     * driver-side (SCALE.md: 14.05M distinct words trained exact at
     * 46.3 GB peak heap on a 128 GiB driver) with headroom; a pruned
     * dictionary above it — the 1e8-word web-vocabulary shape the
@@ -1892,19 +1775,24 @@ object Text {
     * the executor-side trainer ([[BpeDist.train]]), which is pinned
     * bit-identical and keeps driver state O(distinct pairs). Same
     * size-gate pattern as the connected-components driver cut
-    * (`Dedup.scala` `ccDriverMaxEdges`). Override with
-    * `spark.graft.bpeMaxDriverDictRows` (0 forces delegation — how
-    * the specs and the t33 gate exercise the distributed path on
-    * small corpora).
+    * (`Dedup.scala` `ccDriverMaxEdges`).
     */
   val bpeMaxDriverDictRows: Long = 16000000L
 
+  /** THE BPE trainer: every merge table in the engine (t21's 12, t25's
+    * 1k, t30's 32k) comes from here. It collects the minFreq-pruned
+    * [[bpeVocab]] dictionary and runs [[bpeTrainDriver]], or — when
+    * the dictionary is over `budget` rows — [[BpeDist.train]], which
+    * is bit-identical (TextBpeSpec and t33 pin it; a budget of 0
+    * forces delegation). Memoized per (corpus, minFreq, rounds,
+    * checkpoint); determinism does NOT depend on collect order (the
+    * pair queue aggregates counts and tie-breaks on the pair string),
+    * which is what makes the prefix bands exact: training to N merges
+    * and training to M > N merges agree on the first N rules.
+    */
   private[graft] def bpeTrainAt(
-      spark: SparkSession, dir: String,
-      rounds: Int, checkpointRound: Int): BpeDriverTrain = {
-    val minFreq = spark.conf.get("spark.graft.bpeMinFreq", "1").toLong
-    val budget = spark.conf.get("spark.graft.bpeMaxDriverDictRows",
-      bpeMaxDriverDictRows.toString).toLong
+      spark: SparkSession, dir: String, rounds: Int, checkpointRound: Int,
+      minFreq: Long, budget: Long = bpeMaxDriverDictRows): BpeDriverTrain =
     PlanMemo.cachedValue(spark,
       s"text.bpeLarge:$dir:${PlanMemo.corpusFingerprint(dir)}:$minFreq" +
         s":$rounds:$checkpointRound") {
@@ -1912,8 +1800,7 @@ object Text {
         .filter(col("freq") >= minFreq)
         .select("freq", "sym")
       // one cheap count decides the path; the memoized result is
-      // bit-identical either way (TextBpeSpec + t33 pin it), so the
-      // memo key deliberately omits the budget
+      // bit-identical either way, so the memo key omits the budget
       if (pruned.count() <= budget) {
         val dict = pruned.collect()
           .map(r => (r.getLong(0), r.getString(1))).toSeq
@@ -1923,7 +1810,6 @@ object Text {
           checkpointRound = checkpointRound)
       }
     }
-  }
 
   /** Vocabulary target for the PRODUCTION tokenizer: 256 byte symbols
     * + 32768 merges — the size real byte-level tokenizers ship
@@ -1942,98 +1828,70 @@ object Text {
   /** The production-vocabulary (32k-merge-target) training result —
     * t30's bands and t31/t32's encodes all consume it; the compression
     * checkpoint sits at the 1k boundary so the band set compares the
-    * production artifact against [[bpeLargeTrain]]'s.
-    *
-    * PUBLISHED as a versioned disk artifact (round-17: the 32k train
-    * is minutes at vocabulary stress — a real pipeline trains once and
-    * SHIPS the table, it never retrains per session): the
-    * `bpe_merges_prod[_mfN]` parquet carries the v2 config payload
-    * (version, word pattern, vocab target, alphabet) PLUS the training
-    * `min_freq` and the train's token accounting, and
-    * [[bpeProdArtifactDecode]] REFUSES any drift — including an
-    * artifact trained under a DIFFERENT pruning regime, which would
-    * otherwise silently change every fertility band downstream. The
-    * artifact name itself is minFreq-suffixed so two pruning regimes
-    * of one corpus never collide on disk.
+    * production artifact against [[bpeLargeTrain]]'s. PUBLISHED
+    * (round-17: the 32k train is minutes at vocabulary stress — a real
+    * pipeline trains once and SHIPS the table) as
+    * `bpe_merges_prod[_mfN]`: the name is minFreq-suffixed so two
+    * pruning regimes of one corpus never collide on disk, and the
+    * decoder refuses a table trained under a different regime.
     */
   private[graft] def bpeProdTrain(
       spark: SparkSession, dir: String): BpeDriverTrain = {
-    val minFreq = spark.conf.get("spark.graft.bpeMinFreq", "1").toLong
-    PlanMemo.cachedValue(spark,
-      s"text.bpeProdArtifact:$dir:${PlanMemo.corpusFingerprint(dir)}" +
-        s":$minFreq") {
-      val name = if (minFreq == 1L) "bpe_merges_prod"
-        else s"bpe_merges_prod_mf$minFreq"
-      def payload(res: BpeDriverTrain): DataFrame = {
-        import spark.implicits._
-        res.merges.toDF("round", "lhs", "rhs", "cnt")
-          .withColumn("fmt_version", lit(bpeFormatVersion))
-          .withColumn("word_pattern", lit(bpeWordPattern))
-          .withColumn("vocab_target", lit(bpeProdVocabTarget))
-          .withColumn("alphabet", lit(bpeAlphabet))
-          .withColumn("min_freq", lit(minFreq))
-          .withColumn("exhausted", lit(res.exhausted))
-          .withColumn("tokens_initial", lit(res.tokensInitial))
-          .withColumn("tokens_checkpoint", lit(res.tokensAtCheckpoint))
-          .withColumn("tokens_final", lit(res.tokensFinal))
-      }
-      def freshTrain(): BpeDriverTrain =
-        bpeTrainAt(spark, dir, bpeProdVocabTarget - 256,
-          bpeLargeVocabTarget - 256)
-      val df = PlanMemo.publishedParquet(spark, dir, name)(
-        payload(freshTrain()))
-      bpeProdArtifactDecode(df, minFreq).getOrElse {
-        // stale or config-mismatched artifact (a pre-upgrade table or
-        // one trained under a different pruning regime staged via
-        // SPARK_GRAFT_ARTIFACTS): refuse it, train fresh, and REPAIR
-        // the published table so later sessions don't silently re-pay
-        // the full train behind what looks like a shipped artifact. A
-        // read-only staged mount can't be repaired — log so the
-        // operator sees the stale mount.
-        val res = freshTrain()
-        if (PlanMemo.stagedArtifact(dir, name).isEmpty)
-          PlanMemo.republishParquet(spark, dir, name)(payload(res))
-        else
-          org.slf4j.LoggerFactory.getLogger("graft.Text").warn(
-            s"graft: refusing staged BPE artifact '$name' for $dir " +
-              "(format/pruning-regime drift); trained fresh — repair " +
-              "or remove the SPARK_GRAFT_ARTIFACTS mount")
-        res
-      }
-    }
+    val minFreq = bpeMinFreq(spark)
+    val name = if (minFreq == 1L) "bpe_merges_prod"
+      else s"bpe_merges_prod_mf$minFreq"
+    bpePublishedTrain(spark, dir, name, bpeProdVocabTarget, minFreq)(
+      bpeTrainAt(spark, dir, bpeProdVocabTarget - 256,
+        bpeLargeVocabTarget - 256, minFreq))
   }
 
-  /** Decode + VALIDATE a published `bpe_merges_prod` artifact. `None`
-    * when the table lacks the config payload or any row's (version,
-    * word pattern, vocab target, alphabet, min_freq) differs from
-    * this build's configuration and the requested pruning regime —
-    * the caller must then RE-TRAIN rather than encode under a drifted
-    * tokenizer (the [[bpeArtifactDecode]] contract, extended with the
-    * training-time pruning knob).
+  /** The ONE published merge-table format (`bpe_merges` and
+    * `bpe_merges_prod[_mfN]`): the merge rows (round, lhs, rhs, cnt),
+    * the tokenizer configuration beside every row (format version,
+    * word pattern, vocab target, alphabet, training min_freq) and the
+    * train's accounting (exhausted, token totals).
     */
-  private[graft] def bpeProdArtifactDecode(
-      df: DataFrame, minFreq: Long): Option[BpeDriverTrain] = {
-    // names AND types: a hand-staged artifact whose metadata columns
-    // drifted (fmt_version stored as BIGINT, cnt as INT, ...) must
-    // refuse like any other drift, not throw ClassCastException out
-    // of the typed getters below — schema drift IS the stale-artifact
-    // case this decoder exists to handle.
-    import org.apache.spark.sql.types._
-    val need: Map[String, DataType] = Map(
-      "round" -> IntegerType, "lhs" -> StringType, "rhs" -> StringType,
-      "cnt" -> LongType, "fmt_version" -> IntegerType,
-      "word_pattern" -> StringType, "vocab_target" -> IntegerType,
-      "alphabet" -> StringType, "min_freq" -> LongType,
-      "exhausted" -> BooleanType, "tokens_initial" -> LongType,
-      "tokens_checkpoint" -> LongType, "tokens_final" -> LongType)
+  private val bpeArtifactSchema: Map[String, DataType] = Map(
+    "round" -> IntegerType, "lhs" -> StringType, "rhs" -> StringType,
+    "cnt" -> LongType, "fmt_version" -> IntegerType,
+    "word_pattern" -> StringType, "vocab_target" -> IntegerType,
+    "alphabet" -> StringType, "min_freq" -> LongType,
+    "exhausted" -> BooleanType, "tokens_initial" -> LongType,
+    "tokens_checkpoint" -> LongType, "tokens_final" -> LongType)
+
+  private[graft] def bpeArtifactPayload(spark: SparkSession,
+      res: BpeDriverTrain, vocabTarget: Int, minFreq: Long): DataFrame = {
+    import spark.implicits._
+    res.merges.toDF("round", "lhs", "rhs", "cnt")
+      .withColumn("fmt_version", lit(bpeFormatVersion))
+      .withColumn("word_pattern", lit(bpeWordPattern))
+      .withColumn("vocab_target", lit(vocabTarget))
+      .withColumn("alphabet", lit(bpeAlphabet))
+      .withColumn("min_freq", lit(minFreq))
+      .withColumn("exhausted", lit(res.exhausted))
+      .withColumn("tokens_initial", lit(res.tokensInitial))
+      .withColumn("tokens_checkpoint", lit(res.tokensAtCheckpoint))
+      .withColumn("tokens_final", lit(res.tokensFinal))
+  }
+
+  /** Decode + VALIDATE a published merge table. `None` when a column
+    * is missing or has drifted type (a hand-staged table rewritten
+    * through a sloppy engine must refuse, not throw
+    * ClassCastException out of the typed getters) or when any row's
+    * configuration differs from this build's and the requested
+    * (vocab target, min_freq) — the caller must then RE-TRAIN rather
+    * than encode under a drifted tokenizer.
+    */
+  private[graft] def bpeArtifactDecode(df: DataFrame, vocabTarget: Int,
+      minFreq: Long): Option[BpeDriverTrain] = {
     val have = df.schema.fields.map(f => f.name -> f.dataType).toMap
-    if (!need.forall { case (n, t) => have.get(n).contains(t) })
+    if (!bpeArtifactSchema.forall { case (n, t) => have.get(n).contains(t) })
       return None
     val rows = df.orderBy("round").collect()
     val configOk = rows.nonEmpty && rows.forall { r =>
       r.getAs[Int]("fmt_version") == bpeFormatVersion &&
         r.getAs[String]("word_pattern") == bpeWordPattern &&
-        r.getAs[Int]("vocab_target") == bpeProdVocabTarget &&
+        r.getAs[Int]("vocab_target") == vocabTarget &&
         r.getAs[String]("alphabet") == bpeAlphabet &&
         r.getAs[Long]("min_freq") == minFreq
     }
@@ -2049,6 +1907,37 @@ object Text {
         h.getAs[Long]("tokens_final")))
     }
   }
+
+  /** Train-once-and-ship for a merge table: publish `train`'s result
+    * as artifact `name` ([[PlanMemo.publishedParquet]] — content-
+    * fingerprint keyed, so a mutated corpus re-trains) and serve the
+    * decoded table, memoized per session. A stale or config-mismatched
+    * table (a pre-upgrade artifact, another pruning regime staged via
+    * SPARK_GRAFT_ARTIFACTS) is refused: train fresh and REPAIR the
+    * published table so later sessions don't silently re-pay the train
+    * behind what looks like a shipped artifact. A read-only staged
+    * mount can't be repaired — log so the operator sees it.
+    */
+  private def bpePublishedTrain(spark: SparkSession, dir: String,
+      name: String, vocabTarget: Int, minFreq: Long)
+      (train: => BpeDriverTrain): BpeDriverTrain =
+    PlanMemo.cachedValue(spark,
+      s"text.bpeArtifact:$name:$dir:${PlanMemo.corpusFingerprint(dir)}") {
+      val df = PlanMemo.publishedParquet(spark, dir, name)(
+        bpeArtifactPayload(spark, train, vocabTarget, minFreq))
+      bpeArtifactDecode(df, vocabTarget, minFreq).getOrElse {
+        val res = train
+        if (PlanMemo.stagedArtifact(dir, name).isEmpty)
+          PlanMemo.republishParquet(spark, dir, name)(
+            bpeArtifactPayload(spark, res, vocabTarget, minFreq))
+        else
+          org.slf4j.LoggerFactory.getLogger("graft.Text").warn(
+            s"graft: refusing staged BPE artifact '$name' for $dir " +
+              "(format/pruning-regime drift); trained fresh — repair " +
+              "or remove the SPARK_GRAFT_ARTIFACTS mount")
+        res
+      }
+    }
 
   def bpeTrainLarge(spark: SparkSession, dir: String): DataFrame = {
     val rounds = bpeLargeVocabTarget - 256
@@ -2075,12 +1964,11 @@ object Text {
       |  TRUE AS band_compression""".stripMargin
 
   // ---------------------------------------------------------------
-  /** In-memory encode of ONE byte-symbol string under a frozen merge
+  /** REFERENCE encode of ONE byte-symbol string under a frozen merge
     * list: fold every rule in rank order through [[bpeApplyMerge]] —
-    * exactly the contract the 12-merge nested-replace chain
-    * ([[bpeEncodeDict]]) compiles into SQL/Catalyst, at a vocabulary
-    * size where a 1000-deep replace chain is not a sane expression.
-    * Returns the token count.
+    * the literal per-rule reading of the merge contract. The engine
+    * encodes with [[bpeEncodeSymsRank]]; this fold is what TextBpeSpec
+    * and `KernelBench bpeenc` compare it against.
     *
     * Rank-order single-pass application is ENOUGH (no fixpoint loop):
     * a rule (l, r) over pre-existing symbols can never become newly
@@ -2115,16 +2003,12 @@ object Text {
     w
   }
 
-  private[graft] def bpeEncodeSymsLarge(
-      sym: String, rules: Array[(String, String)]): Int =
-    bpeEncodeSymsLargeArr(sym, rules).length
-
   /** Pair → ASCENDING rank list for [[bpeEncodeSymsRank]]. Built ONCE
     * per partition (broadcast ships the rules array; the map is a
     * local rebuild) — at 32k rules the map is ~MBs and amortizes over
     * the partition's dictionary slice. A LIST per pair, not a single
-    * rank: the engine's merge pass is the alternate-occurrence
-    * separator-consuming replace (see mergeReplaceExpr), which can
+    * rank: the merge pass is the alternate-occurrence
+    * separator-consuming replace ([[bpeApplyMerge]]), which can
     * leave residual occurrences of a just-merged pair in the
     * dictionary ("61 61 61 61" → "6161 61 61"), so the SAME pair can
     * win again at a later round and trained tables genuinely contain
@@ -2150,13 +2034,14 @@ object Text {
     m
   }
 
-  /** PRODUCTION-SHAPE encode of one byte-symbol string: the rank-map
-    * BPE encode shipped tokenizers use, spelled to be EXACTLY the
-    * rank-ordered fold [[bpeEncodeSymsLargeArr]] computes. A rank
-    * CURSOR enforces the fold's contract — each rule applies at most
-    * once, in rank order: each step finds the lowest-rank pair
-    * present in the word at rank ≥ cursor, applies it (one
-    * alternate-occurrence pass, like the fold), and advances the
+  /** THE BPE encoder — every engine-side encode (t22–t32 dictionaries,
+    * the e/p-family token ids, w15's per-occurrence count) goes
+    * through here. The rank-map encode shipped tokenizers use, spelled
+    * to be EXACTLY the rank-ordered fold [[bpeEncodeSymsLargeArr]]
+    * computes. A rank CURSOR enforces the fold's contract — each rule
+    * applies at most once, in rank order: each step finds the
+    * lowest-rank pair present in the word at rank ≥ cursor, applies it
+    * (one alternate-occurrence pass, like the fold), and advances the
     * cursor past it. Skipping straight to the lowest PRESENT rank is
     * sound because a skipped rule's pair was absent at the moment the
     * fold would have evaluated it (no rule fired in between), and the
@@ -2199,53 +2084,98 @@ object Text {
     w
   }
 
-  /** The production-vocabulary encode dictionary — (word, ntok_large)
-    * under the [[bpeLargeTrain]] merge table. The rules ship as ONE
-    * broadcast (vocab-target-sized: 1k here, 50k in production — KBs
-    * either way) and each DICTIONARY row encodes in-executor via
-    * [[bpeEncodeSymsLarge]]. This is the one place in the text family
-    * where a typed map replaces a Catalyst expression, and it is
-    * deliberate: the work is per-DISTINCT-WORD (corpus-vocabulary-
-    * sized, like t22's dictionary — never per token or per document),
-    * and a 1000-rule merge chain cannot be spelled as a sane
-    * expression tree (the 12-rule chain is one and stays).
+  /** A frozen merge table's rules and token-id layout: byte b → id b,
+    * merge rule r → id 255 + r (GPT-2's 256-bytes-then-merge-ranks
+    * layout). Two rules CAN concatenate to the same symbol string
+    * (("AB","C") and ("A","BC") both yield "ABC"); the symbol→id map
+    * takes the EARLIEST rule, mirrored by the oracle's MIN(id) GROUP BY
+    * sym. `hex` is the inverse vocabulary (ids back to the
+    * concatenated hex bytes they encode), `decode` those bytes as
+    * UTF-8 text.
     */
-  private[graft] def bpeEncodeLargeDict(
-      spark: SparkSession, dir: String): DataFrame =
-    bpeEncodeDictUnder(spark, dir, bpeLargeTrain(spark, dir), "ntok_large")
+  private[graft] final class BpeIdLayout(
+      merges: Seq[(Int, String, String, Long)]) extends Serializable {
+    val rules: Array[(String, String)] =
+      merges.map { case (_, l, r, _) => (l, r) }.toArray
+    private val idOf: Map[String, Int] = merges
+      .groupBy { case (_, l, r, _) => l + r }
+      .view.mapValues(_.map(m => 255 + m._1).min).toMap
+    private val fusedById: Map[Int, String] =
+      merges.map { case (r, l, rr, _) => (255 + r, l + rr) }.toMap
+    def ids(syms: Array[String]): Array[Int] =
+      syms.map(s => idOf.getOrElse(s, Integer.parseInt(s, 16)))
+    def hex(ids: Array[Int]): String =
+      ids.map(i => if (i >= 256) fusedById(i) else f"$i%02X").mkString
+    def decode(ids: Array[Int]): String =
+      new String(java.util.HexFormat.of().parseHex(hex(ids)), "UTF-8")
+  }
 
-  /** (word, <colName>) under an arbitrary frozen merge table, via the
-    * rank-map encode ([[bpeEncodeSymsRank]]): rules ship as ONE
-    * broadcast, the rank map rebuilds once per PARTITION
-    * (mapPartitions, not map — at 32k rules a per-row rebuild would
-    * dwarf the encode itself), each dictionary row encodes
-    * in-executor. Work is per DISTINCT word — vocabulary-sized,
-    * never per token or per document.
+  /** Encode every (word, sym) row of a dictionary under a frozen merge
+    * table with [[bpeEncodeSymsRank]] and map it to an output row:
+    * the table ships as ONE broadcast, the rank map rebuilds once per
+    * PARTITION (mapPartitions, not map — at 32k rules a per-row
+    * rebuild would dwarf the encode itself), each row encodes
+    * in-executor. Work is per DISTINCT word — vocabulary-sized, never
+    * per token or per document.
+    */
+  private def bpeDictOf[T <: Product : TypeTag](
+      merges: Seq[(Int, String, String, Long)], vocab: DataFrame)
+      (row: (BpeIdLayout, String, String, Array[String]) => T): Dataset[T] = {
+    val s = vocab.sparkSession
+    import s.implicits._
+    val bc = s.sparkContext.broadcast(new BpeIdLayout(merges))
+    vocab.select("word", "sym").as[(String, String)].mapPartitions { it =>
+      val lay = bc.value
+      val rank = bpeRankOf(lay.rules)
+      it.map { case (w, sym) =>
+        row(lay, w, sym, bpeEncodeSymsRank(sym, lay.rules, rank))
+      }
+    }
+  }
+
+  /** The encode dictionary (word, <colName>): each dictionary word's
+    * token count under a frozen merge table.
     */
   private[graft] def bpeEncodeDictUnder(
-      spark: SparkSession, dir: String, res: BpeDriverTrain,
-      colName: String): DataFrame = {
-    val rules = res.merges.map { case (_, l, r, _) => (l, r) }.toArray
-    val bc = spark.sparkContext.broadcast(rules)
-    val s = spark
-    import s.implicits._
-    bpeVocab(spark, dir).select("word", "sym").as[(String, String)]
-      .mapPartitions { it =>
-        val rl = bc.value
-        val rank = bpeRankOf(rl)
-        it.map { case (w, sym) =>
-          (w, bpeEncodeSymsRank(sym, rl, rank).length)
-        }
-      }
+      merges: Seq[(Int, String, String, Long)], vocab: DataFrame,
+      colName: String = "ntok"): DataFrame =
+    bpeDictOf(merges, vocab)((_, w, _, syms) => (w, syms.length))
       .toDF("word", colName)
+
+  /** The id dictionary (word, ids, rt_ok, n): each dictionary word's
+    * ordered token-id sequence under a frozen merge table
+    * ([[BpeIdLayout]]), its length, and a ROUNDTRIP verdict — the ids
+    * decoded back through the inverse vocabulary must reproduce the
+    * word's exact byte sequence.
+    */
+  private[graft] def bpeIdsDictUnder(
+      merges: Seq[(Int, String, String, Long)], vocab: DataFrame)
+      : DataFrame =
+    bpeDictOf(merges, vocab) { (lay, w, sym, syms) =>
+      val ids = lay.ids(syms)
+      (w, ids, lay.hex(ids) == sym.replace(" ", ""), ids.length)
+    }.toDF("word", "ids", "rt_ok", "n")
+
+  /** The same encoder applied per OCCURRENCE: a byte-symbol column's
+    * token count. w15 needs this shape at ingest — a streamed word
+    * need not be in the corpus vocabulary, so there is no dictionary
+    * to join — while the batch side joins the per-DISTINCT-word
+    * [[bpeEncodeDictUnder]] dictionary; TextBpeSpec pins the two equal
+    * over the whole corpus vocabulary.
+    */
+  private[graft] def bpeNtokUdf(
+      merges: Seq[(Int, String, String, Long)]): UserDefinedFunction = {
+    val rules = merges.map { case (_, l, r, _) => (l, r) }.toArray
+    val rank = bpeRankOf(rules)
+    udf((sym: String) => bpeEncodeSymsRank(sym, rules, rank).length)
   }
 
   /** t27 — ENCODE UNDER THE PRODUCTION-SIZE VOCABULARY: the loop t25
     * left open — training now reaches a ≥1k-merge vocabulary, so the
-    * corpus must also ENCODE under it. Engine path: the broadcast-
-    * rules dictionary encode above; accounting: one corpus word pass
-    * (the t22 shape) joined to BOTH dictionaries (12-merge and
-    * 1000-merge), aggregated per language.
+    * corpus must also ENCODE under it. Engine path: the rank-cursor
+    * dictionary encode ([[bpeEncodeDictUnder]]); accounting: one
+    * corpus word pass (the t22 shape) joined to BOTH dictionaries
+    * (12-merge and 1000-merge), aggregated per language.
     *
     * Bands (constant-TRUE oracle, each earned in TextBpeSpec):
     *   - word_bounds: every dictionary word encodes to 1 ≤ n ≤ its
@@ -2258,10 +2188,12 @@ object Text {
     *   - nonempty: the dictionary is not degenerate.
     */
   def bpeEncodeLarge(spark: SparkSession, dir: String): DataFrame = {
-    val dictL = bpeEncodeLargeDict(spark, dir)
-    val dict12 = bpeEncodeDict(bpeMerges(spark, dir), bpeVocab(spark, dir))
+    val vocab = bpeVocab(spark, dir)
+    val dictL = bpeEncodeDictUnder(bpeLargeTrain(spark, dir).merges, vocab,
+      "ntok_large")
+    val dict12 = bpeEncodeDictUnder(bpeMerges(spark, dir), vocab)
     val both = PlanMemo.cached(spark, s"text.bpeBothDicts:$dir")(
-      bpeVocab(spark, dir)
+      vocab
         .withColumn("n_bytes", length(regexp_replace(col("sym"), " ", "")) / 2)
         .join(dictL.hint("shuffle_hash"), "word")
         .join(dict12.hint("shuffle_hash"), "word"))
@@ -2319,54 +2251,6 @@ object Text {
       |  TRUE AS band_nonempty""".stripMargin
 
   // ---------------------------------------------------------------
-  /** The id dictionary under the PRODUCTION vocabulary — (word, ids,
-    * rt_ok, n): each distinct corpus word's ordered token-id sequence
-    * under the [[bpeLargeTrain]] merge table, t24's id layout at the
-    * 1k scale (byte b → id b; merge rule r → 255 + r, EARLIEST rule
-    * on fused-string ties), plus an in-executor ROUNDTRIP verdict —
-    * the ids decoded back through the inverse vocabulary must
-    * reproduce the word's exact byte sequence. Typed map like
-    * [[bpeEncodeLargeDict]] (a 1000-deep merge chain is not a sane
-    * expression tree); work is per DISTINCT word, vocabulary-sized.
-    */
-  private[graft] def bpeIdsLargeDict(
-      spark: SparkSession, dir: String): DataFrame =
-    bpeIdsDictUnder(spark, dir, bpeLargeTrain(spark, dir))
-
-  /** The id dictionary under an arbitrary frozen merge table (see
-    * [[bpeIdsLargeDict]] for the layout contract). Rank-map encode,
-    * one broadcast, per-partition rank rebuild — the same
-    * production-shape plumbing as [[bpeEncodeDictUnder]].
-    */
-  private[graft] def bpeIdsDictUnder(
-      spark: SparkSession, dir: String, res: BpeDriverTrain): DataFrame = {
-    val rules = res.merges.map { case (_, l, r, _) => (l, r) }.toArray
-    val idOf = res.merges
-      .groupBy { case (_, l, r, _) => l + r }
-      .view.mapValues(_.map(m => 255 + m._1).min).toMap
-    val fusedByRound = res.merges
-      .map { case (r, l, rr, _) => (255 + r, l + rr) }.toMap
-    val bc = spark.sparkContext.broadcast((rules, idOf, fusedByRound))
-    val s = spark
-    import s.implicits._
-    bpeVocab(spark, dir).select("word", "sym").as[(String, String)]
-      .mapPartitions { it =>
-        val (rl, io, fb) = bc.value
-        val rank = bpeRankOf(rl)
-        it.map { case (w, sym) =>
-          val syms = bpeEncodeSymsRank(sym, rl, rank)
-          val ids = syms.map(sm =>
-            io.getOrElse(sm, Integer.parseInt(sm, 16)))
-          // roundtrip: re-render each id's byte symbol and compare to
-          // the word's own hex split — exact invertibility, per word
-          val hex = ids.map(i =>
-            if (i >= 256) fb(i) else f"$i%02X").mkString
-          (w, ids, hex == sym.replace(" ", ""), ids.length)
-        }
-      }
-      .toDF("word", "ids", "rt_ok", "n")
-  }
-
   /** t29 — TOKEN-ID SEQUENCES UNDER THE PRODUCTION VOCABULARY: the
     * id-level product t27 only counts — what training shards would
     * carry once the 1k tokenizer ships. Not SQL-expressible (the
@@ -2393,11 +2277,13 @@ object Text {
     * doc-keyed integer aggregation — no id arrays ever shuffle.
     */
   def bpeIdsLarge(spark: SparkSession, dir: String): DataFrame = {
+    val vocab = bpeVocab(spark, dir)
+    val large = bpeLargeTrain(spark, dir).merges
     val dict = PlanMemo.cached(spark, s"text.idsLargeDict:$dir")(
-      bpeIdsLargeDict(spark, dir))
+      bpeIdsDictUnder(large, vocab))
     bpeIdsBands(spark, dir, dict,
-      bpeEncodeLargeDict(spark, dir), "ntok_large",
-      bpeEncodeDict(bpeMerges(spark, dir), bpeVocab(spark, dir)), "ntok",
+      bpeEncodeDictUnder(large, vocab, "ntok_large"), "ntok_large",
+      bpeEncodeDictUnder(bpeMerges(spark, dir), vocab), "ntok",
       bpeLargeVocabTarget)
   }
 
@@ -2543,13 +2429,15 @@ object Text {
   def bpeEncodeProd(spark: SparkSession, dir: String): DataFrame = {
     val resP = bpeProdTrain(spark, dir)
     val resL = bpeLargeTrain(spark, dir)
-    val both = PlanMemo.cached(spark, s"text.prodBothDicts:$dir")(
-      bpeVocab(spark, dir)
+    val both = PlanMemo.cached(spark, s"text.prodBothDicts:$dir") {
+      val vocab = bpeVocab(spark, dir)
+      vocab
         .withColumn("n_bytes", length(regexp_replace(col("sym"), " ", "")) / 2)
-        .join(bpeEncodeDictUnder(spark, dir, resP, "ntok_prod")
+        .join(bpeEncodeDictUnder(resP.merges, vocab, "ntok_prod")
           .hint("shuffle_hash"), "word")
-        .join(bpeEncodeDictUnder(spark, dir, resL, "ntok_1k")
-          .hint("shuffle_hash"), "word"))
+        .join(bpeEncodeDictUnder(resL.merges, vocab, "ntok_1k")
+          .hint("shuffle_hash"), "word")
+    }
     val extended = resP.merges.length > resL.merges.length
     bpeEncodeBands(spark, dir, both, "ntok_prod", "ntok_1k",
       improvedRequired = extended)
@@ -2572,11 +2460,12 @@ object Text {
     val resP = bpeProdTrain(spark, dir)
     val resL = bpeLargeTrain(spark, dir)
     val vocabSize = 256 + resP.merges.length
+    val vocab = bpeVocab(spark, dir)
     val dict = PlanMemo.cached(spark, s"text.idsProdDict:$dir")(
-      bpeIdsDictUnder(spark, dir, resP))
+      bpeIdsDictUnder(resP.merges, vocab))
     bpeIdsBands(spark, dir, dict,
-      bpeEncodeDictUnder(spark, dir, resP, "ntok_prod"), "ntok_prod",
-      bpeEncodeDictUnder(spark, dir, resL, "ntok_1k"), "ntok_1k",
+      bpeEncodeDictUnder(resP.merges, vocab, "ntok_prod"), "ntok_prod",
+      bpeEncodeDictUnder(resL.merges, vocab, "ntok_1k"), "ntok_1k",
       vocabSize)
   }
 
@@ -2584,41 +2473,6 @@ object Text {
     """SELECT TRUE AS band_roundtrip, TRUE AS band_counts_agree,
       |  TRUE AS band_docs_not_longer, TRUE AS band_conservation,
       |  TRUE AS band_nonempty""".stripMargin
-
-  /** The encode dictionary (word → token count under the learned
-    * merges): the full merge chain re-spelled as one nested-replace
-    * expression over the memoized vocabulary — vocabulary-sized work,
-    * never a corpus pass. Takes the FROZEN merge list (the published
-    * artifact at corpus level; fixture merges in TextBpeSpec) — the
-    * encode side never trains.
-    */
-  private[graft] def bpeEncodeDict(
-      merges: Seq[(Int, String, String, Long)],
-      vocab: DataFrame): DataFrame = {
-    val symFinal = merges
-      .foldLeft("sym") { case (e, (_, l, r, _)) => mergeReplaceExpr(e, l, r) }
-    vocab.select(col("word"),
-      expr(s"size(split($symFinal, ' '))").as("ntok"))
-  }
-
-  /** The frozen tokenizer as ONE map-side expression over a word
-    * column: byte-split via hex/regexp_replace (codegen string ops —
-    * no interpreted array HOF in the per-occurrence path) then the
-    * merge chain, returning the word's token count. The
-    * per-OCCURRENCE spelling w15 needs at ingest, where t22's
-    * per-DISTINCT-WORD dictionary join is the batch-side optimum;
-    * TextBpeSpec pins the two spellings equal over the whole corpus
-    * vocabulary.
-    */
-  private[graft] def bpeNtokExpr(
-      merges: Seq[(Int, String, String, Long)], wordCol: String): String = {
-    val base =
-      s"trim(regexp_replace(hex(encode($wordCol, 'UTF-8')), '(..)', '$$1 '))"
-    val chain = merges.foldLeft(base) { case (e, (_, l, r, _)) =>
-      mergeReplaceExpr(e, l, r)
-    }
-    s"size(split($chain, ' '))"
-  }
 
   /** The chain plus the final encode dictionary (word → ntok), shared
     * by the t22 and w15 oracles.
@@ -2644,7 +2498,7 @@ object Text {
     * output — no rounding discipline needed.
     */
   def bpeEncode(spark: SparkSession, dir: String): DataFrame = {
-    val dict = bpeEncodeDict(bpeMerges(spark, dir), bpeVocab(spark, dir))
+    val dict = bpeEncodeDictUnder(bpeMerges(spark, dir), bpeVocab(spark, dir))
     val perDoc = Tables.documents(spark, dir)
       .select(col("doc_id"),
         explode_outer(bpeWords(col("text"))).as("word"))
@@ -2680,60 +2534,29 @@ object Text {
        |ORDER BY doc_id""".stripMargin
 
   // ---------------------------------------------------------------
-  /** t24 — BPE TOKEN-ID SEQUENCES: the tokenizer's actual production
-    * output — each document's ordered token-ID sequence under the
-    * frozen trained tokenizer, reported as (n_tokens, md5 digest of
-    * the comma-joined ids) so the gate stays row-per-doc while
-    * pinning the ENTIRE sequence byte-for-byte. IDs follow the
-    * production convention: base byte b → id b (0–255), merge rule r
-    * → id 255+r (GPT-2's 256-bytes-then-merge-ranks layout). Two
-    * merge rules CAN concatenate to the same symbol string (("AB","C")
-    * and ("A","BC") both yield "ABC"); the symbol→id map takes the
-    * EARLIEST rule, mirrored by the oracle's MIN(id) GROUP BY sym.
+  /** The per-document token-ID SEQUENCES — (doc_id, ids array<int>),
+    * one row per document of `docs` that has at least one word — the
+    * actual training-data product t24 digests and p07/e01/e02 pack
+    * into shards, under the frozen 12-merge tokenizer and
+    * [[BpeIdLayout]]'s id layout. e01's pipeline passes only its
+    * quality+dedup SURVIVORS, so the corpus-sized token pass runs on
+    * the filtered frame, not filtered after the fact (at 100 TB
+    * tokenizing drop-outs is the single largest avoidable cost in the
+    * composed plan). Pure plan builder (no caching) so each consumer's
+    * physical plan is the one PlanAuditSpec pins.
     *
-    * Scale shape: the id derivation is vocabulary-sized (the t22
-    * dictionary with an id-array column — the merge chain plus one
-    * literal ≤[[bpeRounds]]-entry map lookup per symbol); documents
-    * re-assemble order via posexplode → dictionary join →
-    * collect_list(struct(pos, ids)) → array_sort → flatten — one
-    * doc_id-keyed shuffle whose per-group size is one document's
-    * tokens (bounded by definition). The dictionary join is
-    * shuffle_hash: corpus vocabulary is unbounded at 100 TB.
-    */
-  /** The per-document token-ID SEQUENCES themselves — (doc_id, ids
-    * array<int>), one row per document that has at least one word —
-    * the actual training-data product t24 digests and p07 packs into
-    * shards (round-15 verdict "next" 2). Pure plan builder (no
-    * caching) so each consumer's physical plan is the one
-    * PlanAuditSpec pins; the per-doc reassembly and the shuffle_hash
-    * dictionary join are the t24 scale shape documented there.
-    */
-  private[graft] def bpeTokenIdSeqs(
-      spark: SparkSession, dir: String): DataFrame =
-    bpeTokenIdSeqsOn(spark, dir, Tables.documents(spark, dir))
-
-  /** [[bpeTokenIdSeqs]] over an explicit document frame — e01's
-    * pipeline tokenizes only its quality+dedup SURVIVORS, so the
-    * corpus-sized token pass must run on the filtered frame, not be
-    * filtered after the fact (at 100 TB tokenizing drop-outs is the
-    * single largest avoidable cost in the composed plan).
+    * Scale shape: the id derivation is vocabulary-sized (the
+    * [[bpeIdsDictUnder]] dictionary); documents re-assemble order via
+    * posexplode → dictionary join → collect_list(struct(pos, ids)) →
+    * array_sort → flatten — one doc_id-keyed shuffle whose per-group
+    * size is one document's tokens (bounded by definition). The
+    * dictionary join is shuffle_hash: corpus vocabulary is unbounded
+    * at 100 TB.
     */
   private[graft] def bpeTokenIdSeqsOn(
       spark: SparkSession, dir: String, docs: DataFrame): DataFrame = {
-    val merges = bpeMerges(spark, dir)
-    val symFinal = merges
-      .foldLeft("sym") { case (e, (_, l, r, _)) => mergeReplaceExpr(e, l, r) }
-    val idPairs = merges
-      .groupBy { case (_, l, r, _) => l + r }
-      .view.mapValues(_.map(m => 255 + m._1).min)
-      .toSeq.sortBy(_._2)
-    val mapExpr = idPairs
-      .map { case (s, id) => s"'$s', $id" }.mkString("map(", ", ", ")")
-    val dict = bpeVocab(spark, dir).select(col("word"), expr(
-      s"""transform(split($symFinal, ' '),
-         |  s -> coalesce(element_at($mapExpr, s),
-         |                CAST(conv(s, 16, 10) AS INT)))""".stripMargin)
-      .as("ids"))
+    val dict = bpeIdsDictUnder(bpeMerges(spark, dir), bpeVocab(spark, dir))
+      .select("word", "ids")
     docs
       .select(col("doc_id"),
         posexplode_outer(bpeWords(col("text"))).as(Seq("pos", "word")))
@@ -2746,8 +2569,13 @@ object Text {
         expr("flatten(transform(ent, e -> e.ids))").as("ids"))
   }
 
+  /** t24 — BPE TOKEN-ID SEQUENCES: each document's ordered token-ID
+    * sequence ([[bpeTokenIdSeqsOn]]) reported as (n_tokens, md5 digest
+    * of the comma-joined ids), so the gate stays row-per-doc while
+    * pinning the ENTIRE sequence byte-for-byte.
+    */
   def bpeTokenIds(spark: SparkSession, dir: String): DataFrame = {
-    val perDoc = bpeTokenIdSeqs(spark, dir)
+    val perDoc = bpeTokenIdSeqsOn(spark, dir, Tables.documents(spark, dir))
       .select(col("doc_id"), size(col("ids")).as("n_tokens"),
         md5(expr(
           "array_join(transform(ids, i -> CAST(i AS STRING)), ',')"))
@@ -2831,42 +2659,23 @@ object Text {
     * exact content the ids encode.)
     *
     * Scale shape: t24's — the id derivation and the inverse
-    * vocabulary are both artifact-sized; the only corpus pass is
-    * [[bpeTokenIdSeqs]]'s (posexplode → shuffle_hash dictionary join
-    * → per-doc reassembly), and decode itself is one codegen'd
-    * transform/unhex/decode over the assembled array. The final
-    * document join is shuffle_hash (doc-sized, unbounded at 100 TB).
+    * vocabulary are both artifact-sized and run per dictionary word;
+    * the only corpus pass is [[bpeTokenIdSeqsOn]]'s shape (posexplode
+    * → shuffle_hash dictionary join → per-doc reassembly) over the
+    * decoded words. The final document join is shuffle_hash
+    * (doc-sized, unbounded at 100 TB).
     */
   def bpeDecode(spark: SparkSession, dir: String): DataFrame = {
-    val merges = bpeMerges(spark, dir)
-    val symFinal = merges
-      .foldLeft("sym") { case (e, (_, l, r, _)) => mergeReplaceExpr(e, l, r) }
-    val idPairs = merges
-      .groupBy { case (_, l, r, _) => l + r }
-      .view.mapValues(_.map(m => 255 + m._1).min)
-      .toSeq.sortBy(_._2)
-    val mapExpr = idPairs
-      .map { case (s, id) => s"'$s', $id" }.mkString("map(", ", ", ")")
-    // inverse vocabulary: merge id 255+r → rule r's fused hex symbol
-    // (total on ids ≥ 256 by construction; base ids re-hex)
-    val invMap = merges
-      .map { case (r, l, rr, _) => s"${255 + r}, '${l + rr}'" }
-      .mkString("map(", ", ", ")")
     // Decode runs per DISTINCT dictionary word (vocab-sized work):
-    // word → ids (the t24 layout, earliest-rule id per symbol) →
-    // inverse map → bytes → text. The per-document pass then only
-    // REASSEMBLES short decoded strings — the first spelling ran the
-    // id→hex transform HOF over every document's full id array
-    // (interpreted-HOF cost per element; 5.9× at 10× data at gensf10,
-    // vs ~3× for the t24-shaped reassembly alone).
-    val dict = bpeVocab(spark, dir).select(col("word"), expr(
-      s"""decode(unhex(array_join(transform(
-         |  transform(split($symFinal, ' '),
-         |    s -> coalesce(element_at($mapExpr, s),
-         |                  CAST(conv(s, 16, 10) AS INT))),
-         |  i -> coalesce(element_at($invMap, i),
-         |                lpad(conv(i, 10, 16), 2, '0'))), '')),
-         |'UTF-8')""".stripMargin).as("dec"))
+    // word → ids (the t24 layout) → inverse vocabulary → bytes → text.
+    // The per-document pass then only REASSEMBLES short decoded
+    // strings — the first spelling ran the id→hex transform HOF over
+    // every document's full id array (interpreted-HOF cost per
+    // element; 5.9× at 10× data at gensf10, vs ~3× for the
+    // t24-shaped reassembly alone).
+    val dict = bpeDictOf(bpeMerges(spark, dir), bpeVocab(spark, dir)) {
+      (lay, w, _, syms) => (w, lay.decode(lay.ids(syms)))
+    }.toDF("word", "dec")
     val decoded = Tables.documents(spark, dir)
       .select(col("doc_id"),
         posexplode_outer(bpeWords(col("text"))).as(Seq("pos", "word")))
@@ -2906,13 +2715,13 @@ object Text {
     * (shuffle_hash: corpus vocabulary is unbounded at 100 TB), then a
     * lang-keyed aggregate of pure integer sums; the two ratios are
     * round4 doubles over those integers (aggregation-order
-    * independent). The dictionary is [[bpeEncodeDict]] over the
-    * published artifact — the same frozen-tokenizer spelling t22
-    * (batch) and w15 (stream, via [[bpeNtokExpr]], spec-pinned equal)
+    * independent). The dictionary is [[bpeEncodeDictUnder]] over the
+    * published artifact — the same frozen-tokenizer encode t22
+    * (batch) and w15 (stream, via [[bpeNtokUdf]], spec-pinned equal)
     * consume.
     */
   def tokenizerFertility(spark: SparkSession, dir: String): DataFrame = {
-    val dict = bpeEncodeDict(bpeMerges(spark, dir), bpeVocab(spark, dir))
+    val dict = bpeEncodeDictUnder(bpeMerges(spark, dir), bpeVocab(spark, dir))
     Tables.documents(spark, dir)
       .select(col("lang"), explode_outer(bpeWords(col("text"))).as("word"))
       .filter(col("word").isNotNull)
@@ -3207,7 +3016,7 @@ object Text {
     * mid-run checkpoint boundary and the bound refresh, shallow
     * enough to stay a bench-friendly entry (FULL-depth equivalence is
     * pinned by TextBpeSpec's 300-merge fixture and the vstress bank
-    * in SCALE.md). Override with `spark.graft.bpeDistGateRounds`.
+    * in SCALE.md).
     */
   val bpeDistGateRounds: Int = 64
 
@@ -3229,13 +3038,12 @@ object Text {
     * duplicate-pair, exhaustion and forced-delegation pins.
     */
   def bpeTrainDist(spark: SparkSession, dir: String): DataFrame = {
-    val rounds = spark.conf.get("spark.graft.bpeDistGateRounds",
-      bpeDistGateRounds.toString).toInt
+    val rounds = bpeDistGateRounds
     val ck = math.min(12, rounds)
-    val minFreq = spark.conf.get("spark.graft.bpeMinFreq", "1").toLong
+    val minFreq = bpeMinFreq(spark)
     val (dist, drv) = PlanMemo.cachedValue(spark,
       s"text.bpeDistGate:$dir:${PlanMemo.corpusFingerprint(dir)}" +
-        s":$minFreq:$rounds") {
+        s":$minFreq") {
       val pruned = bpeVocab(spark, dir)
         .filter(col("freq") >= minFreq).select("freq", "sym")
       val d = BpeDist.train(spark, pruned, rounds, checkpointRound = ck)

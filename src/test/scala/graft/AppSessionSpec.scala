@@ -29,6 +29,15 @@ class AppSessionSpec extends AnyFunSuite {
       .forall(s.current.columns.contains))
   }
 
+  test("q19 leaves the session's enriched taxi view in place") {
+    val s = new AppSession(spark, sfDir)
+    assert(SparkEntry.queries("q19_sql_surface")(s.spark, sfDir).count() > 0)
+    // q19 registers raw events as `taxi` in its own child session; the
+    // session's enriched view must still resolve pickup_hour
+    val row = s.sql("SELECT COUNT(*), MIN(pickup_hour) FROM taxi").head()
+    assert(row.getLong(0) === s.current.count())
+  }
+
   test("uploaded CSV replaces the source and is enriched; summary is exact") {
     val s = new AppSession(spark, sfDir)
     s.uploadCsv(tinyCsv)

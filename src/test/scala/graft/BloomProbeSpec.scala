@@ -24,7 +24,7 @@ class BloomProbeSpec extends AnyFunSuite {
     val absent = (0 until 1000).map(i => s"out-$i")
     val bf = mkFilter(inserted)
     val df = (inserted ++ absent).toDF("v")
-      .withColumn("hit", BloomProbe.probe(spark, col("v"), bf))
+      .withColumn("hit", BloomProbe.probe(col("v"), bf))
     val hits = df.filter(col("hit")).select("v").collect().map(_.getString(0))
     assert(inserted.forall(hits.contains), "bloom false negative")
     val fp = hits.count(_.startsWith("out-"))
@@ -37,7 +37,7 @@ class BloomProbeSpec extends AnyFunSuite {
     val bf = mkFilter((0 until 100).map(i => s"k$i"))
     val vals = (0 until 300).map(i => s"k$i")
     val got = vals.toDF("v")
-      .withColumn("hit", BloomProbe.probe(spark, col("v"), bf))
+      .withColumn("hit", BloomProbe.probe(col("v"), bf))
       .collect().map(r => r.getString(0) -> r.getBoolean(1)).toMap
     vals.foreach { v => assert(got(v) === bf.mightContainString(v)) }
   }

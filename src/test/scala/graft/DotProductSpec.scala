@@ -5,7 +5,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Custom codegen expression: dot_product must be bit-identical to
   * the interpreted HOF spelling (same fold order), handle nulls, and
-  * be registered both via extensions and at runtime.
+  * be registered via the session extensions.
   */
 class DotProductSpec extends AnyFunSuite {
   import TestSpark._
@@ -15,7 +15,6 @@ class DotProductSpec extends AnyFunSuite {
       |CAST(0 AS DOUBLE), (acc, v) -> acc + v)""".stripMargin
 
   test("bit-identical to the HOF fold over all embedding pairs") {
-    DotProduct.register(spark)
     val emb = Tables.embeddings(spark, sfDir)
     val pairs = emb.select(col("vec_id").as("ia"), col("embedding").as("a"))
       .crossJoin(broadcast(
@@ -28,7 +27,6 @@ class DotProductSpec extends AnyFunSuite {
   }
 
   test("null array yields null, not a crash") {
-    DotProduct.register(spark)
     val s = spark
     import s.implicits._
     val df = Seq((Some(Seq(1.0f, 2.0f)), Option.empty[Seq[Float]]))
@@ -39,8 +37,8 @@ class DotProductSpec extends AnyFunSuite {
 
   test("registered through SparkSessionExtensions at session build") {
     // TestSpark's session goes through Tables.configure which sets
-    // spark.sql.extensions=graft.GraftExtensions — the function must
-    // resolve WITHOUT the runtime register() call.
+    // spark.sql.extensions=graft.GraftExtensions — the function
+    // resolves from the extensions alone.
     assert(spark.conf.get("spark.sql.extensions")
       .contains("graft.GraftExtensions"))
     assert(spark.sessionState.functionRegistry
@@ -48,7 +46,6 @@ class DotProductSpec extends AnyFunSuite {
   }
 
   test("mixed float/double arrays and mismatched lengths") {
-    DotProduct.register(spark)
     val s = spark
     import s.implicits._
     val df = Seq((Seq(1.0f, 2.0f, 3.0f), Seq(2.0, 10.0))).toDF("a", "b")

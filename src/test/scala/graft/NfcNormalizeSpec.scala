@@ -19,7 +19,6 @@ class NfcNormalizeSpec extends AnyFunSuite {
     "n\u0303", "\u00f1")
 
   private def one(s: String): String = {
-    NfcNormalize.register(spark)
     val sess = spark
     import sess.implicits._
     Seq(s).toDF("t").selectExpr("nfc_normalize(t)").head().getString(0)
@@ -39,7 +38,6 @@ class NfcNormalizeSpec extends AnyFunSuite {
   }
 
   test("null input yields null") {
-    NfcNormalize.register(spark)
     val sess = spark
     import sess.implicits._
     val r = Seq(Option.empty[String]).toDF("t")
@@ -48,7 +46,6 @@ class NfcNormalizeSpec extends AnyFunSuite {
   }
 
   test("interpreted eval matches codegen output") {
-    NfcNormalize.register(spark)
     val sess = spark
     import sess.implicits._
     val rows = Seq(decomposed, "abc", composed).toDF("t")

@@ -69,6 +69,26 @@ class PlanMemoSpec extends AnyFunSuite {
       "a mutated corpus must re-publish, never serve the stale artifact")
   }
 
+  test("a builder that throws mid-write publishes nothing; the next call rebuilds") {
+    val corpus = java.nio.file.Files.createTempDirectory("memospec_atomic")
+    TempArtifacts.register(corpus)
+    spark.range(10).toDF("v")
+      .write.mode("overwrite").parquet(s"$corpus/t.parquet")
+    val s = spark
+    import s.implicits._
+    def read(build: => org.apache.spark.sql.DataFrame) =
+      PlanMemo.publishedParquet(spark, corpus.toString, "memospec_atomic")(
+        build)
+    // the write job starts (other tasks commit their part files) and
+    // one task throws: the half-written output must not count as the
+    // published artifact
+    intercept[Exception](read(spark.range(0, 100, 1, 4).as[Long]
+      .map(i => if (i == 77L) sys.error("builder failed mid-write") else i)
+      .toDF("v")))
+    assert(read(Seq(1L, 2L, 3L).toDF("v")).as[Long].collect().sorted
+      .toSeq === Seq(1L, 2L, 3L))
+  }
+
   test("corpusFingerprint is stable and content-sensitive") {
     val d = java.nio.file.Files.createTempDirectory("memospec_fp")
     TempArtifacts.register(d)

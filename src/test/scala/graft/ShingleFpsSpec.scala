@@ -12,7 +12,6 @@ class ShingleFpsSpec extends AnyFunSuite {
   import TestSpark._
 
   test("value- and order-identical to the HOF spelling on real docs") {
-    ShingleFps.register(spark)
     val diff = Tables.documents(spark, sfDir)
       .withColumn("toks",
         expr("filter(split(lower(text), ' '), t -> t != '')"))
@@ -24,7 +23,6 @@ class ShingleFpsSpec extends AnyFunSuite {
   }
 
   test("edge cases: null, empty, <3 tokens, dup shingles, extra spaces") {
-    ShingleFps.register(spark)
     val s = spark
     import s.implicits._
     val docs = Seq(
@@ -55,7 +53,6 @@ class ShingleFpsSpec extends AnyFunSuite {
     // (round-11 advice: the linear scan was quadratic per row on
     // many-thousand-token docs) — parity must hold across the flip,
     // including repeated shingles scattered through a long body
-    ShingleFps.register(spark)
     val s = spark
     import s.implicits._
     val rnd = new scala.util.Random(7)
@@ -76,7 +73,6 @@ class ShingleFpsSpec extends AnyFunSuite {
   }
 
   test("interpreted eval matches the dataframe (codegen) path") {
-    ShingleFps.register(spark)
     val s = spark
     import s.implicits._
     val text = "the quick brown fox jumps over the lazy dog"

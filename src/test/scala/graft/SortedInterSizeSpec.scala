@@ -12,7 +12,6 @@ class SortedInterSizeSpec extends AnyFunSuite {
   import TestSpark._
 
   test("equals size(array_intersect) over the real d19 verify inputs") {
-    SortedInterSize.register(spark)
     val sets = Dedup.sortedSets(spark, sfDir)
     val cand = Dedup.prefixCand(spark, sfDir)
     val a = sets.select(col("doc_id").as("d1"), col("fps").as("fps1"))
@@ -42,7 +41,6 @@ class SortedInterSizeSpec extends AnyFunSuite {
   }
 
   test("synthetic sorted-distinct pairs incl. empty and disjoint") {
-    SortedInterSize.register(spark)
     val s = spark
     import s.implicits._
     val cases = Seq(
@@ -65,7 +63,6 @@ class SortedInterSizeSpec extends AnyFunSuite {
     // tight enough to force heavy overlap — exercises every merge-
     // loop interleaving (runs of consecutive advances on one side,
     // ties at array heads/tails) the fixed cases can't enumerate
-    SortedInterSize.register(spark)
     val s = spark
     import s.implicits._
     val rnd = new scala.util.Random(1234)
@@ -86,7 +83,6 @@ class SortedInterSizeSpec extends AnyFunSuite {
     // documented contract rather than an accident (round-12 verdict
     // "next" 2). Each case's expected value is the merge-scan result,
     // NOT the size(array_intersect) result.
-    SortedInterSize.register(spark)
     val s = spark
     import s.implicits._
     // unsorted: merge scan undercounts (skips past 1 on the left)
@@ -100,7 +96,6 @@ class SortedInterSizeSpec extends AnyFunSuite {
   }
 
   test("null ELEMENT terminates the scan (pinned, diverges from array_intersect)") {
-    SortedInterSize.register(spark)
     val s = spark
     import s.implicits._
     val df = Seq((Seq(Option(1L), Option.empty[Long], Option(5L)),
@@ -114,7 +109,6 @@ class SortedInterSizeSpec extends AnyFunSuite {
     // (className, db, NAME) — it registered the usage text as the
     // function name and left usage null, so the whole point of the
     // preconditions string silently failed. Pin the metadata.
-    SortedInterSize.register(spark)
     val desc = spark.sql("DESCRIBE FUNCTION EXTENDED sorted_inter_size")
       .collect().map(_.getString(0)).mkString("\n")
     assert(desc.contains("Function: sorted_inter_size"),
@@ -124,7 +118,6 @@ class SortedInterSizeSpec extends AnyFunSuite {
   }
 
   test("null array yields null, not a crash") {
-    SortedInterSize.register(spark)
     val s = spark
     import s.implicits._
     val df = Seq((Some(Seq(1L, 2L)), Option.empty[Seq[Long]])).toDF("a", "b")
@@ -132,7 +125,6 @@ class SortedInterSizeSpec extends AnyFunSuite {
   }
 
   test("interpreted eval matches codegen output") {
-    SortedInterSize.register(spark)
     val s = spark
     import s.implicits._
     val df = Seq((Seq(1L, 5L, 9L, 12L), Seq(2L, 5L, 12L))).toDF("a", "b")

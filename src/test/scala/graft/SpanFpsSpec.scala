@@ -21,7 +21,6 @@ class SpanFpsSpec extends AnyFunSuite {
        |END""".stripMargin
 
   test("span_fps value- and order-identical to the HOF window chain") {
-    SpanFps.register(spark)
     val diff = Tables.documents(spark, sfDir)
       .withColumn("toks",
         expr("filter(split(lower(text), ' '), t -> t != '')"))
@@ -33,7 +32,6 @@ class SpanFpsSpec extends AnyFunSuite {
   }
 
   test("span_fps edges: null, short, exact-k, repeated windows kept") {
-    SpanFps.register(spark)
     val s = spark
     import s.implicits._
     val docs = Seq(
@@ -57,7 +55,6 @@ class SpanFpsSpec extends AnyFunSuite {
   }
 
   test("tok_count equals size(filter(split(lower(text), ' ')))") {
-    TokCount.register(spark)
     val s = spark
     import s.implicits._
     val synth = Seq(Some(""), Some(" "), Some("  a  b "), Some("one"),
@@ -78,7 +75,6 @@ class SpanFpsSpec extends AnyFunSuite {
   }
 
   test("d12 wins-frame n_tok identity: size(span_fps) + k - 1") {
-    SpanFps.register(spark)
     val diff = Tables.documents(spark, sfDir)
       .withColumn("toks",
         expr("filter(split(lower(text), ' '), t -> t != '')"))
@@ -90,7 +86,6 @@ class SpanFpsSpec extends AnyFunSuite {
   }
 
   test("interpreted eval matches codegen") {
-    SpanFps.register(spark)
     val s = spark
     import s.implicits._
     val text = (1 to 20).map(i => s"tok$i").mkString(" ")

@@ -82,7 +82,6 @@ class TemporalJoinsSpec extends AnyFunSuite {
   }
 
   test("native as-of join: null keys and timestamps match nothing") {
-    graft.plans.AsOfJoinStrategy.install(spark)
     val s = spark
     import s.implicits._
     val l = Seq((Some(1L), Some(10L), "a"), (None, Some(10L), "b"),
@@ -116,7 +115,6 @@ class TemporalJoinsSpec extends AnyFunSuite {
   }
 
   test("native range join: bounds inclusive, multiplicity, null contract") {
-    graft.plans.RangeJoinStrategy.install(spark)
     val s = spark
     import s.implicits._
     val pts = Seq((Some(1L), Some(10L), "on-start"), (Some(1L), Some(20L), "on-end"),
@@ -144,7 +142,6 @@ class TemporalJoinsSpec extends AnyFunSuite {
   }
 
   test("asof_le marker refuses row-at-a-time evaluation") {
-    graft.plans.AsOfJoinStrategy.install(spark)
     val s = spark
     import s.implicits._
     val e = intercept[Exception] {

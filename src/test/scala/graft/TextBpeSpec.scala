@@ -18,17 +18,19 @@ class TextBpeSpec extends AnyFunSuite {
       .toDF("word", "freq", "sym")
   }
 
+  /** Sennrich-style toy dictionary (no end-of-word marker in our
+    * variant): low×5, lower×2, newest×6, widest×3.
+    */
+  private val classic = Seq(
+    (5L, "l o w"), (2L, "l o w e r"),
+    (6L, "n e w e s t"), (3L, "w i d e s t"))
+
   test("learns the hand-derived merge sequence on the classic corpus") {
-    // Sennrich-style toy dictionary (no end-of-word marker in our
-    // variant): low×5, lower×2, newest×6, widest×3. Worked by hand:
-    // pair counts round 1 peak at 9 for {e s, s t}; ties break by
-    // pair string ascending. The merge loop is alphabet-agnostic
-    // (corpus paths feed it hex byte symbols), so letter symbols
-    // keep the hand derivation readable.
-    val v = vocab(
-      (5L, "l o w"), (2L, "l o w e r"),
-      (6L, "n e w e s t"), (3L, "w i d e s t"))
-    val m = Text.bpeMergesOn(spark, "spec:classic", v, rounds = 8)
+    // Worked by hand: pair counts round 1 peak at 9 for {e s, s t};
+    // ties break by pair string ascending. The merge loop is
+    // alphabet-agnostic (corpus paths feed it hex byte symbols), so
+    // letter symbols keep the hand derivation readable.
+    val m = Text.bpeTrainDriver(classic, rounds = 8).merges
     assert(m === Seq(
       (1, "e", "s", 9L), (2, "es", "t", 9L),
       (3, "l", "o", 7L), (4, "lo", "w", 7L),
@@ -43,8 +45,7 @@ class TextBpeSpec extends AnyFunSuite {
     // pair ascending). A two-merge application ("aa aa") would leave
     // no (a, a) for round 2 — this pins the documented deviation
     // from canonical BPE, mirrored exactly by the DuckDB oracle.
-    val m = Text.bpeMergesOn(spark, "spec:run", vocab((1L, "a a a a")),
-      rounds = 2)
+    val m = Text.bpeTrainDriver(Seq((1L, "a a a a")), rounds = 2).merges
     assert(m === Seq((1, "a", "a", 3L), (2, "a", "a", 1L)))
   }
 
@@ -66,11 +67,8 @@ class TextBpeSpec extends AnyFunSuite {
     // after the 8 learned merges: low→[low], lower→[low,e,r],
     // newest→[newest], widest→[w,i,dest] (chain applied in round
     // order, separator-consuming replace — worked by hand)
-    val v = vocab(
-      (5L, "l o w"), (2L, "l o w e r"),
-      (6L, "n e w e s t"), (3L, "w i d e s t"))
-    val m = Text.bpeMergesOn(spark, "spec:classic", v, rounds = 8)
-    val d = Text.bpeEncodeDict(m, v)
+    val m = Text.bpeTrainDriver(classic, rounds = 8).merges
+    val d = Text.bpeEncodeDictUnder(m, vocab(classic: _*))
       .collect().map(r => r.getString(0) -> r.getInt(1)).toMap
     assert(d === Map("low" -> 1, "lower" -> 3, "newest" -> 1,
       "widest" -> 3))
@@ -129,7 +127,8 @@ class TextBpeSpec extends AnyFunSuite {
   test("random vocabularies: engine merges equal the pure-Scala reference") {
     // deterministic seeded fuzz: words over {a,b,c} keep pair
     // collisions (and ties) frequent, so the tie-break and the
-    // same-symbol-run replace semantics are both exercised hard
+    // same-symbol-run replace semantics are both exercised hard (the
+    // trainer loop at t21's shallow depth)
     val rnd = new scala.util.Random(13)
     val rounds = 3
     var checked = 0
@@ -143,8 +142,7 @@ class TextBpeSpec extends AnyFunSuite {
       val fixed = words.map(w => (1L + rnd.nextInt(9), w.toSeq.mkString(" ")))
       val ref = refBpe(fixed, rounds)
       if (ref.length == rounds) { // enough mergeable pairs to train
-        val got = Text.bpeMergesOn(spark, s"spec:fuzz:$attempts",
-          vocab(fixed: _*), rounds)
+        val got = Text.bpeTrainDriver(fixed, rounds).merges
         assert(got === ref,
           s"divergence on vocab ${fixed.mkString("[", ", ", "]")}")
         checked += 1
@@ -245,7 +243,7 @@ class TextBpeSpec extends AnyFunSuite {
         val word = (1 to (1 + rnd.nextInt(10)))
           .map(_ => ('a' + rnd.nextInt(3)).toChar).mkString
         val sym = word.toSeq.mkString(" ")
-        assert(Text.bpeEncodeSymsLarge(sym, rules.toArray) ===
+        assert(Text.bpeEncodeSymsLargeArr(sym, rules.toArray).length ===
           naiveEncode(sym, rules),
           s"divergence on '$word' under ${rules.mkString(",")}")
       }
@@ -257,12 +255,13 @@ class TextBpeSpec extends AnyFunSuite {
       rules.foldLeft(sym) { case (s, (l, r)) =>
         (" " + s + " ").replace(s" $l $r ", s" $l$r ").trim
       }.split(" ").length
-    val rules = Text.bpeLargeTrain(spark, sfDir).merges
-      .map { case (_, l, r, _) => (l, r) }
+    val merges = Text.bpeLargeTrain(spark, sfDir).merges
+    val rules = merges.map { case (_, l, r, _) => (l, r) }
     val vocab = Text.bpeVocab(spark, sfDir)
       .select("word", "sym").collect()
       .map(r => (r.getString(0), r.getString(1))).toMap
-    val dict = Text.bpeEncodeLargeDict(spark, sfDir).collect()
+    val dict = Text.bpeEncodeDictUnder(merges, Text.bpeVocab(spark, sfDir),
+      "ntok_large").collect()
       .map(r => (r.getString(0), r.getInt(1)))
     assert(dict.length === vocab.size)
     dict.foreach { case (w, n) =>
@@ -283,24 +282,30 @@ class TextBpeSpec extends AnyFunSuite {
   test("a config-mismatched artifact is refused (decode None → retrain)") {
     val s = spark
     import s.implicits._
-    // v2-shaped table but trained to a DIFFERENT vocab target: a
-    // consumer must refuse it — encoding under it would silently
-    // apply the wrong tokenizer
-    val stale = Seq((1, "61", "62", 5L, Text.bpeFormatVersion,
-      Text.bpeWordPattern, 9999, Text.bpeAlphabet))
-      .toDF("round", "lhs", "rhs", "cnt", "fmt_version", "word_pattern",
-        "vocab_target", "alphabet")
-    assert(Text.bpeArtifactDecode(stale).isEmpty)
-    // pre-v2 table (no config payload at all): refused on schema
-    val prev2 = Seq((1, "61", "62", 5L)).toDF("round", "lhs", "rhs", "cnt")
-    assert(Text.bpeArtifactDecode(prev2).isEmpty)
+    def decode12(df: org.apache.spark.sql.DataFrame) =
+      Text.bpeArtifactDecode(df, Text.bpeVocabTarget, minFreq = 1L)
     // the published artifact itself decodes (ensure it exists first)
     val published = Text.bpeMerges(spark, sfDir)
     assert(published.nonEmpty)
     val good = PlanMemo.publishedParquet(spark, sfDir, "bpe_merges")(
       sys.error("artifact must already be published"))
-    assert(Text.bpeArtifactDecode(good).nonEmpty)
-    assert(Text.bpeArtifactDecode(good).get === Text.bpeMerges(spark, sfDir))
+    val res = decode12(good)
+    assert(res.map(_.merges) === Some(published))
+    // full-format table but trained to a DIFFERENT vocab target or
+    // pruning regime: a consumer must refuse it — encoding under it
+    // would silently apply the wrong tokenizer
+    assert(decode12(Text.bpeArtifactPayload(spark, res.get, 9999, 1L)).isEmpty)
+    assert(decode12(Text.bpeArtifactPayload(spark, res.get,
+      Text.bpeVocabTarget, 2L)).isEmpty)
+    // the earlier 12-merge format (config payload, no min_freq or
+    // accounting columns) and a pre-v2 table: refused on schema
+    val v2 = Seq((1, "61", "62", 5L, Text.bpeFormatVersion,
+      Text.bpeWordPattern, Text.bpeVocabTarget, Text.bpeAlphabet))
+      .toDF("round", "lhs", "rhs", "cnt", "fmt_version", "word_pattern",
+        "vocab_target", "alphabet")
+    assert(decode12(v2).isEmpty)
+    val prev2 = Seq((1, "61", "62", 5L)).toDF("round", "lhs", "rhs", "cnt")
+    assert(decode12(prev2).isEmpty)
   }
 
   test("a type-drifted artifact is refused (None), not a ClassCastException") {
@@ -318,7 +323,14 @@ class TextBpeSpec extends AnyFunSuite {
       .toDF("round", "lhs", "rhs", "cnt", "fmt_version", "word_pattern",
         "vocab_target", "alphabet", "min_freq", "exhausted",
         "tokens_initial", "tokens_checkpoint", "tokens_final")
-    assert(Text.bpeProdArtifactDecode(drifted, minFreq = 1L).isEmpty)
+    assert(Text.bpeArtifactDecode(drifted, Text.bpeProdVocabTarget,
+      minFreq = 1L).isEmpty)
+    // one decoder serves both artifacts: the 12-merge table refuses
+    // type drift the same way
+    val drifted12 = drifted.withColumn("vocab_target",
+      org.apache.spark.sql.functions.lit(Text.bpeVocabTarget.toLong))
+    assert(Text.bpeArtifactDecode(drifted12, Text.bpeVocabTarget,
+      minFreq = 1L).isEmpty)
   }
 
   test("republishParquet repairs a refused temp-path artifact in place") {
@@ -344,16 +356,16 @@ class TextBpeSpec extends AnyFunSuite {
   }
 
   test("map-side ntok expression equals the dictionary over the full vocabulary") {
-    // w15 applies the frozen tokenizer per occurrence via
-    // bpeNtokExpr; t22 joins the dictionary built by bpeEncodeDict.
-    // The two spellings must agree on EVERY trained word or the
-    // stream and batch accountings drift.
-    import org.apache.spark.sql.functions.{col, expr}
-    val v = Text.bpeVocab(spark, sfDir)
+    // w15 applies the frozen tokenizer per occurrence (bpeNtokUdf over
+    // the word's byte split); t22 joins the per-distinct-word
+    // dictionary built by bpeEncodeDictUnder. The two must agree on
+    // EVERY trained word or the stream and batch accountings drift.
+    import org.apache.spark.sql.functions.col
     val merges = Text.bpeMerges(spark, sfDir)
-    val dict = Text.bpeEncodeDict(merges, v)
+    val ntok = Text.bpeNtokUdf(merges)
+    val dict = Text.bpeEncodeDictUnder(merges, Text.bpeVocab(spark, sfDir))
     val diff = dict
-      .withColumn("m", expr(Text.bpeNtokExpr(merges, "word")))
+      .withColumn("m", ntok(Text.byteSym(col("word"))))
       .filter(col("m") =!= col("ntok")).count()
     assert(diff === 0L)
   }
@@ -361,10 +373,10 @@ class TextBpeSpec extends AnyFunSuite {
   test("the published merge artifact equals a direct training run") {
     // bpeMerges persists the trained tokenizer via publishedParquet
     // and re-reads it; the frozen artifact must be byte-identical to
-    // what bpeMergesOn derives directly on the same corpus
-    val direct = Text.bpeMergesOn(
-      spark, s"spec:direct:$sfDir", Text.bpeVocab(spark, sfDir))
-    assert(Text.bpeMerges(spark, sfDir) === direct)
+    // what bpeTrainAt derives directly on the same corpus
+    val direct = Text.bpeTrainAt(spark, sfDir, Text.bpeRounds,
+      checkpointRound = 0, minFreq = 1L)
+    assert(Text.bpeMerges(spark, sfDir) === direct.merges)
   }
 
   test("vocabulary pass aggregates distinct words as hex byte symbols") {
@@ -441,7 +453,7 @@ class TextBpeSpec extends AnyFunSuite {
     val naiveIdOf = res.merges
       .groupBy { case (_, l, r, _) => l + r }
       .view.mapValues(_.map(m => 255 + m._1).min).toMap
-    val dict = Text.bpeIdsLargeDict(spark, sfDir)
+    val dict = Text.bpeIdsDictUnder(res.merges, Text.bpeVocab(spark, sfDir))
       .collect().map(r => (r.getString(0),
         r.getSeq[Int](1).toList, r.getBoolean(2))).toList
     assert(dict.nonEmpty)
@@ -505,12 +517,7 @@ class TextBpeSpec extends AnyFunSuite {
       val fixed = words.map(w => (1L + rnd.nextInt(9), hexSym(w)))
       val ref = refBpe(fixed, rounds)
       if (ref.length == rounds) {
-        val s = spark
-        import s.implicits._
-        val v = fixed.zip(words).map { case ((f, sym), w) => (w, f, sym) }
-          .toDF("word", "freq", "sym")
-        val got = Text.bpeMergesOn(spark, s"spec:bytefuzz:$attempts", v,
-          rounds)
+        val got = Text.bpeTrainDriver(fixed, rounds).merges
         assert(got === ref,
           s"divergence on vocab ${fixed.mkString("[", ", ", "]")}")
         // merged symbols stay even-length hex (byte concatenations)
@@ -628,12 +635,14 @@ class TextBpeSpec extends AnyFunSuite {
       val published = PlanMemo.publishedParquet(spark, sfDir,
         "bpe_merges_prod_mf2")(
         fail("the pruned train must have published its artifact"))
-      val dec = Text.bpeProdArtifactDecode(published, minFreq = 2L)
+      val dec = Text.bpeArtifactDecode(published, Text.bpeProdVocabTarget,
+        minFreq = 2L)
       assert(dec.nonEmpty, "pruned artifact failed config validation")
       assert(dec.get.merges === Text.bpeProdTrain(spark, sfDir).merges)
       // ...and is REFUSED under any other (a consumer expecting the
       // exact train must not silently encode under a pruned one)
-      assert(Text.bpeProdArtifactDecode(published, minFreq = 1L).isEmpty,
+      assert(Text.bpeArtifactDecode(published, Text.bpeProdVocabTarget,
+        minFreq = 1L).isEmpty,
         "a pruning-regime drift must be refused, not decoded")
     } finally {
       old match {
@@ -743,16 +752,33 @@ class TextBpeSpec extends AnyFunSuite {
     // (rounds, checkpoint) pair no other path memoizes, and pin the
     // delegated result equal to the in-memory trainer on the same
     // pruned dictionary
-    val key = "spark.graft.bpeMaxDriverDictRows"
-    spark.conf.set(key, "0")
-    try {
-      val got = Text.bpeTrainAt(spark, sfDir, rounds = 13,
-        checkpointRound = 5)
-      val dict = Text.bpeVocab(spark, sfDir)
-        .select("freq", "sym").collect()
-        .map(r => (r.getLong(0), r.getString(1))).toSeq
-      val drv = Text.bpeTrainDriver(dict, 13, checkpointRound = 5)
-      assert(got === drv)
-    } finally spark.conf.set(key, Text.bpeMaxDriverDictRows.toString)
+    val got = Text.bpeTrainAt(spark, sfDir, rounds = 13,
+      checkpointRound = 5, minFreq = 1L, budget = 0L)
+    val dict = Text.bpeVocab(spark, sfDir)
+      .select("freq", "sym").collect()
+      .map(r => (r.getLong(0), r.getString(1))).toSeq
+    val drv = Text.bpeTrainDriver(dict, 13, checkpointRound = 5)
+    assert(got === drv)
+  }
+
+  test("a corpus with fewer mergeable pairs than t21's rounds fails loudly") {
+    // two distinct byte pairs in the whole corpus: training exhausts at
+    // round 3, and bpeMerges must raise BEFORE publishing — a short
+    // table must never reach the oracle-gated t21
+    val s = spark
+    import s.implicits._
+    val corpus = java.nio.file.Files.createTempDirectory("bpespec_short")
+    TempArtifacts.register(corpus)
+    val dir = corpus.toString
+    Seq((1L, "ab cd a"), (2L, "cd b ab")).toDF("doc_id", "text")
+      .write.parquet(s"$dir/documents.parquet")
+    val e = intercept[IllegalArgumentException](Text.bpeMerges(spark, dir))
+    assert(e.getMessage.contains("ran out of mergeable pairs at round 3"))
+    var built = false
+    intercept[RuntimeException](
+      PlanMemo.publishedParquet(spark, dir, "bpe_merges") {
+        built = true; sys.error("probe only")
+      })
+    assert(built, "the short merge table must not have been published")
   }
 }

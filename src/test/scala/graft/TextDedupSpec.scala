@@ -345,7 +345,6 @@ class TextDedupSpec extends AnyFunSuite {
   test("minhash_sigs expression equals the explode + min-aggregate spelling") {
     // the codegen expression replaced 16 codegen'd min aggregates
     // (round-10); this pins bit-identity of every signature value
-    MinHashSigs.register(spark)
     val sigAggs = Dedup.hashAs.zip(Dedup.hashBs).zipWithIndex.map {
       case ((a, b), i) => min(expr(s"($a * sh + $b) % ${Dedup.P}")).as(s"sig$i")
     }
@@ -373,7 +372,6 @@ class TextDedupSpec extends AnyFunSuite {
   }
 
   test("minhash_sigs edge cases: empty array and null yield null") {
-    MinHashSigs.register(spark)
     val s = spark
     import s.implicits._
     val rows = Seq((1L, Seq(7L, 11L)), (2L, Seq.empty[Long]))

@@ -8,10 +8,8 @@ import org.scalatest.funsuite.AnyFunSuite
 class TopKSpec extends AnyFunSuite {
   import TestSpark._
 
-  private def registered = { TopKScoreId.register(spark); spark }
-
   test("keeps the k best with score-desc, id-asc tie-break") {
-    val s = registered
+    val s = spark
     import s.implicits._
     val df = Seq(
       (1L, 0.5, 10L), (1L, 0.9, 11L), (1L, 0.9, 7L), (1L, 0.1, 3L),
@@ -26,7 +24,7 @@ class TopKSpec extends AnyFunSuite {
   }
 
   test("null score or id contributes nothing; all-null group -> empty array") {
-    val s = registered
+    val s = spark
     import s.implicits._
     val df = Seq(
       (1L, Some(0.4), Some(1L)), (1L, None, Some(2L)), (1L, Some(0.7), None),
@@ -40,7 +38,7 @@ class TopKSpec extends AnyFunSuite {
   }
 
   test("matches the row_number window spelling across a real shuffle") {
-    val s = registered
+    val s = spark
     // deterministic pseudo-random scores over enough partitions that
     // partial buffers + serialize/merge genuinely run
     val df = spark.range(0, 5000).repartition(7)
