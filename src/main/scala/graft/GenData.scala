@@ -107,8 +107,8 @@ object GenData {
         // nearly every instance is corpus-unique, so the distinct-word
         // dictionary grows ~linearly with the corpus (≥5M distinct at
         // sf3). This is the BPE trainer's driver-collect stress
-        // surface; `bpeMinFreq` pruning must collapse it back to the
-        // repeated-word core.
+        // surface: past the driver budget `Text.bpeTrainAt` hands the
+        // dictionary to the executor-side trainer.
         alphaWord(nextInt(id, 9500 + i, 50000000))
       else if (wide && r < 0.50)
         alphaWord(nextInt(id, 9500 + i, 40000))

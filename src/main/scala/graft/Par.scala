@@ -25,12 +25,14 @@ object Par {
 
   /** Run the thunks as concurrent jobs ([[maxInFlight]] at a time,
     * FIFO — later thunks back-fill the tail of earlier ones); returns
-    * results in order. The first failure propagates (same contract as
-    * running them sequentially — Bench charges the elapsed time
-    * either way); on failure the pool is shut down immediately so
-    * queued thunks never submit their jobs (in-flight Spark jobs
-    * still drain — callers own job-group cancellation if they need
-    * hard interruption).
+    * results in thunk order. The first failure (in thunk order)
+    * propagates, as when running them sequentially — Bench charges
+    * the elapsed time either way. On failure the pool is shut down
+    * with `shutdownNow()`: queued thunks never start, and in-flight
+    * sibling thunks are INTERRUPTED, not drained — a blocking Spark
+    * action answers the interrupt by throwing, so a sibling's job may
+    * abort. Each call owns its pool, so the next call on the same
+    * session starts clean.
     *
     * Callers MUST materialize any SHARED persisted frame before
     * fanning out (one count() — see PlanMemo.cachedEager's doc):

@@ -118,8 +118,8 @@ object PlanMemo {
     memos.synchronized(memos.size) + values.synchronized(values.size)
 
   /** Drop one memoized frame (unpersist + forget). For tests that
-    * force a non-default code path behind a conf toggle: the frame
-    * they memoized under the forced conf must not linger, because
+    * force a non-default kernel through a parameter: the frame they
+    * memoized on the forced path must not linger, because
     * Spark's CacheManager substitutes any registered cached plan into
     * LATER queries whose subtree matches — a leaked forced-path cache
     * silently rewrites other tests' physical plans (found as a
@@ -174,29 +174,14 @@ object PlanMemo {
     * a downstream consumer (the c06 corpus card) reads a family's
     * PUBLISHED parquet artifact instead of re-running its pipeline.
     *
-    * Resolution order per (dir, name):
-    *   1. `$SPARK_GRAFT_ARTIFACTS/<basename(dir)>/<name>` if the env
-    *      var is set and the path exists — a prior Verify run's output
-    *      laid out per corpus, so two scale factors can never consume
-    *      each other's artifacts (round-13 advice: the flat `<name>`
-    *      resolution was corpus-blind). When the per-corpus subdir
-    *      carries its own `GRAFT_DIR.txt` marker it must name this
-    *      exact `dir` — two DIFFERENT corpora sharing a basename
-    *      (e.g. runA/sf1 vs runB/sf1) are disambiguated by staging the
-    *      marker; without one, same-basename trust is the documented
-    *      residual (env-var artifact consumption is an explicit
-    *      opt-in);
-    *   2. `$SPARK_GRAFT_ARTIFACTS/<name>` ONLY when a `GRAFT_DIR.txt`
-    *      marker beside it names this exact `dir` — the explicit
-    *      single-corpus binding for hand-staged artifact dirs;
-    *   3. a JVM-lifetime temp artifact written by the first request,
-    *      keyed by an md5 of (dir, [[corpusFingerprint]]) — so scale
-    *      factors never collide AND a corpus mutated in place is
-    *      re-published, never served a stale index. Unlike the
-    *      in-memory memos this survives `clearCache`, which is exactly
-    *      the Bench cold-rep shape a real release pipeline has: the
-    *      card reads the shipped artifact, it does not rebuild the
-    *      family.
+    * The artifact for (dir, name) is a JVM-lifetime temp parquet
+    * written by the first request, keyed by an md5 of (dir,
+    * [[corpusFingerprint]]) — so scale factors never collide AND a
+    * corpus mutated in place is re-published, never served a stale
+    * index. Unlike the in-memory memos this survives `clearCache`,
+    * which is exactly the Bench cold-rep shape a real release
+    * pipeline has: the card reads the shipped artifact, it does not
+    * rebuild the family.
     *
     * The builder queries are themselves hash-gated, so consuming their
     * written output cannot change any downstream answer.
@@ -213,16 +198,13 @@ object PlanMemo {
     */
   def publishedParquetBy(spark: SparkSession, dir: String, name: String,
       partitionCols: Seq[String])(build: => DataFrame): DataFrame = {
-    val path = stagedArtifact(dir, name).getOrElse {
-      val p = tempArtifactPath(dir, name)
-      publishRoot.synchronized {
-        if (!published(p)) writeAtomically(p) { tmp =>
-          val w = build.write
-          (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*)
-           else w).parquet(tmp)
-        }
+    val path = tempArtifactPath(dir, name)
+    publishRoot.synchronized {
+      if (!published(path)) writeAtomically(path) { tmp =>
+        val w = build.write
+        (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*)
+         else w).parquet(tmp)
       }
-      p
     }
     spark.read.parquet(path.toString)
   }
@@ -261,32 +243,6 @@ object PlanMemo {
       finally walk.close()
     }
 
-  /** A hand-staged artifact mount for (dir, name) under
-    * `SPARK_GRAFT_ARTIFACTS`, when one exists and its `GRAFT_DIR.txt`
-    * marker binds it to this exact corpus. Staged mounts are treated
-    * as read-only — [[republishParquet]] never overwrites one.
-    */
-  private[graft] def stagedArtifact(
-      dir: String, name: String): Option[java.nio.file.Path] =
-    sys.env.get("SPARK_GRAFT_ARTIFACTS").flatMap { a =>
-      def markerOk(d: java.nio.file.Path): Boolean = {
-        val m = d.resolve("GRAFT_DIR.txt")
-        !java.nio.file.Files.exists(m) ||
-          java.nio.file.Files.readString(m).trim == dir
-      }
-      val corpusDir = java.nio.file.Paths.get(a,
-        java.nio.file.Paths.get(dir).getFileName.toString)
-      val perCorpus = corpusDir.resolve(name)
-      val flat = java.nio.file.Paths.get(a, name)
-      val flatMarker = java.nio.file.Paths.get(a, "GRAFT_DIR.txt")
-      if (java.nio.file.Files.exists(perCorpus) && markerOk(corpusDir))
-        Some(perCorpus)
-      else if (java.nio.file.Files.exists(flat) &&
-          java.nio.file.Files.exists(flatMarker) &&
-          java.nio.file.Files.readString(flatMarker).trim == dir) Some(flat)
-      else None
-    }
-
   private def tempArtifactPath(
       dir: String, name: String): java.nio.file.Path = {
     val key = java.security.MessageDigest.getInstance("MD5")
@@ -300,9 +256,6 @@ object PlanMemo {
     * (stale format, drifted pruning regime): without the overwrite the
     * invalid table persists and every later session silently re-pays
     * the full rebuild while appearing to consume a shipped artifact.
-    * A staged `SPARK_GRAFT_ARTIFACTS` mount shadows the temp path and
-    * is never written — callers log the refusal instead so the
-    * operator sees the stale mount.
     */
   private[graft] def republishParquet(spark: SparkSession, dir: String,
       name: String)(build: => DataFrame): Unit =

@@ -255,223 +255,6 @@ object Probe {
         time("d19_verify") { run(Dedup.prefixJaccard(spark, dir)) }
         spark.catalog.clearCache()
         time("d19_full_cold") { run(Dedup.prefixJaccard(spark, dir)) }
-      case "e03parts" =>
-        import org.apache.spark.sql.functions._
-        // time appendAgainst's INTERNAL frames exactly as the query
-        // spells them (published pairs artifact, increment screens,
-        // checkpoint, CC, accounting, placement) under the bench's
-        // per-rep clearCache contract — e03cold's ladder used the
-        // REBUILD pairs path, which the query does not pay.
-        run(Pipeline.incrementAppend(spark, dir)) // warm artifacts
-        spark.catalog.clearCache()
-        val sid = Dedup.incrementalSplitId(spark, dir)
-        val docs = Tables.documents(spark, dir)
-        val baseKept = Pipeline.baseKeptDocs(spark, dir)
-        val incQ = PlanMemo.publishedParquet(spark, dir,
-            "t23_quality_classifier")(Text.qualityClassifier(spark, dir))
-          .filter(col("pred") === 1 && col("doc_id") >= sid).select("doc_id")
-        val fpx = expr("optimizer_barrier(md5(text))")
-        val incNoExact = docs
-          .join(incQ.hint("shuffle_hash"), Seq("doc_id"), "left_semi")
-          .select(col("doc_id"), fpx.as("fp"))
-          .join(Pipeline.baseFpsArtifact(spark, dir).hint("shuffle_hash"),
-            Seq("fp"), "left_anti")
-          .select("doc_id")
-        time("incNoExact") { run(incNoExact) }
-        val pairsP = Pipeline.pairsArtifact(spark, dir)
-        time("pairs_published_read") { run(pairsP) }
-        val crossLosers = pairsP
-          .join(baseKept.select(col("doc_id").as("d1")).hint("shuffle_hash"),
-            Seq("d1"), "left_semi")
-          .select(col("d2").as("doc_id"))
-          .union(pairsP
-            .join(baseKept.select(col("doc_id").as("d2")).hint("shuffle_hash"),
-              Seq("d2"), "left_semi")
-            .select(col("d1").as("doc_id")))
-          .distinct()
-        time("crossLosers") { run(crossLosers) }
-        var incScreened: DataFrame = null
-        time("incScreened_checkpoint") {
-          incScreened = incNoExact
-            .join(crossLosers.hint("shuffle_hash"), Seq("doc_id"), "left_anti")
-            .localCheckpoint()
-        }
-        val incPairs = pairsP
-          .join(incScreened.select(col("doc_id").as("d1"))
-            .hint("shuffle_hash"), Seq("d1"), "left_semi")
-          .join(incScreened.select(col("doc_id").as("d2"))
-            .hint("shuffle_hash"), Seq("d2"), "left_semi")
-        time("ccIncrement") { run(Dedup.connectedComponents(incPairs)) }
-        val dict = Text.bpeEncodeDictUnder(
-          Text.bpeMerges(spark, dir), Text.bpeVocab(spark, dir))
-        val incDocs = docs.join(incScreened.hint("shuffle_hash"),
-          Seq("doc_id"), "left_semi")
-        val incCounts = incDocs
-          .select(col("doc_id"), explode_outer(Text.bpeWords(col("text")))
-            .as("word"))
-          .filter(col("word").isNotNull)
-          .groupBy("doc_id", "word").agg(count(lit(1)).as("cnt"))
-          .join(dict.hint("shuffle_hash"), "word")
-          .groupBy("doc_id")
-          .agg(sum(col("cnt") * col("ntok")).cast("long").as("nt"))
-        time("incCounts") { run(incCounts) }
-        val incBase = incDocs.select(col("lang"), col("doc_id"))
-          .join(incCounts.hint("shuffle_hash"), Seq("doc_id"), "left")
-          .select(col("lang"), col("doc_id"),
-            coalesce(col("nt"), lit(0L)).as("n_tok"))
-        time("placement") { run(Packing.placed(incBase)) }
-        spark.catalog.clearCache()
-        time("e03_full_cleared") { run(Pipeline.incrementAppend(spark, dir)) }
-      case "e08parts" =>
-        import org.apache.spark.sql.functions._
-        // localize the two-append chain's per-rep cost under the
-        // bench's clearCache contract: first append (p1, checkpoint),
-        // state rollforward (fps1 md5 scan), second append's screens /
-        // CC / accounting, full query. Mirrors incrementAppendChain's
-        // spelling (see the appendAgainst probe-sync note).
-        run(Pipeline.incrementAppendChain(spark, dir)) // warm artifacts
-        spark.catalog.clearCache()
-        val (sid1, sid2) = Pipeline.chainSplitIds(spark, dir)
-        val docs = Tables.documents(spark, dir)
-        val qc = PlanMemo.publishedParquet(spark, dir,
-            "t23_quality_classifier")(Text.qualityClassifier(spark, dir))
-          .filter(col("pred") === 1)
-        val inc1Q = qc
-          .filter(col("doc_id") >= sid1 && col("doc_id") < sid2)
-          .select("doc_id")
-        val inc2Q = qc.filter(col("doc_id") >= sid2).select("doc_id")
-        var p1: DataFrame = null
-        time("p1_append_checkpoint") {
-          p1 = Pipeline.appendAgainst(spark, dir,
-            Pipeline.baseKeptDocs(spark, dir),
-            Pipeline.baseFpsArtifact(spark, dir),
-            Pipeline.baseTotalsArtifact(spark, dir), inc1Q,
-            crossLosersPre =
-              Some(Pipeline.baseCrossLosersArtifact(spark, dir)))
-            .localCheckpoint()
-        }
-        val fps1 = Pipeline.baseFpsArtifact(spark, dir)
-          .union(docs
-            .join(p1.select("doc_id").hint("shuffle_hash"),
-              Seq("doc_id"), "left_semi")
-            .select(expr("optimizer_barrier(md5(text))").as("fp")))
-        time("fps1") { run(fps1) }
-        val totals1 = Pipeline.baseTotalsArtifact(spark, dir).as("b")
-          .join(p1.groupBy("lang")
-            .agg(sum("n_tok").cast("long").as("inc_tok")).as("i"),
-            Seq("lang"), "full")
-          .select(col("lang"),
-            (coalesce(col("base_tok"), lit(0L)) +
-              coalesce(col("inc_tok"), lit(0L))).as("base_tok"))
-        time("totals1") { run(totals1) }
-        val pairsArt = Pipeline.pairsArtifact(spark, dir)
-        val crossLosers2 = Pipeline.baseCrossLosersArtifact(spark, dir)
-          .union(pairsArt
-            .join(p1.select(col("doc_id").as("d1")).hint("shuffle_hash"),
-              Seq("d1"), "left_semi")
-            .select(col("d2").as("doc_id")))
-          .union(pairsArt
-            .join(p1.select(col("doc_id").as("d2")).hint("shuffle_hash"),
-              Seq("d2"), "left_semi")
-            .select(col("d1").as("doc_id")))
-        time("crossLosers2") { run(crossLosers2) }
-        val incNoExact2 = docs
-          .join(inc2Q.hint("shuffle_hash"), Seq("doc_id"), "left_semi")
-          .select(col("doc_id"),
-            expr("optimizer_barrier(md5(text))").as("fp"))
-          .join(fps1.hint("shuffle_hash"), Seq("fp"), "left_anti")
-          .select("doc_id")
-        time("incNoExact2") { run(incNoExact2) }
-        var incScreened2: DataFrame = null
-        time("incScreened2_checkpoint") {
-          incScreened2 = incNoExact2
-            .join(crossLosers2.hint("shuffle_hash"), Seq("doc_id"),
-              "left_anti")
-            .localCheckpoint()
-        }
-        val incPairs2 = pairsArt
-          .join(incScreened2.select(col("doc_id").as("d1"))
-            .hint("shuffle_hash"), Seq("d1"), "left_semi")
-          .join(incScreened2.select(col("doc_id").as("d2"))
-            .hint("shuffle_hash"), Seq("d2"), "left_semi")
-        time("cc2") { run(Dedup.connectedComponents(incPairs2)) }
-        spark.catalog.clearCache()
-        time("e08_full_cleared") {
-          run(Pipeline.incrementAppendChain(spark, dir))
-        }
-        spark.catalog.clearCache()
-        time("e08_full_cleared2") {
-          run(Pipeline.incrementAppendChain(spark, dir))
-        }
-      case "e03stages" =>
-        import org.apache.spark.sql.functions._
-        // stage ladder for the incremental append: localize warm cost
-        // between the frozen-base artifacts (memoized — should be
-        // ~free after rep 1), the increment screens, the
-        // intra-increment CC fixpoint, and the accounting+placement.
-        time("baseKept_build") { Pipeline.baseKeptDocs(spark, dir).count() }
-        time("e03_rep1") { run(Pipeline.incrementAppend(spark, dir)) }
-        val sid = Dedup.incrementalSplitId(spark, dir)
-        val pairs = Dedup.jaccardPairs(spark, dir).select("d1", "d2")
-        time("pairs_warm_scan") { run(pairs) }
-        val baseKept = Pipeline.baseKeptDocs(spark, dir)
-        val incQ = Text.qualityClassifier(spark, dir)
-          .filter(col("pred") === 1 && col("doc_id") >= sid).select("doc_id")
-        time("incQ") { run(incQ) }
-        val crossLosers = pairs
-          .join(baseKept.select(col("doc_id").as("d1")), Seq("d1"), "left_semi")
-          .select(col("d2").as("doc_id"))
-          .union(pairs
-            .join(baseKept.select(col("doc_id").as("d2")), Seq("d2"), "left_semi")
-            .select(col("d1").as("doc_id")))
-          .distinct()
-        time("crossLosers") { run(crossLosers) }
-        val incPairs = pairs
-          .join(incQ.select(col("doc_id").as("d1")), Seq("d1"), "left_semi")
-          .join(incQ.select(col("doc_id").as("d2")), Seq("d2"), "left_semi")
-        time("ccIncrement") { run(Dedup.connectedComponents(incPairs)) }
-        time("e03_rep2") { run(Pipeline.incrementAppend(spark, dir)) }
-        time("e03_rep3") { run(Pipeline.incrementAppend(spark, dir)) }
-        time("e03_rep4") { run(Pipeline.incrementAppend(spark, dir)) }
-      case "e03cold" =>
-        import org.apache.spark.sql.functions._
-        // replicate incrementAppend's stage frames under the bench's
-        // per-rep clearCache contract, materializing stage by stage
-        run(Pipeline.incrementAppend(spark, dir)) // warm artifacts
-        spark.catalog.clearCache()
-        val sid = Dedup.incrementalSplitId(spark, dir)
-        val docs = Tables.documents(spark, dir)
-        time("baseKept_read") { Pipeline.baseKeptDocs(spark, dir).count() }
-        val baseKept = Pipeline.baseKeptDocs(spark, dir)
-        val incQ = PlanMemo.publishedParquet(spark, dir,
-            "t23_quality_classifier")(Text.qualityClassifier(spark, dir))
-          .filter(col("pred") === 1 && col("doc_id") >= sid).select("doc_id")
-        time("incQ_read") { run(incQ) }
-        val pairs = Dedup.jaccardPairs(spark, dir).select("d1", "d2")
-        time("pairs_rebuild") { run(pairs) }
-        val crossLosers = pairs
-          .join(baseKept.select(col("doc_id").as("d1")), Seq("d1"), "left_semi")
-          .select(col("d2").as("doc_id"))
-          .union(pairs
-            .join(baseKept.select(col("doc_id").as("d2")), Seq("d2"), "left_semi")
-            .select(col("d1").as("doc_id")))
-          .distinct()
-        time("crossLosers") { run(crossLosers) }
-        val incPairs = pairs
-          .join(incQ.select(col("doc_id").as("d1")), Seq("d1"), "left_semi")
-          .join(incQ.select(col("doc_id").as("d2")), Seq("d2"), "left_semi")
-        time("ccIncrement") { run(Dedup.connectedComponents(incPairs)) }
-        val dict = Text.bpeEncodeDictUnder(
-          Text.bpeMerges(spark, dir), Text.bpeVocab(spark, dir))
-        time("dict_rebuild") { run(dict) }
-        time("e03_full_cleared") {
-          spark.catalog.clearCache()
-          run(Pipeline.incrementAppend(spark, dir))
-        }
-        time("e03_full_cleared2") {
-          spark.catalog.clearCache()
-          run(Pipeline.incrementAppend(spark, dir))
-        }
       case "q14" =>
         import org.apache.spark.sql.functions._
         // A/B the histogram build key: string col_name (current) vs
@@ -611,8 +394,8 @@ object Probe {
         // Vocabulary-stress measurement of the BPE trainer's one
         // driver-growth path (round-16 verdict "next" 1): the
         // (freq, sym) dictionary collect is corpus-FLAT but
-        // vocabulary-SIZED, and `spark.graft.bpeMinFreq` df-pruning
-        // is the documented relief valve. Run against a GenData
+        // vocabulary-SIZED; df-pruning (the `minFreq` cut) is measured
+        // here beside the exact train. Run against a GenData
         // `vstress` corpus (≥5M distinct words at sf3); prints, per
         // minFreq ∈ {1, 2, 3}: dictionary rows collected, collect
         // wall + retained driver heap, 32k-train wall + peak heap,

@@ -16,9 +16,10 @@ object Verify {
         .config("spark.sql.shuffle.partitions", cpus)
     ).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // SPARK_GRAFT_SQLCONF=k=v[,k=v...]: conf toggles so conf-gated
-    // engine paths (e.g. forcing d03's prefix-kernel delegation) can
-    // be driven through the SAME oracle gate as the defaults
+    // SPARK_GRAFT_SQLCONF=k=v[,k=v...]: plain Spark runtime conf set
+    // on the session before the dump, so a Spark setting (e.g.
+    // spark.sql.adaptive.enabled=false) is driven through the SAME
+    // oracle gate as the defaults
     sys.env.get("SPARK_GRAFT_SQLCONF").foreach(_.split(",").foreach { kv =>
       val Array(k, v) = kv.split("=", 2)
       spark.conf.set(k, v)

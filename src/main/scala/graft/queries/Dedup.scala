@@ -522,17 +522,17 @@ object Dedup {
       e2 / (p * p) / docs
     }
 
-  def jaccardPairs(spark: SparkSession, dir: String): DataFrame = {
-    // conf override (specs force either branch at any SF)
-    val cut = spark.conf
-      .get("spark.graft.jaccardDelegateEmission",
-        jaccardDelegateEmission.toString).toDouble
+  def jaccardPairs(spark: SparkSession, dir: String,
+      emissionCut: Double = jaccardDelegateEmission): DataFrame = {
+    // `emissionCut` is a parameter so specs can force either kernel
+    // at any SF (0 forces the prefix kernel)
     val kernel =
-      if (pairEmissionPerDoc(spark, dir) > cut) "prefix" else "posting"
+      if (pairEmissionPerDoc(spark, dir) > emissionCut) "prefix"
+      else "posting"
     // memoized: d03 sorts these pairs, d08/d09 run connected
     // components over them — one persisted pair set serves all three
     // (the same shared-index pattern as lshBands for d02/d11/d13);
-    // kernel-tagged key so a conf flip never serves the other
+    // kernel-tagged key so a forced cut never serves the other
     // kernel's cached frame. Stays LAZY: e03's four-consumer fan-out
     // is race-safe because its CC edge checkpoint materializes the
     // frame sequentially at construction, and an eager count() here
@@ -1832,24 +1832,12 @@ object Dedup {
     */
   val maxCcIters = 25
 
-  /** (node, lbl) fixpoint over an arbitrary undirected pair set
-    * (columns d1, d2): lbl = min node id of the connected component.
-    * Factored from the d08 query so the spec can drive it on synthetic
-    * graphs (chains, forests) and pin the iteration bound.
-    *
-    * `maxIters` applies to the DISTRIBUTED path only: below the
-    * `spark.graft.ccDriverMaxEdges` cut the in-memory union-find has
-    * no rounds and always returns the exact labeling, so a caller
-    * passing a low cap to bound work will NOT see the guard fire on
-    * small graphs. Set the conf to "0" to force the distributed
-    * fixpoint when the iteration bound itself is under test.
-    */
   /** Driver-path ceiling for [[connectedComponents]] (undirected edge
-    * count, conf `spark.graft.ccDriverMaxEdges`): near-dup pair
-    * graphs are SLIVERS of the corpus, and below this cut the
-    * fixpoint's per-round scheduling latency (join + groupBy +
-    * localCheckpoint + convergence probe, ×diameter) costs far more
-    * than the graph — collect it and run union-find in-memory.
+    * count): near-dup pair graphs are SLIVERS of the corpus, and below
+    * this cut the fixpoint's per-round scheduling latency (join +
+    * groupBy + localCheckpoint + convergence probe, ×diameter) costs
+    * far more than the graph — collect it and run union-find
+    * in-memory.
     * The collect goes through a typed (Long, Long) encoder, so the
     * wire+heap cost is primitive tuples: 2M symmetrized edges ≈
     * 32 MB of longs plus ~64 MB of Tuple2 boxes transiently on the
@@ -1903,8 +1891,21 @@ object Dedup {
     sess.createDataset(rdd).toDF("node", "lbl")
   }
 
+  /** (node, lbl) fixpoint over an arbitrary undirected pair set
+    * (columns d1, d2): lbl = min node id of the connected component.
+    * Factored from the d08 query so the spec can drive it on synthetic
+    * graphs (chains, forests) and pin the iteration bound.
+    *
+    * `maxIters` applies to the DISTRIBUTED path only: below the
+    * `driverMaxEdges` cut the in-memory union-find has no rounds and
+    * always returns the exact labeling, so a caller passing a low cap
+    * to bound work will NOT see the guard fire on small graphs. Pass
+    * `driverMaxEdges = 0` to force the distributed fixpoint when the
+    * iteration bound itself is under test.
+    */
   private[graft] def connectedComponents(
-      pairs: DataFrame, maxIters: Int = maxCcIters): DataFrame = {
+      pairs: DataFrame, maxIters: Int = maxCcIters,
+      driverMaxEdges: Long = ccDriverMaxEdges): DataFrame = {
     // localCheckpoint, not persist: `labels` appears twice per round
     // (union + convergence probe), so a lineage-preserving cache grows
     // the LOGICAL plan exponentially with rounds — a 12-round chain
@@ -1932,9 +1933,7 @@ object Dedup {
     // it is restored before the lazy downstream plan runs.
     val sess = pairs.sparkSession
     val edgeCount = edges.count()
-    val cut = sess.conf
-      .get("spark.graft.ccDriverMaxEdges", ccDriverMaxEdges.toString).toLong
-    if (edgeCount <= cut) {
+    if (edgeCount <= driverMaxEdges) {
       // typed-encoder collect: primitive Tuple2s, not GenericRow
       // boxes — at the 2M default cut this is the difference between
       // ~100 MB and several hundred MB of transient driver heap

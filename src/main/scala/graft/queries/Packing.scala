@@ -353,9 +353,8 @@ object Packing {
     // CC fixpoint + d03's posting pipeline after every `clearCache` —
     // the #1 cost at sf0.1 AND sf10 for work those families already
     // shipped. [[PlanMemo.publishedParquet]] is the release-pipeline
-    // shape c06 already uses (a prior Verify artifact when
-    // SPARK_GRAFT_ARTIFACTS points at one, else publish-once per JVM);
-    // the builders are hash-gated, so the artifact read cannot change
+    // shape c06 already uses (publish-once per JVM and corpus); the
+    // builders are hash-gated, so the artifact read cannot change
     // any answer. d08's output carries ccLabels' (node, lbl) verbatim
     // as (doc_id, cluster_id).
     val docs = Tables.documents(spark, dir).select(col("doc_id"))

@@ -50,7 +50,7 @@ object Pipeline {
     * hash-gated as d03, and its rows ARE jaccardPairs' rows
     * (ngramJaccard only adds the presentation sort).
     */
-  private[graft] def pairsArtifact(
+  private def pairsArtifact(
       spark: SparkSession, dir: String): DataFrame =
     PlanMemo.cached(spark, s"pipeline.pairsArtifact:$dir")(
       PlanMemo.publishedParquet(spark, dir, "d03_ngram_jaccard")(
@@ -716,7 +716,7 @@ object Pipeline {
     * distinct-ed once at write; consumers anti-join it, where
     * duplicates would be semantics-free anyway.
     */
-  private[graft] def baseCrossLosersArtifact(
+  private def baseCrossLosersArtifact(
       spark: SparkSession, dir: String): DataFrame =
     PlanMemo.cached(spark, s"pipeline.baseCrossLosers:$dir")(
       PlanMemo.publishedParquet(spark, dir, "pipeline_base_crosslosers") {
@@ -739,7 +739,7 @@ object Pipeline {
     * compact artifacts a pipeline KEEPS between increments (d13's
     * layer, see the baseKeptDocs scaladoc).
     */
-  private[graft] def baseFpsArtifact(
+  private def baseFpsArtifact(
       spark: SparkSession, dir: String): DataFrame =
     PlanMemo.cached(spark, s"pipeline.baseFps:$dir")(
       PlanMemo.publishedParquet(spark, dir, "pipeline_base_fps")(

@@ -1473,7 +1473,7 @@ object Text {
     */
   private[graft] def bpeMerges(
       spark: SparkSession, dir: String): Seq[(Int, String, String, Long)] =
-    bpePublishedTrain(spark, dir, "bpe_merges", bpeVocabTarget, 1L) {
+    bpePublishedTrain(spark, dir, "bpe_merges", bpeVocabTarget) {
       val res = bpeTrainAt(spark, dir, bpeRounds, 0, minFreq = 1L)
       require(!res.exhausted, "bpe training ran out of mergeable pairs " +
         s"at round ${res.merges.length + 1}")
@@ -1642,10 +1642,9 @@ object Text {
     * winner selection; each merge rescans ONLY the words containing
     * the winning pair (tracked per pair), so a round's cost is
     * proportional to the affected dictionary slice, not the
-    * dictionary — sub-linear in rounds overall. At 100 TB the
-    * collected dictionary is bounded by df-pruning
-    * (`spark.graft.bpeMinFreq`) — the standard min-frequency cut every
-    * production trainer applies.
+    * dictionary — sub-linear in rounds overall. A dictionary too
+    * large to collect never reaches this loop: [[bpeTrainAt]]'s size
+    * gate sends it to [[BpeDist.train]].
     */
   private[graft] def bpeTrainDriver(
       vocab: Seq[(Long, String)], rounds: Int,
@@ -1749,27 +1748,19 @@ object Text {
     *   - compression: corpus token totals strictly improve from 12 to
     *     1000 merges and never beat the byte floor.
     *
-    * `spark.graft.bpeMinFreq` (default 1 = exact) df-prunes the
-    * collected dictionary — at 100 TB the vocabulary tail is pruned
-    * before collect exactly as production trainers do; the bands gate
-    * runs unpruned. The memoized result is shared by t25's bands and
-    * t27/t29's encodes: one train per (session, corpus, minFreq).
+    * The train is exact (minFreq 1); a dictionary over the driver
+    * budget goes to the executor-side trainer, not to pruning. The
+    * memoized result is shared by t25's bands and t27/t29's encodes:
+    * one train per (session, corpus).
     */
   private[graft] def bpeLargeTrain(
       spark: SparkSession, dir: String): BpeDriverTrain =
-    bpeTrainAt(spark, dir, bpeLargeVocabTarget - 256, bpeRounds,
-      bpeMinFreq(spark))
-
-  /** The df-pruning cut for the 1k and 32k trains
-    * (`spark.graft.bpeMinFreq`, default 1 = exact).
-    */
-  private[graft] def bpeMinFreq(spark: SparkSession): Long =
-    spark.conf.get("spark.graft.bpeMinFreq", "1").toLong
+    bpeTrainAt(spark, dir, bpeLargeVocabTarget - 256, bpeRounds, 1L)
 
   /** Driver dictionary budget (rows) for [[bpeTrainAt]]. The default
     * keeps the largest MEASURED-viable vocabulary-stress point
     * driver-side (SCALE.md: 14.05M distinct words trained exact at
-    * 46.3 GB peak heap on a 128 GiB driver) with headroom; a pruned
+    * 46.3 GB peak heap on a 128 GiB driver) with headroom; a
     * dictionary above it — the 1e8-word web-vocabulary shape the
     * round-17 measurement declared driver-non-viable — delegates to
     * the executor-side trainer ([[BpeDist.train]]), which is pinned
@@ -1830,23 +1821,18 @@ object Text {
     * checkpoint sits at the 1k boundary so the band set compares the
     * production artifact against [[bpeLargeTrain]]'s. PUBLISHED
     * (round-17: the 32k train is minutes at vocabulary stress — a real
-    * pipeline trains once and SHIPS the table) as
-    * `bpe_merges_prod[_mfN]`: the name is minFreq-suffixed so two
-    * pruning regimes of one corpus never collide on disk, and the
-    * decoder refuses a table trained under a different regime.
+    * pipeline trains once and SHIPS the table) as `bpe_merges_prod`,
+    * trained exact (minFreq 1); the decoder refuses a table trained
+    * under any other regime.
     */
   private[graft] def bpeProdTrain(
-      spark: SparkSession, dir: String): BpeDriverTrain = {
-    val minFreq = bpeMinFreq(spark)
-    val name = if (minFreq == 1L) "bpe_merges_prod"
-      else s"bpe_merges_prod_mf$minFreq"
-    bpePublishedTrain(spark, dir, name, bpeProdVocabTarget, minFreq)(
+      spark: SparkSession, dir: String): BpeDriverTrain =
+    bpePublishedTrain(spark, dir, "bpe_merges_prod", bpeProdVocabTarget)(
       bpeTrainAt(spark, dir, bpeProdVocabTarget - 256,
-        bpeLargeVocabTarget - 256, minFreq))
-  }
+        bpeLargeVocabTarget - 256, 1L))
 
   /** The ONE published merge-table format (`bpe_merges` and
-    * `bpe_merges_prod[_mfN]`): the merge rows (round, lhs, rhs, cnt),
+    * `bpe_merges_prod`): the merge rows (round, lhs, rhs, cnt),
     * the tokenizer configuration beside every row (format version,
     * word pattern, vocab target, alphabet, training min_freq) and the
     * train's accounting (exhausted, token totals).
@@ -1912,29 +1898,23 @@ object Text {
     * as artifact `name` ([[PlanMemo.publishedParquet]] — content-
     * fingerprint keyed, so a mutated corpus re-trains) and serve the
     * decoded table, memoized per session. A stale or config-mismatched
-    * table (a pre-upgrade artifact, another pruning regime staged via
-    * SPARK_GRAFT_ARTIFACTS) is refused: train fresh and REPAIR the
-    * published table so later sessions don't silently re-pay the train
-    * behind what looks like a shipped artifact. A read-only staged
-    * mount can't be repaired — log so the operator sees it.
+    * table (a pre-upgrade artifact, another pruning regime) is refused:
+    * train fresh and REPAIR the published table so later sessions don't
+    * silently re-pay the train behind what looks like a shipped
+    * artifact. Every engine train is exact, so the table's regime is
+    * minFreq 1.
     */
   private def bpePublishedTrain(spark: SparkSession, dir: String,
-      name: String, vocabTarget: Int, minFreq: Long)
+      name: String, vocabTarget: Int)
       (train: => BpeDriverTrain): BpeDriverTrain =
     PlanMemo.cachedValue(spark,
       s"text.bpeArtifact:$name:$dir:${PlanMemo.corpusFingerprint(dir)}") {
       val df = PlanMemo.publishedParquet(spark, dir, name)(
-        bpeArtifactPayload(spark, train, vocabTarget, minFreq))
-      bpeArtifactDecode(df, vocabTarget, minFreq).getOrElse {
+        bpeArtifactPayload(spark, train, vocabTarget, 1L))
+      bpeArtifactDecode(df, vocabTarget, 1L).getOrElse {
         val res = train
-        if (PlanMemo.stagedArtifact(dir, name).isEmpty)
-          PlanMemo.republishParquet(spark, dir, name)(
-            bpeArtifactPayload(spark, res, vocabTarget, minFreq))
-        else
-          org.slf4j.LoggerFactory.getLogger("graft.Text").warn(
-            s"graft: refusing staged BPE artifact '$name' for $dir " +
-              "(format/pruning-regime drift); trained fresh — repair " +
-              "or remove the SPARK_GRAFT_ARTIFACTS mount")
+        PlanMemo.republishParquet(spark, dir, name)(
+          bpeArtifactPayload(spark, res, vocabTarget, 1L))
         res
       }
     }
@@ -2842,9 +2822,8 @@ object Text {
     * and every operand here is positive, so truncation == floor ==
     * identical.
     *
-    * Features are md5-bucketed unigrams ([[fp64]] % [[qcDim]]) — the
-    * cross-engine portable hash; a production run swaps in the
-    * engine-native xxhash64 % D (cheaper per token, same semantics).
+    * Features are md5-bucketed unigrams ([[qcFeatures]]) — the
+    * cross-engine portable hash the DuckDB twin replays.
     * No prior term: the median-split teacher balances classes by
     * construction, and pred = score > 0 measures 0.64–0.98 held-out
     * accuracy without one.
@@ -2856,23 +2835,20 @@ object Text {
     * broadcast-safe side in the family at ANY corpus size. Doc-sized
     * frames (labels, scores) join shuffle_hash as usual.
     */
-  /** Feature-hash family for the classifier (round-15 verdict "next"
-    * 3): `md5` (default) is the cross-engine-portable [[fp64]]
-    * spelling the DuckDB twin replays; `xxh64` is the PRODUCTION path
-    * — Spark's codegen'd 64-bit xxHash (one shift/multiply pass per
-    * token vs md5's full digest), same hashing-trick semantics,
-    * selected via `spark.graft.qcHash`. The two paths train different
-    * (equally arbitrary) bucketings, so the engine path is gated on
-    * held-out separation quality (QualityClassifierSpec: AUC/accuracy
-    * floors match the md5 path's) rather than per-document hashes —
-    * exactly why md5 stays the oracle spelling.
+  /** The classifier's feature frame (doc_id, f, n): per-document
+    * counts of md5-bucketed lowercase unigrams ([[fp64]] % [[qcDim]]),
+    * the cross-engine-portable spelling the DuckDB twin replays. One
+    * memo per (session, corpus) serves t23's train and score passes
+    * and the frozen-weights train.
     */
-  private[graft] def qcHashMode(spark: SparkSession): String =
-    spark.conf.get("spark.graft.qcHash", "md5")
-
-  private[graft] def qcFeature(spark: SparkSession, w: Column): Column =
-    if (qcHashMode(spark) == "xxh64") pmod(xxhash64(w), lit(qcDim.toLong))
-    else fp64(w) % qcDim
+  private def qcFeatures(spark: SparkSession, dir: String): DataFrame =
+    PlanMemo.cached(spark, s"text.qcFeatures:$dir")(
+      Tables.documents(spark, dir)
+        .select(col("doc_id"),
+          explode_outer(tokens(lower(col("text")))).as("w"))
+        .filter(col("w").isNotNull)
+        .groupBy(col("doc_id"), (fp64(col("w")) % qcDim).as("f"))
+        .agg(count(lit(1)).as("n")))
 
   /** The FROZEN classifier model as a servable artifact: the trained
     * (f, w8) weight table — bounded by [[qcDim]], broadcast-safe at
@@ -2896,15 +2872,8 @@ object Text {
     val tbl = PlanMemo.publishedParquet(spark, dir, "qc_frozen_weights") {
       val labels = PlanMemo.cached(spark, s"text.qcLabels:$dir")(
         qcLabels(spark, dir))
-      val feats = PlanMemo.cached(spark, s"text.qcFeatures:$dir:md5")(
-        Tables.documents(spark, dir)
-          .select(col("doc_id"),
-            explode_outer(tokens(lower(col("text")))).as("w"))
-          .filter(col("w").isNotNull)
-          .groupBy(col("doc_id"), (fp64(col("w")) % qcDim).as("f"))
-          .agg(count(lit(1)).as("n")))
       val counts = PlanMemo.cached(spark, s"text.qcCounts:$dir")(
-        feats.join(labels.hint("shuffle_hash"), "doc_id")
+        qcFeatures(spark, dir).join(labels.hint("shuffle_hash"), "doc_id")
           .filter(col("doc_id") % qcFolds =!= 0)
           .groupBy("f").agg(
             sum(when(col("y") === 1, col("n")).otherwise(0L)).as("cp"),
@@ -2930,16 +2899,9 @@ object Text {
   }
 
   def qualityClassifier(spark: SparkSession, dir: String): DataFrame = {
-    val hashMode = qcHashMode(spark)
     val labels = PlanMemo.cached(spark, s"text.qcLabels:$dir")(
       qcLabels(spark, dir))
-    val feats = PlanMemo.cached(spark, s"text.qcFeatures:$dir:$hashMode")(
-      Tables.documents(spark, dir)
-        .select(col("doc_id"),
-          explode_outer(tokens(lower(col("text")))).as("w"))
-        .filter(col("w").isNotNull)
-        .groupBy(col("doc_id"), qcFeature(spark, col("w")).as("f"))
-        .agg(count(lit(1)).as("n")))
+    val feats = qcFeatures(spark, dir)
     val trainFeats = feats.join(labels.hint("shuffle_hash"), "doc_id")
       .filter(col("doc_id") % qcFolds =!= 0)
     val counts = trainFeats.groupBy("f").agg(
@@ -3023,7 +2985,7 @@ object Text {
   /** t33 — EXECUTOR-SIDE BPE TRAINING (the above-driver-budget path,
     * round-18 — see [[BpeDist]]): train with the dictionary sharded
     * on executors and driver state O(distinct pairs), and gate it
-    * BIT-IDENTICAL against [[bpeTrainDriver]] on the same pruned
+    * BIT-IDENTICAL against [[bpeTrainDriver]] on the same
     * dictionary:
     *   - band_merges_identical: the full merge table (round numbers,
     *     pairs, winning counts) is EQUAL;
@@ -3040,14 +3002,11 @@ object Text {
   def bpeTrainDist(spark: SparkSession, dir: String): DataFrame = {
     val rounds = bpeDistGateRounds
     val ck = math.min(12, rounds)
-    val minFreq = bpeMinFreq(spark)
     val (dist, drv) = PlanMemo.cachedValue(spark,
-      s"text.bpeDistGate:$dir:${PlanMemo.corpusFingerprint(dir)}" +
-        s":$minFreq") {
-      val pruned = bpeVocab(spark, dir)
-        .filter(col("freq") >= minFreq).select("freq", "sym")
-      val d = BpeDist.train(spark, pruned, rounds, checkpointRound = ck)
-      val dict = pruned.collect()
+      s"text.bpeDistGate:$dir:${PlanMemo.corpusFingerprint(dir)}") {
+      val vocab = bpeVocab(spark, dir).select("freq", "sym")
+      val d = BpeDist.train(spark, vocab, rounds, checkpointRound = ck)
+      val dict = vocab.collect()
         .map(r => (r.getLong(0), r.getString(1))).toSeq
       (d, bpeTrainDriver(dict, rounds, checkpointRound = ck))
     }

@@ -381,9 +381,8 @@ object IoQueries {
     * rate). Every number is a reuse of an already-gated family
     * pipeline — and the card consumes those families the way a real
     * release pipeline does: it reads their PUBLISHED parquet
-    * artifacts ([[PlanMemo.publishedParquet]] — a prior Verify
-    * output when `SPARK_GRAFT_ARTIFACTS` points at one, else a
-    * publish-once JVM-local artifact), never re-running the d03/d15/
+    * artifacts ([[PlanMemo.publishedParquet]] — a publish-once,
+    * corpus-fingerprint-keyed artifact), never re-running the d03/d15/
     * t03 pipelines once they have shipped. The card itself is then
     * one pass over each small artifact plus tiny broadcast joins of
     * 1-row aggregates; only the doc-count/token base scans the

@@ -70,35 +70,6 @@ class QualityClassifierSpec extends AnyFunSuite {
     assert(again.toSeq === out.map(r => (r._1, r._3)).toSeq)
   }
 
-  test("xxh64 production hash separates as well as the md5 oracle path") {
-    // the engine-native path (spark.graft.qcHash=xxh64) trains a
-    // different-but-equivalent bucketing; it must clear the SAME
-    // held-out floors the md5 path is gated on, and score structure
-    // (pred = sign, one row per doc) must be identical
-    spark.conf.set("spark.graft.qcHash", "xxh64")
-    try {
-      val x = Text.qualityClassifier(spark, sfDir)
-        .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2),
-          r.getInt(3), r.getInt(4)))
-      assert(x.length === out.length)
-      x.foreach { case (_, _, s8, pred, _) =>
-        assert(pred === (if (s8 > 0) 1 else 0))
-      }
-      val held = x.filter(_._5 == 1)
-      val a = auc(held.map(h => (h._3, h._2)).toSeq)
-      val acc = held.count(h => h._4 == h._2).toDouble / held.length
-      info(f"t23[xxh64] held-out auc=$a%.3f acc=$acc%.3f n=${held.length}")
-      assert(a >= 0.85, f"xxh64 held-out AUC $a%.3f under the 0.85 band")
-      assert(acc >= 0.55, f"xxh64 held-out accuracy $acc%.3f under 0.55")
-      // held-out pred agreement between the two hash families: same
-      // model family on the same teacher — they must mostly agree
-      val mdHeld = out.filter(_._5 == 1).map(h => h._1 -> h._4).toMap
-      val agree = held.count(h => mdHeld(h._1) == h._4).toDouble / held.length
-      info(f"t23 md5-vs-xxh64 held-out pred agreement $agree%.3f")
-      assert(agree >= 0.8, f"hash families disagree: $agree%.3f")
-    } finally spark.conf.unset("spark.graft.qcHash")
-  }
-
   test("ml09: LR twin's held-out metrics clear the driver bands") {
     val (a, acc, n) = MlQueries.qcLrMetrics(spark, sfDir)
     info(f"ml09 auc=$a%.3f acc=$acc%.3f n=$n")

@@ -100,12 +100,9 @@ class ScaleOpsSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got === want)
     // distributed fixpoint path (forced) must label identically
-    spark.conf.set("spark.graft.ccDriverMaxEdges", "0")
-    try {
-      val dist = Dedup.connectedComponents(pairs)
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(dist === want)
-    } finally spark.conf.unset("spark.graft.ccDriverMaxEdges")
+    val dist = Dedup.connectedComponents(pairs, driverMaxEdges = 0L)
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(dist === want)
   }
 
   test("connected components iteration bound is real: low cap throws") {
@@ -115,16 +112,13 @@ class ScaleOpsSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     // return a half-propagated (wrong) labeling. Forced distributed:
     // the driver union-find path has no rounds to bound
     val chain = (1L until 12L).map(i => (i, i + 1)).toDF("d1", "d2")
-    spark.conf.set("spark.graft.ccDriverMaxEdges", "0")
-    try {
-      assertThrows[IllegalArgumentException] {
-        Dedup.connectedComponents(chain, maxIters = 2)
-      }
-      // and the default cap converges fine on the same graph
-      val labels = Dedup.connectedComponents(chain)
-      assert(labels.select("lbl").distinct().collect().map(_.getLong(0))
-        .toSeq === Seq(1L))
-    } finally spark.conf.unset("spark.graft.ccDriverMaxEdges")
+    assertThrows[IllegalArgumentException] {
+      Dedup.connectedComponents(chain, maxIters = 2, driverMaxEdges = 0L)
+    }
+    // and the default cap converges fine on the same graph
+    val labels = Dedup.connectedComponents(chain, driverMaxEdges = 0L)
+    assert(labels.select("lbl").distinct().collect().map(_.getLong(0))
+      .toSeq === Seq(1L))
   }
 
   test("connected components: driver and distributed paths agree on a random forest") {
@@ -139,12 +133,9 @@ class ScaleOpsSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     }.filter(p => p._1 != p._2).distinct.toDF("d1", "d2")
     val drv = Dedup.connectedComponents(pairs)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    spark.conf.set("spark.graft.ccDriverMaxEdges", "0")
-    try {
-      val dist = Dedup.connectedComponents(pairs)
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(drv === dist)
-    } finally spark.conf.unset("spark.graft.ccDriverMaxEdges")
+    val dist = Dedup.connectedComponents(pairs, driverMaxEdges = 0L)
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(drv === dist)
   }
 
   test("d02 candidate volume stays ~linear: candidates/doc bounded across 10x") {

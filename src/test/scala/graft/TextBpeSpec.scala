@@ -614,47 +614,27 @@ class TextBpeSpec extends AnyFunSuite {
       s"band ${cols(i)} is false"))
   }
 
-  test("bpeMinFreq-pruned train: valid versioned artifact, t30-t32 bands " +
-      "stay green, drifted pruning regime refused") {
-    // the relief valve's correctness contract (round-16 verdict "next"
-    // 1): df-pruning the collected dictionary must still produce a
-    // structurally valid, versioned, REFUSE-on-drift artifact, and
-    // every t30/t31/t32 band must hold under it (both trains prune
-    // identically, so the prefix chain survives)
-    val old = spark.conf.getOption("spark.graft.bpeMinFreq")
-    spark.conf.set("spark.graft.bpeMinFreq", "2")
+  test("bpeMinFreq=2 artifact decodes under 2, refused under 1") {
+    // a table trained under df-pruning carries its regime in
+    // min_freq: read back from parquet it decodes under THAT regime
+    // and is REFUSED under any other (a consumer expecting the exact
+    // train must not silently encode under a pruned one)
+    val vocabTarget = Text.bpeLargeVocabTarget
+    val pruned = Text.bpeTrainAt(spark, sfDir, vocabTarget - 256,
+      Text.bpeRounds, minFreq = 2L)
+    val base = java.nio.file.Files.createTempDirectory("graft_bpe_mf2")
     try {
-      Seq(Text.bpeTrainProd(spark, sfDir), Text.bpeEncodeProd(spark, sfDir),
-        Text.bpeIdsProd(spark, sfDir)).foreach { df =>
-        val row = df.head()
-        val cols = df.columns
-        (0 until row.length).foreach(i => assert(row.getBoolean(i),
-          s"band ${cols(i)} is false under bpeMinFreq=2"))
-      }
-      // the artifact on disk: decodes under ITS pruning regime...
-      val published = PlanMemo.publishedParquet(spark, sfDir,
-        "bpe_merges_prod_mf2")(
-        fail("the pruned train must have published its artifact"))
-      val dec = Text.bpeArtifactDecode(published, Text.bpeProdVocabTarget,
-        minFreq = 2L)
-      assert(dec.nonEmpty, "pruned artifact failed config validation")
-      assert(dec.get.merges === Text.bpeProdTrain(spark, sfDir).merges)
-      // ...and is REFUSED under any other (a consumer expecting the
-      // exact train must not silently encode under a pruned one)
-      assert(Text.bpeArtifactDecode(published, Text.bpeProdVocabTarget,
+      val path = base.resolve("bpe_merges").toString
+      Text.bpeArtifactPayload(spark, pruned, vocabTarget, 2L)
+        .write.parquet(path)
+      val published = spark.read.parquet(path)
+      assert(Text.bpeArtifactDecode(published, vocabTarget,
+        minFreq = 2L) === Some(pruned),
+        "pruned artifact failed config validation")
+      assert(Text.bpeArtifactDecode(published, vocabTarget,
         minFreq = 1L).isEmpty,
         "a pruning-regime drift must be refused, not decoded")
-    } finally {
-      old match {
-        case Some(v) => spark.conf.set("spark.graft.bpeMinFreq", v)
-        case None => spark.conf.unset("spark.graft.bpeMinFreq")
-      }
-      // these memos are dir-keyed, not minFreq-keyed: drop what was
-      // built under the forced conf or later tests silently consume
-      // pruned dictionaries (the round-15 leaked-cache incident class)
-      PlanMemo.drop(spark, s"text.prodBothDicts:$sfDir")
-      PlanMemo.drop(spark, s"text.idsProdDict:$sfDir")
-    }
+    } finally TempArtifacts.deleteNow(base)
   }
 
   test("t31 strictness is real when the production table extends the 1k table") {

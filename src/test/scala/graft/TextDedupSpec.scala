@@ -247,17 +247,15 @@ class TextDedupSpec extends AnyFunSuite {
 
   test("d03 delegates to the prefix kernel above the size threshold") {
     // force the delegation branch (emission cut 0 -> any corpus with
-    // a shared shingle is "skewed"); d03's public entry must return
-    // exactly the classic kernel's rows — the switch is invisible to
-    // the gate
+    // a shared shingle is "skewed"); d03's pair set must be exactly
+    // the classic kernel's rows — the switch is invisible to the gate
     val classic = Dedup.ngramJaccard(spark, sfDir).collect().map(_.toSeq)
     assert(Dedup.pairEmissionPerDoc(spark, sfDir) > 0.0)
-    spark.conf.set("spark.graft.jaccardDelegateEmission", "0")
     try {
-      val delegated = Dedup.ngramJaccard(spark, sfDir).collect().map(_.toSeq)
+      val delegated = Dedup.jaccardPairs(spark, sfDir, emissionCut = 0.0)
+        .orderBy("d1", "d2").collect().map(_.toSeq)
       assert(delegated.toSeq === classic.toSeq)
     } finally {
-      spark.conf.unset("spark.graft.jaccardDelegateEmission")
       // the forced-kernel memo must not outlive the test: a cached
       // plan registered here gets substituted into LATER queries'
       // matching subtrees (d19's exchange pin flipped with suite
