@@ -251,18 +251,6 @@ object PlanMemo {
     publishRoot.resolve(key).resolve(name)
   }
 
-  /** Force-overwrite the JVM-lifetime temp artifact for (dir, name).
-    * The repair path when a consumer REFUSES a published artifact
-    * (stale format, drifted pruning regime): without the overwrite the
-    * invalid table persists and every later session silently re-pays
-    * the full rebuild while appearing to consume a shipped artifact.
-    */
-  private[graft] def republishParquet(spark: SparkSession, dir: String,
-      name: String)(build: => DataFrame): Unit =
-    publishRoot.synchronized {
-      writeAtomically(tempArtifactPath(dir, name))(build.write.parquet(_))
-    }
-
   private def hookEviction(spark: SparkSession): Unit =
     hooked.getOrElseUpdate(spark, {
       spark.sparkContext.addSparkListener(new SparkListener {

@@ -15,7 +15,8 @@ import graft.Dedup
 object Probe {
 
   def main(args: Array[String]): Unit = {
-    val what = args.headOption.getOrElse("d11")
+    require(args.nonEmpty, "usage: graft.Probe <what> [sfDir]")
+    val what = args.head
     val dir = args.drop(1).headOption.getOrElse("/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = Tables.configure(
@@ -81,17 +82,6 @@ object Probe {
           f"tokens=${prod.tokensInitial}->${prod.tokensAtCheckpoint}" +
           f"->${prod.tokensFinal} train=$trainSec%.2f s " +
           f"encodeDict=$encSec%.2f s")
-      case "e05plan" =>
-        val contents = Pipeline.shardContents(spark, dir)
-        run(contents)
-        val warm = Pipeline.shardContents(spark, dir)
-        run(warm)
-        val p = warm.queryExecution.executedPlan
-        println(p.toString.take(6000))
-      case "emission" =>
-        // d03-dispatch signal: sampled posting-emission pairs/doc
-        println(f"PROBE emission $dir " +
-          f"${Dedup.pairEmissionPerDoc(spark, dir)}%.1f pairs/doc")
       case "qcagree" =>
         // ml10 calibration diagnosis: raw threshold-pred agreement vs
         // rate-matched (each model selecting its own top half of the
@@ -116,21 +106,6 @@ object Probe {
           .sortBy(t => (-t._2, t._1)).take(k).map(_._1).toSet
         val rate = (sel23 & selLr).size.toDouble / math.max(k, 1)
         println(f"PROBE qcagree n=$n raw=$raw%.3f k=$k rateMatched=$rate%.3f")
-      case "d11" =>
-        time("d11_cold") { run(Dedup.neardupVerified(spark, dir)) }
-        spark.catalog.clearCache()
-        time("cand_only") { run(Dedup.lshCandidates(spark, dir)) }
-        time("d11_warm_cand") { run(Dedup.neardupVerified(spark, dir)) }
-        spark.catalog.clearCache()
-        time("d11_again") { run(Dedup.neardupVerified(spark, dir)) }
-        println("PROBE cand_count " +
-          Dedup.lshCandidates(spark, dir).count())
-        println("PROBE docs_count " + Tables.documents(spark, dir).count())
-      case "explain" =>
-        val plan = Dedup.minhashLsh(spark, dir).queryExecution.executedPlan.toString
-        println(plan.take(8000))
-        println("PROBE md5_count " + "md5".r.findAllIn(plan).length)
-        println("PROBE exchange_count " + "Exchange".r.findAllIn(plan).length)
       case "d11parts" =>
         import org.apache.spark.sql.functions._
         val docs = Tables.documents(spark, dir)
@@ -202,46 +177,6 @@ object Probe {
         time("slice_emit_1") { run(agg(sliced)) }
         time("cross_emit_2") { run(agg(cross)) }
         time("slice_emit_2") { run(agg(sliced)) }
-      case "d03stages" =>
-        import org.apache.spark.sql.functions._
-        // stage ladder for the shared jaccardPairs pipeline: each step
-        // adds one operator block, so step-to-step deltas localize the
-        // dominant cost (tokenize+md5 scan vs posting shuffle vs pair
-        // emission vs the sizes joins).
-        val sh = Dedup.shingled(spark, dir)
-        time("shingled_scan") { run(sh.select(col("doc_id"), size(col("fps")))) }
-        val ex = sh
-          .select(col("doc_id"), explode_outer(col("fps")).as("sh"))
-          .filter(col("sh").isNotNull)
-        time("exploded") { run(ex) }
-        val posting = ex.groupBy("sh")
-          .agg(collect_list(col("doc_id")).as("docs"))
-          .filter(size(col("docs")) <= Dedup.maxShingleDf)
-        time("posting") { run(posting) }
-        time("posting_again") { run(posting) }
-        val emitted = posting
-          .select(array_sort(col("docs")).as("docs"))
-          .select(posexplode_outer(col("docs")), col("docs"))
-          .select(col("col").as("d1"),
-            explode_outer(expr("slice(docs, pos + 2, size(docs))")).as("d2"))
-          .filter(col("d2").isNotNull)
-        time("pairs_emit") { run(emitted) }
-        // A/B: row-per-pair shuffle vs the packed-array shuffle +
-        // post-exchange explode that Dedup.pairCounts ships (r12)
-        time("pairs_count_rowper") { run(emitted
-          .groupBy("d1", "d2").agg(count(lit(1)).as("inter"))) }
-        val packed = posting
-          .select(array_sort(col("docs")).as("docs"))
-          .select(posexplode_outer(col("docs")), col("docs"))
-          .select(col("col").as("d1"),
-            expr("slice(docs, pos + 2, size(docs))").as("d2s"))
-          .repartition(spark.sessionState.conf.numShufflePartitions,
-            col("d1"))
-          .select(col("d1"), explode(col("d2s")).as("d2"))
-          .groupBy("d1", "d2").agg(count(lit(1)).as("inter"))
-        time("pairs_count_packed") { run(packed) }
-        spark.catalog.clearCache()
-        time("d03_full_cold") { run(Dedup.ngramJaccard(spark, dir)) }
       case "d19stages" =>
         import org.apache.spark.sql.functions._
         // stage ladder for the PPJoin spelling: localize cost between
@@ -277,48 +212,23 @@ object Probe {
         println("PROBE distinct_rows " + ordHist.count())
         spark.catalog.clearCache()
         time("q14_full_cold") { run(Kpis.quantiles(spark, dir)) }
-      case "shingle" =>
-        import org.apache.spark.sql.functions._
-        // isolate the shingle kernel from scan / sort / persist cost
-        val docs = Tables.documents(spark, dir)
-        time("scan_only") { run(docs.select(col("doc_id"),
-          length(col("text")).as("n"))) }
-        time("kernel") { run(docs.select(col("doc_id"),
-          expr("shingle_fps(text)").as("fps"))) }
-        time("kernel_sorted") { run(docs.select(col("doc_id"),
-          array_sort(expr("shingle_fps(text)")).as("fps"))) }
-        time("kernel_again") { run(docs.select(col("doc_id"),
-          expr("shingle_fps(text)").as("fps"))) }
-        println("PROBE total_shingles " + docs
-          .select(expr("shingle_fps(text)").as("fps"))
-          .selectExpr("coalesce(sum(size(fps)), 0)").first().getLong(0))
-        println("PROBE total_chars " + docs
-          .selectExpr("coalesce(sum(length(text)), 0)").first().getLong(0))
-      case "cand" =>
-        // candidates-per-doc growth: the d11 scale invariant's raw data
-        val n = Tables.documents(spark, dir).count()
-        val c = Dedup.lshCandidates(spark, dir).count()
-        println(s"PROBE docs $n cands $c per_doc ${c.toDouble / n}")
       case "bpedist" =>
         // bank the executor-side trainer at vocabulary stress
-        // (round-18 "next" 1): full 32k train through BOTH paths on
-        // the same pruned dictionary, bit-identity asserted on the
-        // whole result, wall + driver-retained state printed for
-        // SCALE.md. SPARK_GRAFT_PROBE_MF picks the pruning regime
-        // (default 1 = exact); SPARK_GRAFT_PROBE_SKIP_DRIVER=1 skips
-        // the in-memory leg (for corpora where the driver number is
-        // already banked and only the distributed wall is wanted).
-        import org.apache.spark.sql.functions.col
+        // (round-18 "next" 1): the exact 32k train through BOTH paths
+        // on the same dictionary, bit-identity asserted on the whole
+        // result, wall + driver-retained state printed for SCALE.md.
+        // SPARK_GRAFT_PROBE_SKIP_DRIVER=1 skips the in-memory leg (for
+        // corpora where the driver number is already banked and only
+        // the distributed wall is wanted).
         val vocab = Text.bpeVocab(spark, dir)
         vocab.write.format("noop").mode("overwrite").save()
-        val mf = sys.env.getOrElse("SPARK_GRAFT_PROBE_MF", "1").toLong
-        val pruned = vocab.filter(col("freq") >= mf).select("freq", "sym")
-        val nDict = pruned.count()
-        println(s"PROBE bpedist dict_rows $nDict minFreq $mf")
+        val dictDf = vocab.select("freq", "sym")
+        val nDict = dictDf.count()
+        println(s"PROBE bpedist dict_rows $nDict")
         val rounds = Text.bpeProdVocabTarget - 256
         val ck = Text.bpeLargeVocabTarget - 256
         var t0 = System.nanoTime()
-        val dist = BpeDist.train(spark, pruned, rounds, checkpointRound = ck)
+        val dist = BpeDist.train(spark, dictDf, rounds, checkpointRound = ck)
         val distSec = (System.nanoTime() - t0) / 1e9
         println(f"PROBE bpedist dist_train $distSec%.1f s " +
           s"merges ${dist.merges.length} steps ${BpeDist.lastSteps} " +
@@ -326,7 +236,7 @@ object Probe {
           s"tokens_final ${dist.tokensFinal}")
         if (!sys.env.get("SPARK_GRAFT_PROBE_SKIP_DRIVER").contains("1")) {
           t0 = System.nanoTime()
-          val dict = pruned.collect()
+          val dict = dictDf.collect()
             .map(r => (r.getLong(0), r.getString(1))).toSeq
           val collectSec = (System.nanoTime() - t0) / 1e9
           t0 = System.nanoTime()
@@ -394,13 +304,12 @@ object Probe {
         // Vocabulary-stress measurement of the BPE trainer's one
         // driver-growth path (round-16 verdict "next" 1): the
         // (freq, sym) dictionary collect is corpus-FLAT but
-        // vocabulary-SIZED; df-pruning (the `minFreq` cut) is measured
-        // here beside the exact train. Run against a GenData
-        // `vstress` corpus (≥5M distinct words at sf3); prints, per
-        // minFreq ∈ {1, 2, 3}: dictionary rows collected, collect
-        // wall + retained driver heap, 32k-train wall + peak heap,
-        // merges learned, and the full-dictionary rank-cursor encode
-        // wall — the numbers SCALE.md banks.
+        // vocabulary-SIZED. Run against a GenData `vstress` corpus
+        // (≥5M distinct words at sf3); prints, for the exact train the
+        // engine runs: dictionary rows collected, collect wall +
+        // retained driver heap, 32k-train wall + peak heap, merges
+        // learned, and the full-dictionary rank-cursor encode wall —
+        // the numbers SCALE.md banks.
         import java.lang.management.{ManagementFactory, MemoryType}
         import scala.jdk.CollectionConverters._
         def heapUsed(): Long = {
@@ -412,48 +321,39 @@ object Probe {
         def peakHeap(): Long = ManagementFactory.getMemoryPoolMXBeans
           .asScala.filter(_.getType == MemoryType.HEAP)
           .map(_.getPeakUsage.getUsed).sum
-        import org.apache.spark.sql.functions.col
         val vocab = Text.bpeVocab(spark, dir)
         vocab.write.format("noop").mode("overwrite").save() // warm memo
         val nDict = vocab.count()
         val nTok = vocab.selectExpr("sum(freq)").first().getLong(0)
         println(s"PROBE dict_rows_total $nDict corpus_tokens $nTok")
-        val mfs = sys.env.get("SPARK_GRAFT_PROBE_MF")
-          .map(_.split(",").toSeq.map(_.trim.toLong))
-          .getOrElse(Seq(1L, 2L, 3L))
-        for (mf <- mfs) {
-          val h0 = heapUsed()
-          var t0 = System.nanoTime()
-          val dict = vocab.filter(col("freq") >= mf)
-            .select("freq", "sym").collect()
-            .map(r => (r.getLong(0), r.getString(1))).toSeq
-          val collectSec = (System.nanoTime() - t0) / 1e9
-          val hDict = heapUsed() - h0
-          resetPeaks()
-          t0 = System.nanoTime()
-          val res = Text.bpeTrainDriver(dict,
-            Text.bpeProdVocabTarget - 256,
-            checkpointRound = Text.bpeLargeVocabTarget - 256)
-          val trainSec = (System.nanoTime() - t0) / 1e9
-          val peakGb = peakHeap() / 1e9
-          println(f"PROBE mf$mf rows ${dict.size} collect $collectSec%.2f" +
-            f" s dict_heap ${hDict / 1e9}%.2f GB train $trainSec%.2f s" +
-            f" peak_heap $peakGb%.2f GB merges ${res.merges.length}" +
-            f" exhausted ${res.exhausted} tokens_final ${res.tokensFinal}")
-          // the rank-cursor encode over the FULL (unpruned) dictionary
-          // under this table — the serving-side cost of a pruned train
-          // — and the CORPUS-weighted token total (Σ freq·n), the
-          // fertility a pruned vocabulary actually costs at serve time
-          t0 = System.nanoTime()
-          val enc = Text.bpeIdsDictUnder(res.merges, vocab)
-            .join(vocab.select("word", "freq"), "word")
-            .selectExpr("sum(n)", "sum(CAST(rt_ok AS INT))",
-              "sum(freq * n)")
-            .first()
-          println(f"PROBE mf$mf encode ${(System.nanoTime() - t0) / 1e9}%.2f" +
-            s" s tokens ${enc.getLong(0)} rt_ok ${enc.getLong(1)} of" +
-            s" $nDict corpus_tokens ${enc.getLong(2)}")
-        }
+        val h0 = heapUsed()
+        var t0 = System.nanoTime()
+        val dict = vocab.select("freq", "sym").collect()
+          .map(r => (r.getLong(0), r.getString(1))).toSeq
+        val collectSec = (System.nanoTime() - t0) / 1e9
+        val hDict = heapUsed() - h0
+        resetPeaks()
+        t0 = System.nanoTime()
+        val res = Text.bpeTrainDriver(dict,
+          Text.bpeProdVocabTarget - 256,
+          checkpointRound = Text.bpeLargeVocabTarget - 256)
+        val trainSec = (System.nanoTime() - t0) / 1e9
+        val peakGb = peakHeap() / 1e9
+        println(f"PROBE train rows ${dict.size} collect $collectSec%.2f" +
+          f" s dict_heap ${hDict / 1e9}%.2f GB train $trainSec%.2f s" +
+          f" peak_heap $peakGb%.2f GB merges ${res.merges.length}" +
+          f" exhausted ${res.exhausted} tokens_final ${res.tokensFinal}")
+        // the rank-cursor encode over the full dictionary under this
+        // table and the CORPUS-weighted token total (Σ freq·n)
+        t0 = System.nanoTime()
+        val enc = Text.bpeIdsDictUnder(res.merges, vocab)
+          .join(vocab.select("word", "freq"), "word")
+          .selectExpr("sum(n)", "sum(CAST(rt_ok AS INT))",
+            "sum(freq * n)")
+          .first()
+        println(f"PROBE encode ${(System.nanoTime() - t0) / 1e9}%.2f" +
+          s" s tokens ${enc.getLong(0)} rt_ok ${enc.getLong(1)} of" +
+          s" $nDict corpus_tokens ${enc.getLong(2)}")
       case other =>
         System.err.println(s"unknown probe set: $other")
     }

@@ -10,7 +10,7 @@ import scala.collection.mutable
 
 /** Executor-side BPE merge training above the driver dictionary
   * budget — [[Text.bpeTrainAt]]'s one fallback (round-18, after the
-  * round-17 vocabulary-stress measurement proved exact minFreq=1
+  * round-17 vocabulary-stress measurement proved exact (unpruned)
   * training leaves any driver budget toward a 1e8-word web
   * vocabulary — SCALE.md: 385 s / 18.6 GB at 6.22M distinct words,
   * 1047 s / 46.3 GB at 14.05M, super-linear in both axes).

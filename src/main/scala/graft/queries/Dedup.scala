@@ -1259,17 +1259,20 @@ object Dedup {
   val incrementalFraction = 0.2
 
   private[graft] def incrementalSplitId(spark: SparkSession, dir: String): Long =
-    // driver-value memo (round 19): every incremental query (d13/d17/
-    // w10/e03/e06/e08) re-ran this max() scan as its own job per
-    // invocation — O(1) metadata a pipeline derives once per corpus.
-    // Keyed by the content fingerprint (the bpeMerges discipline) so
-    // an in-place corpus mutation recomputes, never serves stale ids.
+    math.ceil((maxDocId(spark, dir) + 1) * (1.0 - incrementalFraction)).toLong
+
+  /** The corpus's largest doc_id, the one scan behind every increment
+    * split (this one and `Pipeline.chainSplitIds`). Driver-value memo
+    * (round 19): every incremental query (d13/d17/w10/e03/e06/e08)
+    * re-ran this max() scan as its own job per invocation — O(1)
+    * metadata a pipeline derives once per corpus. Keyed by the content
+    * fingerprint so an in-place corpus mutation recomputes, never
+    * serves stale ids.
+    */
+  private[graft] def maxDocId(spark: SparkSession, dir: String): Long =
     PlanMemo.cachedValue(spark,
-      s"dedup.splitId:$dir:${PlanMemo.corpusFingerprint(dir)}") {
-      val maxId = Tables.documents(spark, dir)
-        .agg(max("doc_id")).head().getLong(0)
-      math.ceil((maxId + 1) * (1.0 - incrementalFraction)).toLong
-    }
+      s"dedup.maxDocId:$dir:${PlanMemo.corpusFingerprint(dir)}")(
+      Tables.documents(spark, dir).agg(max("doc_id")).head().getLong(0))
 
   /** Published artifact (round-18 optimization): the frozen BASE
     * side's content-fingerprint set at the d13 increment boundary —
@@ -1450,8 +1453,7 @@ object Dedup {
     val aug = semAug(spark, dir)
     val qe = aug.select(col("vec_id"), expr(
       s"transform(emb, x -> CAST(FLOOR(x * ${Clustering.quantScale}) AS BIGINT))").as("q"))
-    val nVecs = PlanMemo.cachedValue(spark, s"dedup.semCount:$dir")(
-      Tables.embeddings(spark, dir).count())
+    val nVecs = Similarity.retrNVecs(spark, dir)
     val k = math.max(Clustering.kClusters,
       (nVecs / semCellTarget).toInt)
     val cells = Clustering.assignedOn(spark, s"semdedup:$dir", qe, k)

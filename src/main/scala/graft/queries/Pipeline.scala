@@ -1039,16 +1039,11 @@ object Pipeline {
     * engines compute the same boundary exactly.
     */
   private[graft] def chainSplitIds(
-      spark: SparkSession, dir: String): (Long, Long) =
-    // driver-value memo, fingerprint-keyed (see incrementalSplitId)
-    PlanMemo.cachedValue(spark,
-      s"pipeline.chainSplitIds:$dir:${PlanMemo.corpusFingerprint(dir)}") {
-      val maxId = Tables.documents(spark, dir)
-        .agg(max("doc_id")).head().getLong(0)
-      val sid1 = math.ceil((maxId + 1) * (1.0 - Dedup.incrementalFraction))
-        .toLong
-      (sid1, sid1 + (maxId + 1 - sid1) / 2)
-    }
+      spark: SparkSession, dir: String): (Long, Long) = {
+    val maxId = Dedup.maxDocId(spark, dir)
+    val sid1 = Dedup.incrementalSplitId(spark, dir)
+    (sid1, sid1 + (maxId + 1 - sid1) / 2)
+  }
 
   /** e08 — MULTI-INCREMENT APPEND CHAIN (round-18, VERDICT "next" 2):
     * the contract an operations team actually runs weekly — e03's

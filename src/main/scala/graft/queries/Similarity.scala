@@ -156,9 +156,8 @@ object Similarity {
       // the within-bucket self-join families: refine buckets to
       // constant expected occupancy so Σ bucket² stays linear (one
       // memoized parquet-metadata count decides the plane count)
-      val n = PlanMemo.cachedValue(spark, s"similarity.nVecs:$dir")(
-        Tables.embeddings(spark, dir).count())
-      base.withColumn("bucket", expr(sparkScaledBucketExpr(extraPlanes(n))))
+      base.withColumn("bucket",
+        expr(sparkScaledBucketExpr(extraPlanes(retrNVecs(spark, dir)))))
     } else if (bucket) base.withColumn("bucket", expr(sparkBucketExpr))
     else base
   }
@@ -764,6 +763,10 @@ object Similarity {
   private[graft] def retrProbeFor(cells: Int): Int =
     math.max(2, math.ceil(math.sqrt(cells.toDouble)).toInt)
 
+  /** The embeddings row count — one memo for every consumer: the
+    * retrieval sizes here, the scaled-bucket plane count, d14's
+    * cluster count and w14's base/stream split.
+    */
   private[graft] def retrNVecs(spark: SparkSession, dir: String): Long =
     PlanMemo.cachedValue(spark, s"similarity.nVecs:$dir")(
       Tables.embeddings(spark, dir).count())

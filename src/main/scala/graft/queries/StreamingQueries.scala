@@ -96,12 +96,6 @@ object StreamingQueries {
       .outputMode(mode).start()
     try q.processAllAvailable()
     finally {
-      // opt-in diagnostic: per-micro-batch durations + operator
-      // breakdown, for attributing harness overhead vs real work
-      if (sys.env.contains("SPARK_GRAFT_STREAM_DEBUG"))
-        q.recentProgress.foreach(p => System.err.println(
-          s"[stream:$tag] batch=${p.batchId} rows=${p.numInputRows} " +
-            s"durationMs=${p.durationMs}"))
       q.stop()
       TempArtifacts.deleteNow(streamDir)
       TempArtifacts.deleteNow(ckpt)
@@ -533,7 +527,7 @@ object StreamingQueries {
   def streamingSemanticGate(spark: SparkSession, dir: String): DataFrame = {
     val ds = drainSession(spark)
     val emb = Tables.embeddings(spark, dir)
-    val split = PlanMemo.cachedValue(spark, s"w14.split:$dir")(emb.count() / 2)
+    val split = Similarity.retrNVecs(spark, dir) / 2
     val toDouble = "transform(embedding, x -> CAST(x AS DOUBLE))"
     def quantize(c: String) =
       s"transform($c, x -> CAST(FLOOR(x * ${Clustering.quantScale}) AS BIGINT))"

@@ -5,8 +5,6 @@ import scala.reflect.runtime.universe.TypeTag
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.expressions.UserDefinedFunction
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{
-  BooleanType, DataType, IntegerType, LongType, StringType}
 
 /** Text-analysis operators over the `documents` table — the
   * training-data-pipeline surface mandated by the build brief (SURVEY.md
@@ -1358,22 +1356,6 @@ object Text {
     */
   val bpeRounds: Int = bpeVocabTarget - 256
 
-  /** Format version of the PUBLISHED `bpe_merges` artifact (round-15
-    * verdict "next" 6): bumped whenever the trained-table semantics
-    * change (v2 = byte-level UTF-8 hex symbols). The artifact carries
-    * (version, word pattern, vocab target, alphabet) beside every
-    * merge row, and [[bpeArtifactDecode]] REFUSES a mismatched table —
-    * a consumer session can never silently mis-encode under a
-    * tokenizer trained with a different configuration; it re-trains
-    * instead.
-    */
-  val bpeFormatVersion: Int = 2
-
-  /** Symbol-alphabet tag published in the artifact: UTF-8 bytes as
-    * uppercase hex pairs (see [[byteSym]]).
-    */
-  val bpeAlphabet: String = "utf8-bytes-hex"
-
   /** Pre-tokenization for the BPE family (byte-level v2): maximal
     * Unicode-letter runs, digit runs, or ONE other non-whitespace
     * char — the GPT-2-style shape, case-preserving (no lowercasing;
@@ -1424,7 +1406,11 @@ object Text {
     * no alphabet restriction.
     */
   private[graft] def bpeVocab(spark: SparkSession, dir: String): DataFrame =
-    PlanMemo.cachedEager(spark, s"text.bpeVocab:$dir")(
+    // fingerprint-keyed like the artifact under it: a memo keyed by dir
+    // alone would keep serving a rewritten corpus's old dictionary to
+    // every re-train
+    PlanMemo.cachedEager(spark,
+      s"text.bpeVocab:$dir:${PlanMemo.corpusFingerprint(dir)}")(
       // PUBLISHED artifact (round 19): the word-frequency dictionary
       // is the canonical first artifact of every real BPE training
       // pipeline — the word-count table the trainer consumes and the
@@ -1432,7 +1418,7 @@ object Text {
       // vocabulary-sized, and consumed by a dozen operators (t21-t33
       // dictionaries, the e-family token accounting, w15, p07), each
       // of which previously re-ran the corpus tokenize+explode+groupBy
-      // to rebuild it. Same content-fingerprint keying as bpe_merges
+      // to rebuild it. Content-fingerprint keyed like every artifact
       // (a mutated corpus re-derives); build cost is visible as the
       // first consumer's cold_sec/memo_cold in Bench. Values are
       // byte-identical: the artifact is the same (word, freq, sym)
@@ -1446,14 +1432,11 @@ object Text {
           // counting reads only (freq, sym)
           .select("word", "freq", "sym")))
 
-  /** The corpus's trained [[bpeRounds]]-merge tokenizer (t21's table)
-    * as a PUBLISHED artifact — train once, persist the merge table,
-    * and have every consumer (batch encode, streaming accounting,
-    * later sessions) load the FROZEN table instead of re-training.
-    * The train is [[bpeTrainAt]] over the unpruned (minFreq 1)
-    * dictionary; [[bpePublishedTrain]] keys the artifact by the corpus
-    * content fingerprint (a mutated corpus re-trains, an unchanged one
-    * re-reads) and refuses a drifted table.
+  /** The corpus's trained [[bpeRounds]]-merge tokenizer (t21's table):
+    * trained once per (session, corpus) by [[bpeTrainAt]], whose memo
+    * every consumer (batch encode, streaming accounting) reads as the
+    * FROZEN table instead of re-training. The memo key carries the
+    * corpus content fingerprint, so a mutated corpus re-trains.
     *
     * Merge contract (pinned by TextBpeSpec and mirrored verbatim by
     * the unrolled DuckDB oracle): pair counts weighted by word freq
@@ -1467,25 +1450,24 @@ object Text {
     * by a merge (x, lr) occurs only where (x, l) occurred.
     *
     * Degenerate corpora (fewer than [[bpeRounds]] mergeable pairs,
-    * e.g. single-letter words only) fail LOUDLY before anything is
-    * published: a short table must never reach the oracle-gated t21,
-    * whose unrolled twin would degrade to NULL-sym CTEs instead.
+    * e.g. single-letter words only) fail LOUDLY on every call: a short
+    * table must never reach the oracle-gated t21, whose unrolled twin
+    * would degrade to NULL-sym CTEs instead.
     */
   private[graft] def bpeMerges(
-      spark: SparkSession, dir: String): Seq[(Int, String, String, Long)] =
-    bpePublishedTrain(spark, dir, "bpe_merges", bpeVocabTarget) {
-      val res = bpeTrainAt(spark, dir, bpeRounds, 0, minFreq = 1L)
-      require(!res.exhausted, "bpe training ran out of mergeable pairs " +
-        s"at round ${res.merges.length + 1}")
-      res
-    }.merges
+      spark: SparkSession, dir: String): Seq[(Int, String, String, Long)] = {
+    val res = bpeTrainAt(spark, dir, bpeRounds, 0)
+    require(!res.exhausted, "bpe training ran out of mergeable pairs " +
+      s"at round ${res.merges.length + 1}")
+    res.merges
+  }
 
   /** t21 — BPE tokenizer training: learn merge rules from the corpus
     * until the vocabulary reaches [[bpeVocabTarget]] (the operation
     * behind every real tokenizer shipped with a trained model).
     * Output is the learned merge table (round, lhs, rhs, merged, cnt)
-    * over byte symbols — small, deterministic, persisted as the
-    * frozen tokenizer artifact ([[bpeMerges]]), and hash-gated
+    * over byte symbols — small, deterministic, memoized as the
+    * frozen tokenizer ([[bpeMerges]]), and hash-gated
     * against a fully unrolled DuckDB twin.
     */
   def bpeTrain(spark: SparkSession, dir: String): DataFrame = {
@@ -1739,7 +1721,7 @@ object Text {
     *   - vocab_reached: the merge table hit the target (or the
     *     dictionary was fully merged — impossible on realistic text);
     *   - prefix_agrees: the first [[bpeRounds]] merges EQUAL the
-    *     oracle-hash-gated t21 artifact — training is prefix-stable,
+    *     oracle-hash-gated t21 table — training is prefix-stable,
     *     so the 1k table inherits t21's cross-engine gate on its
     *     prefix;
     *   - counts_nonincreasing: winning counts never rise (the BPE
@@ -1748,14 +1730,14 @@ object Text {
     *   - compression: corpus token totals strictly improve from 12 to
     *     1000 merges and never beat the byte floor.
     *
-    * The train is exact (minFreq 1); a dictionary over the driver
-    * budget goes to the executor-side trainer, not to pruning. The
+    * The train is exact (every dictionary word); a dictionary over the
+    * driver budget goes to the executor-side trainer, not to pruning. The
     * memoized result is shared by t25's bands and t27/t29's encodes:
     * one train per (session, corpus).
     */
   private[graft] def bpeLargeTrain(
       spark: SparkSession, dir: String): BpeDriverTrain =
-    bpeTrainAt(spark, dir, bpeLargeVocabTarget - 256, bpeRounds, 1L)
+    bpeTrainAt(spark, dir, bpeLargeVocabTarget - 256, bpeRounds)
 
   /** Driver dictionary budget (rows) for [[bpeTrainAt]]. The default
     * keeps the largest MEASURED-viable vocabulary-stress point
@@ -1771,33 +1753,34 @@ object Text {
   val bpeMaxDriverDictRows: Long = 16000000L
 
   /** THE BPE trainer: every merge table in the engine (t21's 12, t25's
-    * 1k, t30's 32k) comes from here. It collects the minFreq-pruned
-    * [[bpeVocab]] dictionary and runs [[bpeTrainDriver]], or — when
-    * the dictionary is over `budget` rows — [[BpeDist.train]], which
-    * is bit-identical (TextBpeSpec and t33 pin it; a budget of 0
-    * forces delegation). Memoized per (corpus, minFreq, rounds,
-    * checkpoint); determinism does NOT depend on collect order (the
-    * pair queue aggregates counts and tie-breaks on the pair string),
-    * which is what makes the prefix bands exact: training to N merges
-    * and training to M > N merges agree on the first N rules.
+    * 1k, t30's 32k) comes from here, and its memo is the only copy of
+    * each table — a session memo, never a published artifact. It
+    * collects the [[bpeVocab]] dictionary and runs [[bpeTrainDriver]],
+    * or — when the dictionary is over `budget` rows — [[BpeDist.train]],
+    * which is bit-identical (TextBpeSpec and t33 pin it; a budget of 0
+    * forces delegation). Memoized per (session, corpus fingerprint,
+    * rounds, checkpoint): the fingerprint is what re-trains a table
+    * after the corpus is rewritten in place. Determinism does NOT
+    * depend on collect order (the pair queue aggregates counts and
+    * tie-breaks on the pair string), which is what makes the prefix
+    * bands exact: training to N merges and training to M > N merges
+    * agree on the first N rules.
     */
   private[graft] def bpeTrainAt(
       spark: SparkSession, dir: String, rounds: Int, checkpointRound: Int,
-      minFreq: Long, budget: Long = bpeMaxDriverDictRows): BpeDriverTrain =
+      budget: Long = bpeMaxDriverDictRows): BpeDriverTrain =
     PlanMemo.cachedValue(spark,
-      s"text.bpeLarge:$dir:${PlanMemo.corpusFingerprint(dir)}:$minFreq" +
+      s"text.bpeTrain:$dir:${PlanMemo.corpusFingerprint(dir)}" +
         s":$rounds:$checkpointRound") {
-      val pruned = bpeVocab(spark, dir)
-        .filter(col("freq") >= minFreq)
-        .select("freq", "sym")
+      val dict = bpeVocab(spark, dir).select("freq", "sym")
       // one cheap count decides the path; the memoized result is
       // bit-identical either way, so the memo key omits the budget
-      if (pruned.count() <= budget) {
-        val dict = pruned.collect()
-          .map(r => (r.getLong(0), r.getString(1))).toSeq
-        bpeTrainDriver(dict, rounds, checkpointRound = checkpointRound)
+      if (dict.count() <= budget) {
+        bpeTrainDriver(
+          dict.collect().map(r => (r.getLong(0), r.getString(1))).toSeq,
+          rounds, checkpointRound = checkpointRound)
       } else {
-        BpeDist.train(spark, pruned, rounds,
+        BpeDist.train(spark, dict, rounds,
           checkpointRound = checkpointRound)
       }
     }
@@ -1809,7 +1792,7 @@ object Text {
     * symbol from the distinct-word dictionary, so
     * rounds ≤ Σ_vocab (word_bytes − 1). A corpus whose vocabulary is
     * smaller than the target trains to EXHAUSTION (every word fully
-    * fused to one token) and the artifact carries the corpus's full
+    * fused to one token) and the table carries the corpus's full
     * merge capacity — t30's band_vocab_reached accepts either
     * outcome, TextBpeSpec pins which one each fixture hits, and
     * SCALE.md banks the measured capacity per corpus class.
@@ -1819,105 +1802,12 @@ object Text {
   /** The production-vocabulary (32k-merge-target) training result —
     * t30's bands and t31/t32's encodes all consume it; the compression
     * checkpoint sits at the 1k boundary so the band set compares the
-    * production artifact against [[bpeLargeTrain]]'s. PUBLISHED
-    * (round-17: the 32k train is minutes at vocabulary stress — a real
-    * pipeline trains once and SHIPS the table) as `bpe_merges_prod`,
-    * trained exact (minFreq 1); the decoder refuses a table trained
-    * under any other regime.
+    * production table against [[bpeLargeTrain]]'s. Trained exact, once
+    * per (session, corpus) — [[bpeTrainAt]]'s memo is the only copy.
     */
   private[graft] def bpeProdTrain(
       spark: SparkSession, dir: String): BpeDriverTrain =
-    bpePublishedTrain(spark, dir, "bpe_merges_prod", bpeProdVocabTarget)(
-      bpeTrainAt(spark, dir, bpeProdVocabTarget - 256,
-        bpeLargeVocabTarget - 256, 1L))
-
-  /** The ONE published merge-table format (`bpe_merges` and
-    * `bpe_merges_prod`): the merge rows (round, lhs, rhs, cnt),
-    * the tokenizer configuration beside every row (format version,
-    * word pattern, vocab target, alphabet, training min_freq) and the
-    * train's accounting (exhausted, token totals).
-    */
-  private val bpeArtifactSchema: Map[String, DataType] = Map(
-    "round" -> IntegerType, "lhs" -> StringType, "rhs" -> StringType,
-    "cnt" -> LongType, "fmt_version" -> IntegerType,
-    "word_pattern" -> StringType, "vocab_target" -> IntegerType,
-    "alphabet" -> StringType, "min_freq" -> LongType,
-    "exhausted" -> BooleanType, "tokens_initial" -> LongType,
-    "tokens_checkpoint" -> LongType, "tokens_final" -> LongType)
-
-  private[graft] def bpeArtifactPayload(spark: SparkSession,
-      res: BpeDriverTrain, vocabTarget: Int, minFreq: Long): DataFrame = {
-    import spark.implicits._
-    res.merges.toDF("round", "lhs", "rhs", "cnt")
-      .withColumn("fmt_version", lit(bpeFormatVersion))
-      .withColumn("word_pattern", lit(bpeWordPattern))
-      .withColumn("vocab_target", lit(vocabTarget))
-      .withColumn("alphabet", lit(bpeAlphabet))
-      .withColumn("min_freq", lit(minFreq))
-      .withColumn("exhausted", lit(res.exhausted))
-      .withColumn("tokens_initial", lit(res.tokensInitial))
-      .withColumn("tokens_checkpoint", lit(res.tokensAtCheckpoint))
-      .withColumn("tokens_final", lit(res.tokensFinal))
-  }
-
-  /** Decode + VALIDATE a published merge table. `None` when a column
-    * is missing or has drifted type (a hand-staged table rewritten
-    * through a sloppy engine must refuse, not throw
-    * ClassCastException out of the typed getters) or when any row's
-    * configuration differs from this build's and the requested
-    * (vocab target, min_freq) — the caller must then RE-TRAIN rather
-    * than encode under a drifted tokenizer.
-    */
-  private[graft] def bpeArtifactDecode(df: DataFrame, vocabTarget: Int,
-      minFreq: Long): Option[BpeDriverTrain] = {
-    val have = df.schema.fields.map(f => f.name -> f.dataType).toMap
-    if (!bpeArtifactSchema.forall { case (n, t) => have.get(n).contains(t) })
-      return None
-    val rows = df.orderBy("round").collect()
-    val configOk = rows.nonEmpty && rows.forall { r =>
-      r.getAs[Int]("fmt_version") == bpeFormatVersion &&
-        r.getAs[String]("word_pattern") == bpeWordPattern &&
-        r.getAs[Int]("vocab_target") == vocabTarget &&
-        r.getAs[String]("alphabet") == bpeAlphabet &&
-        r.getAs[Long]("min_freq") == minFreq
-    }
-    if (!configOk) None
-    else {
-      val h = rows.head
-      Some(BpeDriverTrain(
-        rows.map(r => (r.getAs[Int]("round"), r.getAs[String]("lhs"),
-          r.getAs[String]("rhs"), r.getAs[Long]("cnt"))).toList,
-        h.getAs[Boolean]("exhausted"),
-        h.getAs[Long]("tokens_initial"),
-        h.getAs[Long]("tokens_checkpoint"),
-        h.getAs[Long]("tokens_final")))
-    }
-  }
-
-  /** Train-once-and-ship for a merge table: publish `train`'s result
-    * as artifact `name` ([[PlanMemo.publishedParquet]] — content-
-    * fingerprint keyed, so a mutated corpus re-trains) and serve the
-    * decoded table, memoized per session. A stale or config-mismatched
-    * table (a pre-upgrade artifact, another pruning regime) is refused:
-    * train fresh and REPAIR the published table so later sessions don't
-    * silently re-pay the train behind what looks like a shipped
-    * artifact. Every engine train is exact, so the table's regime is
-    * minFreq 1.
-    */
-  private def bpePublishedTrain(spark: SparkSession, dir: String,
-      name: String, vocabTarget: Int)
-      (train: => BpeDriverTrain): BpeDriverTrain =
-    PlanMemo.cachedValue(spark,
-      s"text.bpeArtifact:$name:$dir:${PlanMemo.corpusFingerprint(dir)}") {
-      val df = PlanMemo.publishedParquet(spark, dir, name)(
-        bpeArtifactPayload(spark, train, vocabTarget, 1L))
-      bpeArtifactDecode(df, vocabTarget, 1L).getOrElse {
-        val res = train
-        PlanMemo.republishParquet(spark, dir, name)(
-          bpeArtifactPayload(spark, res, vocabTarget, 1L))
-        res
-      }
-    }
+    bpeTrainAt(spark, dir, bpeProdVocabTarget - 256, bpeLargeVocabTarget - 256)
 
   def bpeTrainLarge(spark: SparkSession, dir: String): DataFrame = {
     val rounds = bpeLargeVocabTarget - 256
@@ -2464,7 +2354,7 @@ object Text {
        |)""".stripMargin
 
   /** t22 — BPE ENCODE / token accounting: apply the FROZEN trained
-    * tokenizer ([[bpeMerges]] — the published artifact) to the corpus
+    * tokenizer ([[bpeMerges]] — the session's memoized table) to the corpus
     * and report each document's word and token counts — the
     * token-budget accounting pass every training pipeline runs before
     * mixing data. The encode itself touches the corpus exactly once,
@@ -2696,7 +2586,7 @@ object Text {
     * lang-keyed aggregate of pure integer sums; the two ratios are
     * round4 doubles over those integers (aggregation-order
     * independent). The dictionary is [[bpeEncodeDictUnder]] over the
-    * published artifact — the same frozen-tokenizer encode t22
+    * frozen t21 table — the same frozen-tokenizer encode t22
     * (batch) and w15 (stream, via [[bpeNtokUdf]], spec-pinned equal)
     * consume.
     */

@@ -279,82 +279,6 @@ class TextBpeSpec extends AnyFunSuite {
     }
   }
 
-  test("a config-mismatched artifact is refused (decode None → retrain)") {
-    val s = spark
-    import s.implicits._
-    def decode12(df: org.apache.spark.sql.DataFrame) =
-      Text.bpeArtifactDecode(df, Text.bpeVocabTarget, minFreq = 1L)
-    // the published artifact itself decodes (ensure it exists first)
-    val published = Text.bpeMerges(spark, sfDir)
-    assert(published.nonEmpty)
-    val good = PlanMemo.publishedParquet(spark, sfDir, "bpe_merges")(
-      sys.error("artifact must already be published"))
-    val res = decode12(good)
-    assert(res.map(_.merges) === Some(published))
-    // full-format table but trained to a DIFFERENT vocab target or
-    // pruning regime: a consumer must refuse it — encoding under it
-    // would silently apply the wrong tokenizer
-    assert(decode12(Text.bpeArtifactPayload(spark, res.get, 9999, 1L)).isEmpty)
-    assert(decode12(Text.bpeArtifactPayload(spark, res.get,
-      Text.bpeVocabTarget, 2L)).isEmpty)
-    // the earlier 12-merge format (config payload, no min_freq or
-    // accounting columns) and a pre-v2 table: refused on schema
-    val v2 = Seq((1, "61", "62", 5L, Text.bpeFormatVersion,
-      Text.bpeWordPattern, Text.bpeVocabTarget, Text.bpeAlphabet))
-      .toDF("round", "lhs", "rhs", "cnt", "fmt_version", "word_pattern",
-        "vocab_target", "alphabet")
-    assert(decode12(v2).isEmpty)
-    val prev2 = Seq((1, "61", "62", 5L)).toDF("round", "lhs", "rhs", "cnt")
-    assert(decode12(prev2).isEmpty)
-  }
-
-  test("a type-drifted artifact is refused (None), not a ClassCastException") {
-    val s = spark
-    import s.implicits._
-    // all the right column NAMES, wrong TYPES (fmt_version/
-    // vocab_target as BIGINT, cnt as INT — the shape a hand-staged
-    // table rewritten through a sloppy engine ends up with): the
-    // decoder must refuse like any other drift rather than throw out
-    // of its typed getters — schema drift IS the stale-artifact case
-    // it exists to handle
-    val drifted = Seq((1, "61", "62", 5, Text.bpeFormatVersion.toLong,
-      Text.bpeWordPattern, Text.bpeProdVocabTarget.toLong,
-      Text.bpeAlphabet, 1L, false, 10L, 8L, 6L))
-      .toDF("round", "lhs", "rhs", "cnt", "fmt_version", "word_pattern",
-        "vocab_target", "alphabet", "min_freq", "exhausted",
-        "tokens_initial", "tokens_checkpoint", "tokens_final")
-    assert(Text.bpeArtifactDecode(drifted, Text.bpeProdVocabTarget,
-      minFreq = 1L).isEmpty)
-    // one decoder serves both artifacts: the 12-merge table refuses
-    // type drift the same way
-    val drifted12 = drifted.withColumn("vocab_target",
-      org.apache.spark.sql.functions.lit(Text.bpeVocabTarget.toLong))
-    assert(Text.bpeArtifactDecode(drifted12, Text.bpeVocabTarget,
-      minFreq = 1L).isEmpty)
-  }
-
-  test("republishParquet repairs a refused temp-path artifact in place") {
-    val s = spark
-    import s.implicits._
-    // the refusal path's repair contract: without the overwrite, an
-    // invalid published table persists and every later session
-    // re-pays the full train behind what looks like a shipped artifact
-    val name = "spec_republish_probe"
-    val v1 = Seq((1, "stale")).toDF("k", "v")
-    assert(PlanMemo.publishedParquet(spark, sfDir, name)(v1)
-      .select("v").head().getString(0) === "stale")
-    // exists-skip: a second publish does NOT rewrite
-    assert(PlanMemo.publishedParquet(spark, sfDir, name)(
-      Seq((1, "ignored")).toDF("k", "v"))
-      .select("v").head().getString(0) === "stale")
-    // the repair path DOES
-    PlanMemo.republishParquet(spark, sfDir, name)(
-      Seq((1, "repaired")).toDF("k", "v"))
-    assert(PlanMemo.publishedParquet(spark, sfDir, name)(
-      fail("must read the republished artifact"))
-      .select("v").head().getString(0) === "repaired")
-  }
-
   test("map-side ntok expression equals the dictionary over the full vocabulary") {
     // w15 applies the frozen tokenizer per occurrence (bpeNtokUdf over
     // the word's byte split); t22 joins the per-distinct-word
@@ -370,13 +294,35 @@ class TextBpeSpec extends AnyFunSuite {
     assert(diff === 0L)
   }
 
-  test("the published merge artifact equals a direct training run") {
-    // bpeMerges persists the trained tokenizer via publishedParquet
-    // and re-reads it; the frozen artifact must be byte-identical to
-    // what bpeTrainAt derives directly on the same corpus
+  test("bpeMerges equals a direct bpeTrainAt run") {
+    // t21's frozen table is the trainer's own result on the same
+    // corpus: no wrapper may alter a merge row
     val direct = Text.bpeTrainAt(spark, sfDir, Text.bpeRounds,
-      checkpointRound = 0, minFreq = 1L)
+      checkpointRound = 0)
     assert(Text.bpeMerges(spark, sfDir) === direct.merges)
+  }
+
+  test("merge tables train once per corpus and again after a rewrite") {
+    // the corpus fingerprint in bpeTrainAt's memo key is the only thing
+    // that invalidates a merge table: an unchanged corpus reuses the
+    // trained table, a corpus rewritten in place trains a new one
+    import org.apache.spark.sql.functions.col
+    val corpus = java.nio.file.Files.createTempDirectory("bpespec_once")
+    TempArtifacts.register(corpus)
+    val docs = corpus.resolve("documents.parquet")
+    java.nio.file.Files.copy(
+      java.nio.file.Paths.get(s"$sfDir/documents.parquet"), docs)
+    val dir = corpus.toString
+    val first = Text.bpeMerges(spark, dir)
+    val b0 = PlanMemo.builds
+    assert(Text.bpeMerges(spark, dir) === first)
+    assert(PlanMemo.builds === b0, "an unchanged corpus must not re-train")
+    spark.read.parquet(s"$sfDir/documents.parquet")
+      .filter(col("doc_id") % 2 === 0)
+      .write.mode("overwrite").parquet(docs.toString)
+    val second = Text.bpeMerges(spark, dir)
+    assert(PlanMemo.builds > b0, "a rewritten corpus must re-train")
+    assert(second !== first, "the re-trained table must count the new corpus")
   }
 
   test("vocabulary pass aggregates distinct words as hex byte symbols") {
@@ -614,29 +560,6 @@ class TextBpeSpec extends AnyFunSuite {
       s"band ${cols(i)} is false"))
   }
 
-  test("bpeMinFreq=2 artifact decodes under 2, refused under 1") {
-    // a table trained under df-pruning carries its regime in
-    // min_freq: read back from parquet it decodes under THAT regime
-    // and is REFUSED under any other (a consumer expecting the exact
-    // train must not silently encode under a pruned one)
-    val vocabTarget = Text.bpeLargeVocabTarget
-    val pruned = Text.bpeTrainAt(spark, sfDir, vocabTarget - 256,
-      Text.bpeRounds, minFreq = 2L)
-    val base = java.nio.file.Files.createTempDirectory("graft_bpe_mf2")
-    try {
-      val path = base.resolve("bpe_merges").toString
-      Text.bpeArtifactPayload(spark, pruned, vocabTarget, 2L)
-        .write.parquet(path)
-      val published = spark.read.parquet(path)
-      assert(Text.bpeArtifactDecode(published, vocabTarget,
-        minFreq = 2L) === Some(pruned),
-        "pruned artifact failed config validation")
-      assert(Text.bpeArtifactDecode(published, vocabTarget,
-        minFreq = 1L).isEmpty,
-        "a pruning-regime drift must be refused, not decoded")
-    } finally TempArtifacts.deleteNow(base)
-  }
-
   test("t31 strictness is real when the production table extends the 1k table") {
     // drive the EXTENDED regime on a synthetic dictionary rich enough
     // to out-train a small "1k-stand-in" prefix: totals must strictly
@@ -731,9 +654,9 @@ class TextBpeSpec extends AnyFunSuite {
     // force the gate (budget 0) on the real sf0.001 corpus with a
     // (rounds, checkpoint) pair no other path memoizes, and pin the
     // delegated result equal to the in-memory trainer on the same
-    // pruned dictionary
+    // dictionary
     val got = Text.bpeTrainAt(spark, sfDir, rounds = 13,
-      checkpointRound = 5, minFreq = 1L, budget = 0L)
+      checkpointRound = 5, budget = 0L)
     val dict = Text.bpeVocab(spark, sfDir)
       .select("freq", "sym").collect()
       .map(r => (r.getLong(0), r.getString(1))).toSeq
@@ -743,8 +666,8 @@ class TextBpeSpec extends AnyFunSuite {
 
   test("a corpus with fewer mergeable pairs than t21's rounds fails loudly") {
     // two distinct byte pairs in the whole corpus: training exhausts at
-    // round 3, and bpeMerges must raise BEFORE publishing — a short
-    // table must never reach the oracle-gated t21
+    // round 3, and bpeMerges must raise on EVERY call — a short table
+    // must never reach the oracle-gated t21
     val s = spark
     import s.implicits._
     val corpus = java.nio.file.Files.createTempDirectory("bpespec_short")
@@ -752,13 +675,9 @@ class TextBpeSpec extends AnyFunSuite {
     val dir = corpus.toString
     Seq((1L, "ab cd a"), (2L, "cd b ab")).toDF("doc_id", "text")
       .write.parquet(s"$dir/documents.parquet")
-    val e = intercept[IllegalArgumentException](Text.bpeMerges(spark, dir))
-    assert(e.getMessage.contains("ran out of mergeable pairs at round 3"))
-    var built = false
-    intercept[RuntimeException](
-      PlanMemo.publishedParquet(spark, dir, "bpe_merges") {
-        built = true; sys.error("probe only")
-      })
-    assert(built, "the short merge table must not have been published")
+    for (_ <- 1 to 2) {
+      val e = intercept[IllegalArgumentException](Text.bpeMerges(spark, dir))
+      assert(e.getMessage.contains("ran out of mergeable pairs at round 3"))
+    }
   }
 }

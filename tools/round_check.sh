@@ -3,8 +3,10 @@
 # locally in one shot. Usage: tools/round_check.sh [sf_bench_dir]
 #
 #   1. no engine toggles: src/main names no `spark.graft.*` conf key
-#      and no SPARK_GRAFT_ARTIFACTS mount, so an answer depends only
-#      on (query, corpus) and no memo key has a conf to carry
+#      and no SPARK_GRAFT_ARTIFACTS mount, and no src/main file outside
+#      the six dev mains (Bench, Verify, Probe, GenData, KernelBench,
+#      Explain) reads the environment, so an answer depends only on
+#      (query, corpus) and no memo key has a conf to carry
 #   2. full scalatest suite
 #   3. Verify + DuckDB oracle compare at sf0.01 (the correctness gate)
 #   4. Bench at sf0.1 (min-of-3) -> bench_local.json
@@ -19,6 +21,11 @@ SF_BENCH_DIR="${1:-/root/testdata/sf0.1}"
 echo "== 1/5 no engine toggles =="
 if grep -rnE 'spark\.graft\.|SPARK_GRAFT_ARTIFACTS' src/main; then
   echo "round_check: src/main reads an engine toggle (above)" >&2
+  exit 1
+fi
+dev_mains='/(Bench|Verify|Probe|GenData|KernelBench|Explain)\.scala:'
+if grep -rnE 'sys\.env|System\.getenv' src/main | grep -vE "$dev_mains"; then
+  echo "round_check: engine code reads the environment (above)" >&2
   exit 1
 fi
 
