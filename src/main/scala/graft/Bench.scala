@@ -28,10 +28,13 @@ import java.nio.file.{Files, Paths}
   *     bracketing the run; numbers recorded under load far above the
   *     core count are co-tenant noise, not regressions (round 7's
   *     d04/d05/s04–s06 ghosts).
-  *   - `"memo_cold": [names...]` — queries whose first rep executed a
-  *     PlanMemo builder (a shared memoized index later queries reuse);
-  *     their standalone SPARK_GRAFT_ONLY times include that build and
-  *     read slower than their slot in a full alphabetical run.
+  *   - `"memo_cold": [names...]` — queries one of whose reps executed
+  *     a PlanMemo builder (a shared memoized index later queries
+  *     reuse); their standalone SPARK_GRAFT_ONLY times include that
+  *     build and read slower than their slot in a full alphabetical
+  *     run. `"cold_sec"` holds the seconds of the building rep and
+  *     `"memo_cold_count"` the number of such queries; the printed
+  *     line names only the queries of its (truncated) `cold_sec`.
   */
 object Bench {
 
@@ -93,8 +96,7 @@ object Bench {
     // hide — are recorded as "cold_sec" so artifact-driven warm-read
     // wins are never invisible precomputation. Additive field: the
     // driver's total/queries contract is untouched.
-    var memoCold = List.empty[String]
-    var coldSec = Map.empty[String, Double]
+    var coldSec = Vector.empty[(String, Double)]
     val results = headline.map { case (name, fn) =>
       // (seconds, whether this rep ran a PlanMemo builder) per rep
       val runs = (1 to reps).map { _ =>
@@ -115,10 +117,7 @@ object Bench {
       }
       val times = runs.map(_._1)
       val building = runs.collect { case (t, true) => t }
-      if (building.nonEmpty) {
-        memoCold ::= name
-        coldSec += name -> building.max
-      }
+      if (building.nonEmpty) coldSec :+= name -> building.max
       val sec = times.min
       System.err.println(
         f"[bench] $name%-28s $sec%8.2f s" +
@@ -138,16 +137,20 @@ object Bench {
       // budget exists for; the count always survives
       val fs = failed.reverse
       val fails = fs.take(maxFails).map("\"" + _ + "\"").mkString("[", ",", "]")
-      val cold = memoCold.reverse.map("\"" + _ + "\"").mkString("[", ",", "]")
-      // rep-1 seconds for queries that paid a memo/artifact build.
-      // The PRINTED line carries only the `maxCold` largest (the heavy
-      // artifact builders a grader acts on) so the slowest-queries
-      // window stays wide; bench_local.json carries the full map.
-      val cs = coldSec.toSeq.sortBy(-_._2).take(maxCold)
+      // seconds of the building rep for queries that paid a
+      // memo/artifact build. The PRINTED line carries only the
+      // `maxCold` largest (the heavy artifact builders a grader acts
+      // on) and names only those in `memo_cold`, so the slowest-queries
+      // window stays wide; bench_local.json carries the full map/list.
+      val csShown = coldSec.sortBy(-_._2).take(maxCold)
+      val cs = csShown
         .map { case (k, v) => "\"" + k + "\":" + f"$v%.3f" }
         .mkString("{", ",", "}")
+      val coldShown = csShown.map(_._1).toSet
+      val cold = coldSec.map(_._1).filter(coldShown)
+        .map("\"" + _ + "\"").mkString("[", ",", "]")
       val total = results.map(_._2).sum
-      f"""{"metric":"total","value":$total%.3f,"unit":"sec","reps":$reps,"load_avg":[$loadStart%.2f,$loadEnd%.2f],"memo_cold":$cold,"cold_sec":$cs,"queries":$qs,$extra"failed":$fails,"failed_count":${fs.length},"sf":"$sfDir"}"""
+      f"""{"metric":"total","value":$total%.3f,"unit":"sec","reps":$reps,"load_avg":[$loadStart%.2f,$loadEnd%.2f],"memo_cold":$cold,"memo_cold_count":${coldSec.length},"cold_sec":$cs,"queries":$qs,$extra"failed":$fails,"failed_count":${fs.length},"sf":"$sfDir"}"""
     }
     // Full per-query map → bench_local.json (committed; the per-round
     // audit trail). The PRINTED line must stay short: the driver

@@ -6,7 +6,8 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerApplicationEnd}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.storage.StorageLevel
 
-/** Shared per-(session, key) memo for persisted intermediate frames.
+/** Shared per-(session, corpus version, name) memo for persisted
+  * intermediate frames and driver-side values.
   *
   * Several query families iterate over one expensive intermediate (the
   * quantized embedding lattice, the LSH band table, the quantile
@@ -15,6 +16,14 @@ import org.apache.spark.storage.StorageLevel
   * queries (the test suite), so those sites memoize the *plan* and
   * re-issue a no-op `persist` on every retrieval — re-registering the
   * cache after a Bench/Verify `clearCache` without ever duplicating it.
+  *
+  * Callers name a memo by (dir, name) and never spell a key: the corpus
+  * version is [[corpusKey]], the same function that places published
+  * artifacts, so a corpus rewritten in place misses every memo built
+  * from its old content. The miss also forgets those old entries, in
+  * every session: a still-registered cached plan over the same paths
+  * would otherwise be substituted by Spark's CacheManager into the
+  * rebuild and serve the old rows anyway.
   *
   * Boundedness (round-7 advice): entries pin SparkSession and
   * cached-plan references, so the memo must not grow without limit —
@@ -27,19 +36,21 @@ import org.apache.spark.storage.StorageLevel
   *   - an access-ordered LRU cap per map — retrieval refreshes
   *     recency, and an evicted frame is unpersisted so its executor
   *     memory is reclaimed, not just the driver-side plan reference.
-  * The caps are sized well above any single dir's working set
-  * (~20 keys), so Bench/Verify/test runs never evict mid-pipeline;
-  * only multi-dir churn does.
+  * One corpus's working set is about 40 frame names and 23 value names
+  * against caps of 64 and 128, so Bench/Verify/test runs never evict
+  * mid-pipeline; only multi-dir churn does.
   */
 object PlanMemo {
 
   private val memoCap = 64
   private val valueCap = 128
 
+  private final case class Key(
+      spark: SparkSession, dir: String, version: String, name: String)
+
   private def lru[V](cap: Int, onEvict: V => Unit) =
-    new java.util.LinkedHashMap[(SparkSession, String), V](16, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[(SparkSession, String), V]): Boolean = {
+    new java.util.LinkedHashMap[Key, V](16, 0.75f, true) {
+      override def removeEldestEntry(e: java.util.Map.Entry[Key, V]): Boolean = {
         val evict = size() > cap
         if (evict) onEvict(e.getValue)
         evict
@@ -58,14 +69,15 @@ object PlanMemo {
   private val buildTally = new java.util.concurrent.atomic.AtomicLong
   private[graft] def builds: Long = buildTally.get()
 
-  private def getOrBuild[V](map: java.util.LinkedHashMap[(SparkSession, String), V],
-      spark: SparkSession, key: String)(build: => V): V = {
+  private def getOrBuild[V](map: java.util.LinkedHashMap[Key, V],
+      spark: SparkSession, dir: String, name: String)(build: => V): V = {
     hookEviction(spark)
-    val k = (spark, key)
+    val k = Key(spark, dir, corpusKey(dir), name)
     map.synchronized {
       val hit = map.get(k)
       if (hit != null) return hit
     }
+    forgetOtherVersions(dir, k.version)
     // build OUTSIDE the lock: builders run eager Spark jobs, and a
     // concurrent retrieval of a different key must not wait on them
     buildTally.incrementAndGet()
@@ -77,13 +89,26 @@ object PlanMemo {
     }
   }
 
-  /** Memoized, persisted build of `key` for this session. The builder
-    * runs at most once per (session, key) absent LRU churn; every call
-    * re-persists (no-op while cached) so iterative consumers survive a
-    * global `clearCache` issued between queries.
+  /** Forget (and unpersist) every entry built from another version of
+    * `dir`, in any session — see the object scaladoc for why a stale
+    * cached plan must not outlive the rewrite.
     */
-  def cached(spark: SparkSession, key: String)(build: => DataFrame): DataFrame = {
-    val df = getOrBuild(memos, spark, key)(build)
+  private def forgetOtherVersions(dir: String, version: String): Unit = {
+    def stale(k: Key) = k.dir == dir && k.version != version
+    memos.synchronized(memos.entrySet.removeIf { e =>
+      stale(e.getKey) && { e.getValue.unpersist(blocking = false); true } })
+    values.synchronized(values.keySet.removeIf(stale(_)))
+  }
+
+  /** Memoized, persisted build of `name` over corpus `dir` for this
+    * session. The builder runs at most once per (session, corpus
+    * version, name) absent LRU churn; every call re-persists (no-op
+    * while cached) so iterative consumers survive a global
+    * `clearCache` issued between queries.
+    */
+  def cached(spark: SparkSession, dir: String, name: String)
+      (build: => DataFrame): DataFrame = {
+    val df = getOrBuild(memos, spark, dir, name)(build)
     df.persist(StorageLevel.MEMORY_AND_DISK)
     df
   }
@@ -99,8 +124,9 @@ object PlanMemo {
     * while blocks are live, and it re-materializes the frame after a
     * Bench/Verify `clearCache`.
     */
-  def cachedEager(spark: SparkSession, key: String)(build: => DataFrame): DataFrame = {
-    val df = cached(spark, key)(build)
+  def cachedEager(spark: SparkSession, dir: String, name: String)
+      (build: => DataFrame): DataFrame = {
+    val df = cached(spark, dir, name)(build)
     df.count()
     df
   }
@@ -108,10 +134,13 @@ object PlanMemo {
   /** Memoized DRIVER-SIDE value (e.g. trained Lloyd centroids —
     * deterministic O(k·d) metadata, the same thing a broadcast
     * literal carries). The builder may run eager Spark jobs; it runs
-    * at most once per (session, key) absent LRU churn.
+    * at most once per (session, corpus version, name) absent LRU
+    * churn.
     */
-  def cachedValue[T](spark: SparkSession, key: String)(build: => T): T =
-    getOrBuild(values, spark, key)(build.asInstanceOf[Any]).asInstanceOf[T]
+  def cachedValue[T](spark: SparkSession, dir: String, name: String)
+      (build: => T): T =
+    getOrBuild(values, spark, dir, name)(build.asInstanceOf[Any])
+      .asInstanceOf[T]
 
   /** Number of live entries (visible for tests). */
   private[graft] def size: Int =
@@ -125,9 +154,9 @@ object PlanMemo {
     * silently rewrites other tests' physical plans (found as a
     * suite-order-dependent d19 exchange-pin flip).
     */
-  private[graft] def drop(spark: SparkSession, key: String): Unit =
+  private[graft] def drop(spark: SparkSession, dir: String, name: String): Unit =
     memos.synchronized {
-      val df = memos.remove((spark, key))
+      val df = memos.remove(Key(spark, dir, corpusKey(dir), name))
       if (df != null) df.unpersist(blocking = true)
     }
 
@@ -166,22 +195,33 @@ object PlanMemo {
           .sorted().toArray.mkString("\n")
         finally walk.close()
       }
-    java.security.MessageDigest.getInstance("MD5")
-      .digest(sig.getBytes("UTF-8")).map("%02x".format(_)).mkString
+    md5Hex(sig)
   }
+
+  /** The one definition of "this corpus, this version": an md5 of (dir,
+    * [[corpusFingerprint]]). Every memo entry carries it and every
+    * published artifact lives under it, so scale factors never collide
+    * and a corpus mutated in place is never served a stale memo or
+    * artifact.
+    */
+  private def corpusKey(dir: String): String =
+    md5Hex(s"$dir|${corpusFingerprint(dir)}")
+
+  private def md5Hex(s: String): String =
+    java.security.MessageDigest.getInstance("MD5")
+      .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
 
   /** Disk-backed publish-once memo — the release-pipeline pattern where
     * a downstream consumer (the c06 corpus card) reads a family's
     * PUBLISHED parquet artifact instead of re-running its pipeline.
     *
     * The artifact for (dir, name) is a JVM-lifetime temp parquet
-    * written by the first request, keyed by an md5 of (dir,
-    * [[corpusFingerprint]]) — so scale factors never collide AND a
-    * corpus mutated in place is re-published, never served a stale
-    * index. Unlike the in-memory memos this survives `clearCache`,
-    * which is exactly the Bench cold-rep shape a real release
-    * pipeline has: the card reads the shipped artifact, it does not
-    * rebuild the family.
+    * written by the first request under [[corpusKey]] — so scale
+    * factors never collide AND a corpus mutated in place is
+    * re-published, never served a stale index. Unlike the in-memory
+    * memos this survives `clearCache`, which is exactly the Bench
+    * cold-rep shape a real release pipeline has: the card reads the
+    * shipped artifact, it does not rebuild the family.
     *
     * The builder queries are themselves hash-gated, so consuming their
     * written output cannot change any downstream answer.
@@ -198,16 +238,25 @@ object PlanMemo {
     */
   def publishedParquetBy(spark: SparkSession, dir: String, name: String,
       partitionCols: Seq[String])(build: => DataFrame): DataFrame = {
-    val path = tempArtifactPath(dir, name)
-    publishRoot.synchronized {
-      if (!published(path)) writeAtomically(path) { tmp =>
-        val w = build.write
-        (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*)
-         else w).parquet(tmp)
+    val path = publishRoot.resolve(corpusKey(dir)).resolve(name)
+    // one lock per artifact: a published artifact is read without
+    // one, and a builder blocks only other first requests of its own
+    // artifact. Builders that read other artifacts (Pipeline's base
+    // kept/cross-loser chain) nest in an order fixed by the code, so
+    // no lock cycle can form.
+    if (!published(path))
+      publishLocks.computeIfAbsent(path, _ => new Object).synchronized {
+        if (!published(path)) writeAtomically(path) { tmp =>
+          val w = build.write
+          (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*)
+           else w).parquet(tmp)
+        }
       }
-    }
     spark.read.parquet(path.toString)
   }
+
+  private val publishLocks =
+    new java.util.concurrent.ConcurrentHashMap[java.nio.file.Path, AnyRef]
 
   /** A temp-path artifact counts as published only once its writer
     * committed (`_SUCCESS`): a directory a failed builder left behind
@@ -221,7 +270,7 @@ object PlanMemo {
     * `p` once the write committed — readers see the old artifact or
     * the complete new one, never a partial write; a builder that
     * throws leaves `p` untouched and its temp directory removed.
-    * Callers hold the `publishRoot` lock.
+    * Callers hold `p`'s publish lock.
     */
   private def writeAtomically(p: java.nio.file.Path)(write: String => Unit)
       : Unit = {
@@ -243,23 +292,15 @@ object PlanMemo {
       finally walk.close()
     }
 
-  private def tempArtifactPath(
-      dir: String, name: String): java.nio.file.Path = {
-    val key = java.security.MessageDigest.getInstance("MD5")
-      .digest(s"$dir|${corpusFingerprint(dir)}".getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString
-    publishRoot.resolve(key).resolve(name)
-  }
-
   private def hookEviction(spark: SparkSession): Unit =
     hooked.getOrElseUpdate(spark, {
       spark.sparkContext.addSparkListener(new SparkListener {
         override def onApplicationEnd(end: SparkListenerApplicationEnd): Unit = {
           memos.synchronized {
-            memos.keySet.removeIf(_._1 eq spark)
+            memos.keySet.removeIf(_.spark eq spark)
           }
           values.synchronized {
-            values.keySet.removeIf(_._1 eq spark)
+            values.keySet.removeIf(_.spark eq spark)
           }
           hooked.remove(spark)
           ()

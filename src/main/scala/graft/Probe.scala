@@ -154,7 +154,7 @@ object Probe {
         // A/B the pair-emission spelling over the same posting lists:
         // cross-emit df^2 rows + filter (current) vs sorted+slice
         // emitting df(df-1)/2 rows directly.
-        val posting = PlanMemo.cachedEager(spark, s"probe.posting:$dir")(
+        val posting = PlanMemo.cachedEager(spark, dir, "probe.posting")(
           Dedup.shingled(spark, dir)
             .select(col("doc_id"), explode_outer(col("fps")).as("sh"))
             .filter(col("sh").isNotNull)

@@ -59,7 +59,7 @@ object Clustering {
     * their cache mid-query.
     */
   private[graft] def quantizedPersisted(spark: SparkSession, dir: String): DataFrame =
-    PlanMemo.cached(spark, s"clustering.lattice:$dir")(quantized(spark, dir))
+    PlanMemo.cached(spark, dir, "clustering.lattice")(quantized(spark, dir))
 
   /** One assignment pass as columns: (cluster, dist2) against the
     * centroids. Full-vector k-means IS product quantization with one
@@ -84,11 +84,12 @@ object Clustering {
     * against the final centroids lazily for the returned plan.
     */
   private def assigned(spark: SparkSession, dir: String): DataFrame =
-    assignedOn(spark, s"clustering:$dir", quantizedPersisted(spark, dir))
+    assignedOn(spark, dir, "clustering", quantizedPersisted(spark, dir))
 
   /** Train-then-assign over an arbitrary (vec_id, q) lattice frame —
     * shared with [[Dedup.semanticDedup]], which clusters an augmented
-    * corpus. The trained centroids are memoized per (session, key):
+    * corpus. The trained centroids are memoized per (session, corpus,
+    * name, k):
     * the Lloyd loop is EAGER (one collect per round), and km01/02/03
     * each needed the same centroids — without the memo the whole
     * training ran three times per session. The centroids are O(k·d)
@@ -96,9 +97,9 @@ object Clustering {
     * caching the literal codebook they become.
     */
   private[graft] def assignedOn(
-      spark: SparkSession, key: String, qe: DataFrame,
+      spark: SparkSession, dir: String, name: String, qe: DataFrame,
       k: Int = kClusters): DataFrame =
-    withAssignment(qe, centroidsOn(spark, key, qe, k))
+    withAssignment(qe, centroidsOn(spark, dir, name, qe, k))
 
   /** Train (or recall) the memoized centroids WITHOUT assigning —
     * split out of [[assignedOn]] for w14, which freezes a model on the
@@ -106,9 +107,9 @@ object Clustering {
     * incoming stream) via [[assignWith]].
     */
   private[graft] def centroidsOn(
-      spark: SparkSession, key: String, qe: DataFrame,
+      spark: SparkSession, dir: String, name: String, qe: DataFrame,
       k: Int = kClusters): Array[Array[Long]] = {
-    PlanMemo.cachedValue(spark, s"clustering.cents:$key:k$k") {
+    PlanMemo.cachedValue(spark, dir, s"clustering.cents:$name:k$k") {
       var c: Array[Array[Long]] = qe.orderBy("vec_id").limit(k)
         .select("q").collect()
         .map(_.getSeq[Long](0).toArray)
@@ -310,7 +311,7 @@ object Clustering {
   def elbowCurve(spark: SparkSession, dir: String): DataFrame = {
     val qe = quantizedPersisted(spark, dir)
     elbowKs.map { k =>
-      assignedOn(spark, s"clustering:$dir", qe, k)
+      assignedOn(spark, dir, "clustering", qe, k)
         .agg(
           sum("dist2").as("inertia"),
           countDistinct("cluster").as("clusters_used"))

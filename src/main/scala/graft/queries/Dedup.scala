@@ -124,7 +124,7 @@ object Dedup {
     // and without the publish every post-clearCache consumer (d11's
     // bench reps most of all — 2.8 s of its sf0.1 cost was this)
     // re-ran the posting + packed-pair-shuffle stages per rep.
-    PlanMemo.cached(spark, s"dedup.lshCandidates:$dir")(
+    PlanMemo.cached(spark, dir, "dedup.lshCandidates")(
       PlanMemo.publishedParquet(spark, dir, "lsh_cand_pairs")(
         buildLshCandidates(spark, dir)))
 
@@ -218,7 +218,7 @@ object Dedup {
     // back through the full shingle+minhash corpus pass. Builder
     // results are hash-gated; reading the written artifact cannot
     // change any answer.
-    PlanMemo.cached(spark, s"dedup.lshBands:$dir")(
+    PlanMemo.cached(spark, dir, "dedup.lshBands")(
       PlanMemo.publishedParquet(spark, dir, "lsh_bands_index")(
         buildLshBands(spark, dir)))
 
@@ -353,7 +353,7 @@ object Dedup {
     // by shuffle exactly once per side and the hash builds on the
     // pair frame. The cachedValue survives Bench's clearCache, so
     // the decision is paid once per (session, dir).
-    val nCands = PlanMemo.cachedValue(spark, s"dedup.nCands:$dir")(
+    val nCands = PlanMemo.cachedValue(spark, dir, "dedup.nCands")(
       lshCandidates(spark, dir).count())
     neardupVerifiedPlan(spark, dir, cands,
       broadcastCands = nCands <= candBroadcastCap)
@@ -491,7 +491,7 @@ object Dedup {
 
   /** Memoized corpus document count — parquet-metadata cheap. */
   private def corpusDocs(spark: SparkSession, dir: String): Long =
-    PlanMemo.cachedValue(spark, s"dedup.docCount:$dir")(
+    PlanMemo.cachedValue(spark, dir, "dedup.docCount")(
       Tables.documents(spark, dir).count())
 
   /** Sampled posting-emission estimate: Σ df·(df−1)/2 over the
@@ -509,7 +509,7 @@ object Dedup {
     */
   private[graft] def pairEmissionPerDoc(
       spark: SparkSession, dir: String): Double =
-    PlanMemo.cachedValue(spark, s"dedup.emissionProbe:$dir") {
+    PlanMemo.cachedValue(spark, dir, "dedup.emissionProbe") {
       val docs = math.max(corpusDocs(spark, dir).toDouble, 1.0)
       val p = math.min(1.0, jaccardProbeDocs / docs)
       val row = shingled(spark, dir)
@@ -537,7 +537,7 @@ object Dedup {
     // is race-safe because its CC edge checkpoint materializes the
     // frame sequentially at construction, and an eager count() here
     // costs d03 (the single-consumer case) +50% standalone
-    PlanMemo.cached(spark, s"dedup.jaccardPairs:$dir:$kernel")(
+    PlanMemo.cached(spark, dir, "dedup.jaccardPairs:" + kernel)(
       if (kernel == "prefix") buildPrefixPairs(spark, dir)
       else buildJaccardPairs(spark, dir))
   }
@@ -560,7 +560,7 @@ object Dedup {
     // bounded (≤ df-cap ids per list); MEMORY_AND_DISK = spill-safe.
     // cachedEager: sizes and inter are independent AQE leaf stages —
     // lazily persisted they race two builds of the shingle pipeline
-    val posting = PlanMemo.cachedEager(spark, s"dedup.posting:$dir")(
+    val posting = PlanMemo.cachedEager(spark, dir, "dedup.posting")(
       ex.groupBy("sh")
         .agg(collect_list(col("doc_id")).as("docs"))
         .filter(size(col("docs")) <= maxShingleDf))
@@ -656,7 +656,7 @@ object Dedup {
     * [[cappedEnts]] (the cap-filtered space it shares with d03).
     */
   private[graft] def sortedSets(spark: SparkSession, dir: String): DataFrame =
-    PlanMemo.cachedEager(spark, s"dedup.sortedSets:$dir")(
+    PlanMemo.cachedEager(spark, dir, "dedup.sortedSets")(
       shingled(spark, dir)
         .withColumn("fps", array_sort(col("fps")))) // canonical order
 
@@ -674,7 +674,7 @@ object Dedup {
     * filter; it also bounds every downstream posting list for free.
     */
   private[graft] def cappedEnts(spark: SparkSession, dir: String): DataFrame =
-    PlanMemo.cachedEager(spark, s"dedup.cappedEnts:$dir") {
+    PlanMemo.cachedEager(spark, dir, "dedup.cappedEnts") {
       val ex = shingled(spark, dir)
         .select(col("doc_id"), explode_outer(col("fps")).as("sh"))
         .filter(col("sh").isNotNull)
@@ -1015,7 +1015,7 @@ object Dedup {
     */
   private[graft] def spanWins(spark: SparkSession, dir: String): DataFrame = {
     val k = spanTokens
-    PlanMemo.cached(spark, s"dedup.spanWins:$dir")(
+    PlanMemo.cached(spark, dir, "dedup.spanWins")(
       Tables.documents(spark, dir)
         .withColumn("fps", expr(s"optimizer_barrier(span_fps(text, $k))"))
         .select(col("doc_id"),
@@ -1163,7 +1163,7 @@ object Dedup {
       .select(col("doc_id"),
         explode(sequence(col("pos"), col("pos") + lit(k - 1))).as("tp"))
       .distinct()
-    val removed = PlanMemo.cached(spark, s"dedup.spanRemoved:$dir")(
+    val removed = PlanMemo.cached(spark, dir, "dedup.spanRemoved")(
       remp.groupBy("doc_id").agg(count(lit(1)).as("removed_tok")))
     val toks = Tables.documents(spark, dir)
       .select(col("doc_id"),
@@ -1265,13 +1265,10 @@ object Dedup {
     * split (this one and `Pipeline.chainSplitIds`). Driver-value memo
     * (round 19): every incremental query (d13/d17/w10/e03/e06/e08)
     * re-ran this max() scan as its own job per invocation — O(1)
-    * metadata a pipeline derives once per corpus. Keyed by the content
-    * fingerprint so an in-place corpus mutation recomputes, never
-    * serves stale ids.
+    * metadata a pipeline derives once per corpus version.
     */
   private[graft] def maxDocId(spark: SparkSession, dir: String): Long =
-    PlanMemo.cachedValue(spark,
-      s"dedup.maxDocId:$dir:${PlanMemo.corpusFingerprint(dir)}")(
+    PlanMemo.cachedValue(spark, dir, "dedup.maxDocId")(
       Tables.documents(spark, dir).agg(max("doc_id")).head().getLong(0))
 
   /** Published artifact (round-18 optimization): the frozen BASE
@@ -1285,7 +1282,7 @@ object Dedup {
     */
   private[graft] def baseFpSetArtifact(
       spark: SparkSession, dir: String): DataFrame =
-    PlanMemo.cached(spark, s"dedup.baseFpSet:$dir")(
+    PlanMemo.cached(spark, dir, "dedup.baseFpSet")(
       PlanMemo.publishedParquet(spark, dir, "incremental_base_fps") {
         val splitId = incrementalSplitId(spark, dir)
         Tables.documents(spark, dir).filter(col("doc_id") < splitId)
@@ -1300,7 +1297,7 @@ object Dedup {
     */
   private[graft] def baseBandSetArtifact(
       spark: SparkSession, dir: String): DataFrame =
-    PlanMemo.cached(spark, s"dedup.baseBandSet:$dir")(
+    PlanMemo.cached(spark, dir, "dedup.baseBandSet")(
       PlanMemo.publishedParquet(spark, dir, "incremental_base_bands") {
         val splitId = incrementalSplitId(spark, dir)
         lshBands(spark, dir).filter(col("doc_id") < splitId)
@@ -1432,7 +1429,7 @@ object Dedup {
     * quantization, the norm pass, and BOTH pair-join sides read it.
     */
   private def semAug(spark: SparkSession, dir: String): DataFrame =
-    PlanMemo.cached(spark, s"dedup.semAug:$dir") {
+    PlanMemo.cached(spark, dir, "dedup.semAug") {
       val emb = Tables.embeddings(spark, dir)
       val base = emb.select(col("vec_id").as("b_id"),
         col("embedding").as("b_emb"))
@@ -1456,7 +1453,7 @@ object Dedup {
     val nVecs = Similarity.retrNVecs(spark, dir)
     val k = math.max(Clustering.kClusters,
       (nVecs / semCellTarget).toInt)
-    val cells = Clustering.assignedOn(spark, s"semdedup:$dir", qe, k)
+    val cells = Clustering.assignedOn(spark, dir, "semdedup", qe, k)
       .select("vec_id", "cluster")
     val e = aug
       .withColumn("nrm", sqrt(expr("dot_product(emb, emb)")))
@@ -1566,7 +1563,7 @@ object Dedup {
     // balancedStream: the per-record shingle_fps → minhash_sigs kernel
     // below is the CPU-heavy stage — single-row-group staging would
     // run it on one core (see StreamingQueries.balancedStream)
-    val ds = StreamingQueries.drainSession(spark)
+    val ds = StreamingQueries.drainSession(spark, dir)
     val incoming = StreamingQueries.balancedStream(
       ds.readStream.schema(schema).parquet(streamDir.toString)
         .filter(col("doc_id") >= splitId))
@@ -1991,7 +1988,7 @@ object Dedup {
     * memo's re-persist is a cheap extra safety net on top.
     */
   private[graft] def ccLabels(spark: SparkSession, dir: String): DataFrame =
-    PlanMemo.cached(spark, s"dedup.ccLabels:$dir")(
+    PlanMemo.cached(spark, dir, "dedup.ccLabels")(
       connectedComponents(jaccardPairs(spark, dir).select("d1", "d2")))
 
   def neardupClusters(spark: SparkSession, dir: String): DataFrame = {
@@ -2088,7 +2085,7 @@ object Dedup {
     // sketch (doc_ids are dense from 0, so splitId IS the base
     // cardinality)
     val baseHashes = baseFpSetArtifact(spark, dir)
-    val filter = PlanMemo.cachedValue(spark, s"dedup.baseBloom:$dir") {
+    val filter = PlanMemo.cachedValue(spark, dir, "dedup.baseBloom") {
       baseHashes.stat.bloomFilter("fp", math.max(splitId, 1L), bloomFpp)
     }
     val exact = docs.filter(isNew)
@@ -2149,7 +2146,7 @@ object Dedup {
   // and page-cached, while the index read adds I/O without removing
   // any exchange (SCALE.md banks the row).
   private[graft] def paraHashes(spark: SparkSession, dir: String): DataFrame =
-    PlanMemo.cached(spark, s"dedup.paraHashes:$dir")(
+    PlanMemo.cached(spark, dir, "dedup.paraHashes")(
       Tables.documents(spark, dir)
         .withColumn("toks",
           expr("filter(split(text, ' '), t -> t != '')"))
@@ -2241,7 +2238,7 @@ object Dedup {
     * paraHashes shared-artifact discipline, one level up).
     */
   private def overlapPairs(spark: SparkSession, dir: String): DataFrame =
-    PlanMemo.cached(spark, s"dedup.overlapPairs:$dir") {
+    PlanMemo.cached(spark, dir, "dedup.overlapPairs") {
       val posting = paraHashes(spark, dir)
         .groupBy("px")
         .agg(collect_set(col("source")).as("srcs"))

@@ -258,7 +258,7 @@ object Kpis {
     // main pass; a bare per-call persist (never unpersisted, since the
     // returned frame is lazy) accumulated one redundant cached copy
     // per invocation in a JVM that doesn't clearCache between queries
-    val parted = PlanMemo.cached(spark, s"kpis.quantileHist:$dir")(hist
+    val parted = PlanMemo.cached(spark, dir, "kpis.quantileHist")(hist
       .repartitionByRange(spark.sparkContext.defaultParallelism,
         col("ord"), col("v"))
       .withColumn("pid", spark_partition_id()))

@@ -180,13 +180,13 @@ object MlQueries {
   // ---------------------------------------------------------------
   /** Memoized train-and-evaluate (round-10): ml02–ml05 AND the ml08
     * band gate consume the same metrics, so each pipeline trains at
-    * most once per (session, dir) — `PlanMemo.cachedValue` keeps the
+    * most once per (session, corpus) — `PlanMemo.cachedValue` keeps the
     * scalars across Bench/Verify `clearCache` calls.
     */
   private[graft] def regResult(spark: SparkSession, dir: String,
                         name: String, model: => PipelineStage,
                         feats: Seq[String]): (Double, Double, Double, Long) =
-    PlanMemo.cachedValue(spark, s"ml.reg:$name:$dir") {
+    PlanMemo.cachedValue(spark, dir, "ml.reg:" + name) {
       val (tr, te) = split(mlFrame(spark, dir))
       val fitted = new Pipeline()
         .setStages(featureStages(feats) :+ model).fit(tr)
@@ -199,7 +199,7 @@ object MlQueries {
   private[graft] def clsResult(spark: SparkSession, dir: String,
                         name: String, model: => PipelineStage,
                         feats: Seq[String]): (Double, Double, Long) =
-    PlanMemo.cachedValue(spark, s"ml.cls:$name:$dir") {
+    PlanMemo.cachedValue(spark, dir, "ml.cls:" + name) {
       val (tr, te) = split(mlFrame(spark, dir))
       val fitted = new Pipeline()
         .setStages(featureStages(feats) :+ model).fit(tr)
@@ -440,16 +440,14 @@ object MlQueries {
     * metrics evaluate + the ml10 join.
     */
   private[graft] def qcLrPreds(spark: SparkSession, dir: String): DataFrame =
-    PlanMemo.cached(spark, s"ml.qcLrPreds:$dir") {
-      // the SAME memo key t23 uses, so one session computes the
-      // corpus-wide teacher pass once across both entries (and the
-      // persisted frame survives the LR fit/transform/evaluate chain
-      // instead of re-deriving per action)
-      val labels = PlanMemo.cached(spark, s"text.qcLabels:$dir")(
-        Text.qcLabels(spark, dir))
+    PlanMemo.cached(spark, dir, "ml.qcLrPreds") {
       val base = Tables.documents(spark, dir)
         .select(col("doc_id"), Text.tokens(lower(col("text"))).as("words"))
-        .join(labels, "doc_id")
+        // t23's memoized labels: one session computes the corpus-wide
+        // teacher pass once across both entries (and the persisted
+        // frame survives the LR fit/transform/evaluate chain instead
+        // of re-deriving per action)
+        .join(Text.qcLabels(spark, dir), "doc_id")
         .withColumn("label", col("y").cast("double"))
       val tf = new HashingTF()
         .setInputCol("words").setOutputCol("features")
@@ -467,7 +465,7 @@ object MlQueries {
 
   private[graft] def qcLrMetrics(spark: SparkSession, dir: String)
       : (Double, Double, Long) =
-    PlanMemo.cachedValue(spark, s"ml.qcLr:$dir") {
+    PlanMemo.cachedValue(spark, dir, "ml.qcLr") {
       val pred = qcLrPreds(spark, dir)
       val Seq((_, auc), (_, acc)) = clsMetrics(pred)
       (auc, acc, pred.count())
@@ -519,7 +517,7 @@ object MlQueries {
       .select(col("doc_id"), col("score8"), col("pred"))
     // shuffle_hash: both sides are held-out-fifth-sized (corpus-scale);
     // memoized so the rate, cutoff and agreement passes share one join
-    val j = PlanMemo.cached(spark, s"ml.qcAgree:$dir")(
+    val j = PlanMemo.cached(spark, dir, "ml.qcAgree")(
       lr.join(t23.hint("shuffle_hash"), "doc_id"))
     val q = j.agg(avg(col("pred").cast("double"))).head().getDouble(0)
     val frac = math.min(math.max(1.0 - q, 0.0), 1.0)

@@ -365,7 +365,7 @@ object Packing {
     // in this query except the final 1-row leak counts.
     // Memoized: the split map feeds the per-scheme counts AND both
     // leak audits (4 consumers) — one build instead of four.
-    val sp = PlanMemo.cached(spark, s"packing.splitMap:$dir")(
+    val sp = PlanMemo.cached(spark, dir, "packing.splitMap")(
       docs.join(labels.hint("shuffle_hash"), Seq("doc_id"), "left")
         .withColumn("cluster", coalesce(col("lbl"), col("doc_id")))
         .select(col("doc_id"),

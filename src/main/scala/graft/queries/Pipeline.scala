@@ -52,7 +52,7 @@ object Pipeline {
     */
   private def pairsArtifact(
       spark: SparkSession, dir: String): DataFrame =
-    PlanMemo.cached(spark, s"pipeline.pairsArtifact:$dir")(
+    PlanMemo.cached(spark, dir, "pipeline.pairsArtifact")(
       PlanMemo.publishedParquet(spark, dir, "d03_ngram_jaccard")(
         Dedup.ngramJaccard(spark, dir))).select("d1", "d2")
 
@@ -62,7 +62,7 @@ object Pipeline {
     * consume it.
     */
   private[graft] def keptDocs(spark: SparkSession, dir: String): DataFrame =
-    PlanMemo.cached(spark, s"pipeline.keptDocs:$dir") {
+    PlanMemo.cached(spark, dir, "pipeline.keptDocs") {
       val kept0 = PlanMemo.publishedParquet(spark, dir,
           "t23_quality_classifier")(Text.qualityClassifier(spark, dir))
         .filter(col("pred") === 1).select("doc_id")
@@ -81,10 +81,27 @@ object Pipeline {
       kept0.join(losers.hint("shuffle_hash"), Seq("doc_id"), "left_anti")
     }
 
+  /** The full document rows of a kept doc_id set. */
+  private def docRowsOf(
+      spark: SparkSession, dir: String, kept: DataFrame): DataFrame =
+    Tables.documents(spark, dir)
+      .join(kept.hint("shuffle_hash"), Seq("doc_id"), "left_semi")
+
+  /** Token-id sequences (doc_id, ids) of `docs`, the [[keptDocs]] rows
+    * its callers (e02, e04) already hold — reusing their frame spares
+    * the schema-inference job a second documents read costs. Memoized:
+    * each plan reads the sequences twice (counts + ids); without the
+    * persist Catalyst duplicates the whole dictionary-join subtree per
+    * reference — exactly the re-execution class the zipf sweep found
+    * in the DuckDB oracles.
+    */
+  private def keptSeqs(
+      spark: SparkSession, dir: String, docs: DataFrame): DataFrame =
+    PlanMemo.cached(spark, dir, "pipeline.keptSeqs")(
+      Text.bpeTokenIdSeqsOn(spark, dir, docs))
+
   def trainingPipeline(spark: SparkSession, dir: String): DataFrame = {
-    val docs = Tables.documents(spark, dir)
-      .join(keptDocs(spark, dir).hint("shuffle_hash"),
-        Seq("doc_id"), "left_semi")
+    val docs = docRowsOf(spark, dir, keptDocs(spark, dir))
     val seqs = Text.bpeTokenIdSeqsOn(spark, dir, docs)
       .select(col("doc_id"), size(col("ids")).as("nt"))
     Packing.placed(docs.select(col("lang"), col("doc_id"))
@@ -186,9 +203,7 @@ object Pipeline {
     */
   private[graft] def shardContents(spark: SparkSession, dir: String): DataFrame = {
     val ct = Packing.chunkTokens
-    val docs = Tables.documents(spark, dir)
-      .join(keptDocs(spark, dir).hint("shuffle_hash"),
-        Seq("doc_id"), "left_semi")
+    val docs = docRowsOf(spark, dir, keptDocs(spark, dir))
     // ONE id derivation: e02 needs both the counts (for placement)
     // and the ids (for chunk content), so it derives the sequence
     // frame once and re-applies the SHARED placement spelling
@@ -196,12 +211,7 @@ object Pipeline {
     // runs; PipelineSpec's conservation test cross-pins the two
     // paths row-for-row) instead of calling trainingPipeline and
     // paying the t24 dictionary join + per-doc reassembly twice.
-    // memoized: the plan reads seqs twice (counts + ids); without the
-    // persist Catalyst duplicates the whole dictionary-join subtree
-    // per reference — exactly the re-execution class the zipf sweep
-    // found in the DuckDB oracles
-    val seqs = PlanMemo.cached(spark, s"pipeline.keptSeqs:$dir")(
-      Text.bpeTokenIdSeqsOn(spark, dir, docs))
+    val seqs = keptSeqs(spark, dir, docs)
     // sorted = false: the only consumer is the boundary-slice explode
     // + (lang, chunk_id) groupBy below, which collects segments into
     // an array_sort — order-insensitive by construction (guide §2.4)
@@ -604,7 +614,7 @@ object Pipeline {
     */
   def streamIngest(spark: SparkSession, dir: String): DataFrame = {
     val sid = Dedup.incrementalSplitId(spark, dir)
-    val admitted = PlanMemo.cached(spark, s"pipeline.streamAdmitted:$dir")(
+    val admitted = PlanMemo.cached(spark, dir, "pipeline.streamAdmitted")(
       PlanMemo.publishedParquet(spark, dir, "stream_admitted_increment")(
         StreamingQueries.admissionLedger(spark, dir, sid, "e06adm")
           .filter(col("admitted"))
@@ -666,7 +676,7 @@ object Pipeline {
     * increment's own work is ~2 s).
     */
   private[graft] def baseKeptDocs(spark: SparkSession, dir: String): DataFrame =
-    PlanMemo.cached(spark, s"pipeline.baseKeptDocs:$dir")(
+    PlanMemo.cached(spark, dir, "pipeline.baseKeptDocs")(
       PlanMemo.publishedParquet(spark, dir, "pipeline_base_kept") {
         val sid = Dedup.incrementalSplitId(spark, dir)
         val baseQ = PlanMemo.publishedParquet(spark, dir,
@@ -718,7 +728,7 @@ object Pipeline {
     */
   private def baseCrossLosersArtifact(
       spark: SparkSession, dir: String): DataFrame =
-    PlanMemo.cached(spark, s"pipeline.baseCrossLosers:$dir")(
+    PlanMemo.cached(spark, dir, "pipeline.baseCrossLosers")(
       PlanMemo.publishedParquet(spark, dir, "pipeline_base_crosslosers") {
         val pairs = PlanMemo.publishedParquet(spark, dir,
           "d03_ngram_jaccard")(Dedup.ngramJaccard(spark, dir))
@@ -741,11 +751,9 @@ object Pipeline {
     */
   private def baseFpsArtifact(
       spark: SparkSession, dir: String): DataFrame =
-    PlanMemo.cached(spark, s"pipeline.baseFps:$dir")(
+    PlanMemo.cached(spark, dir, "pipeline.baseFps")(
       PlanMemo.publishedParquet(spark, dir, "pipeline_base_fps")(
-        Tables.documents(spark, dir)
-          .join(baseKeptDocs(spark, dir).hint("shuffle_hash"),
-            Seq("doc_id"), "left_semi")
+        docRowsOf(spark, dir, baseKeptDocs(spark, dir))
           .select(expr("optimizer_barrier(md5(text))").as("fp"))
           .distinct()))
 
@@ -758,13 +766,11 @@ object Pipeline {
     */
   private[graft] def baseTotalsArtifact(
       spark: SparkSession, dir: String): DataFrame =
-    PlanMemo.cached(spark, s"pipeline.baseTotals:$dir")(
+    PlanMemo.cached(spark, dir, "pipeline.baseTotals")(
       PlanMemo.publishedParquet(spark, dir, "pipeline_base_totals") {
         val dict = Text.bpeEncodeDictUnder(
           Text.bpeMerges(spark, dir), Text.bpeVocab(spark, dir))
-        Tables.documents(spark, dir)
-          .join(baseKeptDocs(spark, dir).hint("shuffle_hash"),
-            Seq("doc_id"), "left_semi")
+        docRowsOf(spark, dir, baseKeptDocs(spark, dir))
           .select(col("lang"), explode_outer(Text.bpeWords(col("text")))
             .as("word"))
           .filter(col("word").isNotNull)
@@ -1364,11 +1370,8 @@ object Pipeline {
     * corpus-sized pass of its own.
     */
   def mixturePlan(spark: SparkSession, dir: String): DataFrame = {
-    val docs = Tables.documents(spark, dir)
-      .join(keptDocs(spark, dir).hint("shuffle_hash"),
-        Seq("doc_id"), "left_semi")
-    val seqs = PlanMemo.cached(spark, s"pipeline.keptSeqs:$dir")(
-      Text.bpeTokenIdSeqsOn(spark, dir, docs))
+    val docs = docRowsOf(spark, dir, keptDocs(spark, dir))
+    val seqs = keptSeqs(spark, dir, docs)
     val perSrc = docs.select(col("source"), col("doc_id"))
       .join(seqs.select(col("doc_id"), size(col("ids")).as("nt"))
         .hint("shuffle_hash"), Seq("doc_id"), "left")

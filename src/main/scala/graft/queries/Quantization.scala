@@ -79,7 +79,7 @@ object Quantization {
     */
   private def codebooks(spark: SparkSession,
                         dir: String): Array[Array[Array[Long]]] =
-    PlanMemo.cachedValue(spark, s"pq.codebooks:$dir")(
+    PlanMemo.cachedValue(spark, dir, "pq.codebooks")(
       trainCodebooks(candidates(spark, dir)))
 
   /** Per-subspace codebooks trained with `pqIters` Lloyd rounds over
@@ -292,7 +292,7 @@ object Quantization {
     val schema = spark.read.parquet(path).schema
     // balancedStream: pq_encode over every subvector is the CPU-heavy
     // stage — single-row-group staging would run it on one core.
-    val ds = StreamingQueries.drainSession(spark)
+    val ds = StreamingQueries.drainSession(spark, dir)
     val stream = StreamingQueries.balancedStream(
       ds.readStream.schema(schema).parquet(streamDir.toString)
         .filter(col("vec_id") >= Similarity.nQueries))

@@ -768,7 +768,7 @@ object Similarity {
     * cluster count and w14's base/stream split.
     */
   private[graft] def retrNVecs(spark: SparkSession, dir: String): Long =
-    PlanMemo.cachedValue(spark, s"similarity.nVecs:$dir")(
+    PlanMemo.cachedValue(spark, dir, "similarity.nVecs")(
       Tables.embeddings(spark, dir).count())
 
   /** Every vector's arg-max IVF cell, ONCE (vecs-scale; s04's

@@ -39,16 +39,17 @@ object StreamingQueries {
     * blocks); the parent's runtime conf is copied at creation so
     * reader semantics (UTC session, nanos-as-long tolerance) match,
     * then the parallelism override is applied to the child alone.
-    * Memoized per parent: one child per session, reused by every
-    * drain. Cross-session stream-static joins (a child-session stream
-    * against a parent-built static frame) are supported: both
+    * Memoized per (parent, corpus version): one child per session and
+    * corpus, reused by every drain over it. Cross-session
+    * stream-static joins (a child-session stream against a
+    * parent-built static frame) are supported: both
     * sessions share one context, and already-analyzed parent subtrees
     * stay resolved inside the child's plan. The child inherits the
     * parent's session extensions, so the engine's custom functions
     * resolve in stream chains too.
     */
-  private[graft] def drainSession(spark: SparkSession): SparkSession = {
-    val s = PlanMemo.cachedValue(spark, "stream.drainSession")(
+  private[graft] def drainSession(spark: SparkSession, dir: String): SparkSession = {
+    val s = PlanMemo.cachedValue(spark, dir, "stream.drainSession")(
       spark.newSession())
     // re-sync the parent's runtime conf on EVERY retrieval, not just
     // at creation: a conf toggled after the memoized child was built
@@ -217,7 +218,7 @@ object StreamingQueries {
     // parent's runtime conf into the child, so the stream reader
     // sees the toggle too
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val ds = drainSession(spark)
+    val ds = drainSession(spark, dir)
     val path = s"$dir/events.parquet"
     // The file stream source requires a directory of plain files —
     // stage symlinks (file or per-part; tables are read-only).
@@ -294,7 +295,7 @@ object StreamingQueries {
     val streamDir = TempArtifacts.scratchDir("graft_stream_d")
     TempArtifacts.stageTable(streamDir, path)
     val schema = spark.read.parquet(path).schema
-    val dedup = drainSession(spark)
+    val dedup = drainSession(spark, dir)
       .readStream.schema(schema).parquet(streamDir.toString)
       .select(md5(col("text")).as("fingerprint"))
       .dropDuplicates("fingerprint")
@@ -392,7 +393,7 @@ object StreamingQueries {
     // static side built from the batch reader — tiny, broadcast
     val bench = Dedup.benchShingles(spark, dir)
     val corpus = balancedStream(
-      drainSession(spark)
+      drainSession(spark, dir)
         .readStream.schema(schema).parquet(streamDir.toString)
         .filter(col("doc_id") >= Dedup.contaminationBenchDocs))
       .withColumn("toks",
@@ -439,7 +440,7 @@ object StreamingQueries {
     TempArtifacts.stageTable(streamDir, path)
     val schema = spark.read.parquet(path).schema
     val gated = Text.gopherMetrics(
-      drainSession(spark)
+      drainSession(spark, dir)
         .readStream.schema(schema).parquet(streamDir.toString))
       .select("doc_id", "n_words", "gopher_pass")
     drainToMemory(spark, gated, "append", "w11", streamDir)
@@ -474,7 +475,7 @@ object StreamingQueries {
     val streamDir = TempArtifacts.scratchDir("graft_stream_hh")
     TempArtifacts.stageTable(streamDir, path)
     val schema = spark.read.parquet(path).schema
-    val sketch = drainSession(spark)
+    val sketch = drainSession(spark, dir)
       .readStream.schema(schema).parquet(streamDir.toString)
       .select(explode(Text.tokens(lower(col("text")))).as("w"))
       .agg(expr(s"approx_top_k(w, ${Text.heavyHitterK}, " +
@@ -525,7 +526,7 @@ object StreamingQueries {
     * oracle replays the exact semantics batch-side.
     */
   def streamingSemanticGate(spark: SparkSession, dir: String): DataFrame = {
-    val ds = drainSession(spark)
+    val ds = drainSession(spark, dir)
     val emb = Tables.embeddings(spark, dir)
     val split = Similarity.retrNVecs(spark, dir) / 2
     val toDouble = "transform(embedding, x -> CAST(x AS DOUBLE))"
@@ -536,7 +537,7 @@ object StreamingQueries {
     val baseQe = base.select(col("vec_id"), expr(quantize("emb")).as("q"))
     val k = math.max(Clustering.kClusters,
       (split / Dedup.semCellTarget).toInt)
-    val cents = Clustering.centroidsOn(spark, s"w14:$dir", baseQe, k)
+    val cents = Clustering.centroidsOn(spark, dir, "w14", baseQe, k)
     val baseSide = Clustering.assignWith(
         base.withColumn("q", expr(quantize("emb"))), cents)
       .withColumn("nrm", sqrt(expr("dot_product(emb, emb)")))
@@ -568,7 +569,7 @@ object StreamingQueries {
     // NAME is derived from the same (session, dir) key as the memo
     // (round-13 advice): an LRU eviction + rebuild overwrites the one
     // staging dir in place instead of leaking a copy per rebuild.
-    val feed = PlanMemo.cachedValue(spark, s"w14.feed:$dir") {
+    val feed = PlanMemo.cachedValue(spark, dir, "w14.feed") {
       // pid in the name: identityHashCode is only unique within one
       // JVM, and the scratch root (/dev/shm) is host-shared — two
       // concurrent graft JVMs must never resolve the same feed dir
@@ -684,7 +685,7 @@ object StreamingQueries {
     val streamDir = TempArtifacts.scratchDir("graft_stream_f")
     TempArtifacts.stageTable(streamDir, path)
     val schema = spark.read.parquet(path).schema
-    val raw = drainSession(spark)
+    val raw = drainSession(spark, dir)
       .readStream.schema(schema).parquet(streamDir.toString)
     // same physical-encoding tolerance as Tables.events (nanos-as-long,
     // TIMESTAMP_NTZ, or plain timestamp all normalize to TimestampType)
@@ -750,7 +751,7 @@ object StreamingQueries {
     // balancedStream: the per-occurrence byte split + encode is the
     // CPU stage
     val occ = balancedStream(
-        drainSession(spark)
+        drainSession(spark, dir)
           .readStream.schema(schema).parquet(streamDir.toString))
       .select(col("source"),
         explode_outer(Text.bpeWords(col("text"))).as("w"))
@@ -821,7 +822,7 @@ object StreamingQueries {
     TempArtifacts.stageTable(streamDir, path)
     val schema = spark.read.parquet(path).schema
     val agg = admissionAggOn(spark, dir,
-      drainSession(spark)
+      drainSession(spark, dir)
         .readStream.schema(schema).parquet(streamDir.toString),
       minDocId)
     admissionVerdict(drainToMemory(spark, agg, "complete", name, streamDir))

@@ -612,7 +612,7 @@ object Text {
     // read tf — without the cache the tokenize→explode→aggregate
     // pipeline (the dominant cost) runs twice; rows are bounded by
     // distinct (doc, term)
-    val tf = PlanMemo.cached(spark, s"text.bm25tf:$dir")(
+    val tf = PlanMemo.cached(spark, dir, "text.bm25tf")(
       words.groupBy("doc_id", "dl", "w").agg(count(lit(1)).as("tf")))
     val dfreq = tf.groupBy("w").agg(count(lit(1)).as("df"))
     val qterms = dfreq
@@ -719,7 +719,7 @@ object Text {
         xxhash64(col("w1"), col("w2")).as("bh"))
     // persisted: per_doc feeds the model counts (c2, c1) AND the
     // scoring join — three consumers of the bigram explode pipeline
-    val perDoc = PlanMemo.cached(spark, s"text.bigramPerDoc:$dir")(
+    val perDoc = PlanMemo.cached(spark, dir, "text.bigramPerDoc")(
       bigrams.groupBy("doc_id", "w1h", "bh")
         .agg(count(lit(1)).as("n")))
     val c2 = perDoc.groupBy("bh").agg(sum("n").as("c2"))
@@ -1115,7 +1115,7 @@ object Text {
     // LM semantics unchanged modulo a 2^-64 collision merging two
     // word types (and shifting V by the same count) — far below the
     // add-one smoothing noise floor at any corpus size.
-    val perDocWord = PlanMemo.cached(spark, s"text.dsirPerDocWord:$dir")(
+    val perDocWord = PlanMemo.cached(spark, dir, "text.dsirPerDocWord")(
       docs
         .select(col("doc_id"), col("lang"),
           explode_outer(tokens(lower(col("text")))).as("w"))
@@ -1296,7 +1296,7 @@ object Text {
     */
   private[graft] def heavyHitterExact(spark: SparkSession, dir: String)
       : (Seq[(String, Long)], Long, Long) =
-    PlanMemo.cachedValue(spark, s"text.hhExact:$dir") {
+    PlanMemo.cachedValue(spark, dir, "text.hhExact") {
       val ex = Tables.documents(spark, dir)
         .select(explode(tokens(lower(col("text")))).as("w"))
       val exact = ex.groupBy("w").agg(count(lit(1)).as("c"))
@@ -1406,11 +1406,7 @@ object Text {
     * no alphabet restriction.
     */
   private[graft] def bpeVocab(spark: SparkSession, dir: String): DataFrame =
-    // fingerprint-keyed like the artifact under it: a memo keyed by dir
-    // alone would keep serving a rewritten corpus's old dictionary to
-    // every re-train
-    PlanMemo.cachedEager(spark,
-      s"text.bpeVocab:$dir:${PlanMemo.corpusFingerprint(dir)}")(
+    PlanMemo.cachedEager(spark, dir, "text.bpeVocab")(
       // PUBLISHED artifact (round 19): the word-frequency dictionary
       // is the canonical first artifact of every real BPE training
       // pipeline — the word-count table the trainer consumes and the
@@ -1769,9 +1765,8 @@ object Text {
   private[graft] def bpeTrainAt(
       spark: SparkSession, dir: String, rounds: Int, checkpointRound: Int,
       budget: Long = bpeMaxDriverDictRows): BpeDriverTrain =
-    PlanMemo.cachedValue(spark,
-      s"text.bpeTrain:$dir:${PlanMemo.corpusFingerprint(dir)}" +
-        s":$rounds:$checkpointRound") {
+    PlanMemo.cachedValue(spark, dir,
+      s"text.bpeTrain:$rounds:$checkpointRound") {
       val dict = bpeVocab(spark, dir).select("freq", "sym")
       // one cheap count decides the path; the memoized result is
       // bit-identical either way, so the memo key omits the budget
@@ -2062,7 +2057,7 @@ object Text {
     val dictL = bpeEncodeDictUnder(bpeLargeTrain(spark, dir).merges, vocab,
       "ntok_large")
     val dict12 = bpeEncodeDictUnder(bpeMerges(spark, dir), vocab)
-    val both = PlanMemo.cached(spark, s"text.bpeBothDicts:$dir")(
+    val both = PlanMemo.cached(spark, dir, "text.bpeBothDicts")(
       vocab
         .withColumn("n_bytes", length(regexp_replace(col("sym"), " ", "")) / 2)
         .join(dictL.hint("shuffle_hash"), "word")
@@ -2149,7 +2144,7 @@ object Text {
   def bpeIdsLarge(spark: SparkSession, dir: String): DataFrame = {
     val vocab = bpeVocab(spark, dir)
     val large = bpeLargeTrain(spark, dir).merges
-    val dict = PlanMemo.cached(spark, s"text.idsLargeDict:$dir")(
+    val dict = PlanMemo.cached(spark, dir, "text.idsLargeDict")(
       bpeIdsDictUnder(large, vocab))
     bpeIdsBands(spark, dir, dict,
       bpeEncodeDictUnder(large, vocab, "ntok_large"), "ntok_large",
@@ -2299,7 +2294,7 @@ object Text {
   def bpeEncodeProd(spark: SparkSession, dir: String): DataFrame = {
     val resP = bpeProdTrain(spark, dir)
     val resL = bpeLargeTrain(spark, dir)
-    val both = PlanMemo.cached(spark, s"text.prodBothDicts:$dir") {
+    val both = PlanMemo.cached(spark, dir, "text.prodBothDicts") {
       val vocab = bpeVocab(spark, dir)
       vocab
         .withColumn("n_bytes", length(regexp_replace(col("sym"), " ", "")) / 2)
@@ -2331,7 +2326,7 @@ object Text {
     val resL = bpeLargeTrain(spark, dir)
     val vocabSize = 256 + resP.merges.length
     val vocab = bpeVocab(spark, dir)
-    val dict = PlanMemo.cached(spark, s"text.idsProdDict:$dir")(
+    val dict = PlanMemo.cached(spark, dir, "text.idsProdDict")(
       bpeIdsDictUnder(resP.merges, vocab))
     bpeIdsBands(spark, dir, dict,
       bpeEncodeDictUnder(resP.merges, vocab, "ntok_prod"), "ntok_prod",
@@ -2653,17 +2648,19 @@ object Text {
     * exact interpolated percentile of round4 densities — both
     * engines interpolate lower + (upper − lower)·frac over identical
     * round4 doubles, so the label is bit-deterministic cross-engine.
+    * Memoized: t23, the frozen weights and ml10's LR twin share it.
     */
-  private[graft] def qcLabels(spark: SparkSession, dir: String): DataFrame = {
-    val st = Tables.documents(spark, dir)
-      .withColumn("toks", tokens(lower(col("text"))))
-      .select(col("doc_id"),
-        Exact.round4(size(filter(col("toks"), t => t.isin(stopwords: _*)))
-          .cast("double") / size(col("toks"))).as("st"))
-    val med = st.agg(expr("percentile(st, 0.5)").as("med"))
-    st.crossJoin(broadcast(med))
-      .select(col("doc_id"), (col("st") >= col("med")).cast("int").as("y"))
-  }
+  private[graft] def qcLabels(spark: SparkSession, dir: String): DataFrame =
+    PlanMemo.cached(spark, dir, "text.qcLabels") {
+      val st = Tables.documents(spark, dir)
+        .withColumn("toks", tokens(lower(col("text"))))
+        .select(col("doc_id"),
+          Exact.round4(size(filter(col("toks"), t => t.isin(stopwords: _*)))
+            .cast("double") / size(col("toks"))).as("st"))
+      val med = st.agg(expr("percentile(st, 0.5)").as("med"))
+      st.crossJoin(broadcast(med))
+        .select(col("doc_id"), (col("st") >= col("med")).cast("int").as("y"))
+    }
 
   /** Shared SQL CTE block: `labels` (doc_id, y) — the oracle twin of
     * [[qcLabels]].
@@ -2732,7 +2729,7 @@ object Text {
     * and the frozen-weights train.
     */
   private def qcFeatures(spark: SparkSession, dir: String): DataFrame =
-    PlanMemo.cached(spark, s"text.qcFeatures:$dir")(
+    PlanMemo.cached(spark, dir, "text.qcFeatures")(
       Tables.documents(spark, dir)
         .select(col("doc_id"),
           explode_outer(tokens(lower(col("text")))).as("w"))
@@ -2760,15 +2757,14 @@ object Text {
     // clearCache). Same content-fingerprint keying as every artifact;
     // weight VALUES are unchanged (deterministic integer arithmetic).
     val tbl = PlanMemo.publishedParquet(spark, dir, "qc_frozen_weights") {
-      val labels = PlanMemo.cached(spark, s"text.qcLabels:$dir")(
-        qcLabels(spark, dir))
-      val counts = PlanMemo.cached(spark, s"text.qcCounts:$dir")(
-        qcFeatures(spark, dir).join(labels.hint("shuffle_hash"), "doc_id")
+      val counts = PlanMemo.cached(spark, dir, "text.qcCounts")(
+        qcFeatures(spark, dir)
+          .join(qcLabels(spark, dir).hint("shuffle_hash"), "doc_id")
           .filter(col("doc_id") % qcFolds =!= 0)
           .groupBy("f").agg(
             sum(when(col("y") === 1, col("n")).otherwise(0L)).as("cp"),
             sum(when(col("y") === 0, col("n")).otherwise(0L)).as("cn")))
-      val (sp, sn) = PlanMemo.cachedValue(spark, s"text.qcTotals:$dir") {
+      val (sp, sn) = PlanMemo.cachedValue(spark, dir, "text.qcTotals") {
         val r = counts.agg(sum("cp"), sum("cn")).first()
         (r.getLong(0), r.getLong(1))
       }
@@ -2783,14 +2779,13 @@ object Text {
         .withColumn("def_w8",
           lit(qcScale / (sp + qcDim) - qcScale / (sn + qcDim)))
     }
-    val defW8 = PlanMemo.cachedValue(spark, s"text.qcDefW8:$dir")(
+    val defW8 = PlanMemo.cachedValue(spark, dir, "text.qcDefW8")(
       tbl.select("def_w8").head().getLong(0))
     (tbl.select("f", "w8"), defW8)
   }
 
   def qualityClassifier(spark: SparkSession, dir: String): DataFrame = {
-    val labels = PlanMemo.cached(spark, s"text.qcLabels:$dir")(
-      qcLabels(spark, dir))
+    val labels = qcLabels(spark, dir)
     val feats = qcFeatures(spark, dir)
     val trainFeats = feats.join(labels.hint("shuffle_hash"), "doc_id")
       .filter(col("doc_id") % qcFolds =!= 0)
@@ -2892,8 +2887,7 @@ object Text {
   def bpeTrainDist(spark: SparkSession, dir: String): DataFrame = {
     val rounds = bpeDistGateRounds
     val ck = math.min(12, rounds)
-    val (dist, drv) = PlanMemo.cachedValue(spark,
-      s"text.bpeDistGate:$dir:${PlanMemo.corpusFingerprint(dir)}") {
+    val (dist, drv) = PlanMemo.cachedValue(spark, dir, "text.bpeDistGate") {
       val vocab = bpeVocab(spark, dir).select("freq", "sym")
       val d = BpeDist.train(spark, vocab, rounds, checkpointRound = ck)
       val dict = vocab.collect()

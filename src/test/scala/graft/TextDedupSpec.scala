@@ -260,7 +260,7 @@ class TextDedupSpec extends AnyFunSuite {
       // plan registered here gets substituted into LATER queries'
       // matching subtrees (d19's exchange pin flipped with suite
       // order before this drop)
-      PlanMemo.drop(spark, s"dedup.jaccardPairs:$sfDir:prefix")
+      PlanMemo.drop(spark, sfDir, "dedup.jaccardPairs:prefix")
     }
   }
 

@@ -6,7 +6,10 @@
 #      and no SPARK_GRAFT_ARTIFACTS mount, and no src/main file outside
 #      the six dev mains (Bench, Verify, Probe, GenData, KernelBench,
 #      Explain) reads the environment, so an answer depends only on
-#      (query, corpus) and no memo key has a conf to carry
+#      (query, corpus) and no memo key has a conf to carry; and no
+#      src/main file but PlanMemo.scala names `corpusFingerprint`, so
+#      the corpus version of every memo and artifact is decided in one
+#      place, never spelled into a key by a caller
 #   2. full scalatest suite
 #   3. Verify + DuckDB oracle compare at sf0.01 (the correctness gate)
 #   4. Bench at sf0.1 (min-of-3) -> bench_local.json
@@ -26,6 +29,10 @@ fi
 dev_mains='/(Bench|Verify|Probe|GenData|KernelBench|Explain)\.scala:'
 if grep -rnE 'sys\.env|System\.getenv' src/main | grep -vE "$dev_mains"; then
   echo "round_check: engine code reads the environment (above)" >&2
+  exit 1
+fi
+if grep -rn 'corpusFingerprint' src/main | grep -v '/PlanMemo\.scala:'; then
+  echo "round_check: corpus versioning outside PlanMemo (above)" >&2
   exit 1
 fi
 
