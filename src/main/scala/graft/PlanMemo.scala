@@ -36,9 +36,10 @@ import org.apache.spark.storage.StorageLevel
   *   - an access-ordered LRU cap per map — retrieval refreshes
   *     recency, and an evicted frame is unpersisted so its executor
   *     memory is reclaimed, not just the driver-side plan reference.
-  * One corpus's working set is about 40 frame names and 23 value names
-  * against caps of 64 and 128, so Bench/Verify/test runs never evict
-  * mid-pipeline; only multi-dir churn does.
+  * One corpus's working set is about 45 frame names (28 session frames
+  * plus the 17 published artifacts read through [[publishedParquet]])
+  * and 23 value names against caps of 64 and 128, so Bench/Verify/test
+  * runs never evict mid-pipeline; only multi-dir churn does.
   */
 object PlanMemo {
 
@@ -211,30 +212,41 @@ object PlanMemo {
     java.security.MessageDigest.getInstance("MD5")
       .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
 
-  /** Disk-backed publish-once memo — the release-pipeline pattern where
-    * a downstream consumer (the c06 corpus card) reads a family's
-    * PUBLISHED parquet artifact instead of re-running its pipeline.
+  /** Disk-backed publish-once artifact, read through its session memo
+    * — the release-pipeline pattern where a downstream consumer (the
+    * c06 corpus card) reads a family's PUBLISHED parquet artifact
+    * instead of re-running its pipeline.
     *
     * The artifact for (dir, name) is a JVM-lifetime temp parquet
     * written by the first request under [[corpusKey]] — so scale
     * factors never collide AND a corpus mutated in place is
     * re-published, never served a stale index. Unlike the in-memory
-    * memos this survives `clearCache`, which is exactly the Bench
+    * memos the file survives `clearCache`, which is exactly the Bench
     * cold-rep shape a real release pipeline has: the card reads the
     * shipped artifact, it does not rebuild the family.
+    *
+    * The read itself is the artifact's session memo: `name` is a
+    * [[cached]] name, so each (session, corpus version, artifact) pays
+    * one parquet read (and its schema job) and every caller gets the
+    * same persisted frame, re-persisted after a `clearCache`. A new
+    * session reads the published file without running `build`.
     *
     * The builder queries are themselves hash-gated, so consuming their
     * written output cannot change any downstream answer.
     */
   def publishedParquet(spark: SparkSession, dir: String, name: String)
       (build: => DataFrame): DataFrame =
-    publishedParquetBy(spark, dir, name, Nil)(build)
+    cached(spark, dir, name)(publishedParquetBy(spark, dir, name, Nil)(build))
 
   /** [[publishedParquet]] with hive-style partition columns — the
     * operational layout for artifacts a training run consumes shard-
     * by-shard (partition pruning on the consumer side reads one
-    * directory, not the corpus). Read-back note: Spark restores
-    * partition columns LAST in the schema — consumers select by name.
+    * directory, not the corpus). Returns a plain file scan, not a
+    * memo: a persisted frame would hide the `FileSourceScanExec`
+    * whose partition filters make e07/e09 read only the langs they
+    * mount (PlanAuditSpec pins that pruning). Read-back note: Spark
+    * restores partition columns LAST in the schema — consumers select
+    * by name.
     */
   def publishedParquetBy(spark: SparkSession, dir: String, name: String,
       partitionCols: Seq[String])(build: => DataFrame): DataFrame = {

@@ -1,7 +1,9 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.util.CollationAwareUTF8String
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Readers for the driver's deterministic parquet test tables
   * (TESTDATA.md / FIXTURES.md §B). One loader per table; explicit
@@ -147,15 +149,37 @@ object Tables {
 
   /** Shared session tuning: UTC for oracle parity, shuffle partitions
     * sized for local core counts (not the 200 default), AQE on (skew
-    * joins + partition coalescing are the 100 TB posture), and the
-    * nanos-as-long escape hatch for the events table.
+    * joins + partition coalescing are the 100 TB posture), the
+    * nanos-as-long escape hatch for the events table, and broadcast
+    * blocks below G1's humongous-object size (half a 2 MB region):
+    * every stage broadcasts its task binary, and the default 4 MB first
+    * block is a humongous allocation per stage, garbage at once.
+    * Also builds Spark's case-mapping table (see [[caseMappings]]).
     */
-  def configure(b: SparkSession.Builder): SparkSession.Builder = b
-    .config("spark.sql.extensions", "graft.GraftExtensions")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.sql.adaptive.enabled", "true")
-    .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-    .config("spark.sql.adaptive.skewJoin.enabled", "true")
-    .config("spark.ui.enabled", "false")
+  def configure(b: SparkSession.Builder): SparkSession.Builder = {
+    caseMappings
+    b.config("spark.sql.extensions", "graft.GraftExtensions")
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      .config("spark.sql.adaptive.enabled", "true")
+      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
+      .config("spark.sql.adaptive.skewJoin.enabled", "true")
+      .config("spark.ui.enabled", "false")
+      .config("spark.broadcast.blockSize", "512k")
+  }
+
+  /** Spark's ICU case mapping (`lower`/`upper` under UTF8_BINARY)
+    * builds a title-case table once per JVM, on first use, by title-
+    * casing every code point: ~3 GB of short-lived garbage in about a
+    * second. Inside the first query that lowercases text, that burst
+    * lands on a heap already holding the query's memos, and the
+    * back-to-back collections it forces make G1 grow the heap by an
+    * amount that varies from run to run. Built before the first
+    * session, on a near-empty heap, it costs the same once and leaves
+    * later queries' footprint steady.
+    */
+  private lazy val caseMappings: Unit = {
+    CollationAwareUTF8String.toLowerCase(UTF8String.EMPTY_UTF8)
+    ()
+  }
 }

@@ -124,9 +124,8 @@ object Dedup {
     // and without the publish every post-clearCache consumer (d11's
     // bench reps most of all — 2.8 s of its sf0.1 cost was this)
     // re-ran the posting + packed-pair-shuffle stages per rep.
-    PlanMemo.cached(spark, dir, "dedup.lshCandidates")(
-      PlanMemo.publishedParquet(spark, dir, "lsh_cand_pairs")(
-        buildLshCandidates(spark, dir)))
+    PlanMemo.publishedParquet(spark, dir, "lsh_cand_pairs")(
+      buildLshCandidates(spark, dir))
 
   private def buildLshCandidates(spark: SparkSession, dir: String): DataFrame = {
     // POSTING-LIST pair emission, not a self-join (same shape as
@@ -218,9 +217,8 @@ object Dedup {
     // back through the full shingle+minhash corpus pass. Builder
     // results are hash-gated; reading the written artifact cannot
     // change any answer.
-    PlanMemo.cached(spark, dir, "dedup.lshBands")(
-      PlanMemo.publishedParquet(spark, dir, "lsh_bands_index")(
-        buildLshBands(spark, dir)))
+    PlanMemo.publishedParquet(spark, dir, "lsh_bands_index")(
+      buildLshBands(spark, dir))
 
   private def buildLshBands(spark: SparkSession, dir: String): DataFrame = {
     // ONE map-side pass: all 16 minima from a native codegen
@@ -248,7 +246,7 @@ object Dedup {
       .select(col("doc_id"),
         posexplode(array((0 until 4).map(j => col(s"key$j")): _*)))
       .toDF("doc_id", "band", "key")
-    // persist happens in lshBands' PlanMemo.cached wrapper
+    // persist happens in lshBands' artifact memo (publishedParquet)
   }
 
   /** DuckDB CTE block for the d02 candidate pipeline — exposes a
@@ -602,6 +600,17 @@ object Dedup {
 
   def ngramJaccard(spark: SparkSession, dir: String): DataFrame =
     jaccardPairs(spark, dir).orderBy("d1", "d2")
+
+  /** The (d1, d2) edges of d03's verified pair set, read from its
+    * PUBLISHED artifact — the one pair table the downstream consumers
+    * (the c06 card, p06's leak audit, the e-family keep and append
+    * screens) read instead of each re-running the pair kernel. Its
+    * rows ARE [[jaccardPairs]]' rows (d03 only adds the presentation
+    * sort), and d03 is hash-gated.
+    */
+  private[graft] def pairsPublished(spark: SparkSession, dir: String): DataFrame =
+    PlanMemo.publishedParquet(spark, dir, "d03_ngram_jaccard")(
+      ngramJaccard(spark, dir)).select("d1", "d2")
 
   // ---------------------------------------------------------------
   /** d19 — exact Jaccard pairs via PREFIX FILTERING (All-Pairs /
@@ -1282,13 +1291,12 @@ object Dedup {
     */
   private[graft] def baseFpSetArtifact(
       spark: SparkSession, dir: String): DataFrame =
-    PlanMemo.cached(spark, dir, "dedup.baseFpSet")(
-      PlanMemo.publishedParquet(spark, dir, "incremental_base_fps") {
-        val splitId = incrementalSplitId(spark, dir)
-        Tables.documents(spark, dir).filter(col("doc_id") < splitId)
-          .select(expr("optimizer_barrier(md5(text))").as("fp"))
-          .distinct()
-      })
+    PlanMemo.publishedParquet(spark, dir, "incremental_base_fps") {
+      val splitId = incrementalSplitId(spark, dir)
+      Tables.documents(spark, dir).filter(col("doc_id") < splitId)
+        .select(expr("optimizer_barrier(md5(text))").as("fp"))
+        .distinct()
+    }
 
   /** Published artifact: the base side of the LSH band index,
     * projected to its distinct (band, key) set — the near-layer twin
@@ -1297,12 +1305,11 @@ object Dedup {
     */
   private[graft] def baseBandSetArtifact(
       spark: SparkSession, dir: String): DataFrame =
-    PlanMemo.cached(spark, dir, "dedup.baseBandSet")(
-      PlanMemo.publishedParquet(spark, dir, "incremental_base_bands") {
-        val splitId = incrementalSplitId(spark, dir)
-        lshBands(spark, dir).filter(col("doc_id") < splitId)
-          .select("band", "key").distinct()
-      })
+    PlanMemo.publishedParquet(spark, dir, "incremental_base_bands") {
+      val splitId = incrementalSplitId(spark, dir)
+      lshBands(spark, dir).filter(col("doc_id") < splitId)
+        .select("band", "key").distinct()
+    }
 
   def incrementalDedup(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(spark, dir)
@@ -1555,57 +1562,50 @@ object Dedup {
       .select(col("fp").as("bfp"))
     val baseBands = baseBandSetArtifact(spark, dir)
       .select(col("band").as("bband"), col("key").as("bkey"))
-    // incoming stream (symlink-dir staging, as w05/w08)
-    val path = s"$dir/documents.parquet"
-    val streamDir = TempArtifacts.scratchDir("graft_stream_i")
-    TempArtifacts.stageTable(streamDir, path)
-    val schema = spark.read.parquet(path).schema
-    // balancedStream: the per-record shingle_fps → minhash_sigs kernel
-    // below is the CPU-heavy stage — single-row-group staging would
-    // run it on one core (see StreamingQueries.balancedStream)
-    val ds = StreamingQueries.drainSession(spark, dir)
-    val incoming = StreamingQueries.balancedStream(
-      ds.readStream.schema(schema).parquet(streamDir.toString)
-        .filter(col("doc_id") >= splitId))
-    // per-record MinHash band keys through the SAME native kernels
-    // the batch index uses (shingle_fps → minhash_sigs) — per-record
-    // shapes both, so the ingest path needs no stateful signature
-    // aggregation; a shingle-less doc yields NULL sigs → four
-    // null-key band rows, exactly like the old per-sig HOF spelling
-    // (array_min over an empty transform was NULL per signature).
-    val keyExprs = (0 until 4).map { j =>
-      val Seq(s0, s1, s2, s3) = (0 until 4).map(k => s"sigs[${4 * j + k}]")
-      s"((($s0 * 31 + $s1) * 31 + $s2) * 31 + $s3)"
-    }
-    val banded = incoming
-      .withColumn("sigs", expr("minhash_sigs(shingle_fps(text))"))
-      .selectExpr("doc_id", "lang", "md5(text) AS fp",
-        s"array(${keyExprs.mkString(", ")}) AS keys")
-      .select(col("doc_id"), col("lang"), col("fp"),
-        posexplode_outer(col("keys")))
-      .toDF("doc_id", "lang", "fp", "band", "key")
-    // one row per doc, STATELESSLY: the band posexplode always emits
-    // band 0 (or a single null-band row for a shingle-less doc) — no
-    // streaming dropDuplicates, so the query has exactly one stateful
-    // operator (the final verdict aggregation)
-    val exactScore = banded
-      .filter(col("band") === 0 || col("band").isNull)
-      .select("doc_id", "lang", "fp")
-      .join(baseHashes, col("fp") === col("bfp"), "left_outer")
-      .select(col("doc_id"), col("lang"),
-        when(col("bfp").isNotNull, 2).otherwise(0).as("score"))
-    val nearScore = banded
-      .join(baseBands,
-        col("band") === col("bband") && col("key") === col("bkey"),
-        "left_outer")
-      .select(col("doc_id"), col("lang"),
-        when(col("bkey").isNotNull, 1).otherwise(0).as("score"))
-    val verdicts = exactScore.union(nearScore)
-      .groupBy("doc_id", "lang")
-      .agg(max("score").as("verdict"))
-    StreamingQueries.drainToMemory(spark, verdicts, "complete", "w10",
-        streamDir)
-      .select("doc_id", "lang", "verdict")
+    // incoming stream: the documents table drained as w07/w08 drain it
+    StreamingQueries.drainTable(spark, dir, "documents", "complete", "w10") { docs =>
+      // balancedStream: the per-record shingle_fps → minhash_sigs kernel
+      // below is the CPU-heavy stage — single-row-group staging would
+      // run it on one core (see StreamingQueries.balancedStream)
+      val incoming = StreamingQueries.balancedStream(
+        docs.filter(col("doc_id") >= splitId))
+      // per-record MinHash band keys through the SAME native kernels
+      // the batch index uses (shingle_fps → minhash_sigs) — per-record
+      // shapes both, so the ingest path needs no stateful signature
+      // aggregation; a shingle-less doc yields NULL sigs → four
+      // null-key band rows, exactly like the old per-sig HOF spelling
+      // (array_min over an empty transform was NULL per signature).
+      val keyExprs = (0 until 4).map { j =>
+        val Seq(s0, s1, s2, s3) = (0 until 4).map(k => s"sigs[${4 * j + k}]")
+        s"((($s0 * 31 + $s1) * 31 + $s2) * 31 + $s3)"
+      }
+      val banded = incoming
+        .withColumn("sigs", expr("minhash_sigs(shingle_fps(text))"))
+        .selectExpr("doc_id", "lang", "md5(text) AS fp",
+          s"array(${keyExprs.mkString(", ")}) AS keys")
+        .select(col("doc_id"), col("lang"), col("fp"),
+          posexplode_outer(col("keys")))
+        .toDF("doc_id", "lang", "fp", "band", "key")
+      // one row per doc, STATELESSLY: the band posexplode always emits
+      // band 0 (or a single null-band row for a shingle-less doc) — no
+      // streaming dropDuplicates, so the query has exactly one stateful
+      // operator (the final verdict aggregation)
+      val exactScore = banded
+        .filter(col("band") === 0 || col("band").isNull)
+        .select("doc_id", "lang", "fp")
+        .join(baseHashes, col("fp") === col("bfp"), "left_outer")
+        .select(col("doc_id"), col("lang"),
+          when(col("bfp").isNotNull, 2).otherwise(0).as("score"))
+      val nearScore = banded
+        .join(baseBands,
+          col("band") === col("bband") && col("key") === col("bkey"),
+          "left_outer")
+        .select(col("doc_id"), col("lang"),
+          when(col("bkey").isNotNull, 1).otherwise(0).as("score"))
+      exactScore.union(nearScore)
+        .groupBy("doc_id", "lang")
+        .agg(max("score").as("verdict"))
+    }.select("doc_id", "lang", "verdict")
       .orderBy("doc_id")
   }
 

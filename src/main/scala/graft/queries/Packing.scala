@@ -373,8 +373,7 @@ object Packing {
             lit(splitBuckets.toLong))).as("s_cluster"),
           splitName(pmod(Text.fp64(col("doc_id").cast("string")),
             lit(splitBuckets.toLong))).as("s_naive")))
-    val pairs = PlanMemo.publishedParquet(spark, dir, "d03_ngram_jaccard")(
-      Dedup.ngramJaccard(spark, dir)).select("d1", "d2")
+    val pairs = Dedup.pairsPublished(spark, dir)
     def leaked(scheme: String) = pairs
       .join(sp.select(col("doc_id").as("d1"), col(scheme).as("sa"))
         .hint("shuffle_hash"), "d1")

@@ -286,24 +286,18 @@ object Quantization {
   def streamingPqCodes(spark: SparkSession, dir: String): DataFrame = {
     val cand = candidates(spark, dir)
     val books = codebooks(spark, dir)
-    val path = s"$dir/embeddings.parquet"
-    val streamDir = TempArtifacts.scratchDir("graft_stream_pq")
-    TempArtifacts.stageTable(streamDir, path)
-    val schema = spark.read.parquet(path).schema
     // balancedStream: pq_encode over every subvector is the CPU-heavy
     // stage — single-row-group staging would run it on one core.
-    val ds = StreamingQueries.drainSession(spark, dir)
-    val stream = StreamingQueries.balancedStream(
-      ds.readStream.schema(schema).parquet(streamDir.toString)
-        .filter(col("vec_id") >= Similarity.nQueries))
-      .select(col("vec_id"), expr(
-        s"transform(embedding, x -> CAST(FLOOR(CAST(x AS DOUBLE) * ${Clustering.quantScale}) AS BIGINT))")
-        .as("q"))
-    val coded = withCodes(stream, books)
-      .select(col("vec_id") +:
-        (0 until m).map(s => col(s"code$s")) :+ col("qerr"): _*)
-    StreamingQueries.drainToMemory(spark, coded, "append", "w09", streamDir)
-      .orderBy("vec_id")
+    StreamingQueries.drainTable(spark, dir, "embeddings", "append", "w09") { vecs =>
+      val stream = StreamingQueries.balancedStream(
+          vecs.filter(col("vec_id") >= Similarity.nQueries))
+        .select(col("vec_id"), expr(
+          s"transform(embedding, x -> CAST(FLOOR(CAST(x AS DOUBLE) * ${Clustering.quantScale}) AS BIGINT))")
+          .as("q"))
+      withCodes(stream, books)
+        .select(col("vec_id") +:
+          (0 until m).map(s => col(s"code$s")) :+ col("qerr"): _*)
+    }.orderBy("vec_id")
   }
 
   // ---------------------------------------------------------------

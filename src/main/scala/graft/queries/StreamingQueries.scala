@@ -25,6 +25,13 @@ import org.apache.spark.sql.functions._
   *     memory sink here so the driver can hash-check the result like
   *     any batch query; the watermark bounds state for append-mode
   *     production use.
+  *
+  * [[drainTable]] is the one path from a corpus table to a stream to a
+  * drained memory frame (staging, schema, drain session, `ts`
+  * normalization, sink, cleanup): every table drain here, w09 and w10
+  * calls it with only its own query. w14 drains its memoized feed
+  * through [[drainToMemory]] directly, and the checkpointed
+  * kill/restart twins take caller-supplied sources.
   */
 object StreamingQueries {
 
@@ -67,12 +74,13 @@ object StreamingQueries {
     s
   }
 
-  /** Start `df` into a uniquely-named memory sink, drain it fully, then
-    * reclaim the staging dir, materialize the result and drop the sink's
-    * temp view. Per-invocation sink names (suffixed by the temp staging
-    * dir) mean two concurrent invocations in one session can never
-    * collide on the shared queryName/temp-view namespace, and dropping
-    * the view keeps the sink table from outliving the call.
+  /** Start `df` into a uniquely-named memory sink, drain it fully,
+    * materialize the result, then stop the query and reclaim its
+    * checkpoint dir and the sink's temp view — on failure too. The
+    * sink is named after the per-invocation checkpoint dir, so two
+    * concurrent invocations in one session can never collide on the
+    * shared queryName/temp-view namespace, and dropping the view keeps
+    * the sink table from outliving the call.
     *
     * `df` is expected to be built on [[drainSession]] — the memory
     * sink's temp view, the streaming query registry, and the shuffle
@@ -80,30 +88,50 @@ object StreamingQueries {
     * with 8-partition state stores (round-11 "next" 4) while the
     * parent session's conf is never touched.
     */
-  private[graft] def drainToMemory(spark: SparkSession, df: DataFrame,
-      mode: String, tag: String, streamDir: java.nio.file.Path): DataFrame = {
+  private[graft] def drainToMemory(
+      df: DataFrame, mode: String, tag: String): DataFrame = {
     val ss = df.sparkSession
-    val sink = tag + "_" +
-      streamDir.getFileName.toString.replaceAll("[^A-Za-z0-9]", "_")
     // Explicit tmpfs-backed checkpoint (round-11 verdict "next" 4):
     // without it Spark creates a temp checkpoint under java.io.tmpdir
     // (disk on this host) and every micro-batch pays offset/commit-log
     // + state-store fsyncs — fixed harness cost that dwarfed the toy-
     // scale work. Same lifecycle semantics (the recovery twins keep
-    // their own durable checkpoints); reclaimed with the staging dir.
-    val ckpt = TempArtifacts.scratchDir("graft_ckpt")
-    val q = df.writeStream.format("memory").queryName(sink)
-      .option("checkpointLocation", ckpt.toString)
-      .outputMode(mode).start()
-    try q.processAllAvailable()
-    finally {
-      q.stop()
-      TempArtifacts.deleteNow(streamDir)
+    // their own durable checkpoints).
+    val ckpt = TempArtifacts.scratchDir(s"graft_ckpt_$tag")
+    val sink = ckpt.getFileName.toString.replaceAll("[^A-Za-z0-9]", "_")
+    try {
+      val q = df.writeStream.format("memory").queryName(sink)
+        .option("checkpointLocation", ckpt.toString)
+        .outputMode(mode).start()
+      try q.processAllAvailable() finally q.stop()
+      ss.table(sink).localCheckpoint()
+    } finally {
+      ss.catalog.dropTempView(sink)
       TempArtifacts.deleteNow(ckpt)
     }
-    val out = ss.table(sink).localCheckpoint()
-    ss.catalog.dropTempView(sink)
-    out
+  }
+
+  /** The one path from a corpus table to a drained stream: stage
+    * `$dir/$table.parquet` (per-part symlinks, [[TempArtifacts.stageTable]]),
+    * read its schema, open the file stream on [[drainSession]] with
+    * `ts` normalized like [[Tables.events]] (a no-op for tables
+    * without a `ts` column), run `query` over it and drain the result
+    * to memory ([[drainToMemory]]). The staging dir is deleted when
+    * the drain ends, failed or not. Conf the stream reader must see
+    * (w05's nanos-as-long) is set on `spark` before the call.
+    */
+  private[graft] def drainTable(spark: SparkSession, dir: String,
+      table: String, mode: String, tag: String)
+      (query: DataFrame => DataFrame): DataFrame = {
+    val path = s"$dir/$table.parquet"
+    val streamDir = TempArtifacts.scratchDir(s"graft_stream_$tag")
+    try {
+      TempArtifacts.stageTable(streamDir, path)
+      val schema = spark.read.parquet(path).schema
+      val stream = Tables.normalizeTs(drainSession(spark, dir)
+        .readStream.schema(schema).parquet(streamDir.toString))
+      drainToMemory(query(stream), mode, tag)
+    } finally TempArtifacts.deleteNow(streamDir)
   }
 
   /** The streaming twin of [[Tables.balanced]]: a file-source
@@ -214,28 +242,17 @@ object StreamingQueries {
     * Same semantics as w01 (the oracle is w01's, counts only).
     */
   def streamingHourly(spark: SparkSession, dir: String): DataFrame = {
-    // set BEFORE drainSession(): every retrieval re-syncs the
+    // set BEFORE drainTable: every drainSession retrieval re-syncs the
     // parent's runtime conf into the child, so the stream reader
     // sees the toggle too
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val ds = drainSession(spark, dir)
-    val path = s"$dir/events.parquet"
-    // The file stream source requires a directory of plain files —
-    // stage symlinks (file or per-part; tables are read-only).
-    val streamDir = TempArtifacts.scratchDir("graft_stream")
-    TempArtifacts.stageTable(streamDir, path)
-    val schema = spark.read.parquet(path).schema
-    val raw = ds.readStream.schema(schema).parquet(streamDir.toString)
-    // Same physical-encoding tolerance as Tables.events: nanos-as-long
-    // and TIMESTAMP_NTZ both normalize to TimestampType — a watermark
-    // on an NTZ column is rejected by Structured Streaming.
-    val events = graft.Tables.normalizeTs(raw)
-    val agg = events
-      .withWatermark("ts", "1 hour")
-      .groupBy(window(col("ts"), "1 hour"))
-      .agg(count(lit(1)).as("events"))
-      .select(col("window.start").as("window_start"), col("events"))
-    drainToMemory(spark, agg, "complete", "w05", streamDir)
+    // drainTable's ts normalization matters here: a watermark on an
+    // NTZ column is rejected by Structured Streaming
+    drainTable(spark, dir, "events", "complete", "w05")(
+      _.withWatermark("ts", "1 hour")
+        .groupBy(window(col("ts"), "1 hour"))
+        .agg(count(lit(1)).as("events"))
+        .select(col("window.start").as("window_start"), col("events")))
       .orderBy("window_start")
   }
 
@@ -290,18 +307,11 @@ object StreamingQueries {
     * makes a hash oracle possible; at scale the same plan runs with a
     * watermark bounding the dedup state.
     */
-  def streamingDedup(spark: SparkSession, dir: String): DataFrame = {
-    val path = s"$dir/documents.parquet"
-    val streamDir = TempArtifacts.scratchDir("graft_stream_d")
-    TempArtifacts.stageTable(streamDir, path)
-    val schema = spark.read.parquet(path).schema
-    val dedup = drainSession(spark, dir)
-      .readStream.schema(schema).parquet(streamDir.toString)
-      .select(md5(col("text")).as("fingerprint"))
-      .dropDuplicates("fingerprint")
-    drainToMemory(spark, dedup, "append", "w07", streamDir)
+  def streamingDedup(spark: SparkSession, dir: String): DataFrame =
+    drainTable(spark, dir, "documents", "append", "w07")(
+      _.select(md5(col("text")).as("fingerprint"))
+        .dropDuplicates("fingerprint"))
       .orderBy("fingerprint")
-  }
 
   val streamingDedupSql: String =
     """SELECT DISTINCT md5(text) AS fingerprint FROM documents
@@ -386,25 +396,19 @@ object StreamingQueries {
     * sink swapped for a real one.
     */
   def streamingContamination(spark: SparkSession, dir: String): DataFrame = {
-    val path = s"$dir/documents.parquet"
-    val streamDir = TempArtifacts.scratchDir("graft_stream_c")
-    TempArtifacts.stageTable(streamDir, path)
-    val schema = spark.read.parquet(path).schema
     // static side built from the batch reader — tiny, broadcast
     val bench = Dedup.benchShingles(spark, dir)
-    val corpus = balancedStream(
-      drainSession(spark, dir)
-        .readStream.schema(schema).parquet(streamDir.toString)
-        .filter(col("doc_id") >= Dedup.contaminationBenchDocs))
-      .withColumn("toks",
-        expr("filter(split(lower(text), ' '), t -> t != '')"))
-      .select(col("doc_id"),
-        explode_outer(expr(Dedup.shingleFpsExpr)).as("sh"))
-      .filter(col("sh").isNotNull)
-    val overlap = corpus.join(broadcast(bench), "sh")
-      .groupBy("doc_id").agg(count(lit(1)).as("overlap"))
-    drainToMemory(spark, overlap, "complete", "w08", streamDir)
-      .orderBy("doc_id")
+    drainTable(spark, dir, "documents", "complete", "w08") { docs =>
+      balancedStream(
+          docs.filter(col("doc_id") >= Dedup.contaminationBenchDocs))
+        .withColumn("toks",
+          expr("filter(split(lower(text), ' '), t -> t != '')"))
+        .select(col("doc_id"),
+          explode_outer(expr(Dedup.shingleFpsExpr)).as("sh"))
+        .filter(col("sh").isNotNull)
+        .join(broadcast(bench), "sh")
+        .groupBy("doc_id").agg(count(lit(1)).as("overlap"))
+    }.orderBy("doc_id")
   }
 
   /** Oracle: the overlap half of d07's screen. */
@@ -434,18 +438,10 @@ object StreamingQueries {
     * columns, hash-gated against the batch oracle (arrival order
     * cannot matter for a stateless map).
     */
-  def streamingQualityGate(spark: SparkSession, dir: String): DataFrame = {
-    val path = s"$dir/documents.parquet"
-    val streamDir = TempArtifacts.scratchDir("graft_stream_q")
-    TempArtifacts.stageTable(streamDir, path)
-    val schema = spark.read.parquet(path).schema
-    val gated = Text.gopherMetrics(
-      drainSession(spark, dir)
-        .readStream.schema(schema).parquet(streamDir.toString))
-      .select("doc_id", "n_words", "gopher_pass")
-    drainToMemory(spark, gated, "append", "w11", streamDir)
+  def streamingQualityGate(spark: SparkSession, dir: String): DataFrame =
+    drainTable(spark, dir, "documents", "append", "w11")(
+      Text.gopherMetrics(_).select("doc_id", "n_words", "gopher_pass"))
       .orderBy("doc_id")
-  }
 
   /** Oracle: the verdict projection of t17's batch SQL. */
   val streamingQualityGateSql: String =
@@ -470,17 +466,10 @@ object StreamingQueries {
     * deterministic at gate scale.
     */
   def streamingHeavyHitters(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val path = s"$dir/documents.parquet"
-    val streamDir = TempArtifacts.scratchDir("graft_stream_hh")
-    TempArtifacts.stageTable(streamDir, path)
-    val schema = spark.read.parquet(path).schema
-    val sketch = drainSession(spark, dir)
-      .readStream.schema(schema).parquet(streamDir.toString)
-      .select(explode(Text.tokens(lower(col("text")))).as("w"))
-      .agg(expr(s"approx_top_k(w, ${Text.heavyHitterK}, " +
-        s"${Text.heavyHitterMaxTracked})").as("tk"))
-    val drained = drainToMemory(spark, sketch, "complete", "w13", streamDir)
+    val drained = drainTable(spark, dir, "documents", "complete", "w13")(
+      _.select(explode(Text.tokens(lower(col("text")))).as("w"))
+        .agg(expr(s"approx_top_k(w, ${Text.heavyHitterK}, " +
+          s"${Text.heavyHitterMaxTracked})").as("tk")))
     val sk = drained
       .select(explode(col("tk")).as("e"))
       .select(col("e.item").as("w"), col("e.count").as("est"))
@@ -562,14 +551,16 @@ object StreamingQueries {
     // ONCE into a session-lifetime scratch dir and reuse the file
     // across invocations (round-12 verdict "next" 7: every bench rep
     // re-paid the coalesce(1) write + join, ~0.5 s of pure fixture
-    // scaffolding; w14 was the only streaming entry staging data
-    // instead of symlinking). The per-drain streamDir below stays
-    // fresh so sink names never collide and drain cleanup semantics
-    // are unchanged; the feed dir is reclaimed at JVM exit. The dir
+    // scaffolding; w14 is the only streaming entry staging data
+    // instead of symlinking, so it drains through drainToMemory, not
+    // drainTable). The memo keeps the written frame's schema, so the
+    // stream needs no parquet read to learn it (the file stream
+    // source forces it nullable, as a read-back would); the feed dir
+    // is reclaimed at JVM exit. The dir
     // NAME is derived from the same (session, dir) key as the memo
     // (round-13 advice): an LRU eviction + rebuild overwrites the one
     // staging dir in place instead of leaking a copy per rebuild.
-    val feed = PlanMemo.cachedValue(spark, dir, "w14.feed") {
+    val (feed, schema) = PlanMemo.cachedValue(spark, dir, "w14.feed") {
       // pid in the name: identityHashCode is only unique within one
       // JVM, and the scratch root (/dev/shm) is host-shared — two
       // concurrent graft JVMs must never resolve the same feed dir
@@ -581,10 +572,8 @@ object StreamingQueries {
       val d = TempArtifacts.stableScratchDir(s"graft_stream_sg_feed_$key")
       val f = d.resolve("incoming.parquet").toString
       staged.coalesce(1).write.mode("overwrite").parquet(f)
-      f
+      (f, staged.schema)
     }
-    val streamDir = TempArtifacts.scratchDir("graft_stream_sg")
-    val schema = spark.read.parquet(feed).schema
     // balancedStream: the per-record quantize + pq_encode assignment
     // and the within-cell dot products are the CPU stage
     val incoming = balancedStream(
@@ -600,7 +589,7 @@ object StreamingQueries {
       max(when(col("cos") >= Dedup.semTheta, 1).otherwise(0)).as("is_dup"),
       min(when(col("cos") >= Dedup.semTheta, col("b_id"))).as("match_id"),
       max(col("cos")).as("best_cos"))
-    drainToMemory(spark, verdicts, "complete", "w14", streamDir)
+    drainToMemory(verdicts, "complete", "w14")
       .select("vec_id", "is_dup", "match_id", "best_cos")
       .orderBy("vec_id")
   }
@@ -681,23 +670,13 @@ object StreamingQueries {
     */
   def streamingFunnel(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val path = s"$dir/events.parquet"
-    val streamDir = TempArtifacts.scratchDir("graft_stream_f")
-    TempArtifacts.stageTable(streamDir, path)
-    val schema = spark.read.parquet(path).schema
-    val raw = drainSession(spark, dir)
-      .readStream.schema(schema).parquet(streamDir.toString)
-    // same physical-encoding tolerance as Tables.events (nanos-as-long,
-    // TIMESTAMP_NTZ, or plain timestamp all normalize to TimestampType)
-    val normalized = graft.Tables.normalizeTs(raw)
-    val ev = normalized
-      .select(col("user_id"), col("ts"), col("event_type"))
-      .as[FunnelMachine.FEvent]
-    val emitted = drainToMemory(spark,
-      FunnelMachine
-        .furthest(ev, Temporal.funnelSteps, Temporal.funnelWindowHours)
-        .toDF(),
-      "update", "w12", streamDir)
+    val emitted = drainTable(spark, dir, "events", "update", "w12") { ev =>
+      FunnelMachine.furthest(
+          ev.select(col("user_id"), col("ts"), col("event_type"))
+            .as[FunnelMachine.FEvent],
+          Temporal.funnelSteps, Temporal.funnelWindowHours)
+        .toDF()
+    }
     val fin = emitted
       .groupBy("user_id").agg(max("step").as("furthest"))
     val counts = Temporal.funnelSteps.zipWithIndex.map { case (s, i) =>
@@ -744,22 +723,16 @@ object StreamingQueries {
     */
   def streamingTokenAccounting(spark: SparkSession, dir: String): DataFrame = {
     val ntok = Text.bpeNtokUdf(Text.bpeMerges(spark, dir))
-    val path = s"$dir/documents.parquet"
-    val streamDir = TempArtifacts.scratchDir("graft_stream_tok")
-    TempArtifacts.stageTable(streamDir, path)
-    val schema = spark.read.parquet(path).schema
     // balancedStream: the per-occurrence byte split + encode is the
     // CPU stage
-    val occ = balancedStream(
-        drainSession(spark, dir)
-          .readStream.schema(schema).parquet(streamDir.toString))
-      .select(col("source"),
-        explode_outer(Text.bpeWords(col("text"))).as("w"))
-      .filter(col("w").isNotNull)
-      .select(col("source"), ntok(Text.byteSym(col("w"))).as("ntok"))
-    val agg = occ.groupBy("source")
-      .agg(count(lit(1)).as("n_words"), sum("ntok").as("n_tokens"))
-    drainToMemory(spark, agg, "complete", "w15", streamDir)
+    drainTable(spark, dir, "documents", "complete", "w15")(
+      balancedStream(_)
+        .select(col("source"),
+          explode_outer(Text.bpeWords(col("text"))).as("w"))
+        .filter(col("w").isNotNull)
+        .select(col("source"), ntok(Text.byteSym(col("w"))).as("ntok"))
+        .groupBy("source")
+        .agg(count(lit(1)).as("n_words"), sum("ntok").as("n_tokens")))
       .orderBy("source")
   }
 
@@ -816,17 +789,9 @@ object StreamingQueries {
     * in-scope fingerprints.
     */
   private[graft] def admissionLedger(spark: SparkSession, dir: String,
-      minDocId: Long, name: String): DataFrame = {
-    val path = s"$dir/documents.parquet"
-    val streamDir = TempArtifacts.scratchDir("graft_stream_adm")
-    TempArtifacts.stageTable(streamDir, path)
-    val schema = spark.read.parquet(path).schema
-    val agg = admissionAggOn(spark, dir,
-      drainSession(spark, dir)
-        .readStream.schema(schema).parquet(streamDir.toString),
-      minDocId)
-    admissionVerdict(drainToMemory(spark, agg, "complete", name, streamDir))
-  }
+      minDocId: Long, name: String): DataFrame =
+    admissionVerdict(drainTable(spark, dir, "documents", "complete", name)(
+      admissionAggOn(spark, dir, _, minDocId)))
 
   /** The admission chain's STATEFUL half on an arbitrary streaming
     * source of (doc_id, text, …) rows: stateless doc_id screen →

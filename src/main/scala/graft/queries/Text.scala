@@ -1400,33 +1400,36 @@ object Text {
     * O(distinct words), not O(tokens)); the trainer and every encode
     * dictionary run on this dictionary, whose cardinality is the
     * corpus VOCABULARY (~1e8 rows at 100 TB, not 1e12 tokens).
-    * Memoized eager: the train collect and each encode re-scan it.
+    * Counted on every call: the train collect and each encode re-scan
+    * it, so the artifact's memo is materialized before they fan out.
     * Byte-level (round-14): symbols are UTF-8 bytes, so punctuation,
     * digits, mixed case, and multi-byte scripts all train exactly —
     * no alphabet restriction.
     */
-  private[graft] def bpeVocab(spark: SparkSession, dir: String): DataFrame =
-    PlanMemo.cachedEager(spark, dir, "text.bpeVocab")(
-      // PUBLISHED artifact (round 19): the word-frequency dictionary
-      // is the canonical first artifact of every real BPE training
-      // pipeline — the word-count table the trainer consumes and the
-      // encode dictionaries map over. It is corpus-derived,
-      // vocabulary-sized, and consumed by a dozen operators (t21-t33
-      // dictionaries, the e-family token accounting, w15, p07), each
-      // of which previously re-ran the corpus tokenize+explode+groupBy
-      // to rebuild it. Content-fingerprint keyed like every artifact
-      // (a mutated corpus re-derives); build cost is visible as the
-      // first consumer's cold_sec/memo_cold in Bench. Values are
-      // byte-identical: the artifact is the same (word, freq, sym)
-      // rows round-tripped through parquet (string/long/string).
-      PlanMemo.publishedParquet(spark, dir, "bpe_vocab")(
-        Tables.documents(spark, dir)
-          .select(explode(bpeWords(col("text"))).as("word"))
-          .groupBy("word").agg(count(lit(1)).as("freq"))
-          .withColumn("sym", byteSym(col("word")))
-          // `word` rides along for t22's encode join; t21's pair
-          // counting reads only (freq, sym)
-          .select("word", "freq", "sym")))
+  private[graft] def bpeVocab(spark: SparkSession, dir: String): DataFrame = {
+    // PUBLISHED artifact (round 19): the word-frequency dictionary
+    // is the canonical first artifact of every real BPE training
+    // pipeline — the word-count table the trainer consumes and the
+    // encode dictionaries map over. It is corpus-derived,
+    // vocabulary-sized, and consumed by a dozen operators (t21-t33
+    // dictionaries, the e-family token accounting, w15, p07), each
+    // of which previously re-ran the corpus tokenize+explode+groupBy
+    // to rebuild it. Content-fingerprint keyed like every artifact
+    // (a mutated corpus re-derives); build cost is visible as the
+    // first consumer's cold_sec/memo_cold in Bench. Values are
+    // byte-identical: the artifact is the same (word, freq, sym)
+    // rows round-tripped through parquet (string/long/string).
+    val vocab = PlanMemo.publishedParquet(spark, dir, "bpe_vocab")(
+      Tables.documents(spark, dir)
+        .select(explode(bpeWords(col("text"))).as("word"))
+        .groupBy("word").agg(count(lit(1)).as("freq"))
+        .withColumn("sym", byteSym(col("word")))
+        // `word` rides along for t22's encode join; t21's pair
+        // counting reads only (freq, sym)
+        .select("word", "freq", "sym"))
+    vocab.count()
+    vocab
+  }
 
   /** The corpus's trained [[bpeRounds]]-merge tokenizer (t21's table):
     * trained once per (session, corpus) by [[bpeTrainAt]], whose memo
@@ -2783,6 +2786,15 @@ object Text {
       tbl.select("def_w8").head().getLong(0))
     (tbl.select("f", "w8"), defW8)
   }
+
+  /** t23's verdicts as its PUBLISHED artifact — the shipped
+    * classifier output the e-family quality stages (e01's keep set,
+    * e03's frozen base and increment, e08's chain) filter on instead
+    * of re-running the training and scoring chain per consumer.
+    */
+  private[graft] def qcPublished(spark: SparkSession, dir: String): DataFrame =
+    PlanMemo.publishedParquet(spark, dir, "t23_quality_classifier")(
+      qualityClassifier(spark, dir))
 
   def qualityClassifier(spark: SparkSession, dir: String): DataFrame = {
     val labels = qcLabels(spark, dir)

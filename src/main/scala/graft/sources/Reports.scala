@@ -401,8 +401,7 @@ object IoQueries {
       Exact.round4(
         sum(floor(col("quality_score") * 10000 + lit(0.5)).cast("long"))
           .cast("double") / (count(lit(1)) * 10000.0)).as("mean_quality"))
-    val pairs = PlanMemo.publishedParquet(spark, dir, "d03_ngram_jaccard")(
-      Dedup.ngramJaccard(spark, dir))
+    val pairs = Dedup.pairsPublished(spark, dir)
     val nearDup = pairs.agg(count(lit(1)).as("neardup_pairs"))
     val nearDocs = pairs.select(explode(array(col("d1"), col("d2"))).as("d"))
       .agg(countDistinct("d").as("neardup_docs"))

@@ -53,7 +53,8 @@ class CorpusRewriteSpec extends AnyFunSuite {
     // corpus at a new path, so no plan cached over the old content can
     // be substituted into it
     val fresh = copyOf(dir)
-    val expected = names.map(answer(spark.newSession(), fresh, _))
+    val freshSession = spark.newSession()
+    val expected = names.map(answer(freshSession, fresh, _))
     // t14's ranking moves with the corpus; t27's answer is a band
     // verdict that holds on both corpora, so it must merely still hold
     assert(expected.head !== before.head, "the rewrite must change t14")
@@ -61,5 +62,14 @@ class CorpusRewriteSpec extends AnyFunSuite {
       assert(after(i) === expected(i),
         s"${names(i)}: the rewritten corpus was served a stale answer")
     }
+    // t27's bands cannot see a stale dictionary behind them, so compare
+    // the encode dictionaries t27 memoized on both sides; neither may
+    // be rebuilt here
+    def dicts(s: SparkSession, d: String) =
+      PlanMemo.cached(s, d, "text.bpeBothDicts")(
+        fail("t27 must already have memoized its dictionaries"))
+        .collect().map(_.toString).toSeq.sorted
+    assert(dicts(spark, dir) === dicts(freshSession, fresh),
+      "the rewritten corpus kept the old t27 encode dictionaries")
   }
 }

@@ -114,9 +114,15 @@ class PlanMemoSpec extends AnyFunSuite {
       builds += 1
       spark.range(3).toDF("v").withColumn("b", lit(builds))
     }
-    assert(read().count() === 3)
-    assert(read().count() === 3)
+    val first = read()
+    assert(first.count() === 3)
+    assert(read() eq first,
+      "a second call in one session must return the memoized frame")
     assert(builds === 1, "unchanged corpus must reuse the published artifact")
+    // a new session misses the memo but reads the published file
+    assert(PlanMemo.publishedParquet(spark.newSession(), corpus.toString,
+        "memospec_artifact")(fail("a new session must not rebuild"))
+      .count() === 3)
     // mutate the corpus in place: same dir, different content
     spark.range(20).toDF("v")
       .write.mode("overwrite").parquet(s"$corpus/t.parquet")

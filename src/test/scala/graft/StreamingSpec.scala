@@ -409,6 +409,39 @@ class StreamingSpec extends AnyFunSuite {
     assert(e.getMessage.contains("no parquet parts staged"))
   }
 
+  test("a drainTable whose query throws cleans up and the next drain still answers") {
+    val tag = "drainfail"
+    val root = {
+      val probe = TempArtifacts.scratchDir("graft_root_probe")
+      TempArtifacts.deleteNow(probe)
+      probe.getParent
+    }
+    def leftoverDirs() = {
+      val ls = java.nio.file.Files.list(root)
+      try ls.toArray.map(_.toString).filter(_.contains(tag)).toSeq
+      finally ls.close()
+    }
+    val ds = StreamingQueries.drainSession(spark, sfDir)
+    def leftoverViews() =
+      ds.catalog.listTables().collect().map(_.name).filter(_.contains(tag))
+        .toSeq
+    val before = StreamingQueries.streamingDedup(spark, sfDir).collect()
+    val e = intercept[Exception] {
+      StreamingQueries.drainTable(spark, sfDir, "documents", "append", tag)(
+        _.select(expr("if(doc_id >= 0, raise_error('drain failed'), doc_id)")
+          .as("v")))
+    }
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(t => Option(t.getMessage).exists(_.contains("drain failed"))),
+      s"the query's own error must propagate, got: $e")
+    assert(leftoverDirs().isEmpty, "staging or checkpoint dir left behind")
+    assert(leftoverViews().isEmpty, "the sink's temp view outlived the drain")
+    assert(ds.streams.active.isEmpty, "the failed drain's query is still active")
+    val after = StreamingQueries.streamingDedup(spark, sfDir).collect()
+    assert(after.nonEmpty)
+    assert(after.map(_.toString).toSeq === before.map(_.toString).toSeq)
+  }
+
   test("e06 streamed ingest equals batch e03 on the same increment, row-for-row") {
     // the composition contract: the w16 admission gate's kept set IS
     // the increment the append consumes — the streamed chain (state

@@ -9,7 +9,14 @@
 #      (query, corpus) and no memo key has a conf to carry; and no
 #      src/main file but PlanMemo.scala names `corpusFingerprint`, so
 #      the corpus version of every memo and artifact is decided in one
-#      place, never spelled into a key by a caller
+#      place, never spelled into a key by a caller; and no src/main
+#      file but Tables.scala, PlanMemo.scala, StreamingQueries.scala and
+#      the six dev mains calls `read.parquet` or `readStream`, no
+#      src/main site wraps `publishedParquet` in `cached`/`cachedEager`
+#      (it is the artifact's session memo), and no artifact name passed
+#      to `publishedParquet`/`publishedParquetBy` is spelled at more
+#      than one src/main call site, so each parquet source has one
+#      owner: tables, published artifacts, drains
 #   2. full scalatest suite
 #   3. Verify + DuckDB oracle compare at sf0.01 (the correctness gate)
 #   4. Bench at sf0.1 (min-of-3) -> bench_local.json
@@ -33,6 +40,27 @@ if grep -rnE 'sys\.env|System\.getenv' src/main | grep -vE "$dev_mains"; then
 fi
 if grep -rn 'corpusFingerprint' src/main | grep -v '/PlanMemo\.scala:'; then
   echo "round_check: corpus versioning outside PlanMemo (above)" >&2
+  exit 1
+fi
+readers='/(Tables|PlanMemo|StreamingQueries|Bench|Verify|Probe|GenData|KernelBench|Explain)\.scala:'
+if grep -rnE 'read\.parquet|readStream' src/main | grep -vE "$readers" \
+    | grep -vE '^[^:]+:[0-9]+:\s*(\*|//)'; then
+  echo "round_check: a parquet reader outside its owners (above)" >&2
+  exit 1
+fi
+if grep -rlzP 'cached(Eager)?\([^()]*\)\s*[({]\s*(//[^\n]*\n\s*)*(PlanMemo\.)?publishedParquet' \
+    src/main | grep -v '/PlanMemo\.scala$'; then
+  echo "round_check: a memo wraps publishedParquet, which is already" \
+    "the artifact's session memo (files above)" >&2
+  exit 1
+fi
+artifact_sites=$(grep -rozP \
+    'publishedParquet(By)?\([^,]*,[^,]*,\s*\K"[^"]+"' src/main | tr '\0' '\n')
+dup_artifacts=$(cut -d: -f2 <<<"$artifact_sites" | sort | uniq -d)
+if [[ -n "$dup_artifacts" ]]; then
+  grep -F "$dup_artifacts" <<<"$artifact_sites"
+  echo "round_check: an artifact is spelled at more than one call site" \
+    "(above) — give it one owning function" >&2
   exit 1
 fi
 
