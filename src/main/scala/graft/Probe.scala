@@ -37,75 +37,6 @@ object Probe {
     }
 
     what match {
-      case "exnodes" =>
-        // real exchange NODES in the executed tree (a cached
-        // relation's embedded build plan prints in toString but is
-        // not part of the tree) — warm, like the PlanAuditSpec pin
-        val name = sys.env.getOrElse("SPARK_GRAFT_QUERY", "d19_prefix_jaccard")
-        SparkEntry.queries(name)(spark, dir)
-          .write.format("noop").mode("overwrite").save()
-        val plan = SparkEntry.queries(name)(spark, dir)
-          .queryExecution.executedPlan
-        def countNodes(p: org.apache.spark.sql.execution.SparkPlan): Map[String, Int] = {
-          val b = scala.collection.mutable.Map.empty[String, Int].withDefaultValue(0)
-          def walk(n: org.apache.spark.sql.execution.SparkPlan): Unit = {
-            val nm = n.getClass.getSimpleName
-            if (nm.contains("Exchange") || nm.contains("InMemoryTableScan"))
-              b(nm) += 1
-            n.children.foreach(walk)
-            n match {
-              case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-                walk(a.executedPlan)
-              case _ =>
-            }
-          }
-          walk(p)
-          b.toMap
-        }
-        println(s"PROBE exnodes $name ${countNodes(plan)}")
-      case "bpeprod" =>
-        // t30 production-train accounting: merges learned vs target,
-        // exhaustion regime, trainer wall-time (dictionary collect +
-        // in-memory loop, isolated from the corpus vocab pass), and
-        // the rank-encode dictionary pass — the SCALE.md numbers
-        Text.bpeVocab(spark, dir).count() // warm the corpus pass
-        val t0 = System.nanoTime()
-        val prod = Text.bpeProdTrain(spark, dir)
-        val trainSec = (System.nanoTime() - t0) / 1e9
-        val t1 = System.nanoTime()
-        run(Text.bpeEncodeDictUnder(prod.merges, Text.bpeVocab(spark, dir),
-          "ntok_prod"))
-        val encSec = (System.nanoTime() - t1) / 1e9
-        println(f"PROBE bpeprod merges=${prod.merges.length} " +
-          f"target=${Text.bpeProdVocabTarget - 256} " +
-          f"exhausted=${prod.exhausted} " +
-          f"tokens=${prod.tokensInitial}->${prod.tokensAtCheckpoint}" +
-          f"->${prod.tokensFinal} train=$trainSec%.2f s " +
-          f"encodeDict=$encSec%.2f s")
-      case "qcagree" =>
-        // ml10 calibration diagnosis: raw threshold-pred agreement vs
-        // rate-matched (each model selecting its own top half of the
-        // held-out fifth) between t23 and the spark.ml LR twin
-        import org.apache.spark.sql.functions._
-        val t23 = Text.qualityClassifier(spark, dir)
-          .filter(col("heldout") === 1)
-          .select(col("doc_id"), col("score8"), col("pred").as("p23"))
-          .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2)))
-        val lr = MlQueries.qcLrPreds(spark, dir)
-          .select(col("doc_id"),
-            org.apache.spark.ml.functions.vector_to_array(col("rawPrediction"))
-              .getItem(1).as("raw"),
-            col("prediction").cast("int").as("plr"))
-          .collect().map(r => (r.getLong(0), r.getDouble(1), r.getInt(2)))
-          .map(t => t._1 -> (t._2, t._3)).toMap
-        val n = t23.length
-        val raw = t23.count { case (id, _, p) => lr(id)._2 == p }.toDouble / n
-        val k = t23.count(_._3 == 1) // match t23's own selection rate
-        val sel23 = t23.sortBy(t => (-t._2, t._1)).take(k).map(_._1).toSet
-        val selLr = t23.map(t => (t._1, lr(t._1)._1))
-          .sortBy(t => (-t._2, t._1)).take(k).map(_._1).toSet
-        val rate = (sel23 & selLr).size.toDouble / math.max(k, 1)
-        println(f"PROBE qcagree n=$n raw=$raw%.3f k=$k rateMatched=$rate%.3f")
       case "d11parts" =>
         import org.apache.spark.sql.functions._
         val docs = Tables.documents(spark, dir)

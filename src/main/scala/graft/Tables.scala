@@ -16,8 +16,17 @@ import org.apache.spark.unsafe.types.UTF8String
   */
 object Tables {
 
-  private def read(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+  /** The reader of table `name`, one per (session, corpus version):
+    * each `spark.read.parquet` runs a schema-inference Spark job
+    * (~0.1 s for the sf0.1 documents on a 4-core host), so a reader
+    * built once serves every later call in the session. A corpus
+    * rewritten in place gets a fresh reader ([[PlanMemo]]'s corpus
+    * version is part of the key). Unpersisted: it is a plan, not data.
+    */
+  private[graft] def read(spark: SparkSession, dir: String, name: String)
+      : DataFrame =
+    PlanMemo.cachedValue(spark, dir, s"tables.$name")(
+      spark.read.parquet(s"$dir/$name.parquet"))
 
   def region(spark: SparkSession, dir: String): DataFrame   = read(spark, dir, "region")
   def nation(spark: SparkSession, dir: String): DataFrame   = read(spark, dir, "nation")
@@ -93,10 +102,15 @@ object Tables {
     } catch { case _: Exception => enough }
   }
 
+  /** Memoized like [[read]]: the file listing and footer reads of
+    * [[balanced]] also run once per session.
+    */
   def documents(spark: SparkSession, dir: String): DataFrame =
-    balanced(read(spark, dir, "documents"))
+    PlanMemo.cachedValue(spark, dir, "tables.documents.balanced")(
+      balanced(read(spark, dir, "documents")))
   def embeddings(spark: SparkSession, dir: String): DataFrame =
-    balanced(read(spark, dir, "embeddings"))
+    PlanMemo.cachedValue(spark, dir, "tables.embeddings.balanced")(
+      balanced(read(spark, dir, "embeddings")))
 
   /** `events` carries a timestamp column whose parquet physical
     * encoding has varied across data generations: TIMESTAMP(NANOS)

@@ -1311,7 +1311,15 @@ object Dedup {
         .select("band", "key").distinct()
     }
 
-  def incrementalDedup(spark: SparkSession, dir: String): DataFrame = {
+  def incrementalDedup(spark: SparkSession, dir: String): DataFrame =
+    incrementalVerdicts(spark, dir)(identity)
+
+  /** d13/d17's verdicts. `prefilter` runs over the increment's
+    * (doc_id, fp) rows before the exact layer's confirm join: d13
+    * passes them all, d17 drops the Bloom sketch's certain misses.
+    */
+  private def incrementalVerdicts(spark: SparkSession, dir: String)
+      (prefilter: DataFrame => DataFrame): DataFrame = {
     val docs = Tables.documents(spark, dir)
     val splitId = incrementalSplitId(spark, dir)
     val isNew = col("doc_id") >= splitId
@@ -1322,8 +1330,8 @@ object Dedup {
     // rebalance
     val fp = expr("optimizer_barrier(md5(text))")
     val baseHashes = baseFpSetArtifact(spark, dir)
-    val exact = docs.filter(isNew)
-      .select(col("doc_id"), fp.as("fp"))
+    val exact = prefilter(docs.filter(isNew)
+      .select(col("doc_id"), fp.as("fp")))
       // shuffle_hash: the BASE side's artifacts are O(corpus) — the
       // increment is the small side, but a left-semi must build the
       // right, so the meeting has to be a shuffle, never a broadcast
@@ -2075,42 +2083,14 @@ object Dedup {
   val bloomFpp = 0.03
 
   def bloomIncrementalDedup(spark: SparkSession, dir: String): DataFrame = {
-    val docs = Tables.documents(spark, dir)
-    val splitId = incrementalSplitId(spark, dir)
-    val isNew = col("doc_id") >= splitId
-    val fp = expr("optimizer_barrier(md5(text))")
-    // the persisted increment artifacts: base hash set (the shared
-    // PUBLISHED parquet — round-18: one on-disk artifact for
-    // d13/d17/w10 instead of a per-rep md5+distinct base pass) + its
-    // sketch (doc_ids are dense from 0, so splitId IS the base
-    // cardinality)
-    val baseHashes = baseFpSetArtifact(spark, dir)
+    // the sketch of the published base hash set (doc_ids are dense
+    // from 0, so the split id IS the base cardinality)
     val filter = PlanMemo.cachedValue(spark, dir, "dedup.baseBloom") {
-      baseHashes.stat.bloomFilter("fp", math.max(splitId, 1L), bloomFpp)
+      baseFpSetArtifact(spark, dir).stat.bloomFilter("fp",
+        math.max(incrementalSplitId(spark, dir), 1L), bloomFpp)
     }
-    val exact = docs.filter(isNew)
-      .select(col("doc_id"), fp.as("fp"))
-      .filter(BloomProbe.probe(col("fp"), filter)) // map-side prune
-      // shuffle_hash: base hash set is O(corpus) — see d13
-      .join(baseHashes.hint("shuffle_hash"), Seq("fp"), "left_semi")
-      .select(col("doc_id")).withColumn("exact_dup", lit(1))
-    val bands = lshBands(spark, dir)
-    val baseBands = baseBandSetArtifact(spark, dir)
-    val near = bands.filter(col("doc_id") >= splitId)
-      .join(baseBands.hint("shuffle_hash"), Seq("band", "key"), "left_semi")
-      .select("doc_id").distinct()
-      .withColumn("near_dup", lit(1))
-    docs.filter(isNew).select("doc_id", "lang")
-      // the increment is PROPORTIONAL to the corpus (a fraction,
-      // not a bound) — its verdict frames shuffle as well
-      .join(exact.hint("shuffle_hash"), Seq("doc_id"), "left")
-      .join(near.hint("shuffle_hash"), Seq("doc_id"), "left")
-      .withColumn("verdict",
-        when(col("exact_dup") === 1, 2)
-          .when(col("near_dup") === 1, 1)
-          .otherwise(0))
-      .select("doc_id", "lang", "verdict")
-      .orderBy("doc_id")
+    incrementalVerdicts(spark, dir)(
+      _.filter(BloomProbe.probe(col("fp"), filter))) // map-side prune
   }
 
   // ---------------------------------------------------------------

@@ -499,7 +499,8 @@ object MlQueries {
     * calibrate differently — t23 cuts at score 0 (no intercept), LR
     * fits one — and MEASURED raw agreement swings 0.62→0.83→0.98
     * across sf0.001→0.1 on intercept placement alone, while
-    * rate-matched agreement holds 0.88–0.98 (Probe `qcagree`). The
+    * rate-matched agreement (the `agree / n` below) holds 0.88–0.98
+    * over the same range. The
     * selection is also the decision a curation pipeline actually
     * ships ("keep the top q%"). Floor 0.8 sits under the measured
     * minimum (0.878 at sf0.01) the way every ML band here does.

@@ -77,18 +77,16 @@ object Pipeline {
     Tables.documents(spark, dir)
       .join(kept.hint("shuffle_hash"), Seq("doc_id"), "left_semi")
 
-  /** Token-id sequences (doc_id, ids) of `docs`, the [[keptDocs]] rows
-    * its callers (e02, e04) already hold — reusing their frame spares
-    * the schema-inference job a second documents read costs. Memoized:
-    * each plan reads the sequences twice (counts + ids); without the
-    * persist Catalyst duplicates the whole dictionary-join subtree per
-    * reference — exactly the re-execution class the zipf sweep found
-    * in the DuckDB oracles.
+  /** Token-id sequences (doc_id, ids) of the [[keptDocs]] rows.
+    * Memoized: each plan reads the sequences twice (counts + ids);
+    * without the persist Catalyst duplicates the whole dictionary-join
+    * subtree per reference — exactly the re-execution class the zipf
+    * sweep found in the DuckDB oracles.
     */
-  private def keptSeqs(
-      spark: SparkSession, dir: String, docs: DataFrame): DataFrame =
+  private def keptSeqs(spark: SparkSession, dir: String): DataFrame =
     PlanMemo.cached(spark, dir, "pipeline.keptSeqs")(
-      Text.bpeTokenIdSeqsOn(spark, dir, docs))
+      Text.bpeTokenIdSeqsOn(spark, dir,
+        docRowsOf(spark, dir, keptDocs(spark, dir))))
 
   def trainingPipeline(spark: SparkSession, dir: String): DataFrame = {
     val docs = docRowsOf(spark, dir, keptDocs(spark, dir))
@@ -201,7 +199,7 @@ object Pipeline {
     // runs; PipelineSpec's conservation test cross-pins the two
     // paths row-for-row) instead of calling trainingPipeline and
     // paying the t24 dictionary join + per-doc reassembly twice.
-    val seqs = keptSeqs(spark, dir, docs)
+    val seqs = keptSeqs(spark, dir)
     // sorted = false: the only consumer is the boundary-slice explode
     // + (lang, chunk_id) groupBy below, which collects segments into
     // an array_sort — order-insensitive by construction (guide §2.4)
@@ -752,11 +750,7 @@ object Pipeline {
     PlanMemo.publishedParquet(spark, dir, "pipeline_base_totals") {
       val dict = Text.bpeEncodeDictUnder(
         Text.bpeMerges(spark, dir), Text.bpeVocab(spark, dir))
-      docRowsOf(spark, dir, baseKeptDocs(spark, dir))
-        .select(col("lang"), explode_outer(Text.bpeWords(col("text")))
-          .as("word"))
-        .filter(col("word").isNotNull)
-        .groupBy("lang", "word").agg(count(lit(1)).as("cnt"))
+      Text.wordCounts(docRowsOf(spark, dir, baseKeptDocs(spark, dir)), "lang")
         .join(dict.hint("shuffle_hash"), "word")
         .groupBy("lang")
         .agg(sum(col("cnt") * col("ntok")).cast("long").as("base_tok"))
@@ -852,11 +846,7 @@ object Pipeline {
     // raw occurrences on a word-keyed exchange, zipf-skew-exposed.
     // The 3-exchange spelling with partial agg stands (guide §2.3
     // "aggregate before you shuffle" outranks one fewer exchange).
-    val incCounts = incDocs
-      .select(col("doc_id"), explode_outer(Text.bpeWords(col("text")))
-        .as("word"))
-      .filter(col("word").isNotNull)
-      .groupBy("doc_id", "word").agg(count(lit(1)).as("cnt"))
+    val incCounts = Text.wordCounts(incDocs, "doc_id")
       .join(dict.hint("shuffle_hash"), "word")
       .groupBy("doc_id")
       .agg(sum(col("cnt") * col("ntok")).cast("long").as("nt"))
@@ -1351,7 +1341,7 @@ object Pipeline {
     */
   def mixturePlan(spark: SparkSession, dir: String): DataFrame = {
     val docs = docRowsOf(spark, dir, keptDocs(spark, dir))
-    val seqs = keptSeqs(spark, dir, docs)
+    val seqs = keptSeqs(spark, dir)
     val perSrc = docs.select(col("source"), col("doc_id"))
       .join(seqs.select(col("doc_id"), size(col("ids")).as("nt"))
         .hint("shuffle_hash"), Seq("doc_id"), "left")

@@ -127,7 +127,7 @@ object StreamingQueries {
     val streamDir = TempArtifacts.scratchDir(s"graft_stream_$tag")
     try {
       TempArtifacts.stageTable(streamDir, path)
-      val schema = spark.read.parquet(path).schema
+      val schema = Tables.read(spark, dir, table).schema
       val stream = Tables.normalizeTs(drainSession(spark, dir)
         .readStream.schema(schema).parquet(streamDir.toString))
       drainToMemory(query(stream), mode, tag)

@@ -1807,29 +1807,59 @@ object Text {
       spark: SparkSession, dir: String): BpeDriverTrain =
     bpeTrainAt(spark, dir, bpeProdVocabTarget - 256, bpeLargeVocabTarget - 256)
 
-  def bpeTrainLarge(spark: SparkSession, dir: String): DataFrame = {
-    val rounds = bpeLargeVocabTarget - 256
-    val res = bpeLargeTrain(spark, dir)
-    val artifact = bpeMerges(spark, dir)
+  /** One gate of the 1k/32k pairs: the `train` under test, the table
+    * `ref` it must extend, and the `name` its memos carry. The large
+    * gate (t25/t27/t29) checks [[bpeLargeTrain]] against t21's
+    * 12-merge table; the production gate (t30/t31/t32) checks
+    * [[bpeProdTrain]] against the 1k table. `extended`: the train
+    * learned merges past its reference (false when both exhausted at
+    * the same table, as on the sf0.001 fixture).
+    */
+  private final case class BpeGate(name: String, train: BpeDriverTrain,
+      ref: Seq[(Int, String, String, Long)]) {
+    def extended: Boolean = train.merges.length > ref.length
+  }
+
+  private def largeGate(spark: SparkSession, dir: String): BpeGate =
+    BpeGate("large", bpeLargeTrain(spark, dir), bpeMerges(spark, dir))
+
+  private def prodGate(spark: SparkSession, dir: String): BpeGate =
+    BpeGate("prod", bpeProdTrain(spark, dir), bpeLargeTrain(spark, dir).merges)
+
+  /** t25/t30's band set over a gate's train: the target (or
+    * exhaustion) is reached, the reference table is an exact prefix
+    * (column `prefixCol`), winning counts never rise, every merged
+    * symbol is hex bytes, and the token totals fall from the byte
+    * floor to the checkpoint and — when `strict` — on to the end
+    * (otherwise the end equals the checkpoint).
+    */
+  private def bpeTrainBands(spark: SparkSession, g: BpeGate, rounds: Int,
+      prefixCol: String, strict: Boolean): DataFrame = {
+    val res = g.train
     val m = res.merges
     val counts = m.map(_._4)
     import spark.implicits._
     Seq((
       m.length == rounds || res.exhausted,
-      m.take(bpeRounds) == artifact.toList,
+      m.take(g.ref.length) == g.ref.toList,
       counts.zip(counts.drop(1)).forall { case (a, b) => a >= b },
       m.forall { case (_, l, r, _) => (l + r).matches("^([0-9A-F]{2})+$") },
-      res.tokensFinal < res.tokensAtCheckpoint &&
+      (if (strict) res.tokensFinal < res.tokensAtCheckpoint
+       else res.tokensFinal == res.tokensAtCheckpoint) &&
         res.tokensAtCheckpoint < res.tokensInitial &&
         res.tokensFinal >= 0L))
-      .toDF("band_vocab_reached", "band_prefix_agrees",
+      .toDF("band_vocab_reached", prefixCol,
         "band_counts_nonincreasing", "band_wellformed", "band_compression")
   }
 
-  val bpeTrainLargeSql: String =
-    """SELECT TRUE AS band_vocab_reached, TRUE AS band_prefix_agrees,
-      |  TRUE AS band_counts_nonincreasing, TRUE AS band_wellformed,
-      |  TRUE AS band_compression""".stripMargin
+  private def bpeTrainBandsSql(prefixCol: String): String =
+    s"""SELECT TRUE AS band_vocab_reached, TRUE AS $prefixCol,
+       |  TRUE AS band_counts_nonincreasing, TRUE AS band_wellformed,
+       |  TRUE AS band_compression""".stripMargin
+
+  def bpeTrainLarge(spark: SparkSession, dir: String): DataFrame =
+    bpeTrainBands(spark, largeGate(spark, dir), bpeLargeVocabTarget - 256,
+      "band_prefix_agrees", strict = true)
 
   // ---------------------------------------------------------------
   /** REFERENCE encode of ONE byte-symbol string under a frozen merge
@@ -2055,52 +2085,46 @@ object Text {
     *     vocabulary (the fertility win a bigger vocab exists to buy);
     *   - nonempty: the dictionary is not degenerate.
     */
-  def bpeEncodeLarge(spark: SparkSession, dir: String): DataFrame = {
-    val vocab = bpeVocab(spark, dir)
-    val dictL = bpeEncodeDictUnder(bpeLargeTrain(spark, dir).merges, vocab,
-      "ntok_large")
-    val dict12 = bpeEncodeDictUnder(bpeMerges(spark, dir), vocab)
-    val both = PlanMemo.cached(spark, dir, "text.bpeBothDicts")(
+  def bpeEncodeLarge(spark: SparkSession, dir: String): DataFrame =
+    bpeEncodeGate(spark, dir, largeGate(spark, dir), improvedRequired = true)
+
+  /** t27/t31's band driver over a gate: the vocabulary ⋈ new-table ⋈
+    * reference-table encode dictionaries (one memo per gate) feed ONE
+    * aggregation — word-bounds violations + nonempty — that runs
+    * concurrently with the per-language corpus accounting pass
+    * ([[Par.jobs]]). `improvedRequired` makes per_lang_improved
+    * demand a strict per-language drop.
+    */
+  private def bpeEncodeGate(spark: SparkSession, dir: String, g: BpeGate,
+      improvedRequired: Boolean): DataFrame = {
+    val both = PlanMemo.cached(spark, dir, s"text.bpeEncodeDicts:${g.name}") {
+      val vocab = bpeVocab(spark, dir)
       vocab
         .withColumn("n_bytes", length(regexp_replace(col("sym"), " ", "")) / 2)
-        .join(dictL.hint("shuffle_hash"), "word")
-        .join(dict12.hint("shuffle_hash"), "word"))
-    bpeEncodeBands(spark, dir, both, "ntok_large", "ntok",
-      improvedRequired = true)
-  }
-
-  /** t27/t31's shared band computation — same restructuring rationale
-    * as [[bpeIdsBands]]: word-bounds violations + nonempty fuse into
-    * ONE aggregation over the cached dictionary pair (was a count
-    * plus a separate limit(1).count()), run concurrently with the
-    * per-language corpus accounting pass ([[Par.jobs]]). Band VALUES
-    * unchanged.
-    */
-  private[graft] def bpeEncodeBands(
-      spark: SparkSession, dir: String, both: DataFrame,
-      newCol: String, refCol: String, improvedRequired: Boolean)
-      : DataFrame = {
+        .join(bpeEncodeDictUnder(g.train.merges, vocab, "ntok_new")
+          .hint("shuffle_hash"), "word")
+        .join(bpeEncodeDictUnder(g.ref, vocab, "ntok_ref")
+          .hint("shuffle_hash"), "word")
+    }
     val violF = () => {
       val r = both.agg(
-        sum(when(col(newCol) < 1 || col(newCol) > col("n_bytes") ||
-          col(newCol) > col(refCol), 1L).otherwise(0L)).as("viol"),
+        sum(when(col("ntok_new") < 1 || col("ntok_new") > col("n_bytes") ||
+          col("ntok_new") > col("ntok_ref"), 1L).otherwise(0L)).as("viol"),
         count(lit(1)).as("nw")).head()
       (r.getLong(0), r.getLong(1))
     }
-    val perLangF = () => Tables.documents(spark, dir)
-      .select(col("lang"), explode(bpeWords(col("text"))).as("word"))
-      .groupBy("lang", "word").agg(count(lit(1)).as("cnt"))
+    val perLangF = () => wordCounts(Tables.documents(spark, dir), "lang")
       .join(both.hint("shuffle_hash"), "word")
       .groupBy("lang").agg(
-        sum(col("cnt") * col(newCol)).as("tl"),
-        sum(col("cnt") * col(refCol)).as("tref"))
+        sum(col("cnt") * col("ntok_new")).as("tl"),
+        sum(col("cnt") * col("ntok_ref")).as("tref"))
       .collect()
     // NO eager count() on `both` here (measured, round 19): its build
     // is a cheap expression-only dictionary join, and a serial
     // materialization pass cost MORE than the two jobs racing on it
     // (t27 solo @32: 1.71 s racing vs 1.87 s with count(); @8 0.88 vs
     // 1.32) — the cachedEager discipline pays off only when the
-    // shared build is expensive (bpeIdsBands' rank-encode dict).
+    // shared build is expensive (bpeIdsGate's rank-encode dict).
     val res = Par.jobs[Any](violF, perLangF)
     val (viol, nWords) = res(0).asInstanceOf[(Long, Long)]
     val perLang = res(1).asInstanceOf[Array[org.apache.spark.sql.Row]]
@@ -2114,7 +2138,8 @@ object Text {
       .toDF("band_word_bounds", "band_per_lang_improved", "band_nonempty")
   }
 
-  val bpeEncodeLargeSql: String =
+  /** t27 and t31's oracle: the constant-TRUE band row. */
+  val bpeEncodeGateSql: String =
     """SELECT TRUE AS band_word_bounds, TRUE AS band_per_lang_improved,
       |  TRUE AS band_nonempty""".stripMargin
 
@@ -2144,27 +2169,21 @@ object Text {
     * Scale shape: every check is a dictionary-sized join or a
     * doc-keyed integer aggregation — no id arrays ever shuffle.
     */
-  def bpeIdsLarge(spark: SparkSession, dir: String): DataFrame = {
-    val vocab = bpeVocab(spark, dir)
-    val large = bpeLargeTrain(spark, dir).merges
-    val dict = PlanMemo.cached(spark, dir, "text.idsLargeDict")(
-      bpeIdsDictUnder(large, vocab))
-    bpeIdsBands(spark, dir, dict,
-      bpeEncodeDictUnder(large, vocab, "ntok_large"), "ntok_large",
-      bpeEncodeDictUnder(bpeMerges(spark, dir), vocab), "ntok",
-      bpeLargeVocabTarget)
-  }
+  def bpeIdsLarge(spark: SparkSession, dir: String): DataFrame =
+    bpeIdsGate(spark, dir, largeGate(spark, dir), bpeLargeVocabTarget)
 
-  /** t29/t32's shared band computation, restructured for job shape
-    * (optimization guide §1.2: remove redundant passes before tuning
-    * anything else). The original spelling ran FIVE sequential
-    * actions, recomputing the (doc_id, word, cnt) explode twice and
-    * the per-doc totals join twice; here
+  /** t29/t32's band driver over a gate (ids must lie in
+    * [0, `vocabBound`)), restructured for job shape (optimization
+    * guide §1.2: remove redundant passes before tuning anything
+    * else). The original spelling ran FIVE sequential actions,
+    * recomputing the (doc_id, word, cnt) explode twice and the per-doc
+    * totals join twice; here
     *   - rt violations + count mismatches + nonempty fuse into ONE
     *     aggregation over the id dictionary (left join keeps every
-    *     dict row exactly once — cmpDict is word-unique by
-    *     construction — and the isNotNull guard reproduces the inner
-    *     join's "only compared rows can violate" counting);
+    *     dict row exactly once — the new table's encode dictionary is
+    *     word-unique by construction — and the isNotNull guard
+    *     reproduces the inner join's "only compared rows can violate"
+    *     counting);
     *   - docs-not-longer + the doc-side conservation total fuse into
     *     ONE aggregation over ONE per-doc pass (was a count plus a
     *     separate sum re-executing the whole explode+join chain);
@@ -2173,23 +2192,22 @@ object Text {
     *     encode agree, so the two sides must not share a plan.
     * The three remaining actions are independent, so they run as
     * concurrent jobs ([[Par.jobs]], guide §2.6) sharing the cached
-    * dict via per-block locks. Band VALUES are unchanged — the same
-    * rows are counted by the same predicates, grouped the same way.
+    * dict via per-block locks.
     */
-  private[graft] def bpeIdsBands(
-      spark: SparkSession, dir: String, dict: DataFrame,
-      cmpDict: DataFrame, cmpCol: String,
-      refDict: DataFrame, refCol: String, vocabBound: Int): DataFrame = {
-    val docw = Tables.documents(spark, dir)
-      .select(col("doc_id"), explode_outer(bpeWords(col("text"))).as("word"))
-      .filter(col("word").isNotNull)
-      .groupBy("doc_id", "word").agg(count(lit(1)).as("cnt"))
+  private def bpeIdsGate(spark: SparkSession, dir: String, g: BpeGate,
+      vocabBound: Int): DataFrame = {
+    val vocab = bpeVocab(spark, dir)
+    val dict = PlanMemo.cached(spark, dir, s"text.bpeIdsDict:${g.name}")(
+      bpeIdsDictUnder(g.train.merges, vocab))
+    val cmpDict = bpeEncodeDictUnder(g.train.merges, vocab, "ntok_new")
+    val refDict = bpeEncodeDictUnder(g.ref, vocab, "ntok_ref")
+    val docw = wordCounts(Tables.documents(spark, dir), "doc_id")
     val dictAggF = () => {
       val r = dict.join(cmpDict.hint("shuffle_hash"), Seq("word"), "left")
         .agg(
           sum(when(!col("rt_ok"), 1L).otherwise(0L)).as("v_rt"),
-          sum(when(col(cmpCol).isNotNull &&
-            (col("n") =!= col(cmpCol) ||
+          sum(when(col("ntok_new").isNotNull &&
+            (col("n") =!= col("ntok_new") ||
               expr(s"exists(ids, i -> i < 0 OR i >= $vocabBound)")), 1L)
             .otherwise(0L)).as("v_cnt"),
           count(lit(1)).as("nw")).head()
@@ -2201,7 +2219,7 @@ object Text {
         .join(refDict.hint("shuffle_hash"), "word")
         .groupBy("doc_id").agg(
           sum(col("cnt") * col("n")).as("tids"),
-          sum(col("cnt") * col(refCol)).as("tref"))
+          sum(col("cnt") * col("ntok_ref")).as("tref"))
         .agg(
           sum(when(col("tids") > col("tref"), 1L).otherwise(0L)).as("v_long"),
           sum("tids").as("doc_total")).head()
@@ -2221,15 +2239,15 @@ object Text {
       res(0).asInstanceOf[(Long, Long, Long)]
     val (violLonger, docTotal) = res(1).asInstanceOf[(Long, Long)]
     val dictTotal = res(2).asInstanceOf[Long]
-    val s = spark
-    import s.implicits._
+    import spark.implicits._
     Seq((violRt == 0L, violCounts == 0L, violLonger == 0L,
       docTotal == dictTotal, nWords > 0L))
       .toDF("band_roundtrip", "band_counts_agree", "band_docs_not_longer",
         "band_conservation", "band_nonempty")
   }
 
-  val bpeIdsLargeSql: String =
+  /** t29 and t32's oracle: the constant-TRUE band row. */
+  val bpeIdsGateSql: String =
     """SELECT TRUE AS band_roundtrip, TRUE AS band_counts_agree,
       |  TRUE AS band_docs_not_longer, TRUE AS band_conservation,
       |  TRUE AS band_nonempty""".stripMargin
@@ -2254,30 +2272,10 @@ object Text {
     *     and the checkpoint strictly improves on the byte floor.
     */
   def bpeTrainProd(spark: SparkSession, dir: String): DataFrame = {
-    val res = bpeProdTrain(spark, dir)
-    val large = bpeLargeTrain(spark, dir)
-    val m = res.merges
-    val counts = m.map(_._4)
-    val past = m.length > large.merges.length
-    import spark.implicits._
-    Seq((
-      m.length == bpeProdVocabTarget - 256 || res.exhausted,
-      m.take(large.merges.length) == large.merges,
-      counts.zip(counts.drop(1)).forall { case (a, b) => a >= b },
-      m.forall { case (_, l, r, _) => (l + r).matches("^([0-9A-F]{2})+$") },
-      (if (past) res.tokensFinal < res.tokensAtCheckpoint
-       else res.tokensFinal == res.tokensAtCheckpoint) &&
-        res.tokensAtCheckpoint < res.tokensInitial &&
-        res.tokensFinal >= 0L))
-      .toDF("band_vocab_reached", "band_prefix_1k_agrees",
-        "band_counts_nonincreasing", "band_wellformed",
-        "band_compression")
+    val g = prodGate(spark, dir)
+    bpeTrainBands(spark, g, bpeProdVocabTarget - 256,
+      "band_prefix_1k_agrees", strict = g.extended)
   }
-
-  val bpeTrainProdSql: String =
-    """SELECT TRUE AS band_vocab_reached, TRUE AS band_prefix_1k_agrees,
-      |  TRUE AS band_counts_nonincreasing, TRUE AS band_wellformed,
-      |  TRUE AS band_compression""".stripMargin
 
   /** t31 — ENCODE UNDER THE PRODUCTION (32k) VOCABULARY: the corpus
     * encode under [[bpeProdTrain]], compared per word and per
@@ -2295,25 +2293,9 @@ object Text {
     *   - nonempty.
     */
   def bpeEncodeProd(spark: SparkSession, dir: String): DataFrame = {
-    val resP = bpeProdTrain(spark, dir)
-    val resL = bpeLargeTrain(spark, dir)
-    val both = PlanMemo.cached(spark, dir, "text.prodBothDicts") {
-      val vocab = bpeVocab(spark, dir)
-      vocab
-        .withColumn("n_bytes", length(regexp_replace(col("sym"), " ", "")) / 2)
-        .join(bpeEncodeDictUnder(resP.merges, vocab, "ntok_prod")
-          .hint("shuffle_hash"), "word")
-        .join(bpeEncodeDictUnder(resL.merges, vocab, "ntok_1k")
-          .hint("shuffle_hash"), "word")
-    }
-    val extended = resP.merges.length > resL.merges.length
-    bpeEncodeBands(spark, dir, both, "ntok_prod", "ntok_1k",
-      improvedRequired = extended)
+    val g = prodGate(spark, dir)
+    bpeEncodeGate(spark, dir, g, improvedRequired = g.extended)
   }
-
-  val bpeEncodeProdSql: String =
-    """SELECT TRUE AS band_word_bounds, TRUE AS band_per_lang_improved,
-      |  TRUE AS band_nonempty""".stripMargin
 
   /** t32 — TOKEN-ID SEQUENCES UNDER THE PRODUCTION (32k) VOCABULARY:
     * t29's band set re-gated under [[bpeProdTrain]] — the id product
@@ -2325,22 +2307,23 @@ object Text {
     * (256 + merges learned), tighter than the target.
     */
   def bpeIdsProd(spark: SparkSession, dir: String): DataFrame = {
-    val resP = bpeProdTrain(spark, dir)
-    val resL = bpeLargeTrain(spark, dir)
-    val vocabSize = 256 + resP.merges.length
-    val vocab = bpeVocab(spark, dir)
-    val dict = PlanMemo.cached(spark, dir, "text.idsProdDict")(
-      bpeIdsDictUnder(resP.merges, vocab))
-    bpeIdsBands(spark, dir, dict,
-      bpeEncodeDictUnder(resP.merges, vocab, "ntok_prod"), "ntok_prod",
-      bpeEncodeDictUnder(resL.merges, vocab, "ntok_1k"), "ntok_1k",
-      vocabSize)
+    val g = prodGate(spark, dir)
+    bpeIdsGate(spark, dir, g, 256 + g.train.merges.length)
   }
 
-  val bpeIdsProdSql: String =
-    """SELECT TRUE AS band_roundtrip, TRUE AS band_counts_agree,
-      |  TRUE AS band_docs_not_longer, TRUE AS band_conservation,
-      |  TRUE AS band_nonempty""".stripMargin
+  /** The corpus word-count pass of every BPE accounting site (t22,
+    * t26, t27/t31, t29/t32, Pipeline's base totals and append
+    * counts): (`key`, word, cnt) over `docs`' [[bpeWords]], counted
+    * per (key, word) so the map side partial-aggregates before any
+    * dictionary join. explode_outer + a null filter, not explode: an
+    * inner explode's inferred non-empty predicate would push the full
+    * [[bpeWords]] expression below the documents' rebalance Exchange
+    * (the PlanAuditSpec Filter trap).
+    */
+  private[graft] def wordCounts(docs: DataFrame, key: String): DataFrame =
+    docs.select(col(key), explode_outer(bpeWords(col("text"))).as("word"))
+      .filter(col("word").isNotNull)
+      .groupBy(key, "word").agg(count(lit(1)).as("cnt"))
 
   /** The chain plus the final encode dictionary (word → ntok), shared
     * by the t22 and w15 oracles.
@@ -2367,11 +2350,7 @@ object Text {
     */
   def bpeEncode(spark: SparkSession, dir: String): DataFrame = {
     val dict = bpeEncodeDictUnder(bpeMerges(spark, dir), bpeVocab(spark, dir))
-    val perDoc = Tables.documents(spark, dir)
-      .select(col("doc_id"),
-        explode_outer(bpeWords(col("text"))).as("word"))
-      .filter(col("word").isNotNull)
-      .groupBy("doc_id", "word").agg(count(lit(1)).as("cnt"))
+    val perDoc = wordCounts(Tables.documents(spark, dir), "doc_id")
       .join(dict.hint("shuffle_hash"), "word")
       .groupBy("doc_id")
       .agg(sum("cnt").as("n_words"),
@@ -2590,10 +2569,7 @@ object Text {
     */
   def tokenizerFertility(spark: SparkSession, dir: String): DataFrame = {
     val dict = bpeEncodeDictUnder(bpeMerges(spark, dir), bpeVocab(spark, dir))
-    Tables.documents(spark, dir)
-      .select(col("lang"), explode_outer(bpeWords(col("text"))).as("word"))
-      .filter(col("word").isNotNull)
-      .groupBy("lang", "word").agg(count(lit(1)).as("cnt"))
+    wordCounts(Tables.documents(spark, dir), "lang")
       .join(dict.hint("shuffle_hash"), "word")
       .groupBy("lang")
       .agg(sum("cnt").as("n_words"),
@@ -2740,14 +2716,44 @@ object Text {
         .groupBy(col("doc_id"), (fp64(col("w")) % qcDim).as("f"))
         .agg(count(lit(1)).as("n")))
 
+  /** t23's trained model, the one spelling of its weight table:
+    * per-bucket class counts over the train split ([[qcFeatures]] ⋈
+    * [[qcLabels]], heldout fifth excluded), their one-row (sp, sn)
+    * totals, and the (f, w8) weights
+    * w8 = ⌊S·(cp+1)/(sp+D)⌋ − ⌊S·(cn+1)/(sn+D)⌋. Returns
+    * (weights, totals); [[qcDefaultW8]] over the totals is the
+    * unseen-bucket weight. t23 scores with it and [[qcFrozenWeights]]
+    * publishes it, so the batch and stream scores cannot drift.
+    */
+  private def qcModel(spark: SparkSession, dir: String)
+      : (DataFrame, DataFrame) = {
+    val counts = qcFeatures(spark, dir)
+      .join(qcLabels(spark, dir).hint("shuffle_hash"), "doc_id")
+      .filter(col("doc_id") % qcFolds =!= 0)
+      .groupBy("f").agg(
+        sum(when(col("y") === 1, col("n")).otherwise(0L)).as("cp"),
+        sum(when(col("y") === 0, col("n")).otherwise(0L)).as("cn"))
+    val totals = counts.agg(sum("cp").as("sp"), sum("cn").as("sn"))
+    val weights = counts.crossJoin(broadcast(totals))
+      .select(col("f"), expr(
+        s"(cp + 1) * $qcScale div (sp + $qcDim) - " +
+          s"(cn + 1) * $qcScale div (sn + $qcDim)").as("w8"))
+    (weights, totals)
+  }
+
+  /** The unseen-in-training bucket's weight over a frame carrying the
+    * (sp, sn) totals: the cp = cn = 0 smoothed difference, the same
+    * formula with counts zero.
+    */
+  private def qcDefaultW8: Column =
+    expr(s"$qcScale div (sp + $qcDim) - $qcScale div (sn + $qcDim)")
+
   /** The FROZEN classifier model as a servable artifact: the trained
     * (f, w8) weight table — bounded by [[qcDim]], broadcast-safe at
     * any corpus size — plus the unseen-bucket default weight, as a
     * plain Long (it is one deterministic integer; w16's stream path
-    * coalesces misses with it as a literal). Training replays t23's
-    * exact arithmetic over the SAME memoized feats/labels frames, so
-    * the stream scores and the batch t23 scores cannot drift; the
-    * totals collect is ONE row (bounded driver data).
+    * coalesces misses with it as a literal). Built by [[qcModel]],
+    * t23's own weight table.
     */
   private[graft] def qcFrozenWeights(
       spark: SparkSession, dir: String): (DataFrame, Long) = {
@@ -2757,30 +2763,14 @@ object Text {
     // artifact instead of re-running the training aggregation chain
     // (corpus explode → per-doc features → per-class counts) on every
     // consumer invocation (the w16/e06 per-rep cost under Bench's
-    // clearCache). Same content-fingerprint keying as every artifact;
-    // weight VALUES are unchanged (deterministic integer arithmetic).
+    // clearCache). def_w8 (the unseen-bucket default) rides every row
+    // as a constant column: a scalar has no parquet home of its own
+    // and the table is dim-bounded, so the duplication is
+    // bytes-trivial.
     val tbl = PlanMemo.publishedParquet(spark, dir, "qc_frozen_weights") {
-      val counts = PlanMemo.cached(spark, dir, "text.qcCounts")(
-        qcFeatures(spark, dir)
-          .join(qcLabels(spark, dir).hint("shuffle_hash"), "doc_id")
-          .filter(col("doc_id") % qcFolds =!= 0)
-          .groupBy("f").agg(
-            sum(when(col("y") === 1, col("n")).otherwise(0L)).as("cp"),
-            sum(when(col("y") === 0, col("n")).otherwise(0L)).as("cn")))
-      val (sp, sn) = PlanMemo.cachedValue(spark, dir, "text.qcTotals") {
-        val r = counts.agg(sum("cp"), sum("cn")).first()
-        (r.getLong(0), r.getLong(1))
-      }
-      // Scala Long division truncates; both operands positive here, so
-      // it equals the engines' div/// — the same t23 discipline.
-      // def_w8 (the unseen-bucket default) rides every row as a
-      // constant column: a scalar has no parquet home of its own and
-      // the table is dim-bounded, so the duplication is bytes-trivial
-      counts.select(col("f"), expr(
-        s"(cp + 1) * $qcScale div (${sp}L + $qcDim) - " +
-          s"(cn + 1) * $qcScale div (${sn}L + $qcDim)").as("w8"))
-        .withColumn("def_w8",
-          lit(qcScale / (sp + qcDim) - qcScale / (sn + qcDim)))
+      val (weights, totals) = qcModel(spark, dir)
+      weights.crossJoin(broadcast(totals))
+        .select(col("f"), col("w8"), qcDefaultW8.as("def_w8"))
     }
     val defW8 = PlanMemo.cachedValue(spark, dir, "text.qcDefW8")(
       tbl.select("def_w8").head().getLong(0))
@@ -2797,27 +2787,13 @@ object Text {
       qualityClassifier(spark, dir))
 
   def qualityClassifier(spark: SparkSession, dir: String): DataFrame = {
-    val labels = qcLabels(spark, dir)
-    val feats = qcFeatures(spark, dir)
-    val trainFeats = feats.join(labels.hint("shuffle_hash"), "doc_id")
-      .filter(col("doc_id") % qcFolds =!= 0)
-    val counts = trainFeats.groupBy("f").agg(
-      sum(when(col("y") === 1, col("n")).otherwise(0L)).as("cp"),
-      sum(when(col("y") === 0, col("n")).otherwise(0L)).as("cn"))
-    val totals = counts.agg(sum("cp").as("sp"), sum("cn").as("sn"))
-    val weights = counts.crossJoin(broadcast(totals))
-      .select(col("f"), expr(
-        s"(cp + 1) * $qcScale div (sp + $qcDim) - " +
-          s"(cn + 1) * $qcScale div (sn + $qcDim)").as("w8"))
-    // unseen-in-training buckets score the cp=cn=0 smoothed
-    // difference — the same formula with counts zero
-    val scored = feats
+    val (weights, totals) = qcModel(spark, dir)
+    val scored = qcFeatures(spark, dir)
       .join(broadcast(weights), Seq("f"), "left")
       .crossJoin(broadcast(totals))
-      .withColumn("w8e", coalesce(col("w8"), expr(
-        s"$qcScale div (sp + $qcDim) - $qcScale div (sn + $qcDim)")))
+      .withColumn("w8e", coalesce(col("w8"), qcDefaultW8))
       .groupBy("doc_id").agg(sum(col("n") * col("w8e")).as("s8"))
-    labels
+    qcLabels(spark, dir)
       .join(scored.hint("shuffle_hash"), Seq("doc_id"), "left")
       .select(col("doc_id"), col("y"),
         coalesce(col("s8"), lit(0L)).as("score8"),
@@ -2961,14 +2937,14 @@ object Text {
 
   def oracles: Map[String, String] = Map(
     "t33_bpe_train_dist" -> bpeTrainDistSql,
-    "t32_bpe_ids_prod" -> bpeIdsProdSql,
-    "t31_bpe_encode_prod" -> bpeEncodeProdSql,
-    "t30_bpe_train_prod" -> bpeTrainProdSql,
-    "t29_bpe_ids_large" -> bpeIdsLargeSql,
+    "t32_bpe_ids_prod" -> bpeIdsGateSql,
+    "t31_bpe_encode_prod" -> bpeEncodeGateSql,
+    "t30_bpe_train_prod" -> bpeTrainBandsSql("band_prefix_1k_agrees"),
+    "t29_bpe_ids_large" -> bpeIdsGateSql,
     "t28_bpe_decode" -> bpeDecodeSql,
-    "t27_bpe_encode_large" -> bpeEncodeLargeSql,
+    "t27_bpe_encode_large" -> bpeEncodeGateSql,
     "t26_tokenizer_fertility" -> tokenizerFertilitySql,
-    "t25_bpe_train_large" -> bpeTrainLargeSql,
+    "t25_bpe_train_large" -> bpeTrainBandsSql("band_prefix_agrees"),
     "t24_bpe_token_ids" -> bpeTokenIdsSql,
     "t23_quality_classifier" -> qualityClassifierSql,
     "t22_bpe_encode" -> bpeEncodeSql,

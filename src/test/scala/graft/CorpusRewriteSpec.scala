@@ -8,8 +8,9 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** A corpus rewritten in place inside one session must be answered as a
   * fresh session answers it: no memo built from the old content may be
-  * served. t14 (the `text.bm25tf` frame) and t27 (the `text.bpeBothDicts`
-  * encode dictionaries) read session memos that are not published
+  * served. t14 (the `text.bm25tf` frame) and t27 (the
+  * `text.bpeEncodeDicts:large` encode dictionaries) read session memos
+  * that are not published
   * artifacts, so only the memo layer's corpus versioning protects them.
   */
 class CorpusRewriteSpec extends AnyFunSuite {
@@ -66,7 +67,7 @@ class CorpusRewriteSpec extends AnyFunSuite {
     // the encode dictionaries t27 memoized on both sides; neither may
     // be rebuilt here
     def dicts(s: SparkSession, d: String) =
-      PlanMemo.cached(s, d, "text.bpeBothDicts")(
+      PlanMemo.cached(s, d, "text.bpeEncodeDicts:large")(
         fail("t27 must already have memoized its dictionaries"))
         .collect().map(_.toString).toSeq.sorted
     assert(dicts(spark, dir) === dicts(freshSession, fresh),

@@ -115,9 +115,10 @@ class PlanAuditSpec extends AnyFunSuite {
     // its embedded build plan (explode → dfreq → join → collect, ~4
     // exchanges) now PRINTS inside each of the three InMemoryRelation
     // copies (the t23 overstatement note) — the executed TREE has 4
-    // ShuffleExchangeExec nodes + 3 InMemoryTableScans (Probe
-    // `exnodes`); a broadcast appearing, or the memo scans vanishing
-    // (build re-running inline), still moves these numbers
+    // ShuffleExchangeExec nodes + 3 InMemoryTableScans (counted by
+    // the executed-tree walk below); a broadcast appearing, or the
+    // memo scans vanishing (build re-running inline), still moves
+    // these numbers
     "d19_prefix_jaccard" -> ((21, 12, 1, 0)),
     "d14_semantic_dedup" -> ((2, 1, 1, 0)),
     // round-11: span_fps rework — pin the exact-substring-dedup plan

@@ -126,6 +126,36 @@ class TablesSpec extends AnyFunSuite {
     assert(nanos(2).endsWith(".999999"))
   }
 
+  test("a session reads each corpus table once: a second read runs no job") {
+    val s = spark.newSession()
+    val readers = () =>
+      (Tables.documents(s, sfDir), Tables.events(s, sfDir),
+        Tables.lineitem(s, sfDir))
+    val first = readers()
+    // count every job that starts until a sentinel job (own job group)
+    // does: the listener bus delivers job starts in submission order
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val sentinel = new java.util.concurrent.CountDownLatch(1)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(e.properties).map(_.getProperty("spark.jobGroup.id"))
+            .contains("tables-spec-sentinel")) sentinel.countDown()
+        else jobs.incrementAndGet()
+    }
+    s.sparkContext.addSparkListener(listener)
+    try {
+      val again = readers()
+      s.sparkContext.setJobGroup("tables-spec-sentinel", "sentinel")
+      try s.range(1).count() finally s.sparkContext.clearJobGroup()
+      assert(sentinel.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      assert(jobs.get === 0,
+        "a second read of documents/events/lineitem ran Spark jobs")
+      assert(again._1 eq first._1,
+        "the second Tables.documents must return the memoized frame")
+    } finally s.sparkContext.removeSparkListener(listener)
+  }
+
   test("normalizeTs leaves a frame without a ts column untouched") {
     val df = Tables.region(spark, sfDir)
     assert(Tables.normalizeTs(df) eq df)

@@ -10,8 +10,10 @@
 #      src/main file but PlanMemo.scala names `corpusFingerprint`, so
 #      the corpus version of every memo and artifact is decided in one
 #      place, never spelled into a key by a caller; and no src/main
-#      file but Tables.scala, PlanMemo.scala, StreamingQueries.scala and
-#      the six dev mains calls `read.parquet` or `readStream`, no
+#      file but Tables.scala, PlanMemo.scala and the six dev mains
+#      calls `read.parquet` (one reader per corpus table, one per
+#      artifact), none but StreamingQueries.scala and the dev mains
+#      calls `readStream`, no
 #      src/main site wraps `publishedParquet` in `cached`/`cachedEager`
 #      (it is the artifact's session memo), and no artifact name passed
 #      to `publishedParquet`/`publishedParquetBy` is spelled at more
@@ -42,10 +44,17 @@ if grep -rn 'corpusFingerprint' src/main | grep -v '/PlanMemo\.scala:'; then
   echo "round_check: corpus versioning outside PlanMemo (above)" >&2
   exit 1
 fi
-readers='/(Tables|PlanMemo|StreamingQueries|Bench|Verify|Probe|GenData|KernelBench|Explain)\.scala:'
-if grep -rnE 'read\.parquet|readStream' src/main | grep -vE "$readers" \
-    | grep -vE '^[^:]+:[0-9]+:\s*(\*|//)'; then
-  echo "round_check: a parquet reader outside its owners (above)" >&2
+dev_or='(Bench|Verify|Probe|GenData|KernelBench|Explain)'
+code_lines() { grep -vE '^[^:]+:[0-9]+:\s*(\*|//)'; }
+if grep -rn 'read\.parquet' src/main \
+    | grep -vE "/(Tables|PlanMemo|$dev_or)\.scala:" | code_lines; then
+  echo "round_check: a batch parquet reader outside Tables/PlanMemo" \
+    "(above)" >&2
+  exit 1
+fi
+if grep -rn 'readStream' src/main \
+    | grep -vE "/(StreamingQueries|$dev_or)\.scala:" | code_lines; then
+  echo "round_check: a stream reader outside StreamingQueries (above)" >&2
   exit 1
 fi
 if grep -rlzP 'cached(Eager)?\([^()]*\)\s*[({]\s*(//[^\n]*\n\s*)*(PlanMemo\.)?publishedParquet' \
