@@ -16,51 +16,11 @@ import org.apache.spark.unsafe.types.UTF8String
   */
 object KernelBench {
 
-  /** `runMain graft.KernelBench qchash` — isolate the t23 feature-hash
-    * cost (round-15 verdict "next" 3): the md5→conv→substr oracle
-    * spelling vs the engine-native xxhash64, each over the same
-    * generated token stream through one codegen'd aggregation (the
-    * feats-build shape). End-to-end t23 is dominated by the
-    * explode + teacher pass, so this is where the per-token delta is
-    * actually visible.
-    */
-  private def qcHashSuite(): Unit = {
-    val spark = Tables.configure(
-      org.apache.spark.sql.SparkSession.builder()
-        .master("local[32]")
-        .config("spark.sql.shuffle.partitions", 32)).getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    import org.apache.spark.sql.functions._
-    val n = 20000000L
-    val toks = spark.range(n).select(
-      concat(lit("tok"), (col("id") % 250000).cast("string")).as("w"))
-    def time(name: String, f: org.apache.spark.sql.Column): Unit = {
-      val q = toks.groupBy(pmod(f, lit(Text.qcDim.toLong)).as("f"))
-        .agg(count(lit(1)).as("c"))
-      q.write.format("noop").mode("overwrite").save() // warm
-      val runs = (1 to 3).map { _ =>
-        val t0 = System.nanoTime()
-        q.write.format("noop").mode("overwrite").save()
-        (System.nanoTime() - t0) / 1e9
-      }
-      println(f"  $name%8s  min ${runs.min}%6.2f s over $n tokens " +
-        f"(${runs.min / n * 1e9}%5.2f ns/token)")
-    }
-    println(s"t23 feature-hash kernel (codegen agg over $n tokens):")
-    time("md5", Text.fp64(col("w")))
-    time("xxh64", xxhash64(col("w")))
-    spark.stop()
-  }
-
   /** `runMain graft.KernelBench bpeenc` — the t27/t31 dictionary
-    * encode kernel at production rule counts: the rank-ordered FOLD
-    * (per-word cost O(rules), symbol-presence skip) vs the
-    * rank-CURSOR encode (O(|word|²) rank-map probes, rule-count
-    * independent). Pure driver JVM — this is exactly the per-word
-    * cost an executor pays inside the mapPartitions encode. The two
-    * are output-identical (TextBpeSpec fuzz); this suite pins the
-    * SCALE.md claim that the cursor turns the 32k-rule encode from
-    * the job's dominant term into a dictionary-sized flea.
+    * encode kernel at production rule counts: the rank-CURSOR encode
+    * (O(|word|²) rank-map probes, rule-count independent). Pure driver
+    * JVM — this is exactly the per-word cost an executor pays inside
+    * the mapPartitions encode.
     */
   private def bpeEncSuite(): Unit = {
     val rnd = new scala.util.Random(41)
@@ -95,14 +55,12 @@ object KernelBench {
       }
       println(f"BPE encode kernel at ${rules.length} learned rules " +
         f"(trained in $trainS%.2f s):")
-      time("fold")(s => Text.bpeEncodeSymsLargeArr(s, rules).length)
       val rank = Text.bpeRankOf(rules)
       time("cursor")(s => Text.bpeEncodeSymsRank(s, rules, rank).length)
     }
   }
 
   def main(args: Array[String]): Unit = {
-    if (args.headOption.contains("qchash")) { qcHashSuite(); return }
     if (args.headOption.contains("bpeenc")) { bpeEncSuite(); return }
     val rnd = new scala.util.Random(7)
     val words = Array("alpha", "beta", "gamma", "delta", "eps", "zeta",

@@ -36,7 +36,7 @@ import org.apache.spark.storage.StorageLevel
   *   - an access-ordered LRU cap per map — retrieval refreshes
   *     recency, and an evicted frame is unpersisted so its executor
   *     memory is reclaimed, not just the driver-side plan reference.
-  * One corpus's working set is about 44 frame names (27 session frames
+  * One corpus's working set is about 43 frame names (26 session frames
   * plus the 17 published artifacts read through [[publishedParquet]])
   * and 34 value names (12 of them `Tables` readers) against caps of 64
   * and 128, so Bench/Verify/test runs never evict mid-pipeline; only

@@ -31,14 +31,12 @@ import org.apache.spark.sql.functions._
   */
 object Features {
 
-  /** `k` — integer payload extracted from the JSON `props` column. */
-  val kCol: Column = get_json_object(col("props"), "$.k").cast("int")
-
-  /** [[kCol]] behind an [[OptimizerBarrier]]: same values, but
-    * predicates on k-derived columns are NOT alias-inlined and pushed
-    * below a rebalance Exchange (which would re-run the JSON parse
-    * once per predicate per row at raw-scan parallelism). Requires
-    * `optimizer_barrier` to be registered (GraftExtensions).
+  /** `k` — the integer payload of the JSON `props` column, behind an
+    * [[OptimizerBarrier]]: predicates on k-derived columns are NOT
+    * alias-inlined and pushed below a rebalance Exchange (which would
+    * re-run the JSON parse once per predicate per row at raw-scan
+    * parallelism). Requires `optimizer_barrier` to be registered
+    * (GraftExtensions).
     */
   val kColFenced: Column =
     expr("optimizer_barrier(get_json_object(props, '$.k'))").cast("int")
@@ -53,24 +51,18 @@ object Features {
     * [[Tables.balanced]] is reserved for genuinely CPU-bound per-row
     * stages (MinHash/md5/embedding dots on documents/embeddings).
     *
-    * The default `k` is [[kColFenced]], not [[kCol]]: six derived
-    * columns reference k, and with a bare alias CollapseProject
+    * `k` is [[kColFenced]], not a bare alias: six derived columns
+    * reference k, and with a bare alias CollapseProject
     * inlines the `get_json_object` parse into every one of them —
     * the projection carries ~8 JSON parses per row instead of 1.
     * The fence pins parse-once semantics (measured at GenData sf10,
     * 10M events: enrich materialization 29 s → 15 s, q09-shaped agg
     * ~3× faster; at 100 TB the inlining tax is ~7 redundant parses
     * over the full events table). Requires `optimizer_barrier`
-    * (GraftExtensions — every `Tables.configure` session has it);
-    * callers with a bare session can pass [[kCol]] explicitly.
+    * (GraftExtensions — every `Tables.configure` session has it).
     */
-  def enrich(events: DataFrame): DataFrame = enrich(events, kColFenced)
-
-  /** [[enrich]] with a caller-chosen `k` expression (the balanced
-    * clean/feature pipelines pass [[kColFenced]]).
-    */
-  def enrich(events: DataFrame, k: Column): DataFrame = events
-    .withColumn("k", k)
+  def enrich(events: DataFrame): DataFrame = events
+    .withColumn("k", kColFenced)
     .withColumn("pickup_ts", col("ts"))
     // duration analog: k+1 minutes ∈ [1,100] — inside the strict clean
     // range [1,240] (spark_jobs/02_clean_eda.py:57)

@@ -5,6 +5,7 @@ import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.objects.AssertNotNull
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 
@@ -122,6 +123,12 @@ object GraftExtensions {
     (TokCount.fnId, TokCount.info, TokCount.builder),
     (PqEncode.fnId, PqEncode.info, PqEncode.builder),
     (BloomProbe.fnId, BloomProbe.info, BloomProbe.builder),
+    // Spark's own AssertNotNull under a SQL name: types a value the
+    // analyzer cannot prove non-null as non-null, and fails the query
+    // on a null (Dedup.verifySets' array elements)
+    (FunctionIdentifier("assert_not_null"),
+      new ExpressionInfo(classOf[AssertNotNull].getName, "assert_not_null"),
+      es => AssertNotNull(es.head)),
     (graft.plans.AsOfLE.fnId, graft.plans.AsOfLE.info,
       graft.plans.AsOfLE.builder),
     (graft.plans.IntervalContains.fnId, graft.plans.IntervalContains.info,

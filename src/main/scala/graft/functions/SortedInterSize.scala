@@ -16,13 +16,13 @@ import org.apache.spark.sql.types._
   * array — all of which is garbage the very next operator (`size`)
   * throws away. The d19 verify runs that allocation loop 12M+ times
   * per sf10 pass over arrays that are already in canonical sorted
-  * order (Dedup.sortedSets array_sorts once, before the arrays fan
-  * out to the prefix index and both verify sides). For sorted
+  * order (Dedup.verifySets array_sorts each document's set once,
+  * before the arrays fan out to both verify sides). For sorted
   * distinct inputs the intersection size is one allocation-free
   * two-pointer merge scan — O(|a|+|b|) with no hash set, no output
   * array, no per-element boxing — inside whole-stage codegen.
   *
-  * Preconditions (callers own them; see [[Dedup.sortedSets]]):
+  * Preconditions (callers own them; see [[Dedup.verifySets]]):
   * both arrays ascending and duplicate-free. Null ELEMENTS sort last
   * under `array_sort` and terminate the scan (a null never equals a
   * shingle hash; shingle arrays are transform()-built and never
@@ -121,7 +121,7 @@ object SortedInterSize {
   // silently undercounts, and a null element terminates the scan
   // (size(array_intersect) would keep counting past it). Every call
   // site must feed array_sort'd, duplicate-free, containsNull=false
-  // arrays, like Dedup.sortedSets does; SortedInterSizeSpec pins the
+  // arrays, like Dedup.verifySets does; SortedInterSizeSpec pins the
   // d19 call-site inputs against exactly these preconditions AND that
   // DESCRIBE FUNCTION actually surfaces this text. The 5-arg
   // constructor is (className, db, name, usage, extended) — the 3-arg

@@ -268,13 +268,6 @@ object BpeDist {
     */
   private val rowsPerShard = 100000L
 
-  /** Step (job) count of the most recent [[train]] on this driver —
-    * diagnostics for Probe's `bpedist` bank (steps ≈ merges ÷ mean
-    * batch size; the step count, not the merge count, is what the
-    * per-job overhead multiplies).
-    */
-  @volatile private[graft] var lastSteps: Int = 0
-
   private[graft] def train(
       spark: SparkSession, dict: DataFrame,
       rounds: Int, checkpointRound: Int = 0): Text.BpeDriverTrain = {
@@ -362,7 +355,6 @@ object BpeDist {
     }
 
     // init: build shards, pull the full initial counts + token total
-    var steps = 1
     val tokensInitial = step(Array.empty, emitInitial = true)
     var tokensLast = tokensInitial
     var tokensCk = if (checkpointRound == 0) tokensInitial else -1L
@@ -428,7 +420,6 @@ object BpeDist {
         }
         tokensLast = step(batch.map(b => (b._1, b._2)).toArray,
           emitInitial = false)
-        steps += 1
         mergesDone += batch.length
         if (mergesDone == checkpointRound) tokensCk = tokensLast
       }
@@ -441,7 +432,6 @@ object BpeDist {
     }, preservesPartitioning = true).count()
     base.unpersist(blocking = false)
     rulesBc.destroy()
-    lastSteps = steps
 
     Text.BpeDriverTrain(out.toList, exhausted, tokensInitial, tokensCk,
       tokensLast)

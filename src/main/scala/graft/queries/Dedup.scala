@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, IntegerType}
 
 /** Deduplication operators over `documents` — exact hash-dedup,
   * MinHash+LSH banded near-dup candidates, exact n-gram Jaccard with an
@@ -541,8 +542,8 @@ object Dedup {
   }
 
   private def buildJaccardPairs(spark: SparkSession, dir: String): DataFrame = {
-    // NOT derived from the d19 sortedSets memo: layering the posting
-    // build on a second cached frame costs a serial materialization
+    // NOT derived from a memoized sorted-set frame: layering the
+    // posting build on a second cached frame costs a serial materialization
     // pass that the fused tokenize+md5→groupBy pipeline doesn't pay —
     // measured +18 s per cold rep at GenData sf10 against ~0 saved
     // (the posting memo is already the shared artifact d03's own
@@ -659,16 +660,6 @@ object Dedup {
     * md5 pipeline to one pass. Pick by corpus: d03 for
     * flat/engineered token spaces, d19 for natural text.
     */
-  /** The canonical-order shingle-set frame (doc_id, fps sorted) —
-    * the map-side UNCAPPED spelling, kept for SortedInterSizeSpec's
-    * parity fixtures; the d19 pipeline itself consumes
-    * [[cappedEnts]] (the cap-filtered space it shares with d03).
-    */
-  private[graft] def sortedSets(spark: SparkSession, dir: String): DataFrame =
-    PlanMemo.cachedEager(spark, dir, "dedup.sortedSets")(
-      shingled(spark, dir)
-        .withColumn("fps", array_sort(col("fps")))) // canonical order
-
   /** The cap-filtered per-document shingle frame (doc_id, ent) with
     * `ent` array_sorted by (df, sh) — the ONE materialized input of
     * the prefix kernel. MEMOIZED + eager: it feeds the prefix slice
@@ -833,6 +824,29 @@ object Dedup {
       .select("d1", "d2")
   }
 
+  /** The verify sets (doc_id, fps) — the ONE feeder of
+    * `sorted_inter_size`, whose unchecked preconditions
+    * (SortedInterSizeSpec pins them on this frame) are ascending,
+    * duplicate-free arrays typed `containsNull = false`. The CAPPED
+    * space, value-sorted by projection over the one memoized
+    * [[cappedEnts]] frame, so sizing, candidates and verify all see
+    * the same universe d03 and the oracle do. `sh` is typed nullable
+    * (it comes out of an explode_outer + null filter), so each
+    * element passes through `assert_not_null`: the array's type then
+    * carries the no-null-element precondition, and a null would fail
+    * the query instead of silently ending the merge scan. array<int>
+    * narrowing: shingle hashes are `mod 2147483647` — always in
+    * [0, 2^31) — so the int cast is lossless and order-preserving,
+    * and HALVES the bytes the candidate stream drags through the d2
+    * exchange (the widest shuffle in d19).
+    */
+  private[graft] def verifySets(spark: SparkSession, dir: String): DataFrame =
+    cappedEnts(spark, dir)
+      .select(col("doc_id"),
+        expr("array_sort(transform(ent, e -> assert_not_null(e.sh)))")
+          .cast(ArrayType(IntegerType, containsNull = false))
+          .as("fps"))
+
   def prefixJaccard(spark: SparkSession, dir: String): DataFrame =
     buildPrefixPairs(spark, dir).orderBy("d1", "d2")
 
@@ -841,12 +855,7 @@ object Dedup {
     * [[jaccardDelegateDocs]].
     */
   private def buildPrefixPairs(spark: SparkSession, dir: String): DataFrame = {
-    // verify sets = the CAPPED space (value-sorted by projection over
-    // the one memoized ents frame) — sizing, candidates and verify
-    // all see the same universe d03 and the oracle do
-    val sets = cappedEnts(spark, dir)
-      .select(col("doc_id"),
-        expr("array_sort(transform(ent, e -> e.sh))").as("fps"))
+    val sets = verifySets(spark, dir)
     val cand = prefixCand(spark, dir)
     // exact verify: one sorted_inter_size over the two shingle sets —
     // a codegen two-pointer merge over the already-array_sorted fps
@@ -861,14 +870,8 @@ object Dedup {
     // sort, a corpus-scale array sort that spilled at GenData sf10
     // (184 s; the hash build per partition holds only that
     // partition's share of the doc arrays, and the probe streams).
-    // array<int> narrowing: shingle hashes are `mod 2147483647` —
-    // always in [0, 2^31) — so the int cast is lossless and
-    // order-preserving, and HALVES the bytes the candidate stream
-    // drags through the d2 exchange (the widest shuffle in d19).
-    val a = sets.select(col("doc_id").as("d1"),
-      col("fps").cast("array<int>").as("fps1"))
-    val b = sets.select(col("doc_id").as("d2"),
-      col("fps").cast("array<int>").as("fps2"))
+    val a = sets.select(col("doc_id").as("d1"), col("fps").as("fps1"))
+    val b = sets.select(col("doc_id").as("d2"), col("fps").as("fps2"))
     cand.join(a.hint("shuffle_hash"), "d1")
       .join(b.hint("shuffle_hash"), "d2")
       .withColumn("inter", expr("sorted_inter_size(fps1, fps2)"))

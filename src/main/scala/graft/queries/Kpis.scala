@@ -33,13 +33,13 @@ object Kpis {
     * exactly that).
     */
   private def tripsBalanced(spark: SparkSession, dir: String): DataFrame = {
-    // kColFenced: without the fence, PushDownPredicate alias-inlines
-    // the consumers' range filters (each carrying the full derived
-    // expression — ~8 get_json_object parses per row for q11) and
-    // pushes them below the rebalance Exchange, back onto the
-    // serialized coarse scan the rebalance exists to escape.
-    Features.enrich(Tables.balanced(Tables.events(spark, dir)),
-      Features.kColFenced)
+    // enrich's fenced k (Features.kColFenced) matters here: without
+    // the fence, PushDownPredicate alias-inlines the consumers' range
+    // filters (each carrying the full derived expression — ~8
+    // get_json_object parses per row for q11) and pushes them below
+    // the rebalance Exchange, back onto the serialized coarse scan
+    // the rebalance exists to escape.
+    Features.enrich(Tables.balanced(Tables.events(spark, dir)))
   }
 
   private val fc = Features.oracleCte // WITH feats/trips/trips2 CTEs
@@ -211,9 +211,7 @@ object Kpis {
   // result (round-1 verdict flagged the union-of-scans form as 3×
   // wasted I/O). The reference's approxQuantile (Greenwald-Khanna)
   // is exposed separately in Relational (r04) as a rows-only query.
-  // private[graft]: the Probe q14 A/B harness references this list so
-  // a future column-set change cannot silently A/B the wrong workload
-  private[graft] val quantileCols =
+  private val quantileCols =
     Seq("l_quantity", "l_extendedprice", "l_discount")
 
   def quantiles(spark: SparkSession, dir: String): DataFrame = {

@@ -804,7 +804,8 @@ object Similarity {
   /** The probes frame at an EXPLICIT probe count — the recall lever
     * (round-18): nprobe is the dial every IVF deployment turns to buy
     * recall with candidate volume; [[retrievalRecallHi]] gates the
-    * high-recall setting, Probe's `retrcurve` banks the curve.
+    * high-recall setting, and SCALE.md banks the recall-vs-volume
+    * curve this accessor sweeps.
     */
   private[graft] def retrProbesAt(
       spark: SparkSession, dir: String, nPr: Int): DataFrame = {
@@ -1060,8 +1061,9 @@ object Similarity {
     retrievalRecallAt(spark, dir,
       retrProbeFor(retrCellsFor(retrNVecs(spark, dir))), retrShortlistK)
 
-  /** The recall gate at EXPLICIT (nprobe, shortlist K) — shared by
-    * s15 (the default operating point) and Probe's `retrcurve` sweep.
+  /** The recall gate at EXPLICIT (nprobe, shortlist K): s15 runs the
+    * default operating point; a spec can sweep the other settings
+    * (the curve SCALE.md banks).
     */
   private[graft] def retrievalRecallAt(
       spark: SparkSession, dir: String, nPr: Int, shortK: Int): DataFrame =

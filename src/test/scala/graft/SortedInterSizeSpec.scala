@@ -12,7 +12,7 @@ class SortedInterSizeSpec extends AnyFunSuite {
   import TestSpark._
 
   test("equals size(array_intersect) over the real d19 verify inputs") {
-    val sets = Dedup.sortedSets(spark, sfDir)
+    val sets = Dedup.verifySets(spark, sfDir)
     val cand = Dedup.prefixCand(spark, sfDir)
     val a = sets.select(col("doc_id").as("d1"), col("fps").as("fps1"))
     val b = sets.select(col("doc_id").as("d2"), col("fps").as("fps2"))
@@ -29,7 +29,7 @@ class SortedInterSizeSpec extends AnyFunSuite {
     // advice) — so pin that the ONE production feeder actually
     // delivers sorted, duplicate-free, null-element-free arrays. A
     // future call site should copy this assertion, not just the call.
-    val sets = Dedup.sortedSets(spark, sfDir)
+    val sets = Dedup.verifySets(spark, sfDir)
     assert(!sets.schema("fps").dataType
       .asInstanceOf[org.apache.spark.sql.types.ArrayType].containsNull,
       "fps must be containsNull=false")

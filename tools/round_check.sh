@@ -4,16 +4,16 @@
 #
 #   1. no engine toggles: src/main names no `spark.graft.*` conf key
 #      and no SPARK_GRAFT_ARTIFACTS mount, and no src/main file outside
-#      the six dev mains (Bench, Verify, Probe, GenData, KernelBench,
+#      the five dev mains (Bench, Verify, GenData, KernelBench,
 #      Explain) reads the environment, so an answer depends only on
 #      (query, corpus) and no memo key has a conf to carry; and no
 #      src/main file but PlanMemo.scala names `corpusFingerprint`, so
 #      the corpus version of every memo and artifact is decided in one
 #      place, never spelled into a key by a caller; and no src/main
-#      file but Tables.scala, PlanMemo.scala and the six dev mains
-#      calls `read.parquet` (one reader per corpus table, one per
-#      artifact), none but StreamingQueries.scala and the dev mains
-#      calls `readStream`, no
+#      file but Tables.scala and PlanMemo.scala calls `read.parquet`
+#      (one reader per corpus table, one per artifact), none but
+#      StreamingQueries.scala calls `readStream` (the dev mains
+#      included: they read through Tables like the engine does), no
 #      src/main site wraps `publishedParquet` in `cached`/`cachedEager`
 #      (it is the artifact's session memo), and no artifact name passed
 #      to `publishedParquet`/`publishedParquetBy` is spelled at more
@@ -35,7 +35,7 @@ if grep -rnE 'spark\.graft\.|SPARK_GRAFT_ARTIFACTS' src/main; then
   echo "round_check: src/main reads an engine toggle (above)" >&2
   exit 1
 fi
-dev_mains='/(Bench|Verify|Probe|GenData|KernelBench|Explain)\.scala:'
+dev_mains='/(Bench|Verify|GenData|KernelBench|Explain)\.scala:'
 if grep -rnE 'sys\.env|System\.getenv' src/main | grep -vE "$dev_mains"; then
   echo "round_check: engine code reads the environment (above)" >&2
   exit 1
@@ -44,16 +44,15 @@ if grep -rn 'corpusFingerprint' src/main | grep -v '/PlanMemo\.scala:'; then
   echo "round_check: corpus versioning outside PlanMemo (above)" >&2
   exit 1
 fi
-dev_or='(Bench|Verify|Probe|GenData|KernelBench|Explain)'
 code_lines() { grep -vE '^[^:]+:[0-9]+:\s*(\*|//)'; }
 if grep -rn 'read\.parquet' src/main \
-    | grep -vE "/(Tables|PlanMemo|$dev_or)\.scala:" | code_lines; then
+    | grep -vE "/(Tables|PlanMemo)\.scala:" | code_lines; then
   echo "round_check: a batch parquet reader outside Tables/PlanMemo" \
     "(above)" >&2
   exit 1
 fi
 if grep -rn 'readStream' src/main \
-    | grep -vE "/(StreamingQueries|$dev_or)\.scala:" | code_lines; then
+    | grep -vE "/StreamingQueries\.scala:" | code_lines; then
   echo "round_check: a stream reader outside StreamingQueries (above)" >&2
   exit 1
 fi
