@@ -27,11 +27,15 @@ object Par {
     * FIFO — later thunks back-fill the tail of earlier ones); returns
     * results in thunk order. The first failure (in thunk order)
     * propagates, as when running them sequentially — Bench charges
-    * the elapsed time either way. On failure the pool is shut down
-    * with `shutdownNow()`: queued thunks never start, and in-flight
-    * sibling thunks are INTERRUPTED, not drained — a blocking Spark
-    * action answers the interrupt by throwing, so a sibling's job may
-    * abort. Each call owns its pool, so the next call on the same
+    * the elapsed time either way. Every Spark job a thunk submits
+    * carries one job tag per call, so on failure the whole fan-out is
+    * cancelled with `cancelJobsWithTag`: interrupting a thread that
+    * waits on its action does not stop the action's job, which would
+    * run on, orphaned, holding executor cores. The pool is shut down
+    * with `shutdownNow()` (queued thunks never start), and a thunk
+    * that submits a job after the cancel cancels it again on its way
+    * out. The SparkContext is the calling thread's active session's.
+    * Each call owns its pool and tag, so the next call on the same
     * session starts clean.
     *
     * Callers MUST materialize any SHARED persisted frame before
@@ -43,15 +47,31 @@ object Par {
     */
   def jobs[T](thunks: (() => T)*): Seq[T] = {
     if (thunks.lengthCompare(2) < 0) return thunks.map(_()).toSeq
+    val sc = org.apache.spark.sql.SparkSession.active.sparkContext
+    val tag = s"graft-par-${java.util.UUID.randomUUID()}"
+    val failed = new java.util.concurrent.atomic.AtomicBoolean(false)
     val pool = java.util.concurrent.Executors.newFixedThreadPool(
       math.min(thunks.length, maxInFlight))
     try {
       import scala.concurrent.duration.Duration
       import scala.concurrent.{Await, ExecutionContext, Future}
       implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-      val fs = thunks.map(t => Future(t())).toSeq
+      val fs = thunks.map(t => Future {
+        sc.addJobTag(tag)
+        try t()
+        finally {
+          sc.removeJobTag(tag)
+          if (failed.get) sc.cancelJobsWithTag(tag)
+        }
+      }).toSeq
       try fs.map(Await.result(_, Duration.Inf))
-      catch { case e: Throwable => pool.shutdownNow(); throw e }
+      catch {
+        case e: Throwable =>
+          failed.set(true)
+          pool.shutdownNow()
+          sc.cancelJobsWithTag(tag)
+          throw e
+      }
     } finally pool.shutdown()
   }
 }

@@ -6,7 +6,7 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute, AttributeReference, BinaryExpression, EqualTo, Expression, ExpressionInfo, GenericInternalRow, JoinedRow, SortOrder}
+import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute, AttributeReference, BinaryExpression, Expression, ExpressionInfo, GenericInternalRow, JoinedRow, PredicateHelper, SortOrder}
 import org.apache.spark.sql.catalyst.plans.LeftOuter
 import org.apache.spark.sql.catalyst.plans.logical.{Join, LogicalPlan}
 import org.apache.spark.sql.catalyst.plans.physical.{ClusteredDistribution, Distribution, Partitioning}
@@ -67,30 +67,12 @@ object AsOfLE {
   * (`injectPlannerStrategy`) and defensively through
   * `spark.experimental.extraStrategies`.
   */
-object AsOfJoinStrategy extends SparkStrategy {
-  private def conjuncts(e: Expression): Seq[Expression] = e match {
-    case org.apache.spark.sql.catalyst.expressions.And(a, b) =>
-      conjuncts(a) ++ conjuncts(b)
-    case other => Seq(other)
-  }
-
+object AsOfJoinStrategy extends SparkStrategy with PredicateHelper {
   def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
     case Join(l, r, LeftOuter, Some(cond), _)
-        if conjuncts(cond).exists(_.isInstanceOf[AsOfLE]) =>
-      val cs = conjuncts(cond)
-      // long keys only: doExecute reads keys with getLong, so any
-      // other key type must fall through to the marker's loud eval
-      // failure rather than silently comparing garbage words
-      (cs.collectFirst {
-        case EqualTo(lk: AttributeReference, rk: AttributeReference)
-            if l.outputSet.contains(lk) && r.outputSet.contains(rk) &&
-              lk.dataType == LongType && rk.dataType == LongType =>
-          (lk, rk)
-        case EqualTo(rk: AttributeReference, lk: AttributeReference)
-            if l.outputSet.contains(lk) && r.outputSet.contains(rk) &&
-              lk.dataType == LongType && rk.dataType == LongType =>
-          (lk, rk)
-      }, cs.collectFirst {
+        if splitConjunctivePredicates(cond).exists(_.isInstanceOf[AsOfLE]) =>
+      val cs = splitConjunctivePredicates(cond)
+      (JoinKeys.longEquiKey(cs, l, r), cs.collectFirst {
         case AsOfLE(lts: AttributeReference, rts: AttributeReference)
             if l.outputSet.contains(lts) && r.outputSet.contains(rts) =>
           (lts, rts)

@@ -6,7 +6,7 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute, AttributeReference, EqualTo, Expression, ExpressionInfo, JoinedRow, SortOrder, TernaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute, AttributeReference, Expression, ExpressionInfo, JoinedRow, PredicateHelper, SortOrder, TernaryExpression}
 import org.apache.spark.sql.catalyst.plans.Inner
 import org.apache.spark.sql.catalyst.plans.logical.{Join, LogicalPlan}
 import org.apache.spark.sql.catalyst.plans.physical.{ClusteredDistribution, Distribution, Partitioning}
@@ -73,27 +73,12 @@ object IntervalContains {
 /** Planner strategy: `Join(Inner, key = key AND
   * interval_contains(pts, start, end))` → [[RangeJoinExec]].
   */
-object RangeJoinStrategy extends SparkStrategy {
-  private def conjuncts(e: Expression): Seq[Expression] = e match {
-    case org.apache.spark.sql.catalyst.expressions.And(a, b) =>
-      conjuncts(a) ++ conjuncts(b)
-    case other => Seq(other)
-  }
-
+object RangeJoinStrategy extends SparkStrategy with PredicateHelper {
   def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
     case Join(l, r, Inner, Some(cond), _)
-        if conjuncts(cond).exists(_.isInstanceOf[IntervalContains]) =>
-      val cs = conjuncts(cond)
-      (cs.collectFirst {
-        case EqualTo(lk: AttributeReference, rk: AttributeReference)
-            if l.outputSet.contains(lk) && r.outputSet.contains(rk) &&
-              lk.dataType == LongType && rk.dataType == LongType =>
-          (lk, rk)
-        case EqualTo(rk: AttributeReference, lk: AttributeReference)
-            if l.outputSet.contains(lk) && r.outputSet.contains(rk) &&
-              lk.dataType == LongType && rk.dataType == LongType =>
-          (lk, rk)
-      }, cs.collectFirst {
+        if splitConjunctivePredicates(cond).exists(_.isInstanceOf[IntervalContains]) =>
+      val cs = splitConjunctivePredicates(cond)
+      (JoinKeys.longEquiKey(cs, l, r), cs.collectFirst {
         case IntervalContains(pt: AttributeReference,
             s: AttributeReference, e: AttributeReference)
             if l.outputSet.contains(pt) && r.outputSet.contains(s) &&

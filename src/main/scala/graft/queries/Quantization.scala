@@ -127,19 +127,23 @@ object Quantization {
       .orderBy("vec_id")
   }
 
-  /** s10 — ADC top-k search: per query, distances to all candidates
-    * via m code-table lookups summed; exact integer distances.
+  /** The candidate set's PQ codes exploded to (`vec_id`, `s`, `code`)
+    * rows — the scan side of every ADC search (s10, s11).
     */
-  def pqSearch(spark: SparkSession, dir: String): DataFrame = {
-    val cand = candidates(spark, dir)
-    val books = codebooks(spark, dir)
-    val codes = withCodes(cand, books)
+  private def codeRows(spark: SparkSession, dir: String): DataFrame =
+    withCodes(candidates(spark, dir), codebooks(spark, dir))
       .select(col("vec_id"), posexplode(expr(
         s"array(${(0 until m).map(s => s"code$s").mkString(", ")})"))
         .as(Seq("s", "code")))
-    // ADC table: distance from each query subvector to each centroid —
-    // queries are the bounded batch (s01 convention: vec_id < 10), so
-    // collecting them is O(batch·dim) driver data, like s01's broadcast
+
+  /** The ADC table (`q_id`, `s`, `code`, `d`): the distance from each
+    * query subvector to each centroid. Queries are the bounded batch
+    * (s01 convention: vec_id < 10), so it is built driver-side from
+    * O(batch·dim) collected data, like s01's broadcast, and is
+    * broadcast to the code rows by every caller.
+    */
+  private def adcTable(spark: SparkSession, dir: String): DataFrame = {
+    val books = codebooks(spark, dir)
     val qvecs = Clustering.quantized(spark, dir)
       .filter(col("vec_id") < Similarity.nQueries)
       .select("vec_id", "q").collect()
@@ -158,19 +162,33 @@ object Quantization {
     }
     val sess = spark
     import sess.implicits._
-    val dt = dtRows.toDF("q_id", "s", "code", "d")
-    codes.join(broadcast(dt), Seq("s", "code"))
+    dtRows.toDF("q_id", "s", "code", "d")
+  }
+
+  /** ADC top-k over joined (q_id, vec_id, d) lookups: Σ d per
+    * (query, candidate) is the exact asymmetric distance, ranked by the
+    * bounded [[TopKScoreId]] aggregate (nearest first, ties to the
+    * lowest vec_id).
+    */
+  private def adcTopK(lookups: DataFrame, k: Int): DataFrame =
+    lookups
       .groupBy("q_id", "vec_id")
       .agg(sum("d").as("adist"))
       .withColumn("score", -col("adist").cast("double"))
       .groupBy("q_id")
-      .agg(expr(s"topk_score_id(score, vec_id, $topK)").as("tk"))
+      .agg(expr(s"topk_score_id(score, vec_id, $k)").as("tk"))
       .select(col("q_id"), posexplode(col("tk")))
       .select(col("q_id"), (col("pos") + 1).as("rank"),
         col("col.id").as("vec_id"),
         (-col("col.score")).cast("long").as("adist"))
       .orderBy("q_id", "rank")
-  }
+
+  /** s10 — ADC top-k search: per query, distances to all candidates
+    * via m code-table lookups summed; exact integer distances.
+    */
+  def pqSearch(spark: SparkSession, dir: String): DataFrame =
+    adcTopK(codeRows(spark, dir)
+      .join(broadcast(adcTable(spark, dir)), Seq("s", "code")), topK)
 
   // ---------------------------------------------------------------
   // DuckDB oracle: per-subspace Lloyd rounds unrolled as generated
@@ -318,70 +336,21 @@ object Quantization {
   val ivfTopK = 5
 
   def ivfPqSearch(spark: SparkSession, dir: String): DataFrame = {
-    val cand = candidates(spark, dir)
-    val books = codebooks(spark, dir)
-    val codes = withCodes(cand, books)
-      .select(col("vec_id"), posexplode(expr(
-        s"array(${(0 until m).map(s => s"code$s").mkString(", ")})"))
-        .as(Seq("s", "code")))
-    // IVF side — s04's recipe verbatim: 8 seed centroids, exact-int
+    val codes = codeRows(spark, dir)
+    // IVF side — s04's recipe: 8 seed centroids, exact-int
     // argmax-cosine cell per candidate, nProbe best cells per query
     val emb = Similarity.withNorm(spark, dir)
-    val cents = emb.filter(col("vec_id") < 8).select(
-      col("vec_id").as("cell"), col("embedding").as("c_emb"),
-      col("nrm").as("c_nrm"))
-    val cos4 = floor(
-      expr(Similarity.sparkDot("embedding", "c_emb")) /
-        (col("nrm") * col("c_nrm")) * 10000 + lit(0.5)).cast("long")
-    val cellOf = emb.filter(col("vec_id") >= Similarity.nQueries)
-      .crossJoin(broadcast(cents))
-      .withColumn("cos4", cos4)
-      .groupBy("vec_id")
-      .agg(max(struct(col("cos4"), (-col("cell")).as("negcell"))).as("w"))
-      .select(col("vec_id"), (-col("w.negcell")).as("cell"))
-    val probes = emb.filter(col("vec_id") < Similarity.nQueries)
-      .crossJoin(broadcast(cents))
-      .withColumn("cos4", cos4)
-      .groupBy(col("vec_id").as("q_id"))
-      .agg(expr(
-        s"topk_score_id(CAST(cos4 AS DOUBLE), cell, ${Similarity.nProbe})")
-        .as("tk"))
-      .select(col("q_id"), explode(col("tk")).as("probe"))
-      .select(col("q_id"), col("probe.id").as("cell"))
-    // ADC table (driver-bounded, as in s10)
-    val qvecs = Clustering.quantized(spark, dir)
-      .filter(col("vec_id") < Similarity.nQueries)
-      .select("vec_id", "q").collect()
-      .map(r => r.getLong(0) -> r.getSeq[Long](1).toArray)
-    val dtRows = for {
-      (qid, qv) <- qvecs.toSeq
-      s <- 0 until m
-      (cent, code) <- books(s).zipWithIndex
-    } yield {
-      var d = 0L
-      var j = 0
-      while (j < subDim) {
-        val diff = qv(s * subDim + j) - cent(j); d += diff * diff; j += 1
-      }
-      (qid, s, code, d)
-    }
-    val sess = spark
-    import sess.implicits._
-    val dt = dtRows.toDF("q_id", "s", "code", "d")
-    codes
+    val cents = Similarity.ivfCentroids(emb, 8)
+    val cellOf = Similarity.ivfAssign(
+        emb.filter(col("vec_id") >= Similarity.nQueries), cents)
+      .select("vec_id", "cell")
+    val probes = Similarity.ivfProbes(emb, cents, Similarity.nProbe)
+      .select("q_id", "cell")
+    adcTopK(codes
       .join(cellOf, "vec_id")                 // candidate → its cell
       .join(broadcast(probes), Seq("cell"))   // keep probed cells only
-      .join(broadcast(dt), Seq("q_id", "s", "code"))
-      .groupBy("q_id", "vec_id")
-      .agg(sum("d").as("adist"))
-      .withColumn("score", -col("adist").cast("double"))
-      .groupBy("q_id")
-      .agg(expr(s"topk_score_id(score, vec_id, $ivfTopK)").as("tk"))
-      .select(col("q_id"), posexplode(col("tk")))
-      .select(col("q_id"), (col("pos") + 1).as("rank"),
-        col("col.id").as("vec_id"),
-        (-col("col.score")).cast("long").as("adist"))
-      .orderBy("q_id", "rank")
+      .join(broadcast(adcTable(spark, dir)), Seq("q_id", "s", "code")),
+      ivfTopK)
   }
 
   val ivfPqSearchSql: String =

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Similarity search over the `embeddings` table (`ArrayType(FloatType)`,
@@ -405,6 +405,59 @@ object Similarity {
        |ORDER BY q_id, "rank"""".stripMargin
 
   // ---------------------------------------------------------------
+  /** The IVF cell recipe, written once for s04, s07, s11 and the
+    * retrieval family: the first `nCells` vectors of a [[withNorm]]
+    * frame are the seed centroids (`cell`, `c_emb`, `c_nrm`), and a
+    * vector scores each cell by the exact-int `cos4` =
+    * floor(cosine · 10⁴ + ½) — an int, so assignments and probe lists
+    * are bit-identical across engines and partitionings.
+    */
+  private[graft] def ivfCentroids(emb: DataFrame, nCells: Int): DataFrame =
+    emb.filter(col("vec_id") < nCells).select(
+      col("vec_id").as("cell"), col("embedding").as("c_emb"),
+      col("nrm").as("c_nrm"))
+
+  private def cellCos4: Column =
+    floor(expr(sparkDot("embedding", "c_emb")) / (col("nrm") * col("c_nrm"))
+      * 10000 + lit(0.5)).cast("long")
+
+  /** Every vector of `vecs` (a [[withNorm]] frame) with its arg-max
+    * cell: (`vec_id`, `cell`, `cos4`, `embedding`, `nrm`). Rank-1 as
+    * max(struct(cos4, -cell)): lexicographic struct max = highest
+    * cos4, ties to LOWEST cell — identical to a rank-1 window but with
+    * partial aggregation (one candidate row per vector per map task in
+    * the shuffle, not one per cell). embedding/nrm are constant within
+    * a vec_id group, so first() is value-deterministic; a caller that
+    * does not read them gets both aggregates pruned away.
+    */
+  private[graft] def ivfAssign(vecs: DataFrame, cents: DataFrame): DataFrame =
+    vecs.crossJoin(broadcast(cents))
+      .withColumn("cos4", cellCos4)
+      .groupBy("vec_id")
+      .agg(max(struct(col("cos4"), (-col("cell")).as("negcell"))).as("w"),
+        first("embedding").as("embedding"), first("nrm").as("nrm"))
+      .select(col("vec_id"), (-col("w.negcell")).as("cell"),
+        col("w.cos4").as("cos4"), col("embedding"), col("nrm"))
+
+  /** Each query's `nPr` best cells by the same `cos4`, via the bounded
+    * top-k aggregate (cells rows per query in, `nPr` out):
+    * (`q_id`, `cell`, `q_emb`, `q_nrm`) for the [[nQueries]] batch of
+    * `emb`. The probe count is the one recall dial of the index.
+    */
+  private[graft] def ivfProbes(emb: DataFrame, cents: DataFrame,
+      nPr: Int): DataFrame =
+    emb.filter(col("vec_id") < nQueries)
+      .crossJoin(broadcast(cents))
+      .withColumn("cos4", cellCos4)
+      .groupBy(col("vec_id").as("q_id"))
+      .agg(expr(s"topk_score_id(CAST(cos4 AS DOUBLE), cell, $nPr)").as("tk"),
+        first("embedding").as("q_emb"), first("nrm").as("q_nrm"))
+      .select(col("q_id"), col("q_emb"), col("q_nrm"),
+        explode(col("tk")).as("probe"))
+      .select(col("q_id"), col("q_emb"), col("q_nrm"),
+        col("probe.id").as("cell"))
+
+  // ---------------------------------------------------------------
   /** s04 — IVF coarse quantizer (the brief's "IVF variant"): the
     * first 8 vectors act as seed centroids; every vector is assigned
     * to its max-cosine cell (ties → lowest cell id) via a broadcast
@@ -416,22 +469,7 @@ object Similarity {
     */
   def ivfCells(spark: SparkSession, dir: String): DataFrame = {
     val emb = withNorm(spark, dir)
-    val cents = emb.filter(col("vec_id") < 8).select(
-      col("vec_id").as("cell"), col("embedding").as("c_emb"),
-      col("nrm").as("c_nrm"))
-    // rank-1 as max(struct(cos4, -cell)): lexicographic struct max =
-    // highest cos4, ties to LOWEST cell — identical to the rank-1
-    // window but with partial aggregation (one candidate row per
-    // vector per map task in the shuffle, not all 8 assignments).
-    val assigned = emb.crossJoin(broadcast(cents))
-      .withColumn("cos4", floor(
-        expr(sparkDot("embedding", "c_emb")) / (col("nrm") * col("c_nrm"))
-          * 10000 + lit(0.5)).cast("long"))
-      .groupBy("vec_id")
-      .agg(max(struct(col("cos4"), (-col("cell")).as("negcell"))).as("w"))
-      .select(col("vec_id"), (-col("w.negcell")).as("cell"),
-        col("w.cos4").as("cos4"))
-    assigned.groupBy("cell")
+    ivfAssign(emb, ivfCentroids(emb, 8)).groupBy("cell")
       .agg(count(lit(1)).as("n_vectors"),
         (floor(sum("cos4").cast("double") / count(lit(1)) + lit(0.5)) / 10000.0)
           .as("avg_cos"))
@@ -475,35 +513,9 @@ object Similarity {
 
   def ivfSearch(spark: SparkSession, dir: String): DataFrame = {
     val emb = withNorm(spark, dir)
-    val cents = emb.filter(col("vec_id") < 8).select(
-      col("vec_id").as("cell"), col("embedding").as("c_emb"),
-      col("nrm").as("c_nrm"))
-    val cos4 = floor(
-      expr(sparkDot("embedding", "c_emb")) / (col("nrm") * col("c_nrm"))
-        * 10000 + lit(0.5)).cast("long")
-    // candidate assignment — s04's arg-max recipe (ties → lowest cell);
-    // embedding/nrm are constant within a vec_id group, so first() is
-    // value-deterministic
-    val assigned = emb.filter(col("vec_id") >= nQueries)
-      .crossJoin(broadcast(cents))
-      .withColumn("cos4", cos4)
-      .groupBy("vec_id")
-      .agg(max(struct(col("cos4"), (-col("cell")).as("negcell"))).as("w"),
-        first("embedding").as("embedding"), first("nrm").as("nrm"))
-      .select(col("vec_id"), (-col("w.negcell")).as("cell"),
-        col("embedding"), col("nrm"))
-    // per-query probe list: nProbe best cells by the same exact-int
-    // score, via the bounded top-k aggregate (8 rows per query in)
-    val probes = emb.filter(col("vec_id") < nQueries)
-      .crossJoin(broadcast(cents))
-      .withColumn("cos4", cos4)
-      .groupBy(col("vec_id").as("q_id"))
-      .agg(expr(s"topk_score_id(CAST(cos4 AS DOUBLE), cell, $nProbe)").as("tk"),
-        first("embedding").as("q_emb"), first("nrm").as("q_nrm"))
-      .select(col("q_id"), col("q_emb"), col("q_nrm"),
-        explode(col("tk")).as("probe"))
-      .select(col("q_id"), col("q_emb"), col("q_nrm"),
-        col("probe.id").as("cell"))
+    val cents = ivfCentroids(emb, 8)
+    val assigned = ivfAssign(emb.filter(col("vec_id") >= nQueries), cents)
+    val probes = ivfProbes(emb, cents, nProbe)
     // a candidate lives in exactly one cell → no cross-probe dedup
     val scored = assigned.join(broadcast(probes), "cell")
       .withColumn("cosine", Exact.round4(
@@ -778,20 +790,7 @@ object Similarity {
     */
   private[graft] def retrAssigned(spark: SparkSession, dir: String): DataFrame = {
     val emb = withNorm(spark, dir)
-    val nCells = retrCellsFor(retrNVecs(spark, dir))
-    val cents = emb.filter(col("vec_id") < nCells).select(
-      col("vec_id").as("cell"), col("embedding").as("c_emb"),
-      col("nrm").as("c_nrm"))
-    val cos4 = floor(
-      expr(sparkDot("embedding", "c_emb")) / (col("nrm") * col("c_nrm"))
-        * 10000 + lit(0.5)).cast("long")
-    emb.crossJoin(broadcast(cents))
-      .withColumn("cos4", cos4)
-      .groupBy("vec_id")
-      .agg(max(struct(col("cos4"), (-col("cell")).as("negcell"))).as("w"),
-        first("embedding").as("embedding"), first("nrm").as("nrm"))
-      .select(col("vec_id"), (-col("w.negcell")).as("cell"),
-        col("embedding"), col("nrm"))
+    ivfAssign(emb, ivfCentroids(emb, retrCellsFor(retrNVecs(spark, dir))))
   }
 
   /** Each query's [[nProbe]] best cells (bounded: queries × nProbe
@@ -810,23 +809,7 @@ object Similarity {
   private[graft] def retrProbesAt(
       spark: SparkSession, dir: String, nPr: Int): DataFrame = {
     val emb = withNorm(spark, dir)
-    val nCells = retrCellsFor(retrNVecs(spark, dir))
-    val cents = emb.filter(col("vec_id") < nCells).select(
-      col("vec_id").as("cell"), col("embedding").as("c_emb"),
-      col("nrm").as("c_nrm"))
-    val cos4 = floor(
-      expr(sparkDot("embedding", "c_emb")) / (col("nrm") * col("c_nrm"))
-        * 10000 + lit(0.5)).cast("long")
-    emb.filter(col("vec_id") < nQueries)
-      .crossJoin(broadcast(cents))
-      .withColumn("cos4", cos4)
-      .groupBy(col("vec_id").as("q_id"))
-      .agg(expr(s"topk_score_id(CAST(cos4 AS DOUBLE), cell, $nPr)").as("tk"),
-        first("embedding").as("q_emb"), first("nrm").as("q_nrm"))
-      .select(col("q_id"), col("q_emb"), col("q_nrm"),
-        explode(col("tk")).as("probe"))
-      .select(col("q_id"), col("q_emb"), col("q_nrm"),
-        col("probe.id").as("cell"))
+    ivfProbes(emb, ivfCentroids(emb, retrCellsFor(retrNVecs(spark, dir))), nPr)
   }
 
   /** The embed join: chunk rows keyed into the embedding table. */

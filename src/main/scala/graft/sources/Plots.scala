@@ -8,7 +8,8 @@ import org.apache.spark.sql.functions._
 /** Chart rasterization — the reference's 05b plot job
   * (`/root/reference/spark_jobs/05b_plots.py:18-124`) re-expressed on
   * the JDK's own raster stack: `java.awt.Graphics2D` renders the bar
-  * charts and `javax.imageio` compresses them to PNG, so the one
+  * charts and `javax.imageio` compresses them to PNG (through the
+  * one PNG writer the media codecs use, `Multimodal.Codec`), so the one
   * reference output artifact previously out of scope (matplotlib
   * PNGs) ships with zero extra dependencies.
   *
@@ -109,9 +110,7 @@ object Plots {
         -(MarginTop + (plotH + lfm.stringWidth(ylabel)) / 2), 20)
       g2.dispose()
     } finally g.dispose()
-    val bos = new java.io.ByteArrayOutputStream()
-    javax.imageio.ImageIO.write(img, "png", bos)
-    bos.toByteArray
+    Multimodal.Codec.pngBytes(img)
   }
 
   /** The reference's manual bucket order (05b_plots.py:105). */

@@ -70,7 +70,12 @@ class GoldenSpec extends AnyFunSuite {
     // scoring, so golden-able per doc; ml09's bands lock shape only
     "t23_quality_classifier", "ml09_quality_lr",
     // round-14: per-doc token-id sequence digests
-    "t24_bpe_token_ids")
+    "t24_bpe_token_ids",
+    // the media codec and IVF/PQ kernel owners: every query that calls
+    // them is pinned, so a kernel edit is checked by `sbt test` alone
+    "mm03_png_roundtrip", "mm04_wav_roundtrip", "s04_ivf_cells",
+    "s10_pq_search", "s14_retrieval_e2e", "s15_retrieval_recall",
+    "s16_retrieval_artifact", "s17_retrieval_recall_hi")
 
   private def render(df: DataFrame): Seq[String] = {
     val header = df.columns.mkString("\t")

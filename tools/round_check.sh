@@ -18,7 +18,13 @@
 #      (it is the artifact's session memo), and no artifact name passed
 #      to `publishedParquet`/`publishedParquetBy` is spelled at more
 #      than one src/main call site, so each parquet source has one
-#      owner: tables, published artifacts, drains
+#      owner: tables, published artifacts, drains; and no media codec
+#      call (`ImageIO.write(`/`read(`, `writeToSequence`, the GIF
+#      writer/reader lookups, `WavCodec.writer.write`,
+#      `getAudioInputStream`) nor the IVF cell score
+#      (`sparkDot("embedding", "c_emb")`) is spelled at more than one
+#      src/main code site (comment lines skipped), so each kernel
+#      recipe has one owner that the query bodies call
 #   2. full scalatest suite
 #   3. Verify + DuckDB oracle compare at sf0.01 (the correctness gate)
 #   4. Bench at sf0.1 (min-of-3) -> bench_local.json
@@ -71,6 +77,19 @@ if [[ -n "$dup_artifacts" ]]; then
     "(above) — give it one owning function" >&2
   exit 1
 fi
+
+for recipe in 'ImageIO.write(' 'ImageIO.read(' 'writeToSequence' \
+    'getImageWritersByFormatName' 'getImageReadersByFormatName' \
+    'WavCodec.writer.write' 'getAudioInputStream' \
+    'sparkDot("embedding", "c_emb")'; do
+  recipe_sites=$(grep -rnF "$recipe" src/main | code_lines || true)
+  if (( $(grep -c . <<<"$recipe_sites") > 1 )); then
+    echo "$recipe_sites"
+    echo "round_check: \`$recipe\` is spelled at more than one src/main" \
+      "site (above) — call the recipe's one owner" >&2
+    exit 1
+  fi
+done
 
 echo "== 2/5 scalatest =="
 sbt -batch test
