@@ -153,21 +153,39 @@ object Tables {
     }
   }
 
-  /** Session factory used by tests and local mains. Verify/Bench build
-    * their own sessions (driver contract) — keep these configs in sync.
+  /** Session factory used by the tests, Shell and the Reports/Plots
+    * mains: [[configure]]d, with Spark's default 200 shuffle partitions
+    * (the tests set 4 on the shared session). Bench, Verify, Explain
+    * and GenData build their own sessions through [[configure]] and set
+    * `spark.sql.shuffle.partitions` to their core count.
     */
   def session(appName: String, cores: String = "*"): SparkSession =
     configure(
       SparkSession.builder().master(s"local[$cores]").appName(appName)
     ).getOrCreate()
 
-  /** Shared session tuning: UTC for oracle parity, shuffle partitions
-    * sized for local core counts (not the 200 default), AQE on (skew
-    * joins + partition coalescing are the 100 TB posture), the
-    * nanos-as-long escape hatch for the events table, and broadcast
-    * blocks below G1's humongous-object size (half a 2 MB region):
-    * every stage broadcasts its task binary, and the default 4 MB first
-    * block is a humongous allocation per stage, garbage at once.
+  /** Shared session tuning, applied by every entry point (Bench,
+    * Verify, Explain, GenData, [[session]], perfbench): graft's
+    * extensions, UTC for oracle parity, AQE on (skew joins + partition
+    * coalescing are the 100 TB posture), the nanos-as-long escape hatch
+    * for the events table, and broadcast blocks below G1's
+    * humongous-object size (half a 2 MB region): every stage broadcasts
+    * its task binary, and the default 4 MB first block is a humongous
+    * allocation per stage, garbage at once. Shuffle partitions are the
+    * caller's (see [[session]]).
+    *
+    * Each generated class is compiled once per JVM. Spark caches
+    * Janino compiles under (compiling thread's class loader, code), so
+    * two settings decide how often the same body is compiled again:
+    *   - `spark.sql.artifact.isolation.enabled` off: with it on (the
+    *     default) every `SparkSession` — each corpus_build rep's, each
+    *     `newSession()` child such as [[StreamingQueries.drainSession]]
+    *     and q19's — runs its tasks under its own executor class loader,
+    *     so a class compiled in one session is compiled again in the
+    *     next. graft adds no jars, files or classes to any session.
+    *   - `spark.sql.codegen.cache.maxEntries` = [[codegenCacheEntries]]
+    *     instead of Spark's 100-entry LRU, which is smaller than one
+    *     cold e-chain rep's or one app session's working set.
     * Also builds Spark's case-mapping table (see [[caseMappings]]).
     */
   def configure(b: SparkSession.Builder): SparkSession.Builder = {
@@ -180,7 +198,21 @@ object Tables {
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
       .config("spark.ui.enabled", "false")
       .config("spark.broadcast.blockSize", "512k")
+      .config("spark.sql.artifact.isolation.enabled", "false")
+      .config("spark.sql.codegen.cache.maxEntries", codegenCacheEntries)
   }
+
+  /** Bound of Spark's per-JVM codegen cache (a static conf: read once,
+    * at the JVM's first compile). With both settings of [[configure]],
+    * the distinct (class loader, class body) keys one JVM compiled,
+    * measured with an unbounded cache on a 4-core host: Tier-1 suite
+    * 4,969, the 154-query `graft.Bench` at sf0.1 2,659, perfbench
+    * corpus_build 603 (one cold rep; 675 after eight) and app_session
+    * 306. The cache is a Guava cache of 4 segments that each evict
+    * past a quarter of the bound, so the bound leaves each segment
+    * 1.6× its share of the largest of these.
+    */
+  private val codegenCacheEntries = 8192L
 
   /** Spark's ICU case mapping (`lower`/`upper` under UTF8_BINARY)
     * builds a title-case table once per JVM, on first use, by title-

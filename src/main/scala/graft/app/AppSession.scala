@@ -30,6 +30,8 @@ final class AppSession(val spark: SparkSession, sfDir: String) {
 
   private var frame: DataFrame = _
   private var sample: Option[DataFrame] = None
+  /** The temp file of the current source when it is an upload. */
+  private var upload: Option[java.nio.file.Path] = None
 
   useProjectSample() // app5 boots on the bundled sample (app5.py:200-203)
 
@@ -49,17 +51,24 @@ final class AppSession(val spark: SparkSession, sfDir: String) {
     * degrades like app5 instead of throwing (app5.py:76-101).
     */
   def uploadCsv(bytes: Array[Byte]): DataFrame = {
-    val raw = Sources.uploadedCsv(spark, bytes)
+    val file = Sources.uploadFile(bytes)
+    val raw = Sources.readCsv(spark, file.toString)
     val isEventsSchema =
       Seq("ts", "value", "props").forall(raw.columns.contains)
     setSource(
       if (isEventsSchema) Features.enrich(raw)
-      else Features.enrichFlexible(raw))
+      else Features.enrichFlexible(raw),
+      Some(file))
   }
 
-  private def setSource(df: DataFrame): DataFrame = {
-    sample.foreach(_.unpersist()) // a stale sample is the old source's
-    sample = None
+  /** Replaces the source. The old source's cached sample is unpersisted
+    * and, if it was an upload, its temp file deleted: no frame of this
+    * session reads it any more.
+    */
+  private def setSource(df: DataFrame,
+                        file: Option[java.nio.file.Path] = None): DataFrame = {
+    dropSource()
+    upload = file
     frame = df
     frame.createOrReplaceTempView(ViewName)
     frame
@@ -134,7 +143,14 @@ final class AppSession(val spark: SparkSession, sfDir: String) {
 
   def loadModel(dir: String): PipelineModel = PipelineModel.load(dir)
 
-  def close(): Unit = { sample.foreach(_.unpersist()); sample = None }
+  def close(): Unit = dropSource()
+
+  private def dropSource(): Unit = {
+    sample.foreach(_.unpersist())
+    sample = None
+    upload.foreach(TempArtifacts.deleteNow)
+    upload = None
+  }
 }
 
 object AppSession {

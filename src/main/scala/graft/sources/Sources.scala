@@ -44,12 +44,18 @@ object Sources {
     * app5.py:118-127): bytes → temp file → standard CSV read.
     */
   def uploadedCsv(spark: SparkSession, bytes: Array[Byte],
-                  timestampFormat: String = DefaultTsFormat): DataFrame = {
+                  timestampFormat: String = DefaultTsFormat): DataFrame =
+    readCsv(spark, uploadFile(bytes).toString, timestampFormat)
+
+  /** The temp file an upload is read from. The frame reads it lazily,
+    * so it lives until JVM exit unless the owner of the frame deletes
+    * it sooner (`TempArtifacts.deleteNow`) once the frame is dropped,
+    * as [[AppSession]] does when a new source replaces an upload.
+    */
+  def uploadFile(bytes: Array[Byte]): java.nio.file.Path = {
     val tmp = java.nio.file.Files.createTempFile("graft_upload", ".csv")
     java.nio.file.Files.write(tmp, bytes)
-    // lazily read → can't delete eagerly; reclaimed at JVM exit
     TempArtifacts.register(tmp)
-    readCsv(spark, tmp.toString, timestampFormat)
   }
 }
 

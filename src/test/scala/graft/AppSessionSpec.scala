@@ -52,6 +52,31 @@ class AppSessionSpec extends AnyFunSuite {
       .collect().map(_.getInt(0)).toSeq === Seq(10, 22))
   }
 
+  test("a replaced upload's temp file is deleted; the current source still answers") {
+    val s = new AppSession(spark, sfDir)
+    def uploadFile(): java.nio.file.Path = {
+      val csv = s.current.inputFiles.filter(_.endsWith(".csv"))
+      assert(csv.length === 1)
+      java.nio.file.Paths.get(new java.net.URI(csv.head))
+    }
+    def answers(rows: Long): Unit = {
+      assert(s.preview(5).length === math.min(5L, rows))
+      assert(s.summary().head().getAs[Long]("rows") === rows)
+      assert(s.sql("SELECT COUNT(*) FROM taxi").head().getLong(0) === rows)
+      assert(s.kpiByPayment.collect().map(_.getAs[Long]("trips")).sum === rows)
+    }
+    s.uploadCsv(tinyCsv)
+    val first = uploadFile()
+    s.uploadCsv(tinyCsv)
+    val second = uploadFile()
+    assert(!java.nio.file.Files.exists(first), "the first upload's file is gone")
+    assert(java.nio.file.Files.exists(second))
+    answers(2L)
+    s.useProjectSample()
+    assert(!java.nio.file.Files.exists(second), "the second upload's file is gone")
+    answers(s.current.count())
+  }
+
   test("scoring sample: cached, session-stable, invalidated on source switch") {
     val s = new AppSession(spark, sfDir)
     val sm = s.scoringSample(100)

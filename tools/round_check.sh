@@ -24,7 +24,13 @@
 #      `getAudioInputStream`) nor the IVF cell score
 #      (`sparkDot("embedding", "c_emb")`) is spelled at more than one
 #      src/main code site (comment lines skipped), so each kernel
-#      recipe has one owner that the query bodies call
+#      recipe has one owner that the query bodies call; and every
+#      `SparkSession.builder()` in src/main is the argument of
+#      `Tables.configure(` (of `configure(` inside Tables.scala), so
+#      every entry point's session carries the same settings — graft's
+#      extensions, UTC, and one executor class loader plus a codegen
+#      cache sized to the working set, without which each session
+#      compiles every generated class again
 #   2. full scalatest suite
 #   3. Verify + DuckDB oracle compare at sf0.01 (the correctness gate)
 #   4. Bench at sf0.1 (min-of-3) -> bench_local.json
@@ -90,6 +96,26 @@ for recipe in 'ImageIO.write(' 'ImageIO.read(' 'writeToSequence' \
     exit 1
   fi
 done
+
+# a builder's callee: the `name(` just before it, across line breaks
+if find src/main -name '*.scala' -print0 | xargs -0 perl -0777 -ne '
+    my $tables = $ARGV =~ m{/Tables\.scala$};
+    while (/([\w.]*\()?\s*SparkSession\.builder\b/g) {
+      my $callee = $1 // "";
+      next if $callee eq "Tables.configure(" ||
+        ($tables && $callee eq "configure(");
+      my $at = $-[0] + length($&) - length("SparkSession.builder");
+      my $n = 1 + (substr($_, 0, $at) =~ tr/\n//);
+      my ($line) = substr($_, rindex($_, "\n", $at) + 1) =~ /^(.*)/;
+      next if $line =~ m{^\s*(\*|//)};
+      print "$ARGV:$n:$line\n";
+      $bare = 1;
+    }
+    END { exit($bare ? 0 : 1) }'; then
+  echo "round_check: a SparkSession.builder() outside Tables.configure" \
+    "(above) — build every session through it" >&2
+  exit 1
+fi
 
 echo "== 2/5 scalatest =="
 sbt -batch test
