@@ -88,8 +88,6 @@ object Exact {
 
   def sumMoneySql(e: String): String = s"SUM(${centsSql(e)}) / 100.0"
 
-  def maxMoneySql(e: String): String = s"floor(MAX($e) * 100 + 0.5) / 100.0"
-
   def mean4Sql(e: String): String =
     s"floor(SUM(${centsSql(e)}) / 100.0 / COUNT(*) * 10000 + 0.5) / 10000.0"
 

@@ -1526,15 +1526,7 @@ object Dedup {
        |  FROM n x JOIN n y
        |    ON x.cluster = y.cluster AND x.vec_id < y.vec_id
        |  WHERE ${Exact.round4Sql(s"($dot) / (x.nrm * y.nrm)")} >= $semTheta
-       |), edges AS (
-       |  SELECT d1 AS a, d2 AS b FROM p
-       |  UNION ALL SELECT d2, d1 FROM p
-       |), reach AS (
-       |  SELECT a AS node, a AS lbl FROM edges
-       |  UNION
-       |  SELECT e.b, r.lbl FROM reach r JOIN edges e ON e.a = r.node
-       |), cc AS (
-       |  SELECT node, MIN(lbl) AS sem FROM reach GROUP BY node)
+       |), ${ccCtesSql("", "p", "sem")}
        |SELECT v.vec_id,
        |  COALESCE(cc.sem, v.vec_id) AS sem_cluster,
        |  CAST(COALESCE(cc.sem, v.vec_id) <> v.vec_id AS INT) AS is_dup
@@ -2002,6 +1994,84 @@ object Dedup {
     PlanMemo.cached(spark, dir, "dedup.ccLabels")(
       connectedComponents(jaccardPairs(spark, dir).select("d1", "d2")))
 
+  /** The losers of a (node, lbl) labeling as `doc_id`: every cluster
+    * member but its min-id representative.
+    */
+  private def clusterLosers(labels: DataFrame): DataFrame =
+    labels.filter(col("node") =!= col("lbl")).select(col("node").as("doc_id"))
+
+  /** Keep one document per near-dup cluster of a `doc_id` set: the
+    * (d1, d2) pairs with both ends in `ids`, their connected
+    * components, and `ids` minus every non-min member. Components
+    * are taken on the restricted graph, so a cluster whose min id is
+    * outside `ids` still keeps its smallest member inside it. The one
+    * spelling of e01's kept set, e03's frozen base and every append's
+    * admitted set.
+    */
+  private[graft] def keepOnePerCluster(
+      pairs: DataFrame, ids: DataFrame): DataFrame = {
+    val inside = pairs
+      .join(ids.select(col("doc_id").as("d1")).hint("shuffle_hash"),
+        Seq("d1"), "left_semi")
+      .join(ids.select(col("doc_id").as("d2")).hint("shuffle_hash"),
+        Seq("d2"), "left_semi")
+    ids.join(clusterLosers(connectedComponents(inside)).hint("shuffle_hash"),
+      Seq("doc_id"), "left_anti")
+  }
+
+  /** The far end (`doc_id`) of every (d1, d2) pair with one end in a
+    * `doc_id` set, both orientations, not deduplicated: an append's
+    * near screen, whose only consumer is an anti join's right side.
+    */
+  private[graft] def pairsTouching(pairs: DataFrame, ids: DataFrame): DataFrame =
+    pairs.join(ids.select(col("doc_id").as("d1")).hint("shuffle_hash"),
+        Seq("d1"), "left_semi")
+      .select(col("d2").as("doc_id"))
+      .union(pairs
+        .join(ids.select(col("doc_id").as("d2")).hint("shuffle_hash"),
+          Seq("d2"), "left_semi")
+        .select(col("d1").as("doc_id")))
+
+  /** DuckDB connected components over a (d1, d2) pair CTE: labels
+    * spread along the symmetric edges (`edges`) by a recursive
+    * closure (`reach`), and `MIN` over everything reachable is the
+    * component id, `cc` (node, `label`); each CTE name carries the
+    * prefix `p`. An algorithm independent of the engine's union-find
+    * and label propagation. The statement must open with
+    * `WITH RECURSIVE`.
+    */
+  private[graft] def ccCtesSql(
+      p: String, pairs: String, label: String = "cluster_id"): String =
+    s"""${p}edges AS (
+       |  SELECT d1 AS a, d2 AS b FROM $pairs
+       |  UNION ALL SELECT d2, d1 FROM $pairs
+       |),
+       |${p}reach AS (
+       |  SELECT a AS node, a AS lbl FROM ${p}edges
+       |  UNION
+       |  SELECT e.b, r.lbl FROM ${p}reach r JOIN ${p}edges e ON e.a = r.node
+       |),
+       |${p}cc AS MATERIALIZED (
+       |  SELECT node, MIN(lbl) AS $label FROM ${p}reach GROUP BY node
+       |)""".stripMargin
+
+  /** The DuckDB twin of [[keepOnePerCluster]] over a `doc_id` set CTE:
+    * the `pairs` rows with both ends in `set` (CTE `pairs` with prefix
+    * `p`), their components ([[ccCtesSql]], same prefix), and `out` =
+    * `set` minus every non-min member.
+    */
+  private[graft] def keepOneCtesSql(p: String, set: String, out: String): String =
+    s"""${p}pairs AS MATERIALIZED (
+       |  SELECT x.d1, x.d2 FROM pairs x
+       |  JOIN $set a ON a.doc_id = x.d1
+       |  JOIN $set b ON b.doc_id = x.d2
+       |),
+       |${ccCtesSql(p, s"${p}pairs")},
+       |$out AS MATERIALIZED (
+       |  SELECT doc_id FROM $set
+       |  WHERE doc_id NOT IN (SELECT node FROM ${p}cc WHERE node <> cluster_id)
+       |)""".stripMargin
+
   def neardupClusters(spark: SparkSession, dir: String): DataFrame = {
     val labels = ccLabels(spark, dir)
     val sizes = labels.groupBy(col("lbl")).agg(count(lit(1)).as("cluster_size"))
@@ -2014,23 +2084,13 @@ object Dedup {
       .orderBy("doc_id")
   }
 
-  /** Oracle: DuckDB recursive CTE — labels spread along symmetric
-    * edges, `MIN` over everything reachable = the component id. An
-    * independent algorithm (transitive closure) cross-checking the
-    * propagation loop, like r06's native-ASOF oracle.
+  /** Oracle: DuckDB recursive CTE ([[ccCtesSql]]) — an independent
+    * algorithm (transitive closure) cross-checking the propagation
+    * loop, like r06's native-ASOF oracle.
     */
   val neardupClustersSql: String =
     s"""WITH RECURSIVE $jaccardPairsCteSql,
-       |edges AS (
-       |  SELECT d1 AS a, d2 AS b FROM pairs
-       |  UNION ALL SELECT d2, d1 FROM pairs
-       |), reach AS (
-       |  SELECT a AS node, a AS lbl FROM edges
-       |  UNION
-       |  SELECT e.b, r.lbl FROM reach r JOIN edges e ON e.a = r.node
-       |), cc AS (
-       |  SELECT node, MIN(lbl) AS cluster_id FROM reach GROUP BY node
-       |), cs AS (
+       |${ccCtesSql("", "pairs")}, cs AS (
        |  SELECT cluster_id, COUNT(*) AS cluster_size FROM cc GROUP BY 1)
        |SELECT cc.node AS doc_id, cc.cluster_id, cs.cluster_size
        |FROM cc JOIN cs USING (cluster_id)
@@ -2043,9 +2103,7 @@ object Dedup {
     * doc_id; documents never shuffle by content.
     */
   def neardupCorpus(spark: SparkSession, dir: String): DataFrame = {
-    val losers = ccLabels(spark, dir)
-      .filter(col("node") =!= col("lbl"))
-      .select(col("node").as("doc_id"))
+    val losers = clusterLosers(ccLabels(spark, dir))
     Tables.documents(spark, dir)
       // shuffle_hash: "tiny next to the corpus" is a RATIO, not a
       // bound — the loser set is ~the near-dup rate times the corpus,
@@ -2057,15 +2115,7 @@ object Dedup {
 
   val neardupCorpusSql: String =
     s"""WITH RECURSIVE $jaccardPairsCteSql,
-       |edges AS (
-       |  SELECT d1 AS a, d2 AS b FROM pairs
-       |  UNION ALL SELECT d2, d1 FROM pairs
-       |), reach AS (
-       |  SELECT a AS node, a AS lbl FROM edges
-       |  UNION
-       |  SELECT e.b, r.lbl FROM reach r JOIN edges e ON e.a = r.node
-       |), cc AS (
-       |  SELECT node, MIN(lbl) AS cluster_id FROM reach GROUP BY node)
+       |${ccCtesSql("", "pairs")}
        |SELECT doc_id, lang, source, n_chars FROM documents
        |WHERE doc_id NOT IN (SELECT node FROM cc WHERE node <> cluster_id)
        |ORDER BY doc_id""".stripMargin

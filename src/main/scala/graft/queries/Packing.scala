@@ -396,16 +396,7 @@ object Packing {
          |WHEN ${Text.fp64Sql(e)} % $splitBuckets = 8 THEN 'val'
          |ELSE 'test' END""".stripMargin
     s"""WITH RECURSIVE ${Dedup.jaccardPairsCteSql},
-       |edges AS (
-       |  SELECT d1 AS a, d2 AS b FROM pairs
-       |  UNION ALL SELECT d2, d1 FROM pairs
-       |), reach AS (
-       |  SELECT a AS node, a AS lbl FROM edges
-       |  UNION
-       |  SELECT e.b, r.lbl FROM reach r JOIN edges e ON e.a = r.node
-       |), cc AS MATERIALIZED (
-       |  SELECT node, MIN(lbl) AS cluster_id FROM reach GROUP BY node
-       |), sp AS MATERIALIZED (
+       |${Dedup.ccCtesSql("", "pairs")}, sp AS MATERIALIZED (
        |  -- MATERIALIZED (cc too): sp is read FOUR times below; default
        |  -- inlining re-ran the whole md5-split projection AND the cc
        |  -- recursion per reference — the zipf-sf1 sweep timed this

@@ -56,19 +56,9 @@ object Pipeline {
       // set costs one job
       val kept0 = Text.qcPublished(spark, dir)
         .filter(col("pred") === 1).select("doc_id").localCheckpoint()
-      // published pair artifact (round 19, guide §1.2): keptDocs was
-      // the one remaining consumer rebuilding the pair kernel inline
-      // per invocation while every append-family screen already read
-      // the shipped d03 table
-      val pairs = Dedup.pairsPublished(spark, dir)
-        .join(kept0.select(col("doc_id").as("d1")).hint("shuffle_hash"),
-          Seq("d1"), "left_semi")
-        .join(kept0.select(col("doc_id").as("d2")).hint("shuffle_hash"),
-          Seq("d2"), "left_semi")
-      val losers = Dedup.connectedComponents(pairs)
-        .filter(col("node") =!= col("lbl"))
-        .select(col("node").as("doc_id"))
-      kept0.join(losers.hint("shuffle_hash"), Seq("doc_id"), "left_anti")
+      // the published pair artifact, the table every append screen
+      // reads, not a second run of the pair kernel
+      Dedup.keepOnePerCluster(Dedup.pairsPublished(spark, dir), kept0)
     }
 
   /** The full document rows of a kept doc_id set. */
@@ -98,44 +88,33 @@ object Pipeline {
         coalesce(col("nt"), lit(0)).cast("long").as("n_tok")))
   }
 
-  /** All four stages in ONE statement. CTE-name note: the t23 chain
-    * reserves qst/qmed/labels/feats/tr/counts/totals/weights/scored,
-    * the pair block sh/ex/capped/sizes/inter/pairs, the BPE chain
-    * words/w0..wN/p1..pN/dict; kept0/fedges/reach/cc/keptf/docw/enc/
-    * base/o are this oracle's own. MATERIALIZED on the twice-read
-    * frames (the bpeChainCtes discipline — default inlining
-    * re-executes a CTE per reference).
+  /** The t23 chain, the pair block and the quality survivors `qkept`
+    * (doc_id): the front half every e-family oracle shares.
     */
-  /** Stages 1+2 as a CTE chain ending in `keptf` (doc_id) — shared by
-    * the e01 and e02 oracles. Callers must open with `WITH RECURSIVE`
-    * (the `reach` fixpoint).
-    */
-  private val keptCtesSql: String =
+  private val survivorCtesSql: String =
     s"""${Text.qcCtesSql},
-       |kept0 AS MATERIALIZED (
+       |qkept AS MATERIALIZED (
        |  SELECT l.doc_id FROM labels l LEFT JOIN scored USING (doc_id)
        |  WHERE COALESCE(s8, 0) > 0
        |),
-       |${Dedup.jaccardPairsCteSql},
-       |fpairs AS MATERIALIZED (
-       |  SELECT p.d1, p.d2 FROM pairs p
-       |  JOIN kept0 ka ON ka.doc_id = p.d1
-       |  JOIN kept0 kb ON kb.doc_id = p.d2
-       |),
-       |fedges AS (
-       |  SELECT d1 AS a, d2 AS b FROM fpairs
-       |  UNION ALL SELECT d2, d1 FROM fpairs
-       |),
-       |reach AS (
-       |  SELECT a AS node, a AS lbl FROM fedges
-       |  UNION
-       |  SELECT e.b, r.lbl FROM reach r JOIN fedges e ON e.a = r.node
-       |),
-       |cc AS (SELECT node, MIN(lbl) AS cluster_id FROM reach GROUP BY node),
-       |keptf AS MATERIALIZED (
-       |  SELECT doc_id FROM kept0
-       |  WHERE doc_id NOT IN (SELECT node FROM cc WHERE node <> cluster_id)
-       |)""".stripMargin
+       |${Dedup.jaccardPairsCteSql}""".stripMargin
+
+  /** Stages 1+2 as a CTE chain ending in `keptf` (doc_id), shared by
+    * the e01/e02/e04 oracles and, through [[shardChunkCtesSql]], by
+    * e05/e07/e09 and s16. Callers must open with
+    * `WITH RECURSIVE` (the `freach` fixpoint). CTE-name note: the t23
+    * chain reserves qst/qmed/labels/feats/tr/counts/totals/weights/
+    * scored, the pair block sh/ex/capped/sizes/inter/pairs, the BPE
+    * chain words/w0..wN/p1..pN/dict; qkept and the keep-one block's
+    * fpairs/fedges/freach/fcc/keptf are this chain's own. The
+    * appends' oracles prefix theirs b- (frozen base) and i-/i1-/i2-
+    * (increments). MATERIALIZED on the twice-read frames (the
+    * bpeChainCtes discipline — default inlining re-executes a CTE per
+    * reference).
+    */
+  private val keptCtesSql: String =
+    s"""$survivorCtesSql,
+       |${Dedup.keepOneCtesSql("f", "qkept", "keptf")}""".stripMargin
 
   val trainingPipelineSql: String =
     s"""WITH RECURSIVE $keptCtesSql,
@@ -668,17 +647,9 @@ object Pipeline {
       val sid = Dedup.incrementalSplitId(spark, dir)
       val baseQ = Text.qcPublished(spark, dir)
         .filter(col("pred") === 1 && col("doc_id") < sid).select("doc_id")
-      val basePairs = Dedup.jaccardPairs(spark, dir)
+      Dedup.keepOnePerCluster(Dedup.jaccardPairs(spark, dir)
         .select("d1", "d2")
-        .filter(col("d1") < sid && col("d2") < sid)
-        .join(baseQ.select(col("doc_id").as("d1")).hint("shuffle_hash"),
-          Seq("d1"), "left_semi")
-        .join(baseQ.select(col("doc_id").as("d2")).hint("shuffle_hash"),
-          Seq("d2"), "left_semi")
-      val losers = Dedup.connectedComponents(basePairs)
-        .filter(col("node") =!= col("lbl"))
-        .select(col("node").as("doc_id"))
-      baseQ.join(losers.hint("shuffle_hash"), Seq("doc_id"), "left_anti")
+        .filter(col("d1") < sid && col("d2") < sid), baseQ)
     }
 
   def incrementAppend(spark: SparkSession, dir: String): DataFrame = {
@@ -696,9 +667,8 @@ object Pipeline {
     */
   private[graft] def incrementAppendFrom(
       spark: SparkSession, dir: String, incQ: DataFrame): DataFrame =
-    appendAgainst(spark, dir, baseKeptDocs(spark, dir),
-      baseFpsArtifact(spark, dir), baseTotalsArtifact(spark, dir), incQ,
-      crossLosersPre = Some(baseCrossLosersArtifact(spark, dir)))
+    appendAgainst(spark, dir, baseCrossLosersArtifact(spark, dir),
+      baseFpsArtifact(spark, dir), baseTotalsArtifact(spark, dir), incQ)
 
   /** Published artifact (round-18 optimization): the docs that
     * near-dup-pair with a FROZEN-BASE-kept doc — the near screen's
@@ -713,19 +683,9 @@ object Pipeline {
     */
   private def baseCrossLosersArtifact(
       spark: SparkSession, dir: String): DataFrame =
-    PlanMemo.publishedParquet(spark, dir, "pipeline_base_crosslosers") {
-      val pairs = Dedup.pairsPublished(spark, dir)
-      val baseKept = baseKeptDocs(spark, dir)
-      pairs
-        .join(baseKept.select(col("doc_id").as("d1"))
-          .hint("shuffle_hash"), Seq("d1"), "left_semi")
-        .select(col("d2").as("doc_id"))
-        .union(pairs
-          .join(baseKept.select(col("doc_id").as("d2"))
-            .hint("shuffle_hash"), Seq("d2"), "left_semi")
-          .select(col("d1").as("doc_id")))
-        .distinct()
-    }
+    PlanMemo.publishedParquet(spark, dir, "pipeline_base_crosslosers")(
+      Dedup.pairsTouching(Dedup.pairsPublished(spark, dir),
+        baseKeptDocs(spark, dir)).distinct())
 
   /** Published artifact: the base-kept fingerprint set is one of the
     * compact artifacts a pipeline KEEPS between increments (d13's
@@ -756,24 +716,22 @@ object Pipeline {
         .agg(sum(col("cnt") * col("ntok")).cast("long").as("base_tok"))
     }
 
-  /** Append stages 2–5 against an ARBITRARY shipped state — (kept doc
-    * set, kept-content fingerprint set, per-lang token totals) — not
-    * just the frozen base: this is the seam the multi-increment chain
-    * (e08) turns weekly, feeding each append the state the PREVIOUS
-    * append produced. e03/e06 pass the published frozen-base
-    * artifacts. The screens touch the state only through doc_id/fp
+  /** Append stages 2–5 against an ARBITRARY shipped state — (cross-
+    * loser screen, kept-content fingerprint set, per-lang token
+    * totals) — not just the frozen base: this is the seam the
+    * multi-increment chain (e08) turns weekly, feeding each append the
+    * state the PREVIOUS append produced. e03/e06 pass the published
+    * frozen-base artifacts. `crossLosers` is the near screen: every
+    * doc pairing with a shipped one ([[Dedup.pairsTouching]] of the
+    * kept set). The screens touch the state only through doc_id/fp
     * equi joins and the lang-sized totals broadcast — never
     * state × increment content comparison — so the shape is identical
     * at any number of accumulated increments.
     */
   private[graft] def appendAgainst(
-      spark: SparkSession, dir: String, kept: DataFrame, fps: DataFrame,
-      totals: DataFrame, incQ: DataFrame,
-      crossLosersPre: Option[DataFrame] = None): DataFrame = {
+      spark: SparkSession, dir: String, crossLosers: DataFrame,
+      fps: DataFrame, totals: DataFrame, incQ: DataFrame): DataFrame = {
     val docs = Tables.documents(spark, dir)
-    val baseKept = kept
-    val baseFps = fps
-    val baseTotals = totals
     // exact screen: shipped fingerprint set (optimizer_barrier — the
     // d13 discipline: the anti join infers isnotnull(fp) and would
     // otherwise inline md5(text) into a pre-rebalance Filter)
@@ -781,34 +739,8 @@ object Pipeline {
     val incNoExact = docs
       .join(incQ.hint("shuffle_hash"), Seq("doc_id"), "left_semi")
       .select(col("doc_id"), fp.as("fp"))
-      .join(baseFps.hint("shuffle_hash"), Seq("fp"), "left_anti")
+      .join(fps.hint("shuffle_hash"), Seq("fp"), "left_anti")
       .select("doc_id")
-    // near screen: any verified pair touching a base-kept doc drops
-    // the increment side (d1 < d2 and base ids < increment ids, but
-    // both orientations are handled rather than relied on).
-    // PUBLISHED artifact (round-16 verdict "next" 3): the verified
-    // pair set is the fourth frozen-base screening artifact e03 keeps
-    // between increments (same corpus-fingerprint keying as
-    // base_kept/base_fps/base_totals; the parquet is SHARED with
-    // p05's published copy — one artifact, two consumers). Before
-    // this, rebuilding the d02/d03 pair memo under the bench's
-    // per-rep clearCache was e03's dominant remaining cost (4.63 s
-    // quiet, top of the board).
-    val pairs = Dedup.pairsPublished(spark, dir)
-    // frozen-base callers pass the PUBLISHED cross-losers screen
-    // ([[baseCrossLosersArtifact]]); the live spelling (rolled-forward
-    // kept sets, e08's second append) skips the .distinct() the
-    // artifact build pays — this set's only consumer is the anti
-    // join's right side, where duplicates are semantics-free
-    // (guide §2.4, the same argument as e08's fps₁)
-    val crossLosers = crossLosersPre.getOrElse(pairs
-      .join(baseKept.select(col("doc_id").as("d1")).hint("shuffle_hash"),
-        Seq("d1"), "left_semi")
-      .select(col("d2").as("doc_id"))
-      .union(pairs
-        .join(baseKept.select(col("doc_id").as("d2")).hint("shuffle_hash"),
-          Seq("d2"), "left_semi")
-        .select(col("d1").as("doc_id"))))
     // localCheckpoint (eager, lineage-truncating): incScreened is
     // consumed THREE times (both incPairs orientations + admitted),
     // and its build chain (increment md5 + exact/near screens) would
@@ -818,17 +750,12 @@ object Pipeline {
     val incScreened = incNoExact
       .join(crossLosers.hint("shuffle_hash"), Seq("doc_id"), "left_anti")
       .localCheckpoint()
-    // intra-increment dedup on the surviving subgraph
-    val incPairs = pairs
-      .join(incScreened.select(col("doc_id").as("d1")).hint("shuffle_hash"),
-        Seq("d1"), "left_semi")
-      .join(incScreened.select(col("doc_id").as("d2")).hint("shuffle_hash"),
-        Seq("d2"), "left_semi")
-    val incLosers = Dedup.connectedComponents(incPairs)
-      .filter(col("node") =!= col("lbl"))
-      .select(col("node").as("doc_id"))
-    val admitted = incScreened
-      .join(incLosers.hint("shuffle_hash"), Seq("doc_id"), "left_anti")
+    // intra-increment dedup on the surviving subgraph of the
+    // PUBLISHED pair artifact (a table the pipeline keeps between
+    // increments; rebuilding the pair set per append was e03's
+    // dominant cost)
+    val admitted =
+      Dedup.keepOnePerCluster(Dedup.pairsPublished(spark, dir), incScreened)
     // append placement: the increment's prefix sum continues each
     // lang's stream from the shipped per-lang token totals
     val dict = Text.bpeEncodeDictUnder(
@@ -864,7 +791,7 @@ object Pipeline {
     // pure overhead, one range Exchange + Sort per append removed)
     Packing.placed(incBase, sorted = false)
       .select("lang", "doc_id", "n_tok", "tok_offset")
-      .join(broadcast(baseTotals), Seq("lang"), "left")
+      .join(broadcast(totals), Seq("lang"), "left")
       .withColumn("tok_offset",
         col("tok_offset") + coalesce(col("base_tok"), lit(0L)))
       .withColumn("first_chunk", floor(col("tok_offset") / ct))
@@ -876,89 +803,28 @@ object Pipeline {
       .orderBy("lang", "doc_id")
   }
 
-  /** e03's oracle replays all five stages: the t23 chain, the pair
-    * block, TWO recursive component closures (base-side then
-    * increment-side), the exact-fingerprint screen, the dictionary
-    * encode for base totals and increment counts, and the shifted
-    * window placement. CTE names carry b-/i- prefixes to stay clear
-    * of the shared blocks (reserved names).
+  /** The frozen-base half of the append oracles (e03/e06/e08): the
+    * survivors, the increment boundary `isplit` (sid, mx), the
+    * base-side keep-one (`bkept`), its fingerprint set `bfp`, the
+    * dictionary and the per-lang base totals `btot`. Each append pass
+    * is one [[chainAppendCtesSql]] over it; CTE names carry b-/i-
+    * prefixes to stay clear of the shared blocks (reserved names).
     */
-  val incrementAppendSql: String = {
+  private val appendBaseCtesSql: String = {
     val frac = 1.0 - Dedup.incrementalFraction
-    s"""WITH RECURSIVE ${Text.qcCtesSql},
-       |qkept AS MATERIALIZED (
-       |  SELECT l.doc_id FROM labels l LEFT JOIN scored USING (doc_id)
-       |  WHERE COALESCE(s8, 0) > 0
-       |),
+    s"""$survivorCtesSql,
        |isplit AS (
-       |  SELECT CAST(CEIL((MAX(doc_id) + 1) * $frac) AS BIGINT) AS sid
+       |  SELECT CAST(CEIL((MAX(doc_id) + 1) * $frac) AS BIGINT) AS sid,
+       |    MAX(doc_id) AS mx
        |  FROM documents
        |),
-       |${Dedup.jaccardPairsCteSql},
        |bq AS MATERIALIZED (
        |  SELECT doc_id FROM qkept WHERE doc_id < (SELECT sid FROM isplit)
        |),
-       |bpairs AS MATERIALIZED (
-       |  SELECT p.d1, p.d2 FROM pairs p
-       |  JOIN bq ba ON ba.doc_id = p.d1
-       |  JOIN bq bb ON bb.doc_id = p.d2
-       |),
-       |bedges AS (
-       |  SELECT d1 AS a, d2 AS b FROM bpairs
-       |  UNION ALL SELECT d2, d1 FROM bpairs
-       |),
-       |breach AS (
-       |  SELECT a AS node, a AS lbl FROM bedges
-       |  UNION
-       |  SELECT e.b, r.lbl FROM breach r JOIN bedges e ON e.a = r.node
-       |),
-       |bcc AS MATERIALIZED (
-       |  SELECT node, MIN(lbl) AS cluster_id FROM breach GROUP BY node
-       |),
-       |bkept AS MATERIALIZED (
-       |  SELECT doc_id FROM bq
-       |  WHERE doc_id NOT IN (SELECT node FROM bcc WHERE node <> cluster_id)
-       |),
-       |iq AS MATERIALIZED (
-       |  SELECT doc_id FROM qkept WHERE doc_id >= (SELECT sid FROM isplit)
-       |),
+       |${Dedup.keepOneCtesSql("b", "bq", "bkept")},
        |bfp AS MATERIALIZED (
        |  SELECT DISTINCT md5(text) AS fp
        |  FROM documents JOIN bkept USING (doc_id)
-       |),
-       |inoex AS MATERIALIZED (
-       |  SELECT d.doc_id FROM documents d JOIN iq USING (doc_id)
-       |  WHERE md5(d.text) NOT IN (SELECT fp FROM bfp)
-       |),
-       |xlose AS MATERIALIZED (
-       |  SELECT p.d2 AS doc_id FROM pairs p JOIN bkept k ON k.doc_id = p.d1
-       |  UNION
-       |  SELECT p.d1 FROM pairs p JOIN bkept k ON k.doc_id = p.d2
-       |),
-       |iscr AS MATERIALIZED (
-       |  SELECT doc_id FROM inoex
-       |  WHERE doc_id NOT IN (SELECT doc_id FROM xlose)
-       |),
-       |ipairs AS MATERIALIZED (
-       |  SELECT p.d1, p.d2 FROM pairs p
-       |  JOIN iscr ia ON ia.doc_id = p.d1
-       |  JOIN iscr ib ON ib.doc_id = p.d2
-       |),
-       |iedges AS (
-       |  SELECT d1 AS a, d2 AS b FROM ipairs
-       |  UNION ALL SELECT d2, d1 FROM ipairs
-       |),
-       |ireach AS (
-       |  SELECT a AS node, a AS lbl FROM iedges
-       |  UNION
-       |  SELECT e.b, r.lbl FROM ireach r JOIN iedges e ON e.a = r.node
-       |),
-       |icc AS MATERIALIZED (
-       |  SELECT node, MIN(lbl) AS cluster_id FROM ireach GROUP BY node
-       |),
-       |iadm AS MATERIALIZED (
-       |  SELECT doc_id FROM iscr
-       |  WHERE doc_id NOT IN (SELECT node FROM icc WHERE node <> cluster_id)
        |),
        |${Text.bpeDictCteSql},
        |bdocw AS MATERIALIZED (
@@ -972,43 +838,20 @@ object Pipeline {
        |  FROM bdocw w JOIN dict USING (word)
        |  JOIN documents d USING (doc_id)
        |  GROUP BY d.lang
-       |),
-       |idocw AS (
-       |  SELECT doc_id, word, COUNT(*) AS cnt FROM (
-       |    SELECT doc_id, unnest(${Text.bpeWordsSql("text")}) AS word
-       |    FROM documents JOIN iadm USING (doc_id)) t
-       |  GROUP BY doc_id, word
-       |),
-       |ienc AS (
-       |  SELECT doc_id, CAST(SUM(cnt * ntok) AS BIGINT) AS n_tok
-       |  FROM idocw JOIN dict USING (word) GROUP BY doc_id
-       |),
-       |ibase AS (
-       |  SELECT d.lang, d.doc_id, CAST(COALESCE(e.n_tok, 0) AS BIGINT) AS n_tok
-       |  FROM documents d JOIN iadm USING (doc_id)
-       |  LEFT JOIN ienc e USING (doc_id)
-       |),
-       |io AS (
-       |  SELECT lang, doc_id, n_tok,
-       |    CAST(COALESCE(SUM(n_tok) OVER (PARTITION BY lang ORDER BY doc_id
-       |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT)
-       |      AS inc_off
-       |  FROM ibase
-       |)
-       |SELECT io.lang, io.doc_id, io.n_tok,
-       |  CAST(io.inc_off + COALESCE(bt.base_tok, 0) AS BIGINT) AS tok_offset,
-       |  CAST((io.inc_off + COALESCE(bt.base_tok, 0))
-       |    // ${Packing.chunkTokens} AS BIGINT) AS first_chunk,
-       |  CAST((io.inc_off + COALESCE(bt.base_tok, 0)
-       |      + GREATEST(io.n_tok, 1) - 1) // ${Packing.chunkTokens} AS BIGINT)
-       |    AS last_chunk,
-       |  CAST((io.inc_off + COALESCE(bt.base_tok, 0)
-       |      + GREATEST(io.n_tok, 1) - 1) // ${Packing.chunkTokens}
-       |    - (io.inc_off + COALESCE(bt.base_tok, 0)) // ${Packing.chunkTokens}
-       |    + 1 AS BIGINT) AS spans
-       |FROM io LEFT JOIN btot bt USING (lang)
-       |ORDER BY io.lang, io.doc_id""".stripMargin
+       |)""".stripMargin
   }
+
+  /** e03's oracle replays all five stages: the frozen base (with the
+    * base-side component closure), then ONE append pass — the
+    * exact-fingerprint screen, the near screen, the increment-side
+    * keep-one, the dictionary encode and the shifted window placement.
+    */
+  val incrementAppendSql: String =
+    s"""WITH RECURSIVE $appendBaseCtesSql,
+       |${chainAppendCtesSql("i", "doc_id >= (SELECT sid FROM isplit)",
+           "bkept", "bfp")}
+       |${chainSelectSql("i", "btot")}
+       |ORDER BY lang, doc_id""".stripMargin
 
   // ---------------------------------------------------------------
   /** The two-increment chain split: sid1 is d13's standard increment
@@ -1067,15 +910,13 @@ object Pipeline {
       .select("doc_id")
     val inc2Q = qc.filter(col("doc_id") >= sid2).select("doc_id")
     val docs = Tables.documents(spark, dir)
-    val baseKept = baseKeptDocs(spark, dir)
     // localCheckpoint (eager): inc1's placements feed FOUR consumers
-    // (kept₁, fps₁, totals₁, the output union) — without it the whole
-    // first append would re-execute per consumer. Increment-sized.
-    val p1 = appendAgainst(spark, dir, baseKept,
-      baseFpsArtifact(spark, dir), baseTotalsArtifact(spark, dir), inc1Q,
-      crossLosersPre = Some(baseCrossLosersArtifact(spark, dir)))
+    // (crossLosers₂, fps₁, totals₁, the output union) — without it the
+    // whole first append would re-execute per consumer.
+    // Increment-sized.
+    val p1 = appendAgainst(spark, dir, baseCrossLosersArtifact(spark, dir),
+      baseFpsArtifact(spark, dir), baseTotalsArtifact(spark, dir), inc1Q)
       .localCheckpoint()
-    val kept1 = baseKept.select("doc_id").union(p1.select("doc_id"))
     // no .distinct() on the rolled-forward fingerprint set: its only
     // consumer is the RIGHT side of appendAgainst's left_anti join,
     // where duplicates are semantics-free — the dedup was a full
@@ -1093,28 +934,16 @@ object Pipeline {
       .select(col("lang"),
         (coalesce(col("base_tok"), lit(0L)) +
           coalesce(col("inc_tok"), lit(0L))).as("base_tok"))
-    // cross-losers screen for the SECOND append (round 19, guide
-    // §1.2/§2.4): kept₁ = baseKept ∪ admitted₁ and the semi join
-    // distributes over the union, so the screen decomposes into the
-    // PUBLISHED frozen-base cross-losers artifact (computed once per
-    // corpus) plus the two pair semi-joins against the
-    // increment-sized admitted₁ set — instead of re-scanning the pair
-    // artifact against the full base∪inc1 kept set twice per run.
-    // Duplicates across the three legs are semantics-free (the only
-    // consumer is the anti join's right side), and baseKept/admitted₁
-    // are disjoint id ranges anyway.
-    val pairsArt = Dedup.pairsPublished(spark, dir)
+    // cross-losers screen for the SECOND append: kept₁ = base-kept ∪
+    // admitted₁ and the semi join distributes over the union, so the
+    // screen is the PUBLISHED frozen-base artifact (computed once per
+    // corpus) plus the pairs touching the increment-sized admitted₁
+    // set — not a re-scan of the pair artifact against the full
+    // base∪inc1 kept set. Duplicates across the legs are
+    // semantics-free (the only consumer is an anti join's right side).
     val crossLosers2 = baseCrossLosersArtifact(spark, dir)
-      .union(pairsArt
-        .join(p1.select(col("doc_id").as("d1")).hint("shuffle_hash"),
-          Seq("d1"), "left_semi")
-        .select(col("d2").as("doc_id")))
-      .union(pairsArt
-        .join(p1.select(col("doc_id").as("d2")).hint("shuffle_hash"),
-          Seq("d2"), "left_semi")
-        .select(col("d1").as("doc_id")))
-    val p2 = appendAgainst(spark, dir, kept1, fps1, totals1, inc2Q,
-      crossLosersPre = Some(crossLosers2))
+      .union(Dedup.pairsTouching(Dedup.pairsPublished(spark, dir), p1))
+    val p2 = appendAgainst(spark, dir, crossLosers2, fps1, totals1, inc2Q)
     p1.withColumn("inc", lit(1))
       .unionByName(p2.withColumn("inc", lit(2)))
       .orderBy("lang", "doc_id")
@@ -1142,27 +971,7 @@ object Pipeline {
        |  SELECT doc_id FROM ${p}noex
        |  WHERE doc_id NOT IN (SELECT doc_id FROM ${p}xlose)
        |),
-       |${p}pairs AS MATERIALIZED (
-       |  SELECT p.d1, p.d2 FROM pairs p
-       |  JOIN ${p}scr ia ON ia.doc_id = p.d1
-       |  JOIN ${p}scr ib ON ib.doc_id = p.d2
-       |),
-       |${p}edges AS (
-       |  SELECT d1 AS a, d2 AS b FROM ${p}pairs
-       |  UNION ALL SELECT d2, d1 FROM ${p}pairs
-       |),
-       |${p}reach AS (
-       |  SELECT a AS node, a AS lbl FROM ${p}edges
-       |  UNION
-       |  SELECT e.b, r.lbl FROM ${p}reach r JOIN ${p}edges e ON e.a = r.node
-       |),
-       |${p}cc AS MATERIALIZED (
-       |  SELECT node, MIN(lbl) AS cluster_id FROM ${p}reach GROUP BY node
-       |),
-       |${p}adm AS MATERIALIZED (
-       |  SELECT doc_id FROM ${p}scr
-       |  WHERE doc_id NOT IN (SELECT node FROM ${p}cc WHERE node <> cluster_id)
-       |),
+       |${Dedup.keepOneCtesSql(p, s"${p}scr", s"${p}adm")},
        |${p}docw AS (
        |  SELECT doc_id, word, COUNT(*) AS cnt FROM (
        |    SELECT doc_id, unnest(${Text.bpeWordsSql("text")}) AS word
@@ -1187,84 +996,32 @@ object Pipeline {
        |)""".stripMargin
 
   /** The placement projection of one append's output rows against its
-    * totals CTE, tagged with the increment number.
+    * totals CTE, tagged with the increment number when one is given.
     */
-  private def chainSelectSql(p: String, tot: String, inc: Int): String = {
+  private def chainSelectSql(
+      p: String, tot: String, inc: Option[Int] = None): String = {
     val off = s"(o.inc_off + COALESCE(bt.base_tok, 0))"
     val ct = Packing.chunkTokens
+    val incCol = inc.fold("")(i => s", $i AS inc")
     s"""SELECT o.lang, o.doc_id, o.n_tok,
        |  CAST($off AS BIGINT) AS tok_offset,
        |  CAST($off // $ct AS BIGINT) AS first_chunk,
        |  CAST(($off + GREATEST(o.n_tok, 1) - 1) // $ct AS BIGINT)
        |    AS last_chunk,
        |  CAST(($off + GREATEST(o.n_tok, 1) - 1) // $ct
-       |    - $off // $ct + 1 AS BIGINT) AS spans,
-       |  $inc AS inc
+       |    - $off // $ct + 1 AS BIGINT) AS spans$incCol
        |FROM ${p}o o LEFT JOIN $tot bt USING (lang)""".stripMargin
   }
 
-  /** e08's oracle replays the base derivation once, then BOTH append
-    * passes with the state rollforward between them — the same CTE
-    * machinery as e03's oracle, emitted twice by
-    * [[chainAppendCtesSql]] with the second pass pointed at the
+  /** e08's oracle replays the frozen base once, then BOTH append
+    * passes with the state rollforward between them — e03's oracle
+    * plus a second [[chainAppendCtesSql]] pass pointed at the
     * rolled-forward kept/fps/totals CTEs.
     */
-  val incrementAppendChainSql: String = {
-    val frac = 1.0 - Dedup.incrementalFraction
-    s"""WITH RECURSIVE ${Text.qcCtesSql},
-       |qkept AS MATERIALIZED (
-       |  SELECT l.doc_id FROM labels l LEFT JOIN scored USING (doc_id)
-       |  WHERE COALESCE(s8, 0) > 0
-       |),
-       |isplit AS (
-       |  SELECT CAST(CEIL((MAX(doc_id) + 1) * $frac) AS BIGINT) AS sid,
-       |    MAX(doc_id) AS mx
-       |  FROM documents
-       |),
+  val incrementAppendChainSql: String =
+    s"""WITH RECURSIVE $appendBaseCtesSql,
        |isplit2 AS (
        |  SELECT sid, sid + (mx + 1 - sid) // 2 AS sid2 FROM isplit
-       |),
-       |${Dedup.jaccardPairsCteSql},
-       |bq AS MATERIALIZED (
-       |  SELECT doc_id FROM qkept WHERE doc_id < (SELECT sid FROM isplit)
-       |),
-       |bpairs AS MATERIALIZED (
-       |  SELECT p.d1, p.d2 FROM pairs p
-       |  JOIN bq ba ON ba.doc_id = p.d1
-       |  JOIN bq bb ON bb.doc_id = p.d2
-       |),
-       |bedges AS (
-       |  SELECT d1 AS a, d2 AS b FROM bpairs
-       |  UNION ALL SELECT d2, d1 FROM bpairs
-       |),
-       |breach AS (
-       |  SELECT a AS node, a AS lbl FROM bedges
-       |  UNION
-       |  SELECT e.b, r.lbl FROM breach r JOIN bedges e ON e.a = r.node
-       |),
-       |bcc AS MATERIALIZED (
-       |  SELECT node, MIN(lbl) AS cluster_id FROM breach GROUP BY node
-       |),
-       |bkept AS MATERIALIZED (
-       |  SELECT doc_id FROM bq
-       |  WHERE doc_id NOT IN (SELECT node FROM bcc WHERE node <> cluster_id)
-       |),
-       |bfp AS MATERIALIZED (
-       |  SELECT DISTINCT md5(text) AS fp
-       |  FROM documents JOIN bkept USING (doc_id)
-       |),
-       |${Text.bpeDictCteSql},
-       |bdocw AS MATERIALIZED (
-       |  SELECT doc_id, word, COUNT(*) AS cnt FROM (
-       |    SELECT doc_id, unnest(${Text.bpeWordsSql("text")}) AS word
-       |    FROM documents JOIN bkept USING (doc_id)) t
-       |  GROUP BY doc_id, word
-       |),
-       |btot AS MATERIALIZED (
-       |  SELECT d.lang, CAST(SUM(w.cnt * dict.ntok) AS BIGINT) AS base_tok
-       |  FROM bdocw w JOIN dict USING (word)
-       |  JOIN documents d USING (doc_id)
-       |  GROUP BY d.lang
        |),
        |${chainAppendCtesSql("i1",
            "doc_id >= (SELECT sid FROM isplit2) " +
@@ -1290,11 +1047,10 @@ object Pipeline {
        |),
        |${chainAppendCtesSql("i2",
            "doc_id >= (SELECT sid2 FROM isplit2)", "akept1", "afp1")}
-       |${chainSelectSql("i1", "btot", 1)}
+       |${chainSelectSql("i1", "btot", Some(1))}
        |UNION ALL
-       |${chainSelectSql("i2", "atot1", 2)}
+       |${chainSelectSql("i2", "atot1", Some(2))}
        |ORDER BY lang, doc_id""".stripMargin
-  }
 
   // ---------------------------------------------------------------
   /** Token-budget factor for e04: the run trains on budget = factor ×

@@ -99,32 +99,11 @@ object Reports {
   /** O8 — show passthrough (display surface parity). */
   def show(df: DataFrame, n: Int = 20): Unit = df.show(n, truncate = false)
 
-  /** The 05b/05c report job shape (spark_jobs/05c_make_report.py:90-182):
-    * run each KPI query and export it as a single-part header CSV under
-    * `outDir/<name>/`. Returns the written report names.
-    */
-  def writeKpiReports(spark: SparkSession, sfDir: String,
-                      outDir: String,
-                      names: Seq[String] = defaultReportKpis): Seq[String] = {
-    names.foreach { n =>
-      writeCsvSample(SparkEntry.queries(n)(spark, sfDir), s"$outDir/$n")
-    }
-    names
-  }
-
-  /** The reference's report tables: payment dist, hourly, buckets,
-    * heatmap, tip rate (05c:90-139).
-    */
-  val defaultReportKpis: Seq[String] = Seq(
-    "q03_payment_dist", "q02_trips_per_hour", "q04_distance_buckets",
-    "q09_heatmap_dow_hour", "q10_tip_rate_by_payment")
-
   /** The 05c report-tree layout: reference table name → the graft
     * query computing it (05c_make_report.py:90-150). The same five
-    * aggregations feed 05b's four charts (05b_plots.py:54-124), so
-    * this tree IS the chart data; PNG rendering is a matplotlib
-    * concern, not a Spark capability, and is deliberately out of
-    * scope (documented in COVERAGE.md).
+    * aggregations feed 05b's charts (05b_plots.py:54-124), so this
+    * tree IS the chart data; [[Plots.writePlotTree]] renders 05b's six
+    * PNGs from the same aggregations.
     */
   val reportTree: Seq[(String, String)] = Seq(
     "kpi_by_payment_type" -> "q03_payment_dist",

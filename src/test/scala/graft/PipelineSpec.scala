@@ -171,6 +171,24 @@ class PipelineSpec extends AnyFunSuite {
     assert(a.toSeq === Seq((1L, 1L), (2L, 1L), (3L, 1L), (10L, 10L), (11L, 10L)))
   }
 
+  test("keepOnePerCluster keeps one member per cluster of the restricted graph") {
+    // two clusters, {1,2,3} (chain) and {7,8}, plus unpaired 5:
+    //   - 1 is outside ids, so {2,3} is the cluster left: 2 is kept
+    //     and 3 loses, though 2 is not the full cluster's min
+    //   - 5 has no pair and survives
+    //   - {7,8} keeps 7
+    val s = spark
+    import s.implicits._
+    val pairs = Seq((1L, 2L), (2L, 3L), (7L, 8L)).toDF("d1", "d2")
+    val ids = Seq(2L, 3L, 5L, 7L, 8L).toDF("doc_id")
+    def kept(p: org.apache.spark.sql.DataFrame): Seq[Long] =
+      Dedup.keepOnePerCluster(p, ids)
+        .collect().map(_.getLong(0)).toSeq.sorted
+    assert(kept(pairs) === Seq(2L, 5L, 7L))
+    // (d2, d1) column order answers the same
+    assert(kept(pairs.select(col("d2"), col("d1"))) === Seq(2L, 5L, 7L))
+  }
+
   test("e05 published shards carry exactly e02's gated id streams") {
     import org.apache.spark.sql.functions.{col, expr, md5, sum}
     // publish (idempotent per corpus fingerprint), then read the DISK
@@ -364,9 +382,11 @@ class PipelineSpec extends AnyFunSuite {
     val totals0 = Seq.empty[(String, Long)].toDF("lang", "base_tok")
     def admitted(df: org.apache.spark.sql.DataFrame): Set[Long] =
       df.select("doc_id").collect().map(_.getLong(0)).toSet
+    def crossLosers(kept: org.apache.spark.sql.DataFrame) =
+      Dedup.pairsTouching(Dedup.pairsPublished(spark, dir), kept)
     // chained
-    val p1 = Pipeline.appendAgainst(spark, dir, kept0, fps0, totals0,
-      Seq(10L, 11L, 12L).toDF("doc_id")).localCheckpoint()
+    val p1 = Pipeline.appendAgainst(spark, dir, crossLosers(kept0), fps0,
+      totals0, Seq(10L, 11L, 12L).toDF("doc_id")).localCheckpoint()
     assert(admitted(p1) === Set(10L, 12L), "inc1 admission")
     val kept1 = kept0.union(p1.select("doc_id"))
     val fps1 = fps0.union(docs
@@ -375,13 +395,13 @@ class PipelineSpec extends AnyFunSuite {
       .distinct()
     val totals1 = p1.groupBy("lang")
       .agg(sum("n_tok").cast("long").as("base_tok"))
-    val p2 = Pipeline.appendAgainst(spark, dir, kept1, fps1, totals1,
-      Seq(20L, 21L).toDF("doc_id"))
+    val p2 = Pipeline.appendAgainst(spark, dir, crossLosers(kept1), fps1,
+      totals1, Seq(20L, 21L).toDF("doc_id"))
     assert(admitted(p2) === Set(20L),
       "inc2 must keep the bridge doc and fp-screen the dup")
     // combined
-    val comb = Pipeline.appendAgainst(spark, dir, kept0, fps0, totals0,
-      Seq(10L, 11L, 12L, 20L, 21L).toDF("doc_id"))
+    val comb = Pipeline.appendAgainst(spark, dir, crossLosers(kept0), fps0,
+      totals0, Seq(10L, 11L, 12L, 20L, 21L).toDF("doc_id"))
     assert(admitted(comb) === Set(10L, 12L, 21L),
       "combined must CC-drop the bridge and keep the shingle-less dup")
     // the pair graph is exactly the a–x, x–y chain the classes rely on

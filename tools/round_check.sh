@@ -22,9 +22,12 @@
 #      call (`ImageIO.write(`/`read(`, `writeToSequence`, the GIF
 #      writer/reader lookups, `WavCodec.writer.write`,
 #      `getAudioInputStream`) nor the IVF cell score
-#      (`sparkDot("embedding", "c_emb")`) is spelled at more than one
-#      src/main code site (comment lines skipped), so each kernel
-#      recipe has one owner that the query bodies call; and every
+#      (`sparkDot("embedding", "c_emb")`) nor the near-dup keep-one
+#      screen (the DuckDB closure's recursive step `SELECT e.b, r.lbl`,
+#      the engine's loser filter `col("node") =!= col("lbl")`) is
+#      spelled at more than one src/main code site (comment lines
+#      skipped), so each kernel recipe has one owner that the query
+#      bodies and oracles call; and every
 #      `SparkSession.builder()` in src/main is the argument of
 #      `Tables.configure(` (of `configure(` inside Tables.scala), so
 #      every entry point's session carries the same settings — graft's
@@ -87,7 +90,8 @@ fi
 for recipe in 'ImageIO.write(' 'ImageIO.read(' 'writeToSequence' \
     'getImageWritersByFormatName' 'getImageReadersByFormatName' \
     'WavCodec.writer.write' 'getAudioInputStream' \
-    'sparkDot("embedding", "c_emb")'; do
+    'sparkDot("embedding", "c_emb")' 'SELECT e.b, r.lbl' \
+    'col("node") =!= col("lbl")'; do
   recipe_sites=$(grep -rnF "$recipe" src/main | code_lines || true)
   if (( $(grep -c . <<<"$recipe_sites") > 1 )); then
     echo "$recipe_sites"
