@@ -84,21 +84,34 @@ class IoSpec extends AnyFunSuite {
       src.filter(col("event_type") === "click").count())
   }
 
+  test("KPI report job writes one header CSV per report table (05c shape)") {
+    val out = java.nio.file.Files
+      .createTempDirectory("graft_reports").toString
+    val names = Reports.writeReportTree(spark, sfDir, out)
+    assert(names.nonEmpty)
+    Reports.reportTree.foreach { case (n, query) =>
+      val parts = new java.io.File(s"$out/$n.csv").listFiles()
+        .filter(_.getName.endsWith(".csv"))
+      assert(parts.length === 1, s"$n should be a single part file")
+      val header = java.nio.file.Files.readAllLines(parts.head.toPath).get(0)
+      assert(header.split(",").toSeq ===
+        SparkEntry.queries(query)(spark, sfDir).columns.toSeq,
+        s"$n header should be $query's columns")
+    }
+  }
+
   test("report tree writes the reference's five kpi_* tables (05c layout)") {
     val out = java.nio.file.Files
       .createTempDirectory("graft_report_tree").toString
     val names = Reports.writeReportTree(spark, sfDir, out)
     assert(names === Reports.reportTree.map(_._1))
-    Reports.reportTree.foreach { case (n, query) =>
+    names.foreach { n =>
       assert(n.startsWith("kpi_"), "reference report naming")
       val parts = new java.io.File(s"$out/$n.csv").listFiles()
         .filter(_.getName.endsWith(".csv"))
       assert(parts.length === 1, s"$n should be a single part file")
-      val lines = java.nio.file.Files.readAllLines(parts.head.toPath)
-      assert(lines.size() > 1, s"$n should have data rows")
-      assert(lines.get(0).split(",").toSeq ===
-        SparkEntry.queries(query)(spark, sfDir).columns.toSeq,
-        s"$n header should be $query's columns")
+      assert(java.nio.file.Files.readAllLines(parts.head.toPath).size() > 1,
+        s"$n should have data rows")
     }
   }
 
