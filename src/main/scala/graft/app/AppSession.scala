@@ -4,6 +4,7 @@ import org.apache.spark.ml.PipelineModel
 import org.apache.spark.ml.functions.vector_to_array
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 /** The reference's interactive frontend session re-expressed as a
   * plain long-lived class — the state streamlit keeps between widget
@@ -21,22 +22,51 @@ import org.apache.spark.sql.functions._
   * ml07's seeded-cached-sample + threshold override
   * (app5.py:355-426). Only the session/state glue is new here.
   *
-  * Scale posture: the session holds LAZY plans plus one bounded
-  * cached sample (n rows, unpersisted on source switch) — nothing
-  * here materializes the full frame on the driver.
+  * Scale posture: each source is sized once, when it is set, by
+  * Spark's own estimate (`optimizedPlan.stats.sizeInBytes`) against
+  * `spark.sql.autoBroadcastJoinThreshold`: a frame Spark would ship
+  * whole to every task is small enough to serve from one partition.
+  * A small source is read and enriched once, into a persisted
+  * (`MEMORY_AND_DISK`) single-partition copy that serves every
+  * request. Its `SinglePartition` output satisfies every distribution
+  * an aggregate, sort or window asks for, so the KPI, summary and
+  * templated-SQL plans carry no `Exchange` and run as one small job.
+  * A larger source, or any source under a threshold of -1, is served
+  * from its LAZY plan. Besides
+  * the copy, the session holds one bounded cached scoring sample;
+  * both are unpersisted on the next source switch and on [[close]].
+  * Spark caches by plan, so two sessions over the same source in one
+  * SparkSession share one copy, and the first to drop it drops it for
+  * both; the other then recomputes it per request, with the same
+  * answers. Nothing here collects the full frame on the driver.
   */
 final class AppSession(val spark: SparkSession, sfDir: String) {
   import AppSession.ViewName
 
+  /** The source's lazy plan; see [[current]]. */
+  private var source: DataFrame = _
+  /** What requests read: the cached single-partition copy of a small
+    * source, otherwise `source` itself.
+    */
   private var frame: DataFrame = _
-  private var sample: Option[DataFrame] = None
+  /** The scoring sample and the `(n, seed)` it was drawn with. */
+  private var sample: Option[((Int, Int), DataFrame)] = None
   /** The temp file of the current source when it is an upload. */
   private var upload: Option[java.nio.file.Path] = None
 
   useProjectSample() // app5 boots on the bundled sample (app5.py:200-203)
 
-  /** The current enriched frame (whatever source is active). */
-  def current: DataFrame = frame
+  /** The current source's enriched frame as a lazy plan over its
+    * files (whatever source is active): `inputFiles` names the
+    * parquet or the uploaded CSV, which the cached copy's plan hides.
+    * Requests do not read it; they read the served copy.
+    */
+  def current: DataFrame = source
+
+  /** The frame every request reads: the persisted single-partition
+    * copy of a small source, or [[current]] itself.
+    */
+  private[graft] def served: DataFrame = frame
 
   /** Source "Project sample": bundled events, enriched. */
   def useProjectSample(): DataFrame =
@@ -61,15 +91,24 @@ final class AppSession(val spark: SparkSession, sfDir: String) {
       Some(file))
   }
 
-  /** Replaces the source. The old source's cached sample is unpersisted
-    * and, if it was an upload, its temp file deleted: no frame of this
-    * session reads it any more.
+  /** Replaces the source and returns the served frame. The old
+    * source's served copy and cached sample are unpersisted and, if it
+    * was an upload, its temp file deleted: no frame of this session
+    * reads it any more. The new source is sized here, once (see the
+    * class doc): when Spark's estimate of its size is at most
+    * `spark.sql.autoBroadcastJoinThreshold`, requests and the `taxi`
+    * view read a persisted single-partition copy, built by the first
+    * action on it; otherwise they read `df`.
     */
   private def setSource(df: DataFrame,
                         file: Option[java.nio.file.Path] = None): DataFrame = {
     dropSource()
     upload = file
-    frame = df
+    source = df
+    val small = df.queryExecution.optimizedPlan.stats.sizeInBytes <=
+      spark.sessionState.conf.autoBroadcastJoinThreshold
+    frame =
+      if (small) df.coalesce(1).persist(StorageLevel.MEMORY_AND_DISK) else df
     frame.createOrReplaceTempView(ViewName)
     frame
   }
@@ -117,13 +156,16 @@ final class AppSession(val spark: SparkSession, sfDir: String) {
     Reports.writeReportTree(spark, sfDir, outDir)
 
   /** Tab 5 scoring sample: seeded shuffle, bounded, CACHED (O6 + M13,
-    * app5.py:355-356) — memoized for the session, invalidated when the
-    * source changes.
+    * app5.py:355-356) — memoized per `(n, seed)` for the session; a
+    * sample drawn with other arguments, or a source switch, unpersists
+    * it. `rand(seed)` draws per partition, so the rows depend on the
+    * served frame's partitioning (one partition for a small source).
     */
   def scoringSample(n: Int = 500, seed: Int = 42): DataFrame =
-    sample.getOrElse {
+    sample.collect { case ((`n`, `seed`), s) => s }.getOrElse {
+      dropSample()
       val s = frame.orderBy(rand(seed)).limit(n).cache()
-      sample = Some(s)
+      sample = Some((n, seed) -> s)
       s
     }
 
@@ -145,9 +187,16 @@ final class AppSession(val spark: SparkSession, sfDir: String) {
 
   def close(): Unit = dropSource()
 
-  private def dropSource(): Unit = {
-    sample.foreach(_.unpersist())
+  private def dropSample(): Unit = {
+    sample.foreach(_._2.unpersist())
     sample = None
+  }
+
+  private def dropSource(): Unit = {
+    dropSample()
+    // a lazy source is never unpersisted: its plan may match a cache
+    // this session does not own
+    if (frame ne source) frame.unpersist()
     upload.foreach(TempArtifacts.deleteNow)
     upload = None
   }

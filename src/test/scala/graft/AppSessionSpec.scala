@@ -3,6 +3,10 @@ package graft
 import org.apache.spark.ml.Pipeline
 import org.apache.spark.ml.classification.LogisticRegression
 import org.apache.spark.ml.feature.VectorAssembler
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.exchange.Exchange
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 import org.scalatest.funsuite.AnyFunSuite
@@ -142,5 +146,125 @@ class AppSessionSpec extends AnyFunSuite {
     val scored = s.score(model)
     assert(scored.count() === 2)
     assert(scored.columns.contains("proba1"))
+  }
+
+  test("scoring sample is memoized per (n, seed); a replaced sample is unpersisted") {
+    val s = new AppSession(spark, sfDir)
+    val rows = s.current.count()
+    val first = s.scoringSample(100)
+    assert(first.count() === 100)
+    val larger = s.scoringSample(300)
+    assert(larger.count() === math.min(300L, rows), "n is honoured")
+    assert(first.storageLevel === StorageLevel.NONE,
+      "the replaced sample must be unpersisted")
+    assert(s.scoringSample(300) eq larger, "memoized for the same (n, seed)")
+    val reseeded = s.scoringSample(300, seed = 7)
+    assert(!(reseeded eq larger), "seed is honoured")
+    assert(larger.storageLevel === StorageLevel.NONE)
+    assert(reseeded.storageLevel.useMemory)
+  }
+
+  /** The session's request frames, in one fixed order. The `sql` one
+    * resolves `taxi` when it is built, against the view of the session
+    * that registered it last.
+    */
+  private def requests(s: AppSession): Seq[(String, DataFrame)] = Seq(
+    "kpiByPayment" -> s.kpiByPayment,
+    "kpiByHour" -> s.kpiByHour,
+    "kpiHeatmap" -> s.kpiHeatmap,
+    "summary" -> s.summary(),
+    "sql" -> s.sql("SELECT pickup_dow, COUNT(*) AS trips, MAX(fare_amount) AS max_fare " +
+      "FROM taxi WHERE pickup_hour < 20 GROUP BY pickup_dow ORDER BY pickup_dow"))
+
+  /** Collects `df`, then returns the shuffles and broadcasts of the plan
+    * that ran: adaptive execution's final plan, into every query stage
+    * (the root one included) and subquery.
+    */
+  private def exchangesRun(df: DataFrame): (Seq[Row], Seq[Exchange]) = {
+    val rows = df.collect().toSeq
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case q: QueryStageExec => nodes(q.plan)
+      case _ => (p.children ++ p.subqueries).flatMap(nodes)
+    })
+    (rows, nodes(df.queryExecution.executedPlan).collect { case e: Exchange => e })
+  }
+
+  /** Runs `body` on a copy of the test corpus's events in 4 parquet
+    * parts: the single-file original scans as one partition, whose
+    * plans need no exchange on any path.
+    */
+  private def withPartedEvents(body: String => Unit): Unit = {
+    val dir = java.nio.file.Files.createTempDirectory("graft_app_parted")
+    try {
+      Tables.events(spark, sfDir).repartition(4)
+        .write.parquet(s"$dir/events.parquet")
+      body(dir.toString)
+    } finally TempArtifacts.deleteNow(dir)
+  }
+
+  /** Runs `body` with `spark.sql.autoBroadcastJoinThreshold=-1`, under
+    * which a session serves each source it is given from the lazy plan.
+    */
+  private def lazyPath[T](body: => T): T = {
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val saved = spark.conf.getOption(key)
+    spark.conf.set(key, "-1")
+    try body
+    finally saved match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
+  }
+
+  test("a small source is served from one cached partition: no Exchange, same answers") {
+    withPartedEvents { dir =>
+      val s = new AppSession(spark, dir)
+      assert(s.served.storageLevel === StorageLevel.MEMORY_AND_DISK)
+      assert(s.served.rdd.getNumPartitions === 1)
+      val fromCopy = requests(s)
+      val lz = lazyPath(new AppSession(spark, dir))
+      assert(lz.served eq lz.current, "the lazy session serves current itself")
+      fromCopy.zip(requests(lz)).foreach { case ((name, df), (_, overCurrent)) =>
+        val (rows, exchanges) = exchangesRun(df)
+        assert(exchanges.isEmpty, s"$name planned an exchange:\n${df.queryExecution.executedPlan}")
+        assert(rows.nonEmpty, name)
+        assert(rows === overCurrent.collect().toSeq, s"$name answers as over current")
+      }
+      s.close()
+      lz.close()
+    }
+  }
+
+  test("the served copy is unpersisted on upload, on useProjectSample and on close") {
+    val s = new AppSession(spark, sfDir)
+    val project = s.served
+    assert(project.storageLevel === StorageLevel.MEMORY_AND_DISK)
+    s.uploadCsv(tinyCsv)
+    assert(project.storageLevel === StorageLevel.NONE)
+    val upload = s.served
+    assert(upload.storageLevel === StorageLevel.MEMORY_AND_DISK)
+    s.useProjectSample()
+    assert(upload.storageLevel === StorageLevel.NONE)
+    val again = s.served
+    assert(again.storageLevel === StorageLevel.MEMORY_AND_DISK)
+    s.close()
+    assert(again.storageLevel === StorageLevel.NONE)
+  }
+
+  // the answers under -1 are the reference of the small-source case above
+  test("a threshold of -1 keeps the lazy plan: nothing persisted, shuffles kept") {
+    withPartedEvents { dir =>
+      val lz = lazyPath(new AppSession(spark, dir))
+      assert(lz.served eq lz.current)
+      assert(lz.served.storageLevel === StorageLevel.NONE)
+      requests(lz).foreach { case (name, df) =>
+        assert(exchangesRun(df)._2.nonEmpty, s"$name keeps its shuffle")
+      }
+      lazyPath(lz.uploadCsv(tinyCsv))
+      assert(lz.served.storageLevel === StorageLevel.NONE)
+      assert(lz.summary().head().getAs[Long]("rows") === 2L)
+      lz.close()
+    }
   }
 }
