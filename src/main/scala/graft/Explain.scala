@@ -3,24 +3,21 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** Dev tool: print the formatted physical plan of selected queries
-  * (args = an optional sf dir, then name prefixes; default a
-  * representative set) so join strategy / pushdown / codegen spans can
-  * be audited per round. The target `app` prints the plans an
-  * [[AppSession]] on the project sample serves: its three KPI tables,
-  * the summary and a templated `GROUP BY … ORDER BY` on the `taxi`
-  * view.
+  * (args = name prefixes; default a representative set) so join
+  * strategy / pushdown / codegen spans can be audited per round. The
+  * target `app` prints the plans an [[AppSession]] on the project
+  * sample serves: its three KPI tables, the summary and a templated
+  * `GROUP BY … ORDER BY` on the `taxi` view.
   */
 object Explain {
   def main(args: Array[String]): Unit = {
-    val (dirs, targets) = args.toSeq.partition(new java.io.File(_).isDirectory)
-    val sfDir = dirs.headOption
-      .getOrElse(sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01"))
+    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
     val spark = Tables.configure(
       SparkSession.builder().master("local[4]")
         .config("spark.sql.shuffle.partitions", "4")
     ).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    val names = if (targets.nonEmpty) targets
+    val names = if (args.nonEmpty) args.toSeq
       else Seq("q05", "q11", "r01", "r03", "s01", "s02", "d02", "w01")
     SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
       if (names.exists(name.startsWith)) {

@@ -6,6 +6,7 @@ import org.apache.spark.ml.feature.VectorAssembler
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.execution.exchange.Exchange
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
@@ -176,60 +177,64 @@ class AppSessionSpec extends AnyFunSuite {
     "sql" -> s.sql("SELECT pickup_dow, COUNT(*) AS trips, MAX(fare_amount) AS max_fare " +
       "FROM taxi WHERE pickup_hour < 20 GROUP BY pickup_dow ORDER BY pickup_dow"))
 
-  /** Collects `df`, then returns the shuffles and broadcasts of the plan
+  /** Collects `df`, then returns its rows and every node of the plan
     * that ran: adaptive execution's final plan, into every query stage
     * (the root one included) and subquery.
     */
-  private def exchangesRun(df: DataFrame): (Seq[Row], Seq[Exchange]) = {
+  private def planRun(df: DataFrame): (Seq[Row], Seq[SparkPlan]) = {
     val rows = df.collect().toSeq
     def nodes(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
       case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
       case q: QueryStageExec => nodes(q.plan)
       case _ => (p.children ++ p.subqueries).flatMap(nodes)
     })
-    (rows, nodes(df.queryExecution.executedPlan).collect { case e: Exchange => e })
+    (rows, nodes(df.queryExecution.executedPlan))
   }
 
-  /** Runs `body` on a copy of the test corpus's events in 4 parquet
-    * parts: the single-file original scans as one partition, whose
-    * plans need no exchange on any path.
+  private def exchanges(plan: Seq[SparkPlan]): Seq[Exchange] =
+    plan.collect { case e: Exchange => e }
+
+  /** Runs `body` on two copies of the test corpus's events in 4 parquet
+    * parts, holding the same rows: a small one, and a large one whose
+    * unused `pad` column, stored raw, puts Spark's size estimate over
+    * [[AppSession.SmallSourceBytes]]. Four parts, because the
+    * single-file original scans as one partition, whose plans need no
+    * exchange on either path.
     */
-  private def withPartedEvents(body: String => Unit): Unit = {
+  private def withPartedEvents(body: (String, String) => Unit): Unit = {
     val dir = java.nio.file.Files.createTempDirectory("graft_app_parted")
     try {
       Tables.events(spark, sfDir).repartition(4)
-        .write.parquet(s"$dir/events.parquet")
-      body(dir.toString)
+        .write.parquet(s"$dir/small/events.parquet")
+      val small = spark.read.parquet(s"$dir/small/events.parquet")
+      val padChars = 2 * AppSession.SmallSourceBytes / small.count()
+      small.withColumn("pad", repeat(lit("x"), padChars.toInt))
+        .write.option("compression", "none")
+        .option("parquet.enable.dictionary", "false")
+        .parquet(s"$dir/large/events.parquet")
+      body(s"$dir/small", s"$dir/large")
     } finally TempArtifacts.deleteNow(dir)
   }
 
-  /** Runs `body` with `spark.sql.autoBroadcastJoinThreshold=-1`, under
-    * which a session serves each source it is given from the lazy plan.
-    */
-  private def lazyPath[T](body: => T): T = {
-    val key = "spark.sql.autoBroadcastJoinThreshold"
-    val saved = spark.conf.getOption(key)
-    spark.conf.set(key, "-1")
-    try body
-    finally saved match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
-  }
-
-  test("a small source is served from one cached partition: no Exchange, same answers") {
-    withPartedEvents { dir =>
-      val s = new AppSession(spark, dir)
+  test("a small source is served from one cached partition, a large one lazily; same answers") {
+    withPartedEvents { (small, large) =>
+      val s = new AppSession(spark, small)
       assert(s.served.storageLevel === StorageLevel.MEMORY_AND_DISK)
       assert(s.served.rdd.getNumPartitions === 1)
       val fromCopy = requests(s)
-      val lz = lazyPath(new AppSession(spark, dir))
-      assert(lz.served eq lz.current, "the lazy session serves current itself")
-      fromCopy.zip(requests(lz)).foreach { case ((name, df), (_, overCurrent)) =>
-        val (rows, exchanges) = exchangesRun(df)
-        assert(exchanges.isEmpty, s"$name planned an exchange:\n${df.queryExecution.executedPlan}")
+      val lz = new AppSession(spark, large)
+      assert(lz.current.queryExecution.optimizedPlan.stats.sizeInBytes >
+        AppSession.SmallSourceBytes)
+      assert(lz.served eq lz.current, "the large source is served lazily")
+      assert(lz.served.storageLevel === StorageLevel.NONE)
+      fromCopy.zip(requests(lz)).foreach { case ((name, df), (_, overLazy)) =>
+        val (rows, plan) = planRun(df)
+        assert(exchanges(plan).isEmpty,
+          s"$name planned an exchange:\n${df.queryExecution.executedPlan}")
         assert(rows.nonEmpty, name)
-        assert(rows === overCurrent.collect().toSeq, s"$name answers as over current")
+        val (lazyRows, lazyPlan) = planRun(overLazy)
+        assert(exchanges(lazyPlan).nonEmpty, s"$name keeps its shuffle when lazy")
+        assert(rows === lazyRows, s"$name answers as over the lazy plan")
       }
       s.close()
       lz.close()
@@ -252,19 +257,15 @@ class AppSessionSpec extends AnyFunSuite {
     assert(again.storageLevel === StorageLevel.NONE)
   }
 
-  // the answers under -1 are the reference of the small-source case above
-  test("a threshold of -1 keeps the lazy plan: nothing persisted, shuffles kept") {
-    withPartedEvents { dir =>
-      val lz = lazyPath(new AppSession(spark, dir))
-      assert(lz.served eq lz.current)
-      assert(lz.served.storageLevel === StorageLevel.NONE)
-      requests(lz).foreach { case (name, df) =>
-        assert(exchangesRun(df)._2.nonEmpty, s"$name keeps its shuffle")
-      }
-      lazyPath(lz.uploadCsv(tinyCsv))
-      assert(lz.served.storageLevel === StorageLevel.NONE)
-      assert(lz.summary().head().getAs[Long]("rows") === 2L)
-      lz.close()
-    }
+  test("each session owns its copy: closing one leaves the other's cached") {
+    val a = new AppSession(spark, sfDir)
+    val b = new AppSession(spark, sfDir)
+    assert(a.summary().head() === b.summary().head())
+    a.close()
+    assert(b.served.storageLevel === StorageLevel.MEMORY_AND_DISK)
+    assert(planRun(b.kpiByPayment)._2.exists(_.isInstanceOf[InMemoryTableScanExec]),
+      "b's requests still read its cached copy")
+    b.close()
+    assert(b.served.storageLevel === StorageLevel.NONE)
   }
 }
