@@ -197,8 +197,11 @@ final class AppSession(val spark: SparkSession, sfDir: String) {
 
   def close(): Unit = dropSource()
 
+  // Unpersists block until the blocks are gone, so freeing a replaced
+  // frame ends inside the request that replaced it instead of running
+  // beside the requests after it.
   private def dropSample(): Unit = {
-    sample.foreach(_._2.unpersist())
+    sample.foreach(_._2.unpersist(blocking = true))
     sample = None
   }
 
@@ -206,7 +209,7 @@ final class AppSession(val spark: SparkSession, sfDir: String) {
     dropSample()
     // a lazy source is never unpersisted: its plan may match a cache
     // this session does not own
-    if (frame ne source) frame.unpersist()
+    if (frame ne source) frame.unpersist(blocking = true)
     upload.foreach(TempArtifacts.deleteNow)
     upload = None
   }
